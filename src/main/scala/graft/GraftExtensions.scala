@@ -1,54 +1,28 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.StringExpressions.Unaccent
-import graft.functions.VectorExpressions.{MergeDot, MergeDotBounded, VecDot, VecNorm}
+import graft.functions.{StringExpressions, VectorExpressions}
 
 /** SparkSessionExtensions injection point: enables graft's native
   * expressions at session build time for any application via
   *
   *   spark.sql.extensions=graft.GraftExtensions
   *
-  * (spark-submit --conf or SparkSession.builder.config). Library code
-  * that owns its session can instead call
-  * [[graft.functions.VectorExpressions.register]] after the fact — both
-  * routes land in the same function registry. This is also where a
-  * custom Rule[LogicalPlan] or SparkStrategy would be injected if an
-  * operator ever outgrows expression + built-in composition
-  * (SURVEY.md §4.2 — none needed for reference parity).
+  * (spark-submit --conf or SparkSession.builder.config; `GraftSession`
+  * sets it). It injects each module's `sqlFunctions`, the same list the
+  * modules' `register` installs on a session built without it. This is
+  * also where a custom Rule[LogicalPlan] or SparkStrategy would be
+  * injected if an operator ever outgrows expression + built-in
+  * composition (SURVEY.md §4.2 — none needed for reference parity).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("vec_dot"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[VecDot].getName, "vec_dot"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          VecDot(exprs(0), exprs(1))))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("vec_norm"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[VecNorm].getName, "vec_norm"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          VecNorm(exprs.head)))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("merge_dot"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[MergeDot].getName, "merge_dot"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          MergeDot(exprs(0), exprs(1), exprs(2), exprs(3))))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("merge_dot_bounded"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[MergeDotBounded].getName, "merge_dot_bounded"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          MergeDotBounded(exprs(0), exprs(1), exprs(2), exprs(3), exprs(4))))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("unaccent"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[Unaccent].getName, "unaccent"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          Unaccent(exprs.head)))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    (VectorExpressions.sqlFunctions ++ StringExpressions.sqlFunctions)
+      .foreach { case (name, builder) =>
+        ext.injectFunction((FunctionIdentifier(name),
+          new ExpressionInfo(builder.getClass.getName, name), builder))
+      }
 }

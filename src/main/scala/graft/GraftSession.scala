@@ -37,13 +37,4 @@ object GraftSession {
       // 61 scratch-path-dependent fragments (OPTIMIZATION_r18.md §12).
       .config("spark.sql.codegen.cache.maxEntries", "65536")
       .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-
-  def getOrCreate(): SparkSession = {
-    val s = builder().getOrCreate()
-    // extensions only apply when this call created the session; cover
-    // the attach-to-existing case too (idempotent)
-    functions.VectorExpressions.register(s)
-    functions.StringExpressions.register(s)
-    s
-  }
 }

@@ -407,18 +407,6 @@ object Gates {
       df.collect().iterator
         .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
         .toSeq.sorted
-    // defaults: broadcast, no pins. The referee and the pinned run
-    // are INDEPENDENT queries on separate sessions, so they overlap
-    // (guide §2.6): the referee runs on a background thread while
-    // this thread drives the AQE run — the driver submits both job
-    // chains and the scheduler back-fills idle cores; jobs inherit
-    // this thread's job group, so bench attribution is unchanged.
-    val refereeThread = java.util.concurrent.Executors.newSingleThreadExecutor()
-    val baseF = refereeThread.submit(
-      new java.util.concurrent.Callable[Seq[(String, Long, Double)]] {
-        override def call(): Seq[(String, Long, Double)] =
-          rowsOf(skewedAgg(s.newSession(), mapBlocks = false))
-      })
     val iso = s.newSession()
     iso.conf.set("spark.sql.adaptive.enabled", "true")
     iso.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // a shuffle join must exist
@@ -431,9 +419,12 @@ object Gates {
     iso.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "32768")
     iso.conf.set("spark.sql.shuffle.partitions", "8")
     val skewed = skewedAgg(iso, mapBlocks = true)
-    val rows = rowsOf(skewed) // executes; AQE finalizes the plan
-    val base =
-      try baseF.get() finally refereeThread.shutdown()
+    // the referee keeps the defaults: broadcast, no pins
+    val (base, rows) = graft.Overlap.run(s) {
+      rowsOf(skewedAgg(s.newSession(), mapBlocks = false))
+    } {
+      rowsOf(skewed) // executes; AQE finalizes the plan
+    }
     val plan = skewed.queryExecution.executedPlan.toString
     val engaged = plan.contains("SortMergeJoin(skew=true)") &&
       plan.contains("skewed")

@@ -227,14 +227,18 @@ object StringExpressions {
     call_function("jaro_winkler", a, b)
   }
 
-  /** SQL registration: makes unaccent + jaro_winkler usable from
-    * spark.sql too. */
-  def register(s: SparkSession): Unit = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "unaccent", exprs => Unaccent(exprs.head), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler", exprs => JaroWinkler(exprs(0), exprs(1)), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_ngrams", exprs => WordNgrams(exprs(0), exprs(1)), "built-in")
-  }
+  /** The module's SQL functions as (name, builder) — the one list both
+    * [[graft.GraftExtensions]] and [[register]] install. */
+  val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    ("unaccent", exprs => Unaccent(exprs.head)),
+    ("jaro_winkler", exprs => JaroWinkler(exprs(0), exprs(1))),
+    ("word_ngrams", exprs => WordNgrams(exprs(0), exprs(1))))
+
+  /** SQL registration on a session built without [[graft.GraftExtensions]]:
+    * makes [[sqlFunctions]] usable from spark.sql too. */
+  def register(s: SparkSession): Unit =
+    sqlFunctions.foreach { case (name, builder) =>
+      s.sessionState.functionRegistry.createOrReplaceTempFunction(
+        name, builder, "built-in")
+    }
 }

@@ -374,19 +374,21 @@ object VectorExpressions {
     call_function("merge_dot_bounded", ha, wa, hb, wb, th)
   }
 
-  /** SQL registration: makes vec_dot/vec_norm usable from spark.sql
-    * and the Column API. Inputs must be array<double> (the Column
-    * wrappers cast elementwise). */
-  def register(s: SparkSession): Unit = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => VecDot(exprs(0), exprs(1)), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_norm", exprs => VecNorm(exprs.head), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "merge_dot", exprs => MergeDot(exprs(0), exprs(1), exprs(2), exprs(3)),
-      "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "merge_dot_bounded", exprs => MergeDotBounded(exprs(0), exprs(1),
-        exprs(2), exprs(3), exprs(4)), "built-in")
-  }
+  /** The module's SQL functions as (name, builder) — the one list both
+    * [[graft.GraftExtensions]] and [[register]] install. Inputs must be
+    * array<double> (the Column wrappers cast elementwise). */
+  val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    ("vec_dot", exprs => VecDot(exprs(0), exprs(1))),
+    ("vec_norm", exprs => VecNorm(exprs.head)),
+    ("merge_dot", exprs => MergeDot(exprs(0), exprs(1), exprs(2), exprs(3))),
+    ("merge_dot_bounded", exprs => MergeDotBounded(exprs(0), exprs(1),
+      exprs(2), exprs(3), exprs(4))))
+
+  /** SQL registration on a session built without [[graft.GraftExtensions]]:
+    * makes [[sqlFunctions]] usable from spark.sql and the Column API. */
+  def register(s: SparkSession): Unit =
+    sqlFunctions.foreach { case (name, builder) =>
+      s.sessionState.functionRegistry.createOrReplaceTempFunction(
+        name, builder, "built-in")
+    }
 }

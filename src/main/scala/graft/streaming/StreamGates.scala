@@ -41,9 +41,6 @@ import graft.operators.{Changelog, EventOps}
 object StreamGates {
   import graft.functions.Gates.symDiffEmpty
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    graft.Fs.deleteRecursively(p)
-
   /** Gate-private child session: inherits the context's defaults (UTC,
     * codegen, etc.) but owns its SQLConf and temp-view catalog. The
     * shuffle width is deliberately MINIMAL (1): stateful streaming
@@ -55,26 +52,22 @@ object StreamGates {
     * stream family 27.1 s → 23.9 s at identical per-gate job counts.
     * Width is a gate-harness knob, not an operator property: the
     * operators' multi-partition behavior is what the full-width bench
-    * queries and specs exercise. Overridable for A/B probes via
-    * -Dgraft.gate.partitions. */
+    * queries and specs exercise. */
   private def isolated(s: SparkSession): SparkSession = {
     val iso = s.newSession()
-    iso.conf.set("spark.sql.shuffle.partitions",
-      sys.props.getOrElse("graft.gate.partitions", "1"))
+    iso.conf.set("spark.sql.shuffle.partitions", "1")
     // AQE is a pure fixed cost at gate scale: every shuffle becomes
     // its own query-stage JOB (plan, schedule, drain — tens of ms
     // each), re-optimized to learn what is already known (the data is
     // KB-sized). The gates' cost is job COUNT, not data; the bench
     // queries proper keep AQE on.
-    iso.conf.set("spark.sql.adaptive.enabled",
-      sys.props.getOrElse("graft.gate.aqe", "false"))
+    iso.conf.set("spark.sql.adaptive.enabled", "false")
     // the engine's automatic no-data batches re-run every stateful
     // operator once more after each data batch that moves the
     // watermark; the gates already deliver EXPLICIT finalization
     // batches (the sentinel files), so the automatic ones only double
     // the per-drain batch count
-    iso.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-      sys.props.getOrElse("graft.gate.nodata", "false"))
+    iso.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     iso
   }
 
@@ -402,7 +395,7 @@ object StreamGates {
     s.createDataFrame(java.util.Arrays.asList(rows: _*), gate.schema)
     // cleanup must run on the throw paths too (failed micro-batch,
     // unreadable state): a failing gate re-run per pass would accrete dirs
-    } finally deleteRecursively(java.nio.file.Paths.get(base))
+    } finally graft.Fs.deleteRecursively(java.nio.file.Paths.get(base))
   }
 
   /** Gate query [stream_batch_parity]: booleans proving
@@ -439,46 +432,39 @@ object StreamGates {
     // bit-exact and can be part of the set-equality key
     val winCols = Seq("win_start", "event_type", "n_events", "sum_value")
     // both batch referees read only the CACHED slice (the sentinels
-    // land in the stream dir, never the cache), so they materialize on
-    // a background thread while the streams drain — the same referee
-    // overlap as the join gates (guide §2.6; job-group attribution
-    // inherits through the thread-local)
-    val refThread = java.util.concurrent.Executors.newSingleThreadExecutor()
-    val refF = refThread.submit(
-      new java.util.concurrent.Callable[(DataFrame, DataFrame)] {
-        override def call(): (DataFrame, DataFrame) = {
-          val bw = EventOps.tumblingWindowOf(ev).select(winCols.map(col): _*)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          bw.count()
-          val bs = EventOps.sessionizeOf(ev)
-            .select(col("user_id"), col("start_us"), col("end_us"),
-              col("n_events"), col("sum_value").as("batch_sum"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          bs.count()
-          (bw, bs)
-        }
-      })
-    var tq: StreamingQuery = null
-    var sq: StreamingQuery = null
-    def drain(): Unit = { tq.processAllAvailable(); sq.processAllAvailable() }
-    try {
-      tq = owned(Streams.tumblingCounts(Streams.readEventStream(iso, inDir))
-        .writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName("sbp_tumbling")
-        .option("checkpointLocation", s"$base/ckpt_t").start(), "stream_batch_parity")
-      sq = owned(Streams.closedSessionsFlushed(
-          Streams.readEventStream(iso, inDir)
-            .select("event_id", "ts", "user_id", "event_type", "value")
-            .as[Streams.EventRow])
-        .writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName("sbp_sessions")
-        .option("checkpointLocation", s"$base/ckpt_s").start(), "stream_batch_parity")
-      drain()
-      dropSentinel(iso, Sentinel1Ms, inDir); drain()
-      dropSentinel(iso, Sentinel2Ms, inDir); drain()
-    } finally { safeStop(tq); safeStop(sq) }
+    // land in the stream dir, never the cache)
+    val ((batchWin, batchSess), _) = graft.Overlap.run(iso) {
+      val bw = EventOps.tumblingWindowOf(ev).select(winCols.map(col): _*)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      bw.count()
+      val bs = EventOps.sessionizeOf(ev)
+        .select(col("user_id"), col("start_us"), col("end_us"),
+          col("n_events"), col("sum_value").as("batch_sum"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      bs.count()
+      (bw, bs)
+    } {
+      var tq: StreamingQuery = null
+      var sq: StreamingQuery = null
+      def drain(): Unit = { tq.processAllAvailable(); sq.processAllAvailable() }
+      try {
+        tq = owned(Streams.tumblingCounts(Streams.readEventStream(iso, inDir))
+          .writeStream.outputMode(OutputMode.Append)
+          .format("memory").queryName("sbp_tumbling")
+          .option("checkpointLocation", s"$base/ckpt_t").start(), "stream_batch_parity")
+        sq = owned(Streams.closedSessionsFlushed(
+            Streams.readEventStream(iso, inDir)
+              .select("event_id", "ts", "user_id", "event_type", "value")
+              .as[Streams.EventRow])
+          .writeStream.outputMode(OutputMode.Append)
+          .format("memory").queryName("sbp_sessions")
+          .option("checkpointLocation", s"$base/ckpt_s").start(), "stream_batch_parity")
+        drain()
+        dropSentinel(iso, Sentinel1Ms, inDir); drain()
+        dropSentinel(iso, Sentinel2Ms, inDir); drain()
+      } finally { safeStop(tq); safeStop(sq) }
+    }
 
-    val (batchWin, batchSess) = try refF.get() finally refThread.shutdown()
     val streamWin = iso.table("sbp_tumbling")
       .filter(col("event_type") =!= "sentinel").select(winCols.map(col): _*)
     val winParity = symDiffEmpty(streamWin, batchWin, winCols)
@@ -509,7 +495,7 @@ object StreamGates {
     val rows = result.collect()
     batchWin.unpersist(); batchSess.unpersist(); ev.unpersist()
     s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
-    } finally deleteRecursively(java.nio.file.Paths.get(base))
+    } finally graft.Fs.deleteRecursively(java.nio.file.Paths.get(base))
   }
 
   /** Gate query [stream_upsert_parity]: the foreachBatch CDC-sink
@@ -552,38 +538,32 @@ object StreamGates {
       val states = Seq(s"$base/state0", s"$base/state1")
       Changelog.latestByKeyOf(ev.limit(0))
         .write.mode("overwrite").parquet(states(0))
-      // the one-shot batch referee reads only the cached slice — it
-      // materializes while the stream drains (referee-overlap pattern)
-      val refThread = java.util.concurrent.Executors.newSingleThreadExecutor()
-      val refF = refThread.submit(
-        new java.util.concurrent.Callable[DataFrame] {
-          override def call(): DataFrame = {
-            val b = Changelog.latestByKeyOf(ev)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            b.count()
-            b
-          }
-        })
       @volatile var cur = 0
       @volatile var nBatches = 0L
-      var q: StreamingQuery = null
-      try {
-        q = owned(iso.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
-          .writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val merged = Changelog.mergeCompacted(
-              iso.read.parquet(states(cur)), Changelog.latestByKeyOf(batch))
-            merged.write.mode("overwrite").parquet(states(1 - cur))
-            cur = 1 - cur
-            nBatches += 1
-          }
-          .option("checkpointLocation", s"$base/ckpt").start(), "stream_upsert_parity")
-        q.processAllAvailable()
-      } finally safeStop(q)
-
-      val finalState = iso.read.parquet(states(cur))
-      val oneShot = try refF.get() finally refThread.shutdown()
+      // the one-shot batch referee reads only the cached slice
+      val (oneShot, finalState) = graft.Overlap.run(iso) {
+        val b = Changelog.latestByKeyOf(ev)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        b.count()
+        b
+      } {
+        var q: StreamingQuery = null
+        try {
+          q = owned(iso.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", "1").parquet(inDir)
+            .writeStream
+            .foreachBatch { (batch: DataFrame, _: Long) =>
+              val merged = Changelog.mergeCompacted(
+                iso.read.parquet(states(cur)), Changelog.latestByKeyOf(batch))
+              merged.write.mode("overwrite").parquet(states(1 - cur))
+              cur = 1 - cur
+              nBatches += 1
+            }
+            .option("checkpointLocation", s"$base/ckpt").start(), "stream_upsert_parity")
+          q.processAllAvailable()
+        } finally safeStop(q)
+        iso.read.parquet(states(cur))
+      }
       val cols = Seq("user_id", "ts_us", "event_id", "event_type", "value")
       val gate = symDiffEmpty(finalState, oneShot, cols)
         .crossJoin(finalState.agg(count(lit(1)).as("n_state")))
@@ -594,7 +574,7 @@ object StreamGates {
       val rows = gate.collect()
       oneShot.unpersist(); ev.unpersist()
       s.createDataFrame(java.util.Arrays.asList(rows: _*), gate.schema)
-    } finally deleteRecursively(java.nio.file.Paths.get(base))
+    } finally graft.Fs.deleteRecursively(java.nio.file.Paths.get(base))
   }
 
   /** Gate query [stream_availablenow_parity]: Trigger.AvailableNow —
@@ -662,7 +642,7 @@ object StreamGates {
       val rows = gate.collect()
       ev.unpersist()
       s.createDataFrame(java.util.Arrays.asList(rows: _*), gate.schema)
-    } finally deleteRecursively(java.nio.file.Paths.get(base))
+    } finally graft.Fs.deleteRecursively(java.nio.file.Paths.get(base))
   }
 
   /** Gate query [stream_neardup_parity]: incremental MinHash-LSH
@@ -832,7 +812,7 @@ object StreamGates {
       shAll.unpersist()
       docs.unpersist()
       s.createDataFrame(java.util.Arrays.asList(rows: _*), gate.schema)
-    } finally deleteRecursively(java.nio.file.Paths.get(base))
+    } finally graft.Fs.deleteRecursively(java.nio.file.Paths.get(base))
   }
 
   /** Gate query [stream_session_parity]: the NATIVE session_window
@@ -866,44 +846,38 @@ object StreamGates {
 
       val cols = Seq("sess_start", "sess_end", "user_id", "n_events",
         "sum_value")
-      // the batch referee reads only the cached slice — materialize it
-      // on a background thread while the stream drains (the join/batch
-      // gates' referee-overlap pattern, guide §2.6)
-      val refThread = java.util.concurrent.Executors.newSingleThreadExecutor()
-      val refF = refThread.submit(
-        new java.util.concurrent.Callable[DataFrame] {
-          override def call(): DataFrame = {
-            val b = ev
-              .groupBy(session_window(col("ts"), "10 minutes"), col("user_id"))
-              .agg(count(lit(1)).as("n_events"),
-                sum(col("value")
-                  .cast(org.apache.spark.sql.types.DecimalType(18, 2)))
-                  .cast("double").as("sum_value"))
-              .select(col("session_window.start").as("sess_start"),
-                col("session_window.end").as("sess_end"),
-                col("user_id"), col("n_events"), col("sum_value"))
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            b.count()
-            b
-          }
-        })
-      var q: StreamingQuery = null
-      try {
-        q = owned(Streams.sessionWindows(Streams.readEventStream(iso, inDir))
-          .writeStream.outputMode(OutputMode.Append)
-          .format("memory").queryName("ssp_sessions")
-          .option("checkpointLocation", s"$base/ckpt").start(), "stream_session_parity")
-        q.processAllAvailable()
-        // first sentinel advances the watermark past every real
-        // session; the second gives the engine the batch in which
-        // finalization actually fires
-        dropSentinel(iso, Sentinel1Ms, inDir); q.processAllAvailable()
-        dropSentinel(iso, Sentinel2Ms, inDir); q.processAllAvailable()
-      } finally safeStop(q)
+      // the batch referee reads only the cached slice
+      val (batchSess, _) = graft.Overlap.run(iso) {
+        val b = ev
+          .groupBy(session_window(col("ts"), "10 minutes"), col("user_id"))
+          .agg(count(lit(1)).as("n_events"),
+            sum(col("value")
+              .cast(org.apache.spark.sql.types.DecimalType(18, 2)))
+              .cast("double").as("sum_value"))
+          .select(col("session_window.start").as("sess_start"),
+            col("session_window.end").as("sess_end"),
+            col("user_id"), col("n_events"), col("sum_value"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        b.count()
+        b
+      } {
+        var q: StreamingQuery = null
+        try {
+          q = owned(Streams.sessionWindows(Streams.readEventStream(iso, inDir))
+            .writeStream.outputMode(OutputMode.Append)
+            .format("memory").queryName("ssp_sessions")
+            .option("checkpointLocation", s"$base/ckpt").start(), "stream_session_parity")
+          q.processAllAvailable()
+          // first sentinel advances the watermark past every real
+          // session; the second gives the engine the batch in which
+          // finalization actually fires
+          dropSentinel(iso, Sentinel1Ms, inDir); q.processAllAvailable()
+          dropSentinel(iso, Sentinel2Ms, inDir); q.processAllAvailable()
+        } finally safeStop(q)
+      }
 
       val streamSess = iso.table("ssp_sessions")
         .filter(col("user_id") >= 0).select(cols.map(col): _*)
-      val batchSess = try refF.get() finally refThread.shutdown()
       val gate = symDiffEmpty(streamSess, batchSess, cols)
         .crossJoin(streamSess.agg(count(lit(1)).as("n_sess")))
         .select(
@@ -913,7 +887,7 @@ object StreamGates {
       val rows = gate.collect()
       batchSess.unpersist(); ev.unpersist()
       s.createDataFrame(java.util.Arrays.asList(rows: _*), gate.schema)
-    } finally deleteRecursively(java.nio.file.Paths.get(base))
+    } finally graft.Fs.deleteRecursively(java.nio.file.Paths.get(base))
   }
 
   /** Gate query [stream_join_parity]: the watermarked STREAM-STREAM
@@ -970,39 +944,30 @@ object StreamGates {
       val schema = views.schema
       val pairCols = Seq("view_id", "click_id")
 
-      // the batch referee reads only the dropped chunk files — fully
-      // independent of the stream — so it materializes on a background
-      // thread while this thread drives the micro-batches (guide §2.6
-      // overlap; jobs inherit the bench job group through thread-local
-      // inheritance, same pattern as the skew/ANN referees)
-      val refThread = java.util.concurrent.Executors.newSingleThreadExecutor()
-      val batchF = refThread.submit(
-        new java.util.concurrent.Callable[DataFrame] {
-          override def call(): DataFrame = {
-            val b = Streams.viewClickJoin(views, clicks,
-                watermark = "45 days", window = JoinWindow)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            b.count()
-            b
-          }
-        })
-
-      var q: StreamingQuery = null
-      try {
-        q = owned(Streams.viewClickJoin(
-            iso.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1").parquet(viewDir),
-            iso.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1").parquet(clickDir),
+      // the batch referee reads only the dropped chunk files
+      val (batchPairs, _) = graft.Overlap.run(iso) {
+        val b = Streams.viewClickJoin(views, clicks,
             watermark = "45 days", window = JoinWindow)
-          .writeStream.outputMode(OutputMode.Append)
-          .format("memory").queryName("sjp_join")
-          .option("checkpointLocation", s"$base/ckpt").start(), "stream_join_parity")
-        q.processAllAvailable()
-      } finally safeStop(q)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        b.count()
+        b
+      } {
+        var q: StreamingQuery = null
+        try {
+          q = owned(Streams.viewClickJoin(
+              iso.readStream.schema(schema)
+                .option("maxFilesPerTrigger", "1").parquet(viewDir),
+              iso.readStream.schema(schema)
+                .option("maxFilesPerTrigger", "1").parquet(clickDir),
+              watermark = "45 days", window = JoinWindow)
+            .writeStream.outputMode(OutputMode.Append)
+            .format("memory").queryName("sjp_join")
+            .option("checkpointLocation", s"$base/ckpt").start(), "stream_join_parity")
+          q.processAllAvailable()
+        } finally safeStop(q)
+      }
 
       val streamPairs = iso.table("sjp_join")
-      val batchPairs = try batchF.get() finally refThread.shutdown()
       // cross-batch pair count rides the gate's own collect (one job,
       // not a separate count() action); harvested into Counters below
       val gate = symDiffEmpty(streamPairs.select(pairCols.map(col): _*),
@@ -1027,7 +992,7 @@ object StreamGates {
         java.util.Arrays.asList(rows.map(r =>
           org.apache.spark.sql.Row(r.get(0), r.get(1), rocks)): _*),
         out.schema)
-    } finally deleteRecursively(java.nio.file.Paths.get(base))
+    } finally graft.Fs.deleteRecursively(java.nio.file.Paths.get(base))
   }
 
   /** Gate query [stream_outer_join_parity]: the LEFT OUTER
@@ -1068,10 +1033,9 @@ object StreamGates {
       dropChunks(sl.viewFiles, viewDir)
       dropChunks(sl.clickFiles, clickDir)
       // the batch mirrors read the CHUNK FILES by explicit path (not
-      // the dirs): the referee below materializes on a background
-      // thread while the stream runs, and the gate drops sentinel
-      // files into the dirs mid-run — a dir-level read racing those
-      // copies could list a half-written file. Explicit paths make the
+      // the dirs): the referee below overlaps the stream, and the gate
+      // drops sentinel files into the dirs mid-run — a dir-level read
+      // racing those copies could list a half-written file. Explicit paths make the
       // referee's input set immutable; the user -1 filter stays as
       // belt-and-braces (sentinels never exist in the chunk files).
       def chunkPaths(dir: String, n: Int): Seq[String] =
@@ -1084,52 +1048,44 @@ object StreamGates {
         .filter(col("user_id") >= 0)
       val schema = iso.read.parquet(viewDir).schema
 
-      // the batch referee is independent of the stream: materialize it
-      // concurrently with the micro-batch drains (guide §2.6 overlap,
-      // same pattern as the inner join gate and the skew/ANN referees)
-      val refThread = java.util.concurrent.Executors.newSingleThreadExecutor()
-      val batchF = refThread.submit(
-        new java.util.concurrent.Callable[DataFrame] {
-          override def call(): DataFrame = {
-            val b = Streams.viewClickLeftOuter(views, clicks,
-                watermark = "30 minutes", window = JoinWindow)
-              .select(col("view_id"),
-                coalesce(col("click_id"), lit(-1L)).as("ck"))
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            b.count()
-            b
-          }
-        })
-
-      var q: StreamingQuery = null
-      try {
-        q = owned(Streams.viewClickLeftOuter(
-            iso.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1").parquet(viewDir),
-            iso.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1").parquet(clickDir),
+      val (batchRows, _) = graft.Overlap.run(iso) {
+        val b = Streams.viewClickLeftOuter(views, clicks,
             watermark = "30 minutes", window = JoinWindow)
-          .writeStream.outputMode(OutputMode.Append)
-          .format("memory").queryName("soj_join")
-          .option("checkpointLocation", s"$base/ckpt").start(), "stream_outer_join_parity")
-        q.processAllAvailable()
-        // watermark must pass every view's [ts, ts+2h] window before
-        // its unmatched null row may emit; the second sentinel gives
-        // the engine the batch where the jumped watermark takes effect
-        dropSentinel(iso, Sentinel1Ms, viewDir)
-        dropSentinel(iso, Sentinel1Ms, clickDir)
-        q.processAllAvailable()
-        dropSentinel(iso, Sentinel2Ms, viewDir)
-        dropSentinel(iso, Sentinel2Ms, clickDir)
-        q.processAllAvailable()
-      } finally safeStop(q)
+          .select(col("view_id"),
+            coalesce(col("click_id"), lit(-1L)).as("ck"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        b.count()
+        b
+      } {
+        var q: StreamingQuery = null
+        try {
+          q = owned(Streams.viewClickLeftOuter(
+              iso.readStream.schema(schema)
+                .option("maxFilesPerTrigger", "1").parquet(viewDir),
+              iso.readStream.schema(schema)
+                .option("maxFilesPerTrigger", "1").parquet(clickDir),
+              watermark = "30 minutes", window = JoinWindow)
+            .writeStream.outputMode(OutputMode.Append)
+            .format("memory").queryName("soj_join")
+            .option("checkpointLocation", s"$base/ckpt").start(), "stream_outer_join_parity")
+          q.processAllAvailable()
+          // watermark must pass every view's [ts, ts+2h] window before
+          // its unmatched null row may emit; the second sentinel gives
+          // the engine the batch where the jumped watermark takes effect
+          dropSentinel(iso, Sentinel1Ms, viewDir)
+          dropSentinel(iso, Sentinel1Ms, clickDir)
+          q.processAllAvailable()
+          dropSentinel(iso, Sentinel2Ms, viewDir)
+          dropSentinel(iso, Sentinel2Ms, clickDir)
+          q.processAllAvailable()
+        } finally safeStop(q)
+      }
 
       // sentinel rows (user -1) ride the streams only to move the
       // watermark; they never compare
       val key = Seq("view_id", "ck")
       val streamRows = iso.table("soj_join").filter(col("user_id") >= 0)
         .select(col("view_id"), coalesce(col("click_id"), lit(-1L)).as("ck"))
-      val batchRows = try batchF.get() finally refThread.shutdown()
       val gate = symDiffEmpty(streamRows, batchRows, key)
         .crossJoin(streamRows.agg(count(lit(1)).as("n_rows"),
           sum(when(col("ck") === -1L, 1L).otherwise(0L)).as("n_null")))
@@ -1142,7 +1098,7 @@ object StreamGates {
       val rows = gate.collect()
       batchRows.unpersist()
       s.createDataFrame(java.util.Arrays.asList(rows: _*), gate.schema)
-    } finally deleteRecursively(java.nio.file.Paths.get(base))
+    } finally graft.Fs.deleteRecursively(java.nio.file.Paths.get(base))
   }
 
   /** Gate query [stream_tws_parity]: the transformWithState
@@ -1182,47 +1138,41 @@ object StreamGates {
       dropChunks(Seq(sl.halfA, sl.halfB), inDir)
       val ev = iso.read.parquet(sl.full.toString)
 
-      // the batch referee reads only the cached slice file — it
-      // materializes on a background thread while the stream drains
-      // (the referee-overlap pattern, guide §2.6)
-      val refThread = java.util.concurrent.Executors.newSingleThreadExecutor()
-      val refF = refThread.submit(
-        new java.util.concurrent.Callable[DataFrame] {
-          override def call(): DataFrame = {
-            val b = ev.groupBy(col("user_id"))
-              .agg(count(lit(1)).as("nb"),
-                sum(col("value")
-                  .cast(org.apache.spark.sql.types.DecimalType(18, 2)))
-                  .cast("double").as("sum_b"),
-                countDistinct(col("event_type")).as("ntb"))
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            b.count()
-            b
-          }
-        })
-      var q: StreamingQuery = null
-      try {
-        q = owned(Streams.runningTotalsTws(
-            iso.readStream
-              .schema(StructType(Seq(
-                StructField("user_id", LongType),
-                StructField("event_type", StringType),
-                StructField("value", DoubleType))))
-              .option("maxFilesPerTrigger", "1").parquet(inDir)
-              .as[(Long, String, Double)](org.apache.spark.sql.Encoders
-                .product[(Long, String, Double)]))
-          .writeStream.outputMode(OutputMode.Update())
-          .format("memory").queryName("stw_totals")
-          .option("checkpointLocation", s"$base/ckpt").start(), "stream_tws_parity")
-        q.processAllAvailable()
-      } finally safeStop(q)
+      // the batch referee reads only the cached slice file
+      val (batchTotals, _) = graft.Overlap.run(iso) {
+        val b = ev.groupBy(col("user_id"))
+          .agg(count(lit(1)).as("nb"),
+            sum(col("value")
+              .cast(org.apache.spark.sql.types.DecimalType(18, 2)))
+              .cast("double").as("sum_b"),
+            countDistinct(col("event_type")).as("ntb"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        b.count()
+        b
+      } {
+        var q: StreamingQuery = null
+        try {
+          q = owned(Streams.runningTotalsTws(
+              iso.readStream
+                .schema(StructType(Seq(
+                  StructField("user_id", LongType),
+                  StructField("event_type", StringType),
+                  StructField("value", DoubleType))))
+                .option("maxFilesPerTrigger", "1").parquet(inDir)
+                .as[(Long, String, Double)](org.apache.spark.sql.Encoders
+                  .product[(Long, String, Double)]))
+            .writeStream.outputMode(OutputMode.Update())
+            .format("memory").queryName("stw_totals")
+            .option("checkpointLocation", s"$base/ckpt").start(), "stream_tws_parity")
+          q.processAllAvailable()
+        } finally safeStop(q)
+      }
 
       val streamTotals = iso.table("stw_totals")
         .groupBy(col("user_id"))
         .agg(max(col("n_events")).as("n"),
           max_by(col("sum_value"), col("n_events")).as("sum_v"),
           max(col("n_types")).as("nt"))
-      val batchTotals = try refF.get() finally refThread.shutdown()
       val joined = streamTotals.join(batchTotals, Seq("user_id"), "full_outer")
       val gate = joined.agg(
           count(lit(1)).as("n_users"),
@@ -1246,7 +1196,7 @@ object StreamGates {
       val rows = gate.collect()
       batchTotals.unpersist()
       s.createDataFrame(java.util.Arrays.asList(rows: _*), gate.schema)
-    } finally deleteRecursively(java.nio.file.Paths.get(base))
+    } finally graft.Fs.deleteRecursively(java.nio.file.Paths.get(base))
   }
 
   /** Gate query [tws_batch_unified]: the SAME StatefulProcessor as
@@ -1354,39 +1304,34 @@ object StreamGates {
       dropFile(slOpt.get.full, inDir, "slice.parquet")
       val ev = iso.read.parquet(slOpt.get.full.toString)
 
-      // the batch referee (sessionize of the cached slice) overlaps
-      // the stream drains — referee-overlap pattern, guide §2.6
-      val refThread = java.util.concurrent.Executors.newSingleThreadExecutor()
-      val refF = refThread.submit(
-        new java.util.concurrent.Callable[DataFrame] {
-          override def call(): DataFrame = {
-            val b = EventOps.sessionizeOf(ev)
-              .select(col("user_id"), col("start_us"), col("end_us"),
-                col("n_events"), col("sum_value").as("batch_sum"))
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            b.count()
-            b
-          }
-        })
-      var q: StreamingQuery = null
-      try {
-        q = owned(Streams.sessionsTwsTimers(
-            Streams.readEventStream(iso, inDir)
-              .select("event_id", "ts", "user_id", "event_type", "value")
-              .as[Streams.EventRow])
-          .writeStream.outputMode(OutputMode.Append)
-          .format("memory").queryName("stt_sessions")
-          .option("checkpointLocation", s"$base/ckpt").start(),
-          "stream_tws_timer_parity")
-        q.processAllAvailable()
-        dropSentinel(iso, Sentinel1Ms, inDir); q.processAllAvailable()
-        dropSentinel(iso, Sentinel2Ms, inDir); q.processAllAvailable()
-      } finally safeStop(q)
+      // the batch referee is a sessionize of the cached slice
+      val (batchSess, _) = graft.Overlap.run(iso) {
+        val b = EventOps.sessionizeOf(ev)
+          .select(col("user_id"), col("start_us"), col("end_us"),
+            col("n_events"), col("sum_value").as("batch_sum"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        b.count()
+        b
+      } {
+        var q: StreamingQuery = null
+        try {
+          q = owned(Streams.sessionsTwsTimers(
+              Streams.readEventStream(iso, inDir)
+                .select("event_id", "ts", "user_id", "event_type", "value")
+                .as[Streams.EventRow])
+            .writeStream.outputMode(OutputMode.Append)
+            .format("memory").queryName("stt_sessions")
+            .option("checkpointLocation", s"$base/ckpt").start(),
+            "stream_tws_timer_parity")
+          q.processAllAvailable()
+          dropSentinel(iso, Sentinel1Ms, inDir); q.processAllAvailable()
+          dropSentinel(iso, Sentinel2Ms, inDir); q.processAllAvailable()
+        } finally safeStop(q)
+      }
 
       val sessKeys = Seq("user_id", "start_us", "end_us", "n_events")
       val streamSess = iso.table("stt_sessions").filter(col("user_id") >= 0)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val batchSess = try refF.get() finally refThread.shutdown()
       // claim 1: full session-set parity (exact keys, tolerant sums)
       val setPar = symDiffEmpty(streamSess, batchSess, sessKeys)
         .crossJoin(streamSess.join(batchSess, sessKeys)
@@ -1416,7 +1361,7 @@ object StreamGates {
         if (rows(0).isNullAt(1)) 0L else rows(0).getLong(1))
       batchSess.unpersist(); streamSess.unpersist()
       s.createDataFrame(java.util.Arrays.asList(rows: _*), gate.schema)
-    } finally deleteRecursively(java.nio.file.Paths.get(base))
+    } finally graft.Fs.deleteRecursively(java.nio.file.Paths.get(base))
   }
 
   /** Gate query [stream_tws_init_parity]: transformWithState
@@ -1464,47 +1409,43 @@ object StreamGates {
         .as[(Long, Long, Double)]
         .groupByKey(_._1).mapValues(t => (t._2, t._3))
 
-      // the whole-slice batch referee overlaps the stream (the
+      // the whole-slice batch referee overlaps the stream; the
       // bootstrap aggregate above must stay up front — it is a stream
-      // INPUT); referee-overlap pattern, guide §2.6
-      val refThread = java.util.concurrent.Executors.newSingleThreadExecutor()
-      val refF = refThread.submit(
-        new java.util.concurrent.Callable[DataFrame] {
-          override def call(): DataFrame = {
-            val b = ev.groupBy(col("user_id"))
-              .agg(count(lit(1)).as("nb"),
-                sum(col("value")
-                  .cast(org.apache.spark.sql.types.DecimalType(18, 2)))
-                  .cast("double").as("sum_b"))
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            b.count()
-            b
-          }
-        })
-      var q: StreamingQuery = null
-      try {
-        q = owned(Streams.bootstrappedTotalsTws(
-            iso.readStream
-              .schema(StructType(Seq(
-                StructField("user_id", LongType),
-                StructField("event_type", StringType),
-                StructField("value", DoubleType))))
-              .parquet(inDir)
-              .as[(Long, String, Double)](org.apache.spark.sql.Encoders
-                .product[(Long, String, Double)]),
-            initState)
-          .writeStream.outputMode(OutputMode.Update())
-          .format("memory").queryName("sti_totals")
-          .option("checkpointLocation", s"$base/ckpt").start(),
-          "stream_tws_init_parity")
-        q.processAllAvailable()
-      } finally safeStop(q)
+      // INPUT
+      val (batchTotals, _) = graft.Overlap.run(iso) {
+        val b = ev.groupBy(col("user_id"))
+          .agg(count(lit(1)).as("nb"),
+            sum(col("value")
+              .cast(org.apache.spark.sql.types.DecimalType(18, 2)))
+              .cast("double").as("sum_b"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        b.count()
+        b
+      } {
+        var q: StreamingQuery = null
+        try {
+          q = owned(Streams.bootstrappedTotalsTws(
+              iso.readStream
+                .schema(StructType(Seq(
+                  StructField("user_id", LongType),
+                  StructField("event_type", StringType),
+                  StructField("value", DoubleType))))
+                .parquet(inDir)
+                .as[(Long, String, Double)](org.apache.spark.sql.Encoders
+                  .product[(Long, String, Double)]),
+              initState)
+            .writeStream.outputMode(OutputMode.Update())
+            .format("memory").queryName("sti_totals")
+            .option("checkpointLocation", s"$base/ckpt").start(),
+            "stream_tws_init_parity")
+          q.processAllAvailable()
+        } finally safeStop(q)
+      }
 
       val streamTotals = iso.table("sti_totals")
         .groupBy(col("user_id"))
         .agg(max(col("n_events")).as("n"),
           max_by(col("sum_value"), col("n_events")).as("sum_v"))
-      val batchTotals = try refF.get() finally refThread.shutdown()
       val bootUsers = halfB.select(col("user_id")).distinct()
         .join(halfA.select(col("user_id")).distinct(), Seq("user_id"),
           "left_semi")
@@ -1525,7 +1466,7 @@ object StreamGates {
       val rows = gate.collect()
       batchTotals.unpersist()
       s.createDataFrame(java.util.Arrays.asList(rows: _*), gate.schema)
-    } finally deleteRecursively(java.nio.file.Paths.get(base))
+    } finally graft.Fs.deleteRecursively(java.nio.file.Paths.get(base))
   }
 
   /** Gate query [stream_lastk_parity]: the first stream gate whose
@@ -1585,51 +1526,46 @@ object StreamGates {
       }
       dropChunks(Seq(one(halfA, "a"), one(halfB, "b")), inDir)
 
-      // the cross-batch diagnostic reads only the cached slice —
-      // compute it while the stream drains (referee-overlap pattern)
-      val refThread = java.util.concurrent.Executors.newSingleThreadExecutor()
-      val nCrossF = refThread.submit(
-        new java.util.concurrent.Callable[Long] {
-          override def call(): Long = halfB.groupBy(col("user_id"))
-            .agg(count(lit(1)).as("nb"))
-            .join(ev.groupBy(col("user_id")).agg(count(lit(1)).as("nt")),
-              Seq("user_id"))
-            .filter(col("nb") > 0 && col("nb") < K && col("nt") >= K)
-            .count()
-        })
-
-      var q: StreamingQuery = null
-      try {
-        q = owned(Streams.orderedLastK(
-            iso.readStream
-              .schema(StructType(Seq(
-                StructField("user_id", LongType),
-                StructField("ts_us", LongType),
-                StructField("event_id", LongType),
-                StructField("cents", LongType))))
-              .option("maxFilesPerTrigger", "1").parquet(inDir)
-              .as[(Long, Long, Long, Long)](org.apache.spark.sql.Encoders
-                .product[(Long, Long, Long, Long)]),
-            K)
-          .writeStream.outputMode(OutputMode.Update())
-          .format("memory").queryName("slk_lastk")
-          .option("checkpointLocation", s"$base/ckpt").start(),
-          "stream_lastk_parity")
-        q.processAllAvailable()
-      } finally safeStop(q)
-
-      val res = iso.table("slk_lastk")
-        .groupBy(col("user_id"))
-        .agg(max_by(col("lastk_n"), col("n_seen")).as("lastk_n"),
-          max_by(col("lastk_cents"), col("n_seen")).as("lastk_cents"))
-      val rows = res.collect()
       // provably cross-batch rows: batch 2 touched the user with too
-      // few post-cut events to fill K alone — diagnostic, spec-pinned
-      val nCross = try nCrossF.get() finally refThread.shutdown()
+      // few post-cut events to fill K alone — diagnostic, spec-pinned;
+      // it reads only the cached slice
+      val (nCross, (res, rows)) = graft.Overlap.run(iso) {
+        halfB.groupBy(col("user_id"))
+          .agg(count(lit(1)).as("nb"))
+          .join(ev.groupBy(col("user_id")).agg(count(lit(1)).as("nt")),
+            Seq("user_id"))
+          .filter(col("nb") > 0 && col("nb") < K && col("nt") >= K)
+          .count()
+      } {
+        var q: StreamingQuery = null
+        try {
+          q = owned(Streams.orderedLastK(
+              iso.readStream
+                .schema(StructType(Seq(
+                  StructField("user_id", LongType),
+                  StructField("ts_us", LongType),
+                  StructField("event_id", LongType),
+                  StructField("cents", LongType))))
+                .option("maxFilesPerTrigger", "1").parquet(inDir)
+                .as[(Long, Long, Long, Long)](org.apache.spark.sql.Encoders
+                  .product[(Long, Long, Long, Long)]),
+              K)
+            .writeStream.outputMode(OutputMode.Update())
+            .format("memory").queryName("slk_lastk")
+            .option("checkpointLocation", s"$base/ckpt").start(),
+            "stream_lastk_parity")
+          q.processAllAvailable()
+        } finally safeStop(q)
+        val res = iso.table("slk_lastk")
+          .groupBy(col("user_id"))
+          .agg(max_by(col("lastk_n"), col("n_seen")).as("lastk_n"),
+            max_by(col("lastk_cents"), col("n_seen")).as("lastk_cents"))
+        (res, res.collect())
+      }
       graft.Counters.add("lastk_cross_batch_users", nCross)
       ev.unpersist()
       s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
-    } finally deleteRecursively(java.nio.file.Paths.get(base))
+    } finally graft.Fs.deleteRecursively(java.nio.file.Paths.get(base))
   }
 
   /** Gate query [stream_tws_restart_parity]: tws STATE RECOVERY
@@ -1782,7 +1718,7 @@ object StreamGates {
           col("n_users"), col("n_boot").as("n_boot_users"))
       val rows = gate.collect()
       s.createDataFrame(java.util.Arrays.asList(rows: _*), gate.schema)
-    } finally deleteRecursively(java.nio.file.Paths.get(base))
+    } finally graft.Fs.deleteRecursively(java.nio.file.Paths.get(base))
   }
 
   /** Gate query [stream_quantile_parity]: quantile summaries MERGE
@@ -1894,7 +1830,7 @@ object StreamGates {
       val rows = gate.collect()
       vals.unpersist()
       s.createDataFrame(java.util.Arrays.asList(rows: _*), gate.schema)
-    } finally deleteRecursively(java.nio.file.Paths.get(base))
+    } finally graft.Fs.deleteRecursively(java.nio.file.Paths.get(base))
   }
 
   /** Gate query [stream_dsv2_parity]: the gseg DataSourceV2 connector
@@ -1977,7 +1913,7 @@ object StreamGates {
       val rows = gate.collect()
       ev.unpersist()
       s.createDataFrame(java.util.Arrays.asList(rows: _*), gate.schema)
-    } finally deleteRecursively(java.nio.file.Paths.get(base))
+    } finally graft.Fs.deleteRecursively(java.nio.file.Paths.get(base))
   }
 
   /** Gate query [stream_gseg_gen_parity]: the GENERATION-OFFSET
@@ -2063,7 +1999,7 @@ object StreamGates {
       val rows = gate.collect()
       ev.unpersist()
       s.createDataFrame(java.util.Arrays.asList(rows: _*), gate.schema)
-    } finally deleteRecursively(java.nio.file.Paths.get(base))
+    } finally graft.Fs.deleteRecursively(java.nio.file.Paths.get(base))
   }
 
   /** Gate query [stream_gseg_cdf_parity]: the STREAMING row-level
@@ -2176,7 +2112,7 @@ object StreamGates {
         "n_initial", "n_update_pairs", "n_late_inserts")
       ev.unpersist()
       gate
-    } finally deleteRecursively(java.nio.file.Paths.get(base))
+    } finally graft.Fs.deleteRecursively(java.nio.file.Paths.get(base))
   }
 
   /** Gate query [stream_dv_cdf_parity]: a MERGE-ON-READ DELETE
@@ -2295,7 +2231,7 @@ object StreamGates {
         "replay_parity", "n_initial", "n_deleted", "n_late_inserts")
       ev.unpersist()
       gate
-    } finally deleteRecursively(java.nio.file.Paths.get(base))
+    } finally graft.Fs.deleteRecursively(java.nio.file.Paths.get(base))
   }
 
   /** Gate query [stream_cdf_index_parity]: the NORTH-STAR payoff the
@@ -2420,7 +2356,7 @@ object StreamGates {
       Seq((nDocs, nIdx, matches, applied >= 3L))
         .toDF("n_docs", "n_index_rows", "index_matches_rebuild",
           "incremental_applied")
-    } finally deleteRecursively(java.nio.file.Paths.get(base))
+    } finally graft.Fs.deleteRecursively(java.nio.file.Paths.get(base))
   }
 
   /** Gate query [stream_gseg_sink_parity]: the gseg STREAMING SINK —
@@ -2505,7 +2441,7 @@ object StreamGates {
       Seq((firstOk, finalOk, multiEpoch, dmlOk, nTypes)).toDF(
         "first_batch_parity", "final_parity", "multi_epoch", "dml_ok",
         "n_types")
-    } finally deleteRecursively(java.nio.file.Paths.get(base))
+    } finally graft.Fs.deleteRecursively(java.nio.file.Paths.get(base))
   }
 
   /** Gate query [stream_static_join_parity]: the STREAM-STATIC
@@ -2584,7 +2520,7 @@ object StreamGates {
           col("n_multi").as("n_multi_batch_users"))
       val rows = gate.collect()
       s.createDataFrame(java.util.Arrays.asList(rows: _*), gate.schema)
-    } finally deleteRecursively(java.nio.file.Paths.get(base))
+    } finally graft.Fs.deleteRecursively(java.nio.file.Paths.get(base))
   }
 
   /** Gate query [stream_state_reader]: the `statestore` BATCH data
@@ -2680,7 +2616,7 @@ object StreamGates {
           col("n_users"), col("n_type_entries"))
       val rows = gate.collect()
       s.createDataFrame(java.util.Arrays.asList(rows: _*), gate.schema)
-    } finally deleteRecursively(java.nio.file.Paths.get(base))
+    } finally graft.Fs.deleteRecursively(java.nio.file.Paths.get(base))
   }
 
   /** Gate query [stream_state_changefeed]: the statestore source's
@@ -2811,7 +2747,7 @@ object StreamGates {
         val rows = gate.collect()
         s.createDataFrame(java.util.Arrays.asList(rows: _*), gate.schema)
       } finally { feed.unpersist(); () }
-    } finally deleteRecursively(java.nio.file.Paths.get(base))
+    } finally graft.Fs.deleteRecursively(java.nio.file.Paths.get(base))
   }
 
   /** Gate query [sim_ivf_indexed]: the DECLARATIVE ANN-INDEX
@@ -2940,10 +2876,10 @@ object StreamGates {
       // every consumer (the parity anti-joins, all three searches)
       // replans a fresh scan, so the prune counters always measure the
       // PLANNER, never block storage — and with no shared cache to
-      // protect, the independent checks overlap (guide §2.6): the
-      // brute referee, the full-probe exactness search and the
-      // nprobe=4 recall search each ride a background thread while
-      // this thread drives the rebuild parity. Searches go
+      // protect, the independent checks overlap: the brute referee,
+      // the full-probe exactness search and the nprobe=4 recall search
+      // each run on their own thread while this thread drives the
+      // rebuild parity. Searches go
       // assignment-FIRST: the probe set is a pushed `cid IN (...)` on
       // the cid-clustered assignment table, so unprobed cells' files
       // never become read tasks — the index prunes I/O, not just
@@ -2951,38 +2887,34 @@ object StreamGates {
       // every other search has finished, so its counter delta is
       // attributable to it alone.
       val assignT = iso.table("gseg_ann.ns.vec__idx_embedding_assign")
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-      def bg[T](f: => T): java.util.concurrent.Future[T] =
-        pool.submit(new java.util.concurrent.Callable[T] {
-          override def call(): T = f })
-      val bruteF = bg {
+      val ((brute, total), (full, (part, parity))) = graft.Overlap.run(iso) {
         val b = graft.functions.Similarity
           .cosineTopKOf(iso, live.toDF("vec_id", "v"), 20, 5)
           .select(col("query_id"), col("vec_id"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         (b, b.count())
+      } {
+        graft.Overlap.run(iso) {
+          val f = graft.functions.Ivf
+            .ivfTopKIndexed(assignT, live, cents, 20, 5, nprobe = nCells)
+            .select(col("query_id"), col("vec_id"))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          f.count(); f
+        } {
+          graft.Overlap.run(iso) {
+            val p = graft.functions.Ivf
+              .ivfTopKIndexed(assignT, live, cents, 20, 5, nprobe = 4)
+              .select(col("query_id"), col("vec_id"))
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            p.count(); p
+          } {
+            val rebuilt = graft.functions.Ivf.assignOn(live, cents)
+            val sym = symDiffEmpty(assignT, rebuilt,
+              Seq("key", "cid")).head()
+            sym.getLong(0) == 0 && sym.getLong(1) == 0
+          }
+        }
       }
-      val fullF = bg {
-        val f = graft.functions.Ivf
-          .ivfTopKIndexed(assignT, live, cents, 20, 5, nprobe = nCells)
-          .select(col("query_id"), col("vec_id"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        f.count(); f
-      }
-      val partF = bg {
-        val p = graft.functions.Ivf
-          .ivfTopKIndexed(assignT, live, cents, 20, 5, nprobe = 4)
-          .select(col("query_id"), col("vec_id"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        p.count(); p
-      }
-      val rebuilt = graft.functions.Ivf.assignOn(live, cents)
-      val sym = symDiffEmpty(assignT, rebuilt,
-        Seq("key", "cid")).head()
-      val parity = sym.getLong(0) == 0 && sym.getLong(1) == 0
-      val ((brute, total), full, part) =
-        try ((bruteF.get(), fullF.get(), partF.get()))
-        finally pool.shutdown()
       val fullSym = symDiffEmpty(full, brute.toDF(),
         Seq("query_id", "vec_id")).head()
       val fullExact = fullSym.getLong(0) == 0 && fullSym.getLong(1) == 0
@@ -3004,7 +2936,7 @@ object StreamGates {
         .toDF("n_vectors", "n_cells", "index_matches_rebuild",
           "incremental_applied", "full_probe_exact", "recall_ok",
           "search_file_pruned")
-    } finally deleteRecursively(java.nio.file.Paths.get(base))
+    } finally graft.Fs.deleteRecursively(java.nio.file.Paths.get(base))
   }
 
   /** Gate query [stream_wap_cdf_parity]: BRANCH-SCOPED CHANGEFEED —
@@ -3116,31 +3048,27 @@ object StreamGates {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // materialize the cache with the poison check FIRST so the two
       // consumers below don't race a cold cache; then the branch-audit
-      // parity (two anti-joins against the VERSION AS OF read) rides a
-      // background thread while this thread runs the mirror aggregate
-      // (guide §2.6 — independent reads of the same final state)
+      // parity (two anti-joins against the VERSION AS OF read) overlaps
+      // the mirror aggregate — independent reads of the same final state
       val poisonSeen = mirror.filter(col("k") < 0).count()
       val audit = iso.sql(
         "SELECT k, qty FROM gseg_wcdf.ns.t VERSION AS OF 'wap'")
-      val refThread = java.util.concurrent.Executors.newSingleThreadExecutor()
-      val symF = refThread.submit(
-        new java.util.concurrent.Callable[org.apache.spark.sql.Row] {
-          override def call(): org.apache.spark.sql.Row =
-            symDiffEmpty(mirror.toDF(), audit, Seq("k", "qty")).head()
-        })
-      val r = mirror
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("qty").cast("decimal(18,2)")).cast("double")
-            .as("sum_qty"))
-        .head()
-      val sym = try symF.get() finally refThread.shutdown()
+      val (sym, r) = graft.Overlap.run(iso) {
+        symDiffEmpty(mirror.toDF(), audit, Seq("k", "qty")).head()
+      } {
+        mirror
+          .agg(count(lit(1)).as("n_rows"),
+            sum(col("qty").cast("decimal(18,2)")).cast("double")
+              .as("sum_qty"))
+          .head()
+      }
       val parity = sym.getLong(0) == 0 && sym.getLong(1) == 0
       mirror.unpersist()
       Seq((r.getLong(0), r.getDouble(1), parity, poisonSeen == 0L,
         applied >= 3L))
         .toDF("n_rows", "sum_qty", "mirror_matches_branch",
           "main_commit_invisible", "incremental_applied")
-    } finally deleteRecursively(java.nio.file.Paths.get(base))
+    } finally graft.Fs.deleteRecursively(java.nio.file.Paths.get(base))
   }
 
   /** Gate query [sim_lsh_indexed]: the PERSISTED LSH INDEX searched
@@ -3250,35 +3178,31 @@ object StreamGates {
       // stays UNCACHED (every consumer replans, so the prune counters
       // always measure the planner), and the two independent reads of
       // the final state — the brute referee and the radius-3
-      // multiprobe search — ride background threads while this thread
+      // multiprobe search — run on their own threads while this thread
       // drives the rebuild parity. The pruning-evidence search stays
       // serial, after every other search, so its counter delta is
       // attributable to it alone.
       val assignT = iso.table("gseg_lsh.ns.vec__idx_embedding_assign")
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      def bg[T](f: => T): java.util.concurrent.Future[T] =
-        pool.submit(new java.util.concurrent.Callable[T] {
-          override def call(): T = f })
-      val bruteF = bg {
+      val ((brute, total), (idx, parity)) = graft.Overlap.run(iso) {
         val b = graft.functions.Similarity
           .cosineTopKOf(iso, live.toDF("vec_id", "v"), 20, 5)
           .select(col("query_id"), col("vec_id"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         (b, b.count())
+      } {
+        graft.Overlap.run(iso) {
+          val i = graft.functions.Ivf
+            .lshTopKIndexed(assignT, live, nbits, 20, 5, radius = 3)
+            .select(col("query_id"), col("vec_id"))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          i.count(); i
+        } {
+          val rebuilt = graft.functions.Ivf.lshAssignOn(live, nbits)
+          val sym = symDiffEmpty(assignT, rebuilt,
+            Seq("key", "bucket")).head()
+          sym.getLong(0) == 0 && sym.getLong(1) == 0
+        }
       }
-      val idxF = bg {
-        val i = graft.functions.Ivf
-          .lshTopKIndexed(assignT, live, nbits, 20, 5, radius = 3)
-          .select(col("query_id"), col("vec_id"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        i.count(); i
-      }
-      val rebuilt = graft.functions.Ivf.lshAssignOn(live, nbits)
-      val sym = symDiffEmpty(assignT, rebuilt,
-        Seq("key", "bucket")).head()
-      val parity = sym.getLong(0) == 0 && sym.getLong(1) == 0
-      val ((brute, total), idx) =
-        try ((bruteF.get(), idxF.get())) finally pool.shutdown()
       val hits = idx.join(brute, Seq("query_id", "vec_id"), "left_semi")
         .count()
       val f0 = graft.Counters.peek("gseg_files_skipped")
@@ -3290,6 +3214,6 @@ object StreamGates {
         hits >= total * 0.7, searchPruned))
         .toDF("n_vectors", "n_bits", "index_matches_rebuild",
           "incremental_applied", "recall_ok", "search_file_pruned")
-    } finally deleteRecursively(java.nio.file.Paths.get(base))
+    } finally graft.Fs.deleteRecursively(java.nio.file.Paths.get(base))
   }
 }

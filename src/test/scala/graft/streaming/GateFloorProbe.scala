@@ -12,10 +12,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
   * Run: sbt "Test/runMain graft.streaming.GateFloorProbe". */
 object GateFloorProbe {
   def main(args: Array[String]): Unit = {
-    val spark: SparkSession = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark: SparkSession = graft.GraftSession.builder("local[32]", 32)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
