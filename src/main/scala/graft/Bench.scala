@@ -43,7 +43,13 @@ import org.apache.spark.sql.SparkSession
   * the raw per-pass totals so variance itself stays visible. Reported
   * metrics come from each query's best pass. */
 object Bench {
-  /** Per-query execution counters, attributed via job group. */
+  /** Spark local property naming the driver query a job belongs to.
+    * Spark copies local properties into the threads a query starts —
+    * Overlap referees, broadcast and subquery threads, a stream's
+    * micro-batch thread — so every job of the query carries it. */
+  private[graft] val QueryProperty = "graft.query"
+
+  /** Per-query execution counters, attributed via [[QueryProperty]]. */
   private final class QMetrics {
     var jobs, stages, tasks = 0L
     var shuffleRead, shuffleWrite, memSpill, diskSpill = 0L
@@ -234,26 +240,23 @@ object Bench {
 
     val metrics = new ConcurrentHashMap[String, QMetrics]()
     val stageOwner = new ConcurrentHashMap[Int, String]()
-    val knownQueries = SparkEntry.queries.keySet
     @volatile var current = "warmup"
     def forQuery(name: String): QMetrics =
       metrics.computeIfAbsent(name, _ => new QMetrics)
-    // jobs carry the query name as their job group; stages inherit it
-    // through the job that submitted them. Spark's own machinery
-    // overwrites the group on threads it owns — StreamExecution sets
-    // the stream's runId UUID — so those resolve through the gates'
-    // runId→query registry (Counters.streamOwner): attribution then
-    // survives listener-bus lag, where a gate's last micro-batch
-    // events land after `current` has moved to the next query (the r9
-    // driver run's phantom stream_session_parity signature change).
-    // Only a group that is neither a query name nor a registered
-    // stream falls back to the current query.
+    // jobs carry the query name in the QueryProperty local property;
+    // stages inherit it through the job that submitted them. Spark
+    // copies local properties into every thread a query starts,
+    // including a stream's micro-batch thread (built by start() on
+    // the query's thread) — where the job group is overwritten with
+    // the stream's runId. So attribution survives listener-bus lag: a
+    // gate's last micro-batch events can land after `current` has
+    // moved to the next query (the r9 driver run's phantom
+    // stream_session_parity signature change). Only a job without the
+    // property falls back to the current query.
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
         val name = Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .flatMap(g => if (knownQueries.contains(g)) Some(g)
-                        else Counters.streamOwner(g))
+          .flatMap(p => Option(p.getProperty(QueryProperty)))
           .getOrElse(current)
         val m = forQuery(name)
         m.synchronized { m.jobs += 1 }
@@ -350,7 +353,7 @@ object Bench {
         spark.catalog.clearCache()
         Counters.clear()
         current = name
-        spark.sparkContext.setJobGroup(name, name, interruptOnCancel = false)
+        spark.sparkContext.setLocalProperty(QueryProperty, name)
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true } catch {
           case e: Throwable =>
@@ -358,7 +361,7 @@ object Bench {
             false
         }
         val elapsed = (System.nanoTime() - t0) / 1e9
-        spark.sparkContext.clearJobGroup()
+        spark.sparkContext.setLocalProperty(QueryProperty, null)
         drainShort()
         // operator-emitted loop/path counters (cc_rounds, fuzzy path…):
         // most record synchronously on this driver thread during fn;

@@ -41,26 +41,6 @@ object Counters {
     val s = snapshot(); clear(); s
   }
 
-  /** runId → driver-query-name registry for streaming jobs. Spark's
-    * StreamExecution overwrites the job group on its micro-batch
-    * thread with the stream's runId UUID, so [[Bench]]'s listener
-    * can't attribute those jobs by group name; worse, listener-bus
-    * delivery is async, so under driver-box contention a gate's last
-    * micro-batch job EVENTS can arrive after Bench's short drain has
-    * moved `current` to the next query — the r9 driver run charged 2
-    * such jobs to stream_session_parity and flagged a phantom plan
-    * change in TRENDS. Gates register their stream's runId at start;
-    * Bench resolves UUID job groups here FIRST, falling back to
-    * `current` only for genuinely unattributable work. Never cleared:
-    * entries are ~50 bytes and bounded by streams-started-per-JVM,
-    * and late events must resolve after the owning query finished. */
-  private val streamOwners = new ConcurrentHashMap[String, String]()
-  def registerStreamOwner(runId: String, query: String): Unit = {
-    streamOwners.put(runId, query); ()
-  }
-  def streamOwner(jobGroup: String): Option[String] =
-    Option(streamOwners.get(jobGroup))
-
   /** Namespace marking an observed metric as counter-bound. */
   private val ObsPrefix = "graft_ctr_"
   // weak keys: the hook registry must not pin child sessions in memory

@@ -81,6 +81,14 @@ object Fs {
   def fastTempDir(prefix: String): java.nio.file.Path =
     java.nio.file.Files.createTempDirectory(fastTmpBase, prefix)
 
+  /** Temp dir on the fast base that lives until JVM exit: the home of
+    * per-JVM caches of prebuilt files. */
+  def jvmLifetimeDir(prefix: String): java.nio.file.Path = {
+    val dir = fastTempDir(prefix)
+    cleanupOnExit(dir.toString)
+    dir
+  }
+
   private val exitCleanup =
     java.util.Collections.synchronizedSet(new java.util.HashSet[String]())
   private def cleanupOnExit(dir: String): Unit =

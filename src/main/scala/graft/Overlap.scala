@@ -14,8 +14,8 @@ import org.apache.spark.sql.SparkSession
   * over a cached slice or immutable files, so the driver submits both
   * job chains and the scheduler back-fills idle cores. The thread is
   * created by the caller, so it inherits the caller's Spark local
-  * properties: its jobs carry the caller's job group, and `graft.Bench`
-  * attributes them to the query that started them.
+  * properties: its jobs carry the caller's job group and the property
+  * `graft.Bench` attributes jobs by.
   *
   * The background jobs also carry a job tag of their own (tags add to
   * the job group, they do not replace it). If either side throws, the

@@ -34,12 +34,13 @@ object Gates {
     lOnly.crossJoin(rOnly)
   }
 
-  /** Evaluate a one-row gate frame eagerly, release the given cached
-    * frames, and hand back the result as a fresh local DataFrame — the
+  /** Evaluate a gate frame eagerly, release the given cached frames,
+    * and hand back the result as a fresh local DataFrame on `s` — the
     * persists above never outlive the gate call, so sessions without
     * Bench/Verify's clearCache-between-queries discipline (specs,
-    * interactive use) can't accumulate cached corpora. */
-  private[functions] def sealGate(s: SparkSession, gate: DataFrame,
+    * interactive use) can't accumulate cached corpora. The one
+    * collect-and-re-host in src/main. */
+  private[graft] def sealGate(s: SparkSession, gate: DataFrame,
       cached: org.apache.spark.sql.Dataset[_]*): DataFrame = {
     val rows = gate.collect()
     cached.foreach(_.unpersist())
@@ -166,9 +167,7 @@ object Gates {
         .as("ok"))
       .agg(coalesce(expr("bool_and(ok)"), lit(false)).as("sliding_distinct_ok"))
       .crossJoin(est.agg(count(lit(1)).as("n_days")))
-    val rows = gate.collect()
-    pairs.unpersist()
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), gate.schema)
+    sealGate(s, gate, pairs)
   }
 
   /** Count-min-sketch gate [a18_count_min]: the frequency sibling of

@@ -481,8 +481,6 @@ object TextOps {
         count(lit(1)).as("vocab_union"))
       .select(round((col("kl_a") * 0.5 + col("kl_b") * 0.5), 6).as("jsd"),
         col("vocab_union"))
-    val rows = out.collect()
-    toks.unpersist()
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+    Gates.sealGate(s, out, toks)
   }
 }

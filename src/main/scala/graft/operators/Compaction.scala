@@ -98,7 +98,6 @@ object Compaction {
         (lit(outFiles.size) === n && lit(outFiles.size) < fragFiles.size &&
           lit(outFiles.forall(_._2 > 0L))).as("layout_ok"),
         col("n_out").as("n_rows"))
-    val rows = gate.collect()
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), gate.schema)
+    graft.functions.Gates.sealGate(s, gate)
   }
 }

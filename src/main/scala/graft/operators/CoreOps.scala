@@ -1102,7 +1102,7 @@ object CoreOps {
       // one (NULL, 0) row — instead of dereferencing a null MIN
       edges.unpersist()
       return s.createDataFrame(
-        java.util.Arrays.asList(org.apache.spark.sql.Row(null, 0)),
+        java.util.Collections.singletonList(org.apache.spark.sql.Row(null, 0)),
         StructType(Seq(StructField("node", LongType),
           StructField("dist", IntegerType))))
     }
@@ -2745,9 +2745,7 @@ object CoreOps {
     val result = keyed.join(broadcast(cands), Seq("hkey"), "left_semi")
       .groupBy(col("hkey")).agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= threshold)
-    val rows = result.collect()
-    keys2.unpersist()
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
+    graft.functions.Gates.sealGate(s, result, keys2)
   }
 
   /** One-pass multi-band conditional aggregation [Q88] (the TPC-DS Q88

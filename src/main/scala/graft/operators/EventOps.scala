@@ -653,8 +653,7 @@ object EventOps {
           .as("holt_within_tol"),
         (col("n_chunks") > col("n_users")).as("multi_chunk"),
         col("n_events").as("n_rows"))
-    val rows = out.collect()
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+    graft.functions.Gates.sealGate(s, out)
   }
 
   /** An affine per-user recurrence sᵢ = M(xᵢ)·sᵢ₋₁ + b(xᵢ), with the
