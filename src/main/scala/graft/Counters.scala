@@ -2,6 +2,8 @@ package graft
 
 import java.util.concurrent.ConcurrentHashMap
 
+import org.apache.spark.sql.execution.GraftExecutions
+
 /** Driver-side named counters for per-query execution diagnostics the
   * SparkListener can't see — iterative-loop round counts, adaptive
   * path choices. Operators record here; [[Bench]] snapshots the
@@ -43,15 +45,15 @@ object Counters {
 
   /** Namespace marking an observed metric as counter-bound. */
   private val ObsPrefix = "graft_ctr_"
-  // weak keys: the hook registry must not pin child sessions in memory
-  // for the JVM's lifetime (synchronized — registration is rare)
+  // weak keys: the hook registry must not pin a stopped SparkContext
+  // in memory for the JVM's lifetime (synchronized — registration is rare)
   private val hooked =
     java.util.Collections.synchronizedSet(
       java.util.Collections.newSetFromMap(
-        new java.util.WeakHashMap[org.apache.spark.sql.SparkSession, java.lang.Boolean]()))
+        new java.util.WeakHashMap[org.apache.spark.SparkContext, java.lang.Boolean]()))
 
   // dedup guard: one add per (execution, metric). A QueryExecution is
-  // one physical execution, but the listener fires onSuccess once per
+  // one physical execution, but Spark posts an execution-end event once per
   // ACTION over the frame — a consumer that runs the same observed
   // frame twice (e.g. count() then collect()) re-executes and would
   // double-count without keying on qe.id. Bounded FIFO so the set
@@ -89,22 +91,44 @@ object Counters {
     * assume the counter landed when the action returned. */
   def observeInto(df: org.apache.spark.sql.DataFrame, name: String,
       expr: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame = {
-    val s = df.sparkSession
-    if (hooked.add(s))
-      s.listenerManager.register(
-        new org.apache.spark.sql.util.QueryExecutionListener {
-          override def onSuccess(funcName: String,
-              qe: org.apache.spark.sql.execution.QueryExecution,
-              durationNs: Long): Unit =
-            qe.observedMetrics.foreach { case (n, row) =>
-              if (n.startsWith(ObsPrefix) && row.length > 0 && !row.isNullAt(0)
-                  && seenExecs.put(s"${qe.id}#$n", java.lang.Boolean.TRUE) == null)
-                add(n.stripPrefix(ObsPrefix), row.getLong(0))
-            }
-          override def onFailure(funcName: String,
-              qe: org.apache.spark.sql.execution.QueryExecution,
-              exception: Exception): Unit = ()
-        })
+    val sc = df.sparkSession.sparkContext
+    if (hooked.add(sc))
+      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+        override def onOtherEvent(
+            e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+          case end: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd =>
+            GraftExecutions.succeeded(end).foreach(record(end.executionId, _))
+          case _ =>
+        }
+      })
     df.observe(ObsPrefix + name, expr)
+  }
+
+  /** Adds the counter-bound metrics of a finished execution. The
+    * metrics live in accumulators on the plan, which every action over
+    * the same frame shares, and each action resets them before it runs.
+    * While a later action over this plan runs, a read here is partial
+    * (0 for the first of two back-to-back collect()s) and would mark the
+    * execution seen, dropping the full value. So the read is skipped
+    * when a later execution of this plan is in flight, checked before
+    * and after it; that execution's own end event records the value.
+    * Two cases still lose the value, both outside what the checks see:
+    * a rerun that starts and finishes between the two checks (the
+    * read, microseconds, against a whole Spark job) leaves a partial
+    * value recorded and its own end event dropped as seen; and a rerun
+    * that FAILS records nothing, while the earlier run skipped its read
+    * for it. Spark's own `Observation` reads the same shared
+    * accumulators the same way. */
+  private def record(executionId: Long,
+      qe: org.apache.spark.sql.execution.QueryExecution): Unit = {
+    def rerunning = GraftExecutions.rerunning(executionId, qe)
+    if (!rerunning) {
+      val metrics = qe.observedMetrics
+      if (!rerunning) metrics.foreach { case (n, row) =>
+        if (n.startsWith(ObsPrefix) && row.length > 0 && !row.isNullAt(0)
+            && seenExecs.put(s"${qe.id}#$n", java.lang.Boolean.TRUE) == null)
+          add(n.stripPrefix(ObsPrefix), row.getLong(0))
+      }
+    }
   }
 }

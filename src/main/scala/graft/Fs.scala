@@ -61,13 +61,16 @@ object Fs {
   }
 
   /** tmpfs-backed base for KB-scale gate scaffolding (stream-gate
-    * inputs, checkpoints, external state stores): each micro-batch
-    * writes offset/commit logs and state files whose fsync latency on
-    * a disk-backed /tmp dominates the gates' fixed floor; on /dev/shm
-    * it's a memory write. Falls back to java.io.tmpdir when no
-    * writable tmpfs exists. Production checkpoints belong on durable
-    * storage — this is for the parity gates' throwaway dirs only,
-    * which are deleted within the query that made them. */
+    * inputs, checkpoints, external state stores), whose files live
+    * for one query: on /dev/shm their writes never reach the host
+    * disk. The gates' per-batch floor does not come from this base:
+    * measured, it was Hadoop's stock local filesystem launching a
+    * chmod/readlink process per checkpoint file, on tmpfs as on disk,
+    * not fsync ([[NioLocalFs]] removes the launches). Falls back to
+    * java.io.tmpdir when no writable tmpfs exists. Production
+    * checkpoints belong on durable storage — this is for the parity
+    * gates' throwaway dirs only, which are deleted within the query
+    * that made them. */
   lazy val fastTmpBase: java.nio.file.Path = {
     val shm = java.nio.file.Paths.get("/dev/shm")
     val base =
