@@ -591,52 +591,12 @@ class SegCatalog extends TableCatalog
 
   /** Table-maintenance STORED PROCEDURES (Spark 4 ProcedureCatalog —
     * the `CALL cat.proc(...)` SPI every lakehouse ships its OPTIMIZE/
-    * VACUUM surface through). `vacuum('ns.table')` reclaims segments
-    * outside the live generation manifest: the orphans a crashed
-    * commit strands on either side of its swap (staged-but-unswapped,
-    * or swapped-out-but-unGC'd) plus stale staging temps. Safe at any
-    * time under the single-writer contract — nothing outside the
-    * manifest is reader-reachable. */
-  override def loadProcedure(ident: Identifier)
-      : org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure =
-    ident.name() match {
-      case "vacuum" => new SegVacuumProcedure(this)
-      case "compact" => new SegCompactProcedure(this)
-      case "history" => new SegHistoryProcedure(this)
-      case "rollback" => new SegRollbackProcedure(this)
-      case "changes" => new SegChangesProcedure(this)
-      case "clone" => new SegCloneProcedure(this)
-      case "tag" => new SegTagProcedure(this)
-      case "untag" => new SegUntagProcedure(this)
-      case "set_clustering" => new SegSetClusteringProcedure(this)
-      case "create_index" => new SegCreateIndexProcedure(this)
-      case "drop_index" => new SegDropIndexProcedure(this)
-      case "branch" => new SegBranchProcedure(this)
-      case "drop_branch" => new SegDropBranchProcedure(this)
-      case "fast_forward" => new SegFastForwardProcedure(this)
-      case "rebase" => new SegRebaseProcedure(this)
-      case other => throw new UnsupportedOperationException(
-        s"gseg: no procedure '$other' " +
-          "(have: vacuum, compact, history, rollback, changes, clone, " +
-          "tag, untag, branch, drop_branch, fast_forward, rebase)")
-    }
+    * VACUUM surface through): one entry each in [[SegProcedures.All]]. */
+  override def loadProcedure(ident: Identifier): SegProcedure =
+    SegProcedures.load(this, ident.name())
   override def listProcedures(namespace: Array[String]): Array[Identifier] =
     if (namespace.isEmpty)
-      Array(Identifier.of(namespace, "vacuum"),
-        Identifier.of(namespace, "compact"),
-        Identifier.of(namespace, "history"),
-        Identifier.of(namespace, "rollback"),
-        Identifier.of(namespace, "changes"),
-        Identifier.of(namespace, "clone"),
-        Identifier.of(namespace, "tag"),
-        Identifier.of(namespace, "untag"),
-        Identifier.of(namespace, "branch"),
-        Identifier.of(namespace, "drop_branch"),
-        Identifier.of(namespace, "fast_forward"),
-        Identifier.of(namespace, "rebase"),
-        Identifier.of(namespace, "set_clustering"),
-        Identifier.of(namespace, "create_index"),
-        Identifier.of(namespace, "drop_index"))
+      SegProcedures.All.map(p => Identifier.of(namespace, p.name)).toArray
     else Array.empty
 
   /** Identifier → validated table dir, for the procedures. */
@@ -652,12 +612,6 @@ class SegCatalog extends TableCatalog
     dirOf(ident)
 }
 
-/** `CALL <catalog>.vacuum('ns.table')` → one row
-  * (table STRING, reclaimed_files BIGINT). Driver-side by design:
-  * vacuum is a metadata operation (one manifest read + one directory
-  * listing + unlink of unreferenced files) — there is nothing to
-  * distribute even at 100 TB, where the listing is the same one any
-  * commit already pays. */
 object SegCatalog {
   /** The per-command execution-strategy properties (Iceberg's
     * write.<cmd>.mode shape): `copy_on_write` (default — rewrite the
@@ -699,74 +653,6 @@ object SegCatalog {
           "gseg.index.<column>)")
     }.toMap
   }
-}
-
-class SegVacuumProcedure(cat: SegCatalog)
-    extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-  import org.apache.spark.sql.connector.read.{LocalScan, Scan => V2Scan}
-
-  override def name(): String = "vacuum"
-  override def description(): String =
-    "reclaim gseg segments outside the live generation manifest"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "vacuum"
-      override def description(): String = SegVacuumProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType).build(),
-        // retention bound: keep the live generation plus the N-1 most
-        // recent committed ones time-travelable; default 1 = live only
-        ProcedureParameter.in("keep_last",
-          org.apache.spark.sql.types.IntegerType)
-          .defaultValue("1").build(),
-        // time retention horizon: generations younger than this age
-        // (by their EMBEDDED commit clock) survive regardless of
-        // keep_last — operators schedule vacuum by time
-        ProcedureParameter.in("older_than_ms",
-          org.apache.spark.sql.types.LongType)
-          .defaultValue("CAST(NULL AS BIGINT)").build(),
-        // report-only mode: list what a real run would reclaim
-        ProcedureParameter.in("dry_run",
-          org.apache.spark.sql.types.BooleanType)
-          .defaultValue("false").build())
-      override def isDeterministic: Boolean = false // filesystem state
-
-      private val outSchema = StructType(Seq(
-        StructField("table", StringType, nullable = false),
-        StructField("reclaimed_files", org.apache.spark.sql.types.LongType,
-          nullable = false)))
-
-      override def call(input: org.apache.spark.sql.catalyst.InternalRow)
-          : java.util.Iterator[V2Scan] = {
-        val tbl = input.getUTF8String(0).toString
-        val keepLast =
-          if (input.numFields < 2 || input.isNullAt(1)) 1 else input.getInt(1)
-        val olderThan =
-          if (input.numFields < 3 || input.isNullAt(2)) None
-          else Some(input.getLong(2))
-        val dryRun =
-          input.numFields >= 4 && !input.isNullAt(3) && input.getBoolean(3)
-        val parts = tbl.split('.')
-        require(parts.nonEmpty && parts.forall(_.nonEmpty),
-          s"gseg vacuum: bad table identifier '$tbl'")
-        val dir = cat.tableDir(
-          Identifier.of(parts.init.toArray, parts.last))
-        val reclaimed =
-          SegManifest.vacuum(dir.toString, keepLast, olderThan, dryRun)
-        val row = new org.apache.spark.sql.catalyst.expressions
-          .GenericInternalRow(Array[Any](
-            org.apache.spark.unsafe.types.UTF8String.fromString(tbl),
-            reclaimed.size.toLong))
-        java.util.List.of[V2Scan](new LocalScan {
-          override def rows(): Array[org.apache.spark.sql.catalyst.InternalRow] =
-            Array(row)
-          override def readSchema(): StructType = outSchema
-          override def description(): String = s"gseg vacuum $tbl"
-        }).iterator()
-      }
-    }
 }
 
 /** The table a CTAS/RTAS query writes into before it exists: writes
@@ -933,617 +819,6 @@ class SegDmlTable(tschema: StructType, path: String,
     }
     true
   }
-}
-
-/** `CALL <catalog>.history('ns.table')` → one row per RETAINED
-  * generation (generation BIGINT, committed_at_ms BIGINT, n_segments
-  * BIGINT, is_current BOOLEAN), ascending — the observability half of
-  * time travel: which `VERSION AS OF` targets still exist, when each
-  * committed (the snapshot's clock, same one TIMESTAMP AS OF
-  * resolves by), and how wide each generation was. Metadata-only. */
-class SegHistoryProcedure(cat: SegCatalog)
-    extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-  import org.apache.spark.sql.connector.read.{LocalScan, Scan => V2Scan}
-
-  override def name(): String = "history"
-  override def description(): String =
-    "retained generations of a gseg table (time-travel targets)"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "history"
-      override def description(): String =
-        SegHistoryProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] =
-        Array(ProcedureParameter.in("table", StringType).build())
-      override def isDeterministic: Boolean = false
-
-      private val outSchema = StructType(Seq(
-        StructField("generation", org.apache.spark.sql.types.LongType,
-          nullable = false),
-        StructField("committed_at_ms", org.apache.spark.sql.types.LongType,
-          nullable = false),
-        StructField("n_segments", org.apache.spark.sql.types.LongType,
-          nullable = false),
-        StructField("is_current", org.apache.spark.sql.types.BooleanType,
-          nullable = false),
-        // merge-on-read observability (appended at the tail so the
-        // pre-r15 positional consumers keep reading): how many
-        // segments carry a deletion vector, and the masked-row total
-        // — the numbers a min_deleted_ratio compact decision reads
-        StructField("n_deletion_vectors", org.apache.spark.sql.types.LongType,
-          nullable = false),
-        StructField("n_deleted_rows", org.apache.spark.sql.types.LongType,
-          nullable = false),
-        // named refs pinning this generation (tail-appended like the
-        // dv columns: pre-r16 positional consumers keep reading) —
-        // the operator's answer to "why didn't vacuum reclaim this?"
-        StructField("tags", StringType, nullable = false)))
-
-      override def call(input: org.apache.spark.sql.catalyst.InternalRow)
-          : java.util.Iterator[V2Scan] = {
-        val tbl = input.getUTF8String(0).toString
-        val parts = tbl.split('.')
-        require(parts.nonEmpty && parts.forall(_.nonEmpty),
-          s"gseg history: bad table identifier '$tbl'")
-        val dir = cat.tableDir(
-          Identifier.of(parts.init.toArray, parts.last))
-        val current = SegManifest.read(dir.toString).map(_._1)
-        // named refs on each generation: tags verbatim, branch HEADS
-        // as 'name(branch)' — one column answers "why is this
-        // generation retained, and which ref reads it"
-        val tagsByGen = (SegManifest.tags(dir.toString).toSeq ++
-          SegManifest.refs(dir.toString).toSeq.map { case (n, (h, _)) =>
-            s"$n(branch)" -> h })
-          .groupMap(_._2)(_._1).view.mapValues(_.sorted.mkString(","))
-          .toMap
-        val histRows = SegManifest.listSnapshots(dir.toString)
-          .map { case (gen, ms) =>
-            val m = SegManifest.readSnapshotManifest(dir.toString, gen)
-            val deleted = m.map(_.dvs.values.map(d =>
-              SegDv.countOf(s"$dir/$d").toLong).sum).getOrElse(0L)
-            new org.apache.spark.sql.catalyst.expressions
-              .GenericInternalRow(Array[Any](gen, ms,
-                m.map(_.names.size.toLong).getOrElse(0L),
-                current.contains(gen),
-                m.map(_.dvs.size.toLong).getOrElse(0L),
-                deleted,
-                org.apache.spark.unsafe.types.UTF8String.fromString(
-                  tagsByGen.getOrElse(gen, ""))))
-              : org.apache.spark.sql.catalyst.InternalRow
-          }.toArray
-        java.util.List.of[V2Scan](new LocalScan {
-          override def rows(): Array[org.apache.spark.sql.catalyst.InternalRow] =
-            histRows
-          override def readSchema(): StructType = outSchema
-          override def description(): String = s"gseg history $tbl"
-        }).iterator()
-      }
-    }
-}
-
-/** `CALL <catalog>.rollback('ns.table', generation)` → one row
-  * (table STRING, rolled_back_to BIGINT, new_generation BIGINT). The
-  * undo button time travel enables: re-commit a RETAINED generation's
-  * exact file set as a NEW generation (one atomic manifest swap — the
-  * forward-rolling recovery every lakehouse ships, never a mutation
-  * of history: the bad generations stay in the ledger and
-  * time-travelable until vacuum, which also reclaims their files once
-  * nothing live references them). Fails loudly when the target
-  * snapshot is gone (never committed, or retired by vacuum) or when
-  * any of its files has been reclaimed. */
-class SegRollbackProcedure(cat: SegCatalog)
-    extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-  import org.apache.spark.sql.connector.read.{LocalScan, Scan => V2Scan}
-
-  override def name(): String = "rollback"
-  override def description(): String =
-    "re-commit a retained generation's file set as the live generation"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "rollback"
-      override def description(): String =
-        SegRollbackProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType).build(),
-        ProcedureParameter.in("generation",
-          org.apache.spark.sql.types.LongType).build())
-      override def isDeterministic: Boolean = false
-
-      private val outSchema = StructType(Seq(
-        StructField("table", StringType, nullable = false),
-        StructField("rolled_back_to", org.apache.spark.sql.types.LongType,
-          nullable = false),
-        StructField("new_generation", org.apache.spark.sql.types.LongType,
-          nullable = false)))
-
-      override def call(input: org.apache.spark.sql.catalyst.InternalRow)
-          : java.util.Iterator[V2Scan] = {
-        val tbl = input.getUTF8String(0).toString
-        val gen = input.getLong(1)
-        val parts = tbl.split('.')
-        require(parts.nonEmpty && parts.forall(_.nonEmpty),
-          s"gseg rollback: bad table identifier '$tbl'")
-        val dir = cat.tableDir(
-          Identifier.of(parts.init.toArray, parts.last))
-        val snap = SegManifest.readSnapshotManifest(dir.toString, gen)
-          .getOrElse(throw new IllegalArgumentException(
-            s"gseg rollback: no snapshot for generation $gen of " +
-              s"${parts.last} — never committed, or retired by vacuum"))
-        val names = snap.names
-        val missing = (names ++ snap.dvs.values)
-          .filterNot(n => Files.exists(dir.resolve(n)))
-        require(missing.isEmpty,
-          s"gseg rollback: generation $gen is no longer materialized — " +
-            s"missing segment(s): ${missing.mkString(", ")}")
-        val liveGen = SegManifest.read(dir.toString).map(_._1)
-        // the restored generation's OWN deletion-vector map, replaced
-        // wholesale: a live vector the old generation didn't have
-        // must not keep masking its rows (the changefeed reads that
-        // as resurrection — deliberate rollback semantics)
-        val newGen = SegManifest.swap(dir.toString, names,
-          expectGen = Some(liveGen), dvs = Some(snap.dvs))
-        val row = new org.apache.spark.sql.catalyst.expressions
-          .GenericInternalRow(Array[Any](
-            org.apache.spark.unsafe.types.UTF8String.fromString(tbl),
-            gen, newGen))
-        java.util.List.of[V2Scan](new LocalScan {
-          override def rows(): Array[org.apache.spark.sql.catalyst.InternalRow] =
-            Array(row)
-          override def readSchema(): StructType = outSchema
-          override def description(): String = s"gseg rollback $tbl"
-        }).iterator()
-      }
-    }
-}
-
-/** `CALL <catalog>.changes('ns.table', from_gen, to_gen)` → one row
-  * per segment file that DIFFERS between two retained generations
-  * (file STRING, change STRING ∈ {added, removed}, n_rows BIGINT),
-  * sorted. This is the metadata HALF of the changefeed: copy-on-write
-  * shares untouched files between generations, so the diff is bounded
-  * by what the intervening commits rewrote — at 100 TB a 2-file DML
-  * answers in two header reads, never a table scan. The row-level
-  * half (inserted/deleted/updated ROWS) is
-  * [[SegChangeFeed.changes]]: a distributed full-outer join of the
-  * two pinned reads over exactly these files — a procedure returning
-  * driver-side rows could not carry it, a join can. */
-class SegChangesProcedure(cat: SegCatalog)
-    extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-  import org.apache.spark.sql.connector.read.{LocalScan, Scan => V2Scan}
-
-  override def name(): String = "changes"
-  override def description(): String =
-    "segment-level diff between two retained gseg generations"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "changes"
-      override def description(): String =
-        SegChangesProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType).build(),
-        ProcedureParameter.in("from_gen",
-          org.apache.spark.sql.types.LongType).build(),
-        ProcedureParameter.in("to_gen",
-          org.apache.spark.sql.types.LongType).build())
-      override def isDeterministic: Boolean = false
-
-      private val outSchema = StructType(Seq(
-        StructField("file", StringType, nullable = false),
-        StructField("change", StringType, nullable = false),
-        StructField("n_rows", org.apache.spark.sql.types.LongType,
-          nullable = false)))
-
-      override def call(input: org.apache.spark.sql.catalyst.InternalRow)
-          : java.util.Iterator[V2Scan] = {
-        val tbl = input.getUTF8String(0).toString
-        val fromGen = input.getLong(1)
-        val toGen = input.getLong(2)
-        val parts = tbl.split('.')
-        require(parts.nonEmpty && parts.forall(_.nonEmpty),
-          s"gseg changes: bad table identifier '$tbl'")
-        val dir = cat.tableDir(
-          Identifier.of(parts.init.toArray, parts.last)).toString
-        def snap(g: Long): SegManifest.Manifest =
-          SegManifest.readSnapshotManifest(dir, g).getOrElse(
-            throw new IllegalArgumentException(
-              s"gseg changes: no snapshot for generation $g of " +
-                s"${parts.last} — never committed, or retired by vacuum"))
-        val fromM = snap(fromGen)
-        val toM = snap(toGen)
-        val from = fromM.names.toSet
-        val to = toM.names.toSet
-        // a carried segment whose DELETION VECTOR changed is part of
-        // the diff (merge-on-read DELETE / rollback resurrection);
-        // n_rows reports the ORDINAL DELTA, not the file size
-        def dvCount(m: SegManifest.Manifest, n: String): Long =
-          m.dvs.get(n).map(d => SegDv.countOf(s"$dir/$d").toLong)
-            .getOrElse(0L)
-        val dvChanged = (from & to).toSeq.sorted
-          .filter(n => fromM.dvs.get(n) != toM.dvs.get(n))
-          .map(n => (n, "dv_changed",
-            math.abs(dvCount(toM, n) - dvCount(fromM, n))))
-        val diff =
-          (from -- to).toSeq.sorted.map(n => (n, "removed",
-            SegSource.headerOf(s"$dir/$n").nRows.toLong)) ++
-            (to -- from).toSeq.sorted.map(n => (n, "added",
-              SegSource.headerOf(s"$dir/$n").nRows.toLong)) ++
-            dvChanged
-        val diffRows = diff.map { case (n, ch, rows) =>
-          new org.apache.spark.sql.catalyst.expressions
-            .GenericInternalRow(Array[Any](
-              org.apache.spark.unsafe.types.UTF8String.fromString(n),
-              org.apache.spark.unsafe.types.UTF8String.fromString(ch),
-              rows))
-            : org.apache.spark.sql.catalyst.InternalRow
-        }.toArray
-        java.util.List.of[V2Scan](new LocalScan {
-          override def rows(): Array[org.apache.spark.sql.catalyst.InternalRow] =
-            diffRows
-          override def readSchema(): StructType = outSchema
-          override def description(): String = s"gseg changes $tbl"
-        }).iterator()
-      }
-    }
-}
-
-/** `CALL <catalog>.compact('ns.table', target_segments)` → one row
-  * (table STRING, before_files BIGINT, after_files BIGINT). The
-  * OPTIMIZE shape for gseg catalog tables: streaming sinks and
-  * incremental DML fragment a table into many small segments — every
-  * file is a task, a header parse and a listing entry, so at 100 TB a
-  * million 1 MB files scan an order of magnitude slower than eight
-  * thousand 128 MB ones. The rewrite is a DISTRIBUTED Spark job
-  * (read the live generation → coalesce(target) — a shuffle-free
-  * merge of existing partitions, one output pass — → stage as a
-  * plain path-based write in a hidden temp dir), and the COMMIT is
-  * the same atomic manifest swap every gseg commit uses; the
-  * fragmented generation stays time-travelable until vacuum. A no-op
-  * when the table already has ≤ target segments. Plain compaction
-  * merges arbitrary partitions, so a table laid out for
-  * storage-partitioned joins (one key value per segment) would lose
-  * that layout — the scan then degrades to unknown partitioning
-  * (never wrong, only shuffled). The CLUSTERED variant closes that:
-  * `sort_by => 'k'` re-stages through the identity-clustered write
-  * path (required distribution + in-partition sort on the key, one
-  * shuffle — the [[graft.operators.Compaction]] sortCols trade), so
-  * each output segment again holds exactly one key value and the
-  * storage-partitioned-join layout SURVIVES compaction
-  * (KeyGroupedPartitioning, zero exchanges under the s18 join
-  * shape); `target_segments` is then a hint the key cardinality
-  * overrides. */
-class SegCompactProcedure(cat: SegCatalog)
-    extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-  import org.apache.spark.sql.connector.read.{LocalScan, Scan => V2Scan}
-
-  override def name(): String = "compact"
-  override def description(): String =
-    "merge a gseg table's segments down to target_segments files " +
-      "(atomic manifest-swap commit; old generation retained until vacuum)"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "compact"
-      override def description(): String =
-        SegCompactProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType).build(),
-        ProcedureParameter.in("target_segments",
-          org.apache.spark.sql.types.IntegerType)
-          .defaultValue("1").build(),
-        ProcedureParameter.in("sort_by", StringType)
-          .defaultValue("CAST(NULL AS STRING)").build(),
-        // SIZE-AWARE policy: rewrite ONLY segments smaller than this
-        // byte threshold, leave big files SHARED between generations —
-        // what keeps a continuously-appended table's file count
-        // bounded without rewriting the table (copy-on-write stays
-        // cheap as the table ages)
-        ProcedureParameter.in("target_bytes",
-          org.apache.spark.sql.types.LongType)
-          .defaultValue("CAST(NULL AS BIGINT)").build(),
-        // RE-CLUSTER: rewrite the whole table under a NEW declared
-        // clustering (comma list of `col` / `bucket(n,col)` specs;
-        // empty string DE-clusters) and persist it — the Iceberg
-        // "replace partition field" shape: one call re-keys a table's
-        // layout without recreating it, and every later write/DML
-        // maintains the new layout
-        ProcedureParameter.in("cluster_by", StringType)
-          .defaultValue("CAST(NULL AS STRING)").build(),
-        // PURGE policy: rewrite ONLY segments whose deletion-vector
-        // ratio (deleted rows / stored rows) reached this threshold —
-        // materialize heavy masks back to clean segments, leave
-        // lightly-vectored and clean files shared. The merge-on-read
-        // maintenance loop: DELETEs accrue vectors cheaply, compact
-        // folds them in once they cost readers real skip work
-        ProcedureParameter.in("min_deleted_ratio",
-          org.apache.spark.sql.types.DoubleType)
-          .defaultValue("CAST(NULL AS DOUBLE)").build(),
-        // incremental SPEC MIGRATION: rewrite ONLY segments that fail
-        // the per-file conformance witness for the declared clustering
-        // (after CALL set_clustering) — conforming files stay shared,
-        // and a second pass is a no-op
-        ProcedureParameter.in("only_mismatched",
-          org.apache.spark.sql.types.BooleanType)
-          .defaultValue("false").build())
-      override def isDeterministic: Boolean = false
-
-      private val outSchema = StructType(Seq(
-        StructField("table", StringType, nullable = false),
-        StructField("before_files", org.apache.spark.sql.types.LongType,
-          nullable = false),
-        StructField("after_files", org.apache.spark.sql.types.LongType,
-          nullable = false)))
-
-      override def call(input: org.apache.spark.sql.catalyst.InternalRow)
-          : java.util.Iterator[V2Scan] = {
-        val tbl = input.getUTF8String(0).toString
-        val target = if (input.isNullAt(1)) 1 else input.getInt(1)
-        require(target >= 1, s"gseg compact: target_segments $target < 1")
-        val sortBy =
-          if (input.numFields < 3 || input.isNullAt(2)) None
-          else Some(input.getUTF8String(2).toString)
-        val targetBytes =
-          if (input.numFields < 4 || input.isNullAt(3)) None
-          else Some(input.getLong(3))
-        targetBytes.foreach(tb => require(tb > 0,
-          s"gseg compact: target_bytes $tb <= 0"))
-        val clusterBy =
-          if (input.numFields < 5 || input.isNullAt(4)) None
-          else Some(input.getUTF8String(4).toString)
-        val minRatio =
-          if (input.numFields < 6 || input.isNullAt(5)) None
-          else Some(input.getDouble(5))
-        minRatio.foreach(r => require(r > 0.0 && r <= 1.0,
-          s"gseg compact: min_deleted_ratio $r outside (0, 1]"))
-        val onlyMismatched =
-          input.numFields >= 7 && !input.isNullAt(6) && input.getBoolean(6)
-        // re-layout of a SUBSET is incoherent (shared files would
-        // keep the old layout): cluster_by always rewrites whole
-        require(clusterBy.isEmpty ||
-          (targetBytes.isEmpty && minRatio.isEmpty && !onlyMismatched),
-          "gseg compact: cluster_by re-lays the WHOLE table and " +
-            "cannot combine with target_bytes/min_deleted_ratio/" +
-            "only_mismatched")
-        val parts = tbl.split('.')
-        require(parts.nonEmpty && parts.forall(_.nonEmpty),
-          s"gseg compact: bad table identifier '$tbl'")
-        val ident = Identifier.of(parts.init.toArray, parts.last)
-        val dir = cat.tableDir(ident)
-        val schema = cat.loadTable(ident).schema() // ensures manifest
-        // the NEW clustering, validated like CREATE TABLE's
-        val newCluster: Option[Seq[String]] = clusterBy.map { cb =>
-          val specs = SegSource.splitClusterSpecs(cb)
-          // zorder(a,b): layout-only multi-dimensional clustering —
-          // must be the SOLE spec (it owns the write-side sort whole)
-          // over two integer columns
-          if (specs.exists(SegSource.parseZOrder(_).isDefined)) {
-            require(specs.size == 1,
-              s"gseg compact: zorder cannot combine with other " +
-                s"cluster_by specs (got $cb)")
-            val (a, b) = SegSource.parseZOrder(specs.head).get
-            require(a != b, s"gseg compact: zorder needs two distinct " +
-              s"columns, got $cb")
-            Seq(a, b).foreach { c =>
-              val f = schema.fields.find(_.name == c).getOrElse(
-                throw new IllegalArgumentException(
-                  s"gseg compact: zorder column '$c' is not in the schema"))
-              require(SegSource.zorderClusterType(f.dataType),
-                s"gseg compact: zorder('$c') needs a BIGINT/INT column, " +
-                  s"got ${f.dataType.simpleString}")
-            }
-            Seq(s"zorder($a,$b)")
-          } else {
-          specs.foreach { sp =>
-            val k = SegSource.ClusterKey.parse(sp)
-            val f = schema.fields.find(_.name == k.col).getOrElse(
-              throw new IllegalArgumentException(
-                s"gseg compact: cluster_by column '${k.col}' is not " +
-                  "in the schema"))
-            k match {
-              case SegSource.ClusterKey(_, Some(_), _, _) =>
-                require(SegSource.bucketClusterType(f.dataType),
-                  s"gseg compact: bucket(n, ${k.col}) needs a " +
-                    "BIGINT/INT/STRING/DATE/TIMESTAMP column, got " +
-                    f.dataType.simpleString)
-              case SegSource.ClusterKey(_, None, Some(u), _) =>
-                require(SegSource.temporalClusterType(u, f.dataType),
-                  s"gseg compact: $u(${k.col}) needs a TIMESTAMP" +
-                    (if (u == "hours") "" else " or DATE") +
-                    s" column, got ${f.dataType.simpleString}")
-              case SegSource.ClusterKey(_, None, None, Some(_)) =>
-                require(SegSource.truncClusterType(f.dataType),
-                  s"gseg compact: truncate(w, ${k.col}) needs a " +
-                    s"BIGINT/INT/STRING column, got " +
-                    f.dataType.simpleString)
-              case _ =>
-                require(SegSource.identityClusterType(f.dataType),
-                  s"gseg compact: cluster_by column '${k.col}' must be " +
-                    "BIGINT/INT/STRING/DATE/TIMESTAMP, got " +
-                    f.dataType.simpleString)
-            }
-          }
-          val names = specs.map(SegSource.ClusterKey.parse(_).col)
-          require(names.distinct.size == names.size,
-            s"gseg compact: duplicate cluster_by column in $cb")
-          specs.map(SegSource.ClusterKey.parse(_).render)
-          }
-        }
-        // a PARTITIONED BY table compacts CLUSTERED by default — an
-        // unqualified CALL compact must not quietly destroy the
-        // layout the table declared; cluster_by overrides everything
-        val sortByEff: Seq[String] = newCluster.getOrElse(
-          sortBy.map(SegSource.splitClusterSpecs)
-            .getOrElse(SegMeta.read(dir).map(_.clusterCols).getOrElse(Nil)))
-        sortByEff.foreach(c => SegSource.parseZOrder(c) match {
-          case Some((a, b)) =>
-            require(schema.fieldNames.contains(a) &&
-              schema.fieldNames.contains(b),
-              s"gseg compact: zorder column of '$c' is not in the schema")
-          case None => require(schema.fieldNames.contains(
-            SegSource.ClusterKey.parse(c).col),
-            s"gseg compact: sort_by column '$c' is not in the schema")
-        })
-        val liveGen = SegManifest.read(dir.toString).map(_._1)
-        val liveDvs = SegManifest.readManifest(dir.toString)
-          .map(_.dvs).getOrElse(Map.empty)
-        val live = SegSource.resolveSegments(dir.toString)
-        def dvRatio(f: String): Double = {
-          val name = Paths.get(f).getFileName.toString
-          liveDvs.get(name) match {
-            case None => 0.0
-            case Some(dv) => SegDv.countOf(s"$dir/$dv").toDouble /
-              math.max(1, SegSource.resolvedHeaderOf(f).nRows)
-          }
-        }
-        // incremental spec migration needs a witnessable spec: a
-        // declared (or sort_by) clustering, never zorder (no per-file
-        // conformance evidence exists for a morton sort)
-        if (onlyMismatched) {
-          require(sortByEff.nonEmpty,
-            "gseg compact: only_mismatched needs a declared clustering " +
-              "(or sort_by) to check conformance against")
-          require(!sortByEff.exists(SegSource.parseZOrder(_).isDefined),
-            "gseg compact: zorder has no per-file conformance witness " +
-              "— migrate a zorder layout with a whole-table cluster_by")
-        }
-        // selective policies compose as a UNION: a segment rewrites
-        // when it is small (target_bytes) OR heavily vectored
-        // (min_deleted_ratio) OR laid out under a superseded spec
-        // (only_mismatched); everything else stays SHARED (names
-        // survive the swap — at 100 TB the difference between a
-        // bounded maintenance pass and a weekly table copy)
-        val selective = targetBytes.isDefined || minRatio.isDefined ||
-          onlyMismatched
-        val (toRewrite, shared) =
-          if (!selective) (live, Nil)
-          else live.partition(f =>
-            targetBytes.exists(tb => Files.size(Paths.get(f)) < tb) ||
-              minRatio.exists(r => dvRatio(f) >= r) ||
-              (onlyMismatched &&
-                !SegSource.fileConformsTo(sortByEff, f)))
-        graft.Counters.add("gseg_compact_rewritten", toRewrite.size.toLong)
-        graft.Counters.add("gseg_compact_shared", shared.size.toLong)
-        // a selective pass is a no-op when nothing selected, or when
-        // the single selected file has no vector to purge (nothing to
-        // merge either — EXCEPT a mismatched file, whose rewrite IS
-        // the point); full compaction keeps the original condition
-        def selectiveNoop: Boolean = toRewrite.isEmpty ||
-          (toRewrite.size == 1 && dvRatio(toRewrite.head) == 0.0 &&
-            !(onlyMismatched &&
-              !SegSource.fileConformsTo(sortByEff, toRewrite.head)))
-        val after =
-          if (newCluster.isEmpty &&
-              ((selective && selectiveNoop) ||
-               (!selective && live.size <= target &&
-                 sortByEff.isEmpty)))
-            live.size.toLong // nothing worth merging: no-op, no commit
-          else {
-            val spark = org.apache.spark.sql.SparkSession.active
-            val tmp = Files.createTempDirectory(dir, ".compact-tmp-")
-            try {
-              val reader = spark.read.format("gseg").schema(schema)
-              val src = (if (!selective) reader
-                else reader.option(SegSource.PinnedFilesOption,
-                  toRewrite.map(f => Paths.get(f).getFileName.toString)
-                    .mkString(",")))
-                .load(dir.toString)
-              sortByEff match {
-                case Nil =>
-                  // distributed, shuffle-free: existing partitions
-                  // merge into `target` output tasks in one
-                  // read+write pass
-                  src.coalesce(target)
-                    .write.format("gseg").mode("overwrite")
-                    .save(tmp.toString)
-                case Seq(zs) if SegSource.parseZOrder(zs).isDefined =>
-                  // Z-ORDER re-layout: one global range shuffle on the
-                  // Morton code (graft.operators.ZOrder.morton2 — the
-                  // same interleave the task writer's flush sort
-                  // uses), so files hold DISJOINT contiguous z-ranges
-                  // and zone maps on BOTH raw columns come out tight.
-                  // Recovery is stats-only — scans ignore the spec.
-                  val (za, zb) = SegSource.parseZOrder(zs).get
-                  val zc = graft.operators.ZOrder.morton2(
-                    org.apache.spark.sql.functions.col(za),
-                    org.apache.spark.sql.functions.col(zb))
-                  src.withColumn("_z", zc)
-                    .repartitionByRange(target,
-                      org.apache.spark.sql.functions.col("_z"))
-                    .sortWithinPartitions(
-                      org.apache.spark.sql.functions.col("_z"))
-                    .drop("_z")
-                    .write.format("gseg")
-                    .option(SegSource.PartitionColOption, zs)
-                    .mode("overwrite").save(tmp.toString)
-                case cs if cs.exists { c =>
-                    val k = SegSource.ClusterKey.parse(c)
-                    k.buckets.isDefined || k.unit.isDefined ||
-                      k.trunc.isDefined
-                  } =>
-                  // BUCKET/TEMPORAL layouts: a path-based write cannot
-                  // resolve the transform (no FunctionCatalog on the
-                  // save() path), so the rewrite runs CLUSTER-LOCAL —
-                  // coalesce bounds the task count and the writer's
-                  // flush-time key sort forms the single-bucket,
-                  // stamped runs; the table is ALREADY bucket-laid,
-                  // so merging within the layout needs no shuffle
-                  src.coalesce(target)
-                    .write.format("gseg")
-                    .option(SegSource.PartitionColOption, cs.mkString(","))
-                    .option(SegSource.ClusterLocalOption, "true")
-                    .mode("overwrite").save(tmp.toString)
-                case cs =>
-                  // layout-preserving: the identity-clustered write
-                  // path (required distribution + in-partition sort)
-                  // rolls one segment per key value — min==max stats
-                  // the SPJ scan groups by, exactly the layout the
-                  // keyed writer produced originally
-                  src.write.format("gseg")
-                    .option(SegSource.PartitionColOption, cs.mkString(","))
-                    .mode("overwrite").save(tmp.toString)
-              }
-              val gen = java.util.UUID.randomUUID.toString.take(8)
-              val newNames = SegSource.listSegments(tmp.toString)
-                .zipWithIndex.map { case (f, i) =>
-                  val name = f"cmp-$gen-$i%05d.gseg"
-                  Files.move(Paths.get(f), dir.resolve(name),
-                    StandardCopyOption.REPLACE_EXISTING)
-                  name
-                }
-              val sharedNames =
-                shared.map(f => Paths.get(f).getFileName.toString)
-              // re-clustering pins the NEW layout into the commit's
-              // snapshot (as-of-schema semantics) and persists it in
-              // the sidecar AFTER the commit point, mirroring CTAS
-              val newMeta = newCluster.map { nc =>
-                SegMeta.read(dir).getOrElse(SegMeta.TableMeta(
-                  schema, Set.empty, Map.empty)).copy(clusterCols = nc)
-              }
-              SegManifest.swap(dir.toString, sharedNames ++ newNames,
-                expectGen = Some(liveGen),
-                metaOverride = newMeta.map(SegMeta.render))
-              newMeta.foreach(SegMeta.write(dir, _))
-              (sharedNames.size + newNames.size).toLong
-            } finally graft.Fs.deleteRecursively(tmp)
-          }
-        val row = new org.apache.spark.sql.catalyst.expressions
-          .GenericInternalRow(Array[Any](
-            org.apache.spark.unsafe.types.UTF8String.fromString(tbl),
-            live.size.toLong, after))
-        java.util.List.of[V2Scan](new LocalScan {
-          override def rows(): Array[org.apache.spark.sql.catalyst.InternalRow] =
-            Array(row)
-          override def readSchema(): StructType = outSchema
-          override def description(): String = s"gseg compact $tbl"
-        }).iterator()
-      }
-    }
 }
 
 /** A generation pinned by time travel: read-only (no write or DML
@@ -2293,817 +1568,5 @@ private[sources] case class SegDvWriterFactory(fileOrd: Int, posOrd: Int,
       }
       override def abort(): Unit = if (inserter != null) inserter.abort()
       override def close(): Unit = if (inserter != null) inserter.close()
-    }
-}
-
-/** `CALL <catalog>.clone('ns.src', 'ns.dst' [, generation])` → one row
-  * (source, target, cloned_generation, files, linked, copied).
-  *
-  * ZERO-COPY table clone (Delta's SHALLOW CLONE, hard-link flavor):
-  * the chosen generation's segments and deletion vectors HARD-LINK
-  * into the new table's directory — at 100 TB a clone costs one inode
-  * operation per file and zero data movement, and the experiment /
-  * staging / what-if workflow it exists for gets a fully independent
-  * table: segments are IMMUTABLE by construction (every gseg mutation
-  * writes new names), so the shared bytes can never change under
-  * either side, and vacuum on one side only unlinks ITS directory's
-  * name — the inode survives while the other link exists. Cross-
-  * filesystem targets fall back to a real copy per file (counted
-  * honestly in the output row).
-  *
-  * What the clone carries: the generation's file set, its deletion-
-  * vector map, and its PINNED table metadata (schema, aliases,
-  * tombstones, clustering, gseg.* properties — the as-of-schema pin,
-  * so a clone of a pre-rename generation reads under the old names
-  * exactly like VERSION AS OF does). The clone starts at generation 0
-  * with its own independent history.
-  *
-  * Protocol (CTAS's shape): files land under dot-hidden `.ctas-cl-`
-  * names (invisible to path listings), the manifest swap PUBLISHES
-  * them atomically, the sidecar lands after the commit point. A crash
-  * strands only invisible links for the target's vacuum. */
-/** `CALL <catalog>.tag('ns.table', 'name' [, generation])` → pins a
-  * retained generation under a NAME: a retention floor vacuum honors
-  * until `CALL untag` releases it, and a `VERSION AS OF '<name>'` /
-  * `CALL clone(tag => ...)` target. `generation` defaults to the live
-  * one — "tag what I see now". See [[SegManifest.setTag]] for the
-  * validation contract (committed + retained only, no all-digit
-  * names, no silent re-pointing). */
-class SegTagProcedure(cat: SegCatalog)
-    extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-  import org.apache.spark.sql.connector.read.{LocalScan, Scan => V2Scan}
-
-  override def name(): String = "tag"
-  override def description(): String =
-    "pin a retained generation under a name (vacuum retention floor)"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "tag"
-      override def description(): String = SegTagProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType).build(),
-        ProcedureParameter.in("tag", StringType).build(),
-        ProcedureParameter.in("generation", LongType)
-          .defaultValue("CAST(NULL AS BIGINT)").build())
-      override def isDeterministic: Boolean = false
-
-      private val outSchema = StructType(Seq(
-        StructField("table", StringType, nullable = false),
-        StructField("tag", StringType, nullable = false),
-        StructField("generation", LongType, nullable = false)))
-
-      override def call(input: org.apache.spark.sql.catalyst.InternalRow)
-          : java.util.Iterator[V2Scan] = {
-        val tbl = input.getUTF8String(0).toString
-        val tg = input.getUTF8String(1).toString
-        val parts = tbl.split('.')
-        require(parts.nonEmpty && parts.forall(_.nonEmpty),
-          s"gseg tag: bad table identifier '$tbl'")
-        val ident = Identifier.of(parts.init.toArray, parts.last)
-        cat.loadTable(ident) // ensures manifest + sidecar (migration)
-        val dir = cat.tableDir(ident).toString
-        val gen =
-          if (input.numFields < 3 || input.isNullAt(2))
-            SegManifest.read(dir).map(_._1).getOrElse(
-              throw new IllegalStateException(
-                s"gseg tag: no generation manifest at $dir"))
-          else input.getLong(2)
-        SegManifest.setTag(dir, tg, gen)
-        val row = new org.apache.spark.sql.catalyst.expressions
-          .GenericInternalRow(Array[Any](
-            org.apache.spark.unsafe.types.UTF8String.fromString(tbl),
-            org.apache.spark.unsafe.types.UTF8String.fromString(tg), gen))
-        java.util.List.of[V2Scan](new LocalScan {
-          override def rows(): Array[org.apache.spark.sql.catalyst.InternalRow] =
-            Array(row)
-          override def readSchema(): StructType = outSchema
-          override def description(): String = s"gseg tag $tbl"
-        }).iterator()
-      }
-    }
-}
-
-/** `CALL <catalog>.untag('ns.table', 'name')` → releases a tag; the
-  * generation it pinned becomes reclaimable by the NEXT vacuum unless
-  * another retention floor still covers it. */
-class SegUntagProcedure(cat: SegCatalog)
-    extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-  import org.apache.spark.sql.connector.read.{LocalScan, Scan => V2Scan}
-
-  override def name(): String = "untag"
-  override def description(): String =
-    "release a named snapshot tag (the generation becomes reclaimable)"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "untag"
-      override def description(): String =
-        SegUntagProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType).build(),
-        ProcedureParameter.in("tag", StringType).build())
-      override def isDeterministic: Boolean = false
-
-      private val outSchema = StructType(Seq(
-        StructField("table", StringType, nullable = false),
-        StructField("tag", StringType, nullable = false),
-        StructField("released_generation", LongType, nullable = false)))
-
-      override def call(input: org.apache.spark.sql.catalyst.InternalRow)
-          : java.util.Iterator[V2Scan] = {
-        val tbl = input.getUTF8String(0).toString
-        val tg = input.getUTF8String(1).toString
-        val parts = tbl.split('.')
-        require(parts.nonEmpty && parts.forall(_.nonEmpty),
-          s"gseg untag: bad table identifier '$tbl'")
-        val dir = cat.tableDir(
-          Identifier.of(parts.init.toArray, parts.last)).toString
-        val g = SegManifest.removeTag(dir, tg)
-        val row = new org.apache.spark.sql.catalyst.expressions
-          .GenericInternalRow(Array[Any](
-            org.apache.spark.unsafe.types.UTF8String.fromString(tbl),
-            org.apache.spark.unsafe.types.UTF8String.fromString(tg), g))
-        java.util.List.of[V2Scan](new LocalScan {
-          override def rows(): Array[org.apache.spark.sql.catalyst.InternalRow] =
-            Array(row)
-          override def readSchema(): StructType = outSchema
-          override def description(): String = s"gseg untag $tbl"
-        }).iterator()
-      }
-    }
-}
-
-class SegCloneProcedure(cat: SegCatalog)
-    extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-  import org.apache.spark.sql.connector.read.{LocalScan, Scan => V2Scan}
-
-  override def name(): String = "clone"
-  override def description(): String =
-    "zero-copy (hard-link) clone of a gseg table generation"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "clone"
-      override def description(): String =
-        SegCloneProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("source", StringType).build(),
-        ProcedureParameter.in("target", StringType).build(),
-        ProcedureParameter.in("generation", LongType)
-          .defaultValue("CAST(NULL AS BIGINT)").build(),
-        ProcedureParameter.in("tag", StringType)
-          .defaultValue("CAST(NULL AS STRING)").build())
-      override def isDeterministic: Boolean = false
-
-      private val outSchema = StructType(Seq(
-        StructField("source", StringType, nullable = false),
-        StructField("target", StringType, nullable = false),
-        StructField("cloned_generation", LongType, nullable = false),
-        StructField("files", LongType, nullable = false),
-        StructField("linked", LongType, nullable = false),
-        StructField("copied", LongType, nullable = false)))
-
-      override def call(input: org.apache.spark.sql.catalyst.InternalRow)
-          : java.util.Iterator[V2Scan] = {
-        val src = input.getUTF8String(0).toString
-        val dst = input.getUTF8String(1).toString
-        def identOf(t: String, what: String): Identifier = {
-          val parts = t.split('.')
-          require(parts.nonEmpty && parts.forall(_.nonEmpty),
-            s"gseg clone: bad $what identifier '$t'")
-          Identifier.of(parts.init.toArray, parts.last)
-        }
-        val srcIdent = identOf(src, "source")
-        val dstIdent = identOf(dst, "target")
-        val srcDir = cat.tableDir(srcIdent).toString
-        val dstDir = cat.newTableDir(dstIdent)
-        cat.loadTable(srcIdent) // ensures manifest + sidecar (migration)
-        // generation selection: explicit number, a NAMED TAG, or (the
-        // default) the live generation — never both spellings at once
-        val byGen = input.numFields >= 3 && !input.isNullAt(2)
-        val byTag = input.numFields >= 4 && !input.isNullAt(3)
-        require(!(byGen && byTag),
-          "gseg clone: pass generation OR tag, not both")
-        val gen =
-          if (byGen) input.getLong(2)
-          else if (byTag) {
-            val t = input.getUTF8String(3).toString
-            SegManifest.tags(srcDir).getOrElse(t,
-              throw new IllegalArgumentException(
-                s"gseg clone: no tag '$t' on $src"))
-          }
-          else SegManifest.readManifest(srcDir).map(_.gen).getOrElse(
-            throw new IllegalStateException(
-              s"gseg clone: no generation manifest at $srcDir"))
-        val snap = SegManifest.readSnapshotManifest(srcDir, gen).getOrElse(
-          throw new IllegalArgumentException(
-            s"gseg clone: no snapshot for generation $gen of $src — " +
-              "never committed, or retired by vacuum"))
-        // the generation's PINNED metadata (as-of-schema) — fall back
-        // to the current sidecar for legacy pre-pin snapshots
-        val meta = SegManifest.readSnapshotMeta(srcDir, gen)
-          .orElse(SegMeta.read(java.nio.file.Paths.get(srcDir)))
-          .getOrElse(throw new IllegalStateException(
-            s"gseg clone: no table metadata for $src"))
-        // target must not exist (CREATE TABLE's existence contract)
-        if (SegMeta.exists(dstDir) || SegManifest.exists(dstDir.toString) ||
-            (Files.isDirectory(dstDir) &&
-              SegSource.listSegments(dstDir.toString).nonEmpty))
-          throw new TableAlreadyExistsException(dstIdent)
-        Files.createDirectories(dstDir)
-        val stamp = java.util.UUID.randomUUID.toString.take(8)
-        var linked = 0L
-        var copied = 0L
-        def bring(name: String, i: Int, ext: String): String = {
-          val out = f".ctas-cl-$stamp-$i%05d$ext"
-          val s = java.nio.file.Paths.get(srcDir, name)
-          val t = dstDir.resolve(out)
-          try { Files.createLink(t, s); linked += 1 }
-          catch {
-            case _: UnsupportedOperationException |
-                 _: java.nio.file.FileSystemException =>
-              // cross-device / no-hardlink filesystem: real copy
-              Files.copy(s, t,
-                java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-              copied += 1
-          }
-          out
-        }
-        val sorted = snap.names.sorted
-        val nameMap = sorted.zipWithIndex.map { case (n, i) =>
-          n -> bring(n, i, ".gseg")
-        }.toMap
-        val dvMap = snap.dvs.toSeq.sortBy(_._1).zipWithIndex.map {
-          case ((seg, dv), i) => nameMap(seg) -> bring(dv, i, ".gdv")
-        }.toMap
-        // THE publish point: the clone's generation 0, metadata pinned
-        SegManifest.swap(dstDir.toString, nameMap.values.toSeq,
-          expectGen = Some(None), metaOverride = Some(SegMeta.render(meta)),
-          dvs = Some(dvMap))
-        SegMeta.write(dstDir, meta) // after the commit point, like CTAS
-        graft.Counters.add("gseg_clone_files", (linked + copied))
-        graft.Counters.add("gseg_clone_linked", linked)
-        val row = new org.apache.spark.sql.catalyst.expressions
-          .GenericInternalRow(Array[Any](
-            org.apache.spark.unsafe.types.UTF8String.fromString(src),
-            org.apache.spark.unsafe.types.UTF8String.fromString(dst),
-            gen, (linked + copied), linked, copied))
-        java.util.List.of[V2Scan](new LocalScan {
-          override def rows(): Array[org.apache.spark.sql.catalyst.InternalRow] =
-            Array(row)
-          override def readSchema(): StructType = outSchema
-          override def description(): String = s"gseg clone $src -> $dst"
-        }).iterator()
-      }
-    }
-}
-
-/** `CALL <catalog>.branch('ns.table', 'name')` → fork a WRITABLE
-  * branch at the live generation (one `.refs` sidecar line — zero
-  * data movement at any table size). With the session conf
-  * `spark.gseg.wap.branch = 'name'` set, every subsequent write lands
-  * on the branch and main-pointer commits are refused loudly; audit
-  * the staged data via `VERSION AS OF 'name'`, then publish with
-  * `CALL fast_forward` — the write-audit-publish workflow (the
-  * ADVANCING half of the Iceberg branch/tag ref model; [[SegManifest
-  * .setTag]] is the non-advancing half). */
-class SegBranchProcedure(cat: SegCatalog)
-    extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-  import org.apache.spark.sql.connector.read.{LocalScan, Scan => V2Scan}
-
-  override def name(): String = "branch"
-  override def description(): String =
-    "fork a writable branch at the live generation (WAP staging)"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "branch"
-      override def description(): String =
-        SegBranchProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType).build(),
-        ProcedureParameter.in("branch", StringType).build())
-      override def isDeterministic: Boolean = false
-
-      private val outSchema = StructType(Seq(
-        StructField("table", StringType, nullable = false),
-        StructField("branch", StringType, nullable = false),
-        StructField("forked_at", LongType, nullable = false)))
-
-      override def call(input: org.apache.spark.sql.catalyst.InternalRow)
-          : java.util.Iterator[V2Scan] = {
-        val tbl = input.getUTF8String(0).toString
-        val br = input.getUTF8String(1).toString
-        val parts = tbl.split('.')
-        require(parts.nonEmpty && parts.forall(_.nonEmpty),
-          s"gseg branch: bad table identifier '$tbl'")
-        val ident = Identifier.of(parts.init.toArray, parts.last)
-        cat.loadTable(ident) // ensures manifest + sidecar (migration)
-        val dir = cat.tableDir(ident).toString
-        val at = SegManifest.createBranch(dir, br)
-        val row = new org.apache.spark.sql.catalyst.expressions
-          .GenericInternalRow(Array[Any](
-            org.apache.spark.unsafe.types.UTF8String.fromString(tbl),
-            org.apache.spark.unsafe.types.UTF8String.fromString(br), at))
-        java.util.List.of[V2Scan](new LocalScan {
-          override def rows(): Array[org.apache.spark.sql.catalyst.InternalRow] =
-            Array(row)
-          override def readSchema(): StructType = outSchema
-          override def description(): String = s"gseg branch $tbl"
-        }).iterator()
-      }
-    }
-}
-
-/** `CALL <catalog>.drop_branch('ns.table', 'name')` → abandon a
-  * branch; its staged generations lose their retention floor and the
-  * NEXT vacuum reclaims them (the audit-failed path of WAP). */
-class SegDropBranchProcedure(cat: SegCatalog)
-    extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-  import org.apache.spark.sql.connector.read.{LocalScan, Scan => V2Scan}
-
-  override def name(): String = "drop_branch"
-  override def description(): String =
-    "abandon a branch (its staged generations become reclaimable)"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "drop_branch"
-      override def description(): String =
-        SegDropBranchProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType).build(),
-        ProcedureParameter.in("branch", StringType).build())
-      override def isDeterministic: Boolean = false
-
-      private val outSchema = StructType(Seq(
-        StructField("table", StringType, nullable = false),
-        StructField("branch", StringType, nullable = false),
-        StructField("head_was", LongType, nullable = false)))
-
-      override def call(input: org.apache.spark.sql.catalyst.InternalRow)
-          : java.util.Iterator[V2Scan] = {
-        val tbl = input.getUTF8String(0).toString
-        val br = input.getUTF8String(1).toString
-        val parts = tbl.split('.')
-        require(parts.nonEmpty && parts.forall(_.nonEmpty),
-          s"gseg drop_branch: bad table identifier '$tbl'")
-        val dir = cat.tableDir(
-          Identifier.of(parts.init.toArray, parts.last)).toString
-        val h = SegManifest.dropBranch(dir, br)
-        val row = new org.apache.spark.sql.catalyst.expressions
-          .GenericInternalRow(Array[Any](
-            org.apache.spark.unsafe.types.UTF8String.fromString(tbl),
-            org.apache.spark.unsafe.types.UTF8String.fromString(br), h))
-        java.util.List.of[V2Scan](new LocalScan {
-          override def rows(): Array[org.apache.spark.sql.catalyst.InternalRow] =
-            Array(row)
-          override def readSchema(): StructType = outSchema
-          override def description(): String = s"gseg drop_branch $tbl"
-        }).iterator()
-      }
-    }
-}
-
-/** `CALL <catalog>.fast_forward('ns.table', 'name')` → publish a
-  * branch: move MAIN to the branch head, one pointer swap. Legal only
-  * while main still sits at the fork base — if main advanced since,
-  * the merge is no fast-forward and fails loudly (recreate the branch
-  * from the new live generation to rebase). The branch survives,
-  * re-based at its own head, ready for the next WAP cycle. */
-class SegFastForwardProcedure(cat: SegCatalog)
-    extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-  import org.apache.spark.sql.connector.read.{LocalScan, Scan => V2Scan}
-
-  override def name(): String = "fast_forward"
-  override def description(): String =
-    "publish a branch: fast-forward main to the branch head"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "fast_forward"
-      override def description(): String =
-        SegFastForwardProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType).build(),
-        ProcedureParameter.in("branch", StringType).build())
-      override def isDeterministic: Boolean = false
-
-      private val outSchema = StructType(Seq(
-        StructField("table", StringType, nullable = false),
-        StructField("branch", StringType, nullable = false),
-        StructField("from_generation", LongType, nullable = false),
-        StructField("to_generation", LongType, nullable = false)))
-
-      override def call(input: org.apache.spark.sql.catalyst.InternalRow)
-          : java.util.Iterator[V2Scan] = {
-        val tbl = input.getUTF8String(0).toString
-        val br = input.getUTF8String(1).toString
-        val parts = tbl.split('.')
-        require(parts.nonEmpty && parts.forall(_.nonEmpty),
-          s"gseg fast_forward: bad table identifier '$tbl'")
-        val dir = cat.tableDir(
-          Identifier.of(parts.init.toArray, parts.last)).toString
-        val (from, to) = SegManifest.fastForward(dir, br)
-        val row = new org.apache.spark.sql.catalyst.expressions
-          .GenericInternalRow(Array[Any](
-            org.apache.spark.unsafe.types.UTF8String.fromString(tbl),
-            org.apache.spark.unsafe.types.UTF8String.fromString(br),
-            from, to))
-        java.util.List.of[V2Scan](new LocalScan {
-          override def rows(): Array[org.apache.spark.sql.catalyst.InternalRow] =
-            Array(row)
-          override def readSchema(): StructType = outSchema
-          override def description(): String = s"gseg fast_forward $tbl"
-        }).iterator()
-      }
-    }
-}
-
-/** `CALL <catalog>.rebase('ns.table', 'name')` → re-point a branch's
-  * fork base at the CURRENT live generation, re-applying its staged
-  * base→head changes on top of main's commits since the fork — the
-  * NON-fast-forward WAP path (`fast_forward` refuses when main
-  * advanced; this is the remedy that keeps the staged audit instead
-  * of discarding it). File-grain lost-update validation, same as
-  * branch-scoped DML: a file BOTH sides rewrote/re-vectored since the
-  * fork conflicts loudly, listing the files. Main's pointer never
-  * moves — audit the rebased head, then `fast_forward` publishes both
-  * sides' changes. See [[SegManifest.rebase]]. */
-class SegRebaseProcedure(cat: SegCatalog)
-    extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-  import org.apache.spark.sql.connector.read.{LocalScan, Scan => V2Scan}
-
-  override def name(): String = "rebase"
-  override def description(): String =
-    "re-apply a branch's staged changes onto the current live " +
-      "generation (the non-fast-forward WAP remedy)"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "rebase"
-      override def description(): String =
-        SegRebaseProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType).build(),
-        ProcedureParameter.in("branch", StringType).build())
-      override def isDeterministic: Boolean = false
-
-      private val outSchema = StructType(Seq(
-        StructField("table", StringType, nullable = false),
-        StructField("branch", StringType, nullable = false),
-        StructField("old_base", LongType, nullable = false),
-        StructField("new_base", LongType, nullable = false),
-        StructField("new_head", LongType, nullable = false)))
-
-      override def call(input: org.apache.spark.sql.catalyst.InternalRow)
-          : java.util.Iterator[V2Scan] = {
-        val tbl = input.getUTF8String(0).toString
-        val br = input.getUTF8String(1).toString
-        val parts = tbl.split('.')
-        require(parts.nonEmpty && parts.forall(_.nonEmpty),
-          s"gseg rebase: bad table identifier '$tbl'")
-        val dir = cat.tableDir(
-          Identifier.of(parts.init.toArray, parts.last)).toString
-        val (oldBase, newBase, newHead) = SegManifest.rebase(dir, br)
-        val row = new org.apache.spark.sql.catalyst.expressions
-          .GenericInternalRow(Array[Any](
-            org.apache.spark.unsafe.types.UTF8String.fromString(tbl),
-            org.apache.spark.unsafe.types.UTF8String.fromString(br),
-            oldBase, newBase, newHead))
-        java.util.List.of[V2Scan](new LocalScan {
-          override def rows(): Array[org.apache.spark.sql.catalyst.InternalRow] =
-            Array(row)
-          override def readSchema(): StructType = outSchema
-          override def description(): String = s"gseg rebase $tbl"
-        }).iterator()
-      }
-    }
-}
-
-/** `CALL <catalog>.set_clustering('ns.table', 'spec1,spec2' | '')` →
-  * PARTITION-SPEC EVOLUTION, Iceberg-style: change the DECLARED
-  * clustering as pure metadata. NEW segments lay out under the new
-  * spec (the write-side distribution reads the sidecar at plan
-  * time); EXISTING segments are untouched — not one byte rewritten —
-  * and keep pruning under the layout they were written with, because
-  * gseg's pruning is per-FILE evidence (zone maps, bucket stamps,
-  * run stats travel in each segment's own header), never a
-  * table-level assumption. At 100 TB this is THE re-layout lever:
-  * changing a table's clustering costs one sidecar write, old data
-  * keeps its old locality, and `CALL compact` migrates files to the
-  * current spec opportunistically (its default sort is the DECLARED
-  * clustering). Mixed-layout tables degrade only where a single
-  * layout is required: storage-partitioned joins report
-  * UnknownPartitioning until compaction unifies the spec. The empty
-  * string drops the clustering. Accepts the same spec grammar as
-  * CREATE's PARTITIONED BY and compact's cluster_by (identity,
-  * bucket(n,col), years/months/days/hours(col), truncate(w,col),
-  * zorder(a,b)). */
-class SegSetClusteringProcedure(cat: SegCatalog)
-    extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-  import org.apache.spark.sql.connector.read.{LocalScan, Scan => V2Scan}
-
-  override def name(): String = "set_clustering"
-  override def description(): String =
-    "evolve the declared clustering (new segments only; pure metadata)"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "set_clustering"
-      override def description(): String =
-        SegSetClusteringProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType).build(),
-        ProcedureParameter.in("cluster_by", StringType).build())
-      override def isDeterministic: Boolean = false
-
-      private val outSchema = StructType(Seq(
-        StructField("table", StringType, nullable = false),
-        StructField("old_clustering", StringType, nullable = false),
-        StructField("new_clustering", StringType, nullable = false)))
-
-      override def call(input: org.apache.spark.sql.catalyst.InternalRow)
-          : java.util.Iterator[V2Scan] = {
-        val tbl = input.getUTF8String(0).toString
-        val cb = input.getUTF8String(1).toString
-        val parts = tbl.split('.')
-        require(parts.nonEmpty && parts.forall(_.nonEmpty),
-          s"gseg set_clustering: bad table identifier '$tbl'")
-        val ident = Identifier.of(parts.init.toArray, parts.last)
-        cat.loadTable(ident) // ensures manifest + sidecar (migration)
-        val dir = cat.tableDir(ident)
-        val meta = SegMeta.read(dir).getOrElse(
-          throw new IllegalStateException(
-            s"gseg set_clustering: no sidecar at $dir"))
-        // same spec grammar and validation as compact's cluster_by
-        val specs: Seq[String] =
-          if (cb.trim.isEmpty) Nil
-          else SegSource.splitClusterSpecs(cb).map { c =>
-            SegSource.parseZOrder(c) match {
-              case Some((a, b)) =>
-                require(meta.schema.fieldNames.contains(a) &&
-                  meta.schema.fieldNames.contains(b),
-                  s"gseg set_clustering: zorder column of '$c' is not " +
-                    "in the schema")
-                c
-              case None =>
-                val k = SegSource.ClusterKey.parse(c)
-                require(meta.schema.fieldNames.contains(k.col),
-                  s"gseg set_clustering: column '${k.col}' is not in " +
-                    "the schema")
-                k.render
-            }
-          }
-        val names = specs.map(c => SegSource.parseZOrder(c)
-          .map(_.toString).getOrElse(SegSource.ClusterKey.parse(c).col))
-        require(names.distinct.size == names.size,
-          s"gseg set_clustering: duplicate cluster column in '$cb'")
-        SegMeta.write(dir, meta.copy(clusterCols = specs)) // ONE commit
-        val row = new org.apache.spark.sql.catalyst.expressions
-          .GenericInternalRow(Array[Any](
-            org.apache.spark.unsafe.types.UTF8String.fromString(tbl),
-            org.apache.spark.unsafe.types.UTF8String.fromString(
-              meta.clusterCols.mkString(",")),
-            org.apache.spark.unsafe.types.UTF8String.fromString(
-              specs.mkString(","))))
-        java.util.List.of[V2Scan](new LocalScan {
-          override def rows(): Array[org.apache.spark.sql.catalyst.InternalRow] =
-            Array(row)
-          override def readSchema(): StructType = outSchema
-          override def description(): String = s"gseg set_clustering $tbl"
-        }).iterator()
-      }
-    }
-}
-
-/** `CALL <catalog>.create_index('ns.t', '<vector col>', '<key col>',
-  * method => 'ivf'|'lsh', cells => n)` → DECLARATIVE ANN INDEX over a
-  * gseg vector table, persisted AS gseg tables under the same commit
-  * protocol as the data they index:
-  *  - ivf: k-means cells — `<t>__idx_<col>_cent` (cid, centroid
-  *    ARRAY<FLOAT>) and `<t>__idx_<col>_assign` (key, cid). Training
-  *    is deterministic (smallest-key init + Lloyd); assignment is one
-  *    broadcast map-only pass.
-  *  - lsh: sign-random-projection buckets — `<t>__idx_<col>_assign`
-  *    (key, bucket), `cells` = signature bits. Hyperplanes derive
-  *    deterministically from (plane, dim), so no plane table exists
-  *    to drift: any maintainer recomputes identical buckets.
-  * MAINTENANCE is incremental from the table's row-level changefeed:
-  * tail `read_changefeed`, MERGE-delete touched keys from the assign
-  * table, re-insert assignments for rows live after the batch —
-  * exactly the [[graft.streaming.StreamGates]] cdf-index recipe, cost
-  * = commit churn, never corpus (the sim_ivf_indexed gate drives
-  * INSERT/UPDATE/DELETE + a checkpoint restart through it and pins
-  * set-parity with a from-scratch rebuild). At 100 TB: search probes
-  * `nprobe/nlist` of the corpus through the assign join instead of
-  * scanning everything, and a maintenance tick costs the commit, not
-  * the table. */
-class SegCreateIndexProcedure(cat: SegCatalog)
-    extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-  import org.apache.spark.sql.connector.read.{LocalScan, Scan => V2Scan}
-
-  override def name(): String = "create_index"
-  override def description(): String =
-    "build a persisted ANN index (ivf cells or lsh buckets) over a " +
-      "vector column"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "create_index"
-      override def description(): String =
-        SegCreateIndexProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType).build(),
-        ProcedureParameter.in("column", StringType).build(),
-        ProcedureParameter.in("key", StringType).build(),
-        ProcedureParameter.in("method", StringType)
-          .defaultValue("'ivf'").build(),
-        ProcedureParameter.in("cells", org.apache.spark.sql.types.IntegerType)
-          .defaultValue("16").build())
-      override def isDeterministic: Boolean = false
-
-      private val outSchema = StructType(Seq(
-        StructField("table", StringType, nullable = false),
-        StructField("method", StringType, nullable = false),
-        StructField("index_table", StringType, nullable = false),
-        StructField("cells", org.apache.spark.sql.types.IntegerType,
-          nullable = false),
-        StructField("n_indexed", LongType, nullable = false)))
-
-      override def call(input: org.apache.spark.sql.catalyst.InternalRow)
-          : java.util.Iterator[V2Scan] = {
-        val tbl = input.getUTF8String(0).toString
-        val colN = input.getUTF8String(1).toString
-        val keyN = input.getUTF8String(2).toString
-        val method =
-          if (input.isNullAt(3)) "ivf" else input.getUTF8String(3).toString
-        val cells = if (input.isNullAt(4)) 16 else input.getInt(4)
-        require(cells > 0 && cells <= 64,
-          s"gseg create_index: cells must be in 1..64, got $cells")
-        val parts = tbl.split('.')
-        require(parts.nonEmpty && parts.forall(_.nonEmpty),
-          s"gseg create_index: bad table identifier '$tbl'")
-        val spark = org.apache.spark.sql.SparkSession.active
-        import spark.implicits._
-        val fqn = s"${cat.name()}.$tbl"
-        val ident = Identifier.of(parts.init.toArray, parts.last)
-        cat.loadTable(ident) // ensures manifest + sidecar (migration)
-        val tblDir = cat.tableDir(ident)
-        val meta0 = SegMeta.read(tblDir).getOrElse(
-          throw new IllegalStateException(
-            s"gseg create_index: no sidecar at $tblDir"))
-        require(!meta0.props.contains(s"gseg.index.$colN"),
-          s"gseg create_index: '$colN' already carries index " +
-            s"'${meta0.props(s"gseg.index.$colN")}' — CALL drop_index " +
-            "first")
-        val df = spark.table(fqn)
-        val vf = df.schema.fields.find(_.name == colN).getOrElse(
-          throw new IllegalArgumentException(
-            s"gseg create_index: no column '$colN' in $tbl"))
-        require(vf.dataType match {
-          case org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType, _) => true
-          case _ => false
-        }, s"gseg create_index: '$colN' must be ARRAY<FLOAT>, got " +
-          vf.dataType.simpleString)
-        val kf = df.schema.fields.find(_.name == keyN).getOrElse(
-          throw new IllegalArgumentException(
-            s"gseg create_index: no key column '$keyN' in $tbl"))
-        require(kf.dataType == LongType ||
-          kf.dataType == org.apache.spark.sql.types.IntegerType,
-          s"gseg create_index: key '$keyN' must be integral, got " +
-            kf.dataType.simpleString)
-        val vecs = df.select(
-            org.apache.spark.sql.functions.col(keyN).cast("bigint")
-              .as("_1"),
-            org.apache.spark.sql.functions.transform(
-              org.apache.spark.sql.functions.col(colN),
-              x => x.cast("double")).as("_2"))
-          .as[(Long, Array[Double])]
-        def fq(sfx: String) =
-          (parts.init :+ s"${parts.last}__idx_${colN}_$sfx").mkString(".")
-        val assignFqn = s"${cat.name()}.${fq("assign")}"
-        val n: Long = method match {
-          case "ivf" =>
-            val cents = graft.functions.Ivf.trainCentroidsAnyIds(vecs, cells)
-            spark.sql(s"CREATE TABLE ${cat.name()}.${fq("cent")} " +
-              "(cid INT, centroid ARRAY<FLOAT>) USING gseg")
-            cents.zipWithIndex
-              .map { case (c, i) => (i, c.map(_.toFloat)) }.toSeq
-              .toDF("cid", "centroid")
-              .writeTo(s"${cat.name()}.${fq("cent")}").append()
-            // identity-clustered by cid: search probes nprobe cells,
-            // so the layout lets zone maps drop whole FILES of
-            // unprobed cells — the index prunes I/O, not just compute
-            spark.sql(s"CREATE TABLE $assignFqn " +
-              s"(key BIGINT, cid INT) USING gseg PARTITIONED BY (cid)")
-            graft.functions.Ivf.assignOn(vecs, cents)
-              .writeTo(assignFqn).append()
-            spark.table(assignFqn).count()
-          case "lsh" =>
-            spark.sql(s"CREATE TABLE $assignFqn " +
-              s"(key BIGINT, bucket BIGINT) USING gseg " +
-              "PARTITIONED BY (bucket)")
-            graft.functions.Ivf.lshAssignOn(vecs, cells)
-              .writeTo(assignFqn).append()
-            spark.table(assignFqn).count()
-          case other => throw new UnsupportedOperationException(
-            s"gseg create_index: unknown method '$other' " +
-              "(methods: ivf, lsh)")
-        }
-        // register the index on the TABLE (gseg.index.<col>) so SHOW
-        // TBLPROPERTIES reveals it and drop_index can resolve it
-        SegMeta.write(tblDir, meta0.copy(props = meta0.props +
-          (s"gseg.index.$colN" -> s"$method:$cells")))
-        val row = new org.apache.spark.sql.catalyst.expressions
-          .GenericInternalRow(Array[Any](
-            org.apache.spark.unsafe.types.UTF8String.fromString(tbl),
-            org.apache.spark.unsafe.types.UTF8String.fromString(method),
-            org.apache.spark.unsafe.types.UTF8String.fromString(fq("assign")),
-            cells, n))
-        java.util.List.of[V2Scan](new LocalScan {
-          override def rows(): Array[org.apache.spark.sql.catalyst.InternalRow] =
-            Array(row)
-          override def readSchema(): StructType = outSchema
-          override def description(): String = s"gseg create_index $tbl"
-        }).iterator()
-      }
-    }
-}
-
-/** `CALL <catalog>.drop_index('ns.t', '<vector col>')` → remove the
-  * ANN index over a column: drops the persisted `__idx_<col>_*`
-  * tables and clears the `gseg.index.<col>` registration — the
-  * inverse of [[SegCreateIndexProcedure]]. Loud on a column that
-  * carries no index. */
-class SegDropIndexProcedure(cat: SegCatalog)
-    extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-  import org.apache.spark.sql.connector.read.{LocalScan, Scan => V2Scan}
-
-  override def name(): String = "drop_index"
-  override def description(): String =
-    "drop a persisted ANN index (tables + registration)"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "drop_index"
-      override def description(): String =
-        SegDropIndexProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType).build(),
-        ProcedureParameter.in("column", StringType).build())
-      override def isDeterministic: Boolean = false
-
-      private val outSchema = StructType(Seq(
-        StructField("table", StringType, nullable = false),
-        StructField("column", StringType, nullable = false),
-        StructField("method_was", StringType, nullable = false)))
-
-      override def call(input: org.apache.spark.sql.catalyst.InternalRow)
-          : java.util.Iterator[V2Scan] = {
-        val tbl = input.getUTF8String(0).toString
-        val colN = input.getUTF8String(1).toString
-        val parts = tbl.split('.')
-        require(parts.nonEmpty && parts.forall(_.nonEmpty),
-          s"gseg drop_index: bad table identifier '$tbl'")
-        val ident = Identifier.of(parts.init.toArray, parts.last)
-        val tblDir = cat.tableDir(ident)
-        val meta = SegMeta.read(tblDir).getOrElse(
-          throw new IllegalStateException(
-            s"gseg drop_index: no sidecar at $tblDir"))
-        val key = s"gseg.index.$colN"
-        val reg = meta.props.getOrElse(key,
-          throw new IllegalArgumentException(
-            s"gseg drop_index: '$colN' carries no index on $tbl"))
-        Seq("cent", "assign").foreach { sfx =>
-          // dropTable is false-on-absent — right for lsh's no-cent case
-          cat.dropTable(Identifier.of(parts.init.toArray,
-            s"${parts.last}__idx_${colN}_$sfx"))
-        }
-        SegMeta.write(tblDir, meta.copy(props = meta.props - key))
-        val row = new org.apache.spark.sql.catalyst.expressions
-          .GenericInternalRow(Array[Any](
-            org.apache.spark.unsafe.types.UTF8String.fromString(tbl),
-            org.apache.spark.unsafe.types.UTF8String.fromString(colN),
-            org.apache.spark.unsafe.types.UTF8String.fromString(reg)))
-        java.util.List.of[V2Scan](new LocalScan {
-          override def rows(): Array[org.apache.spark.sql.catalyst.InternalRow] =
-            Array(row)
-          override def readSchema(): StructType = outSchema
-          override def description(): String = s"gseg drop_index $tbl"
-        }).iterator()
-      }
     }
 }

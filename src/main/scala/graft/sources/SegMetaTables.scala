@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField, StructType}
@@ -29,7 +29,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * plan time from the manifest/snapshot/refs sidecars (metadata
   * grain — one small file each; the `files` listing is
   * O(live file count), the same object every commit already
-  * rewrites) and ship inside the single input partition. At 100 TB
+  * rewrites) and ship inside the plan as a local scan. At 100 TB
   * this is exactly the metadata:data asymmetry the format is built
   * on; a listing too large for that would mean million-file
   * generations, which compaction exists to prevent. */
@@ -106,7 +106,9 @@ object SegMetaTables {
   }
 }
 
-/** Read-only V2 table serving one metadata view of `dir`. */
+/** Read-only V2 table serving one metadata view of `dir`: its scan is
+  * the rows [[SegMetaTables.rowsOf]] computes when the query is
+  * planned, carried by a [[SegProcedures.localScan]]. */
 class SegMetaTable(dir: String, kind: String)
     extends Table with SupportsRead {
   override def name(): String = s"gseg-meta $kind of $dir"
@@ -114,29 +116,6 @@ class SegMetaTable(dir: String, kind: String)
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder = () => new SegMetaScan(dir, kind)
-}
-
-case class SegMetaPartition(rows: Array[InternalRow]) extends InputPartition
-
-class SegMetaScan(dir: String, kind: String) extends Scan with Batch {
-  override def readSchema(): StructType = SegMetaTables.schemaOf(kind)
-  override def description(): String = s"gseg-meta $kind dir=$dir"
-  override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] =
-    Array(SegMetaPartition(SegMetaTables.rowsOf(dir, kind)))
-  override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionReaderFactory {
-      override def createReader(p: InputPartition)
-          : PartitionReader[InternalRow] = {
-        val it = p.asInstanceOf[SegMetaPartition].rows.iterator
-        new PartitionReader[InternalRow] {
-          private var cur: InternalRow = _
-          override def next(): Boolean =
-            if (it.hasNext) { cur = it.next(); true } else false
-          override def get(): InternalRow = cur
-          override def close(): Unit = ()
-        }
-      }
-    }
+      : ScanBuilder = () => SegProcedures.localScan(schema(),
+        s"gseg-meta $kind dir=$dir", SegMetaTables.rowsOf(dir, kind))
 }
