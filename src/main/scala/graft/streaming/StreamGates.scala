@@ -1081,7 +1081,7 @@ object StreamGates {
       val clicks = iso.read
         .parquet(chunkPaths(clickDir, sl.clickFiles.size): _*)
         .filter(col("user_id") >= 0)
-      val schema = iso.read.parquet(viewDir).schema
+      val schema = Tables.schemaOf(iso, viewDir)
       val joined = Streams.viewClickLeftOuter(
         iso.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(viewDir),
