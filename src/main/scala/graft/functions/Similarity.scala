@@ -383,8 +383,7 @@ object Similarity {
     * covar_samp's factorization. Output is d² = 4 096 rows however
     * big the corpus is; cross-partition double-sum order shifts only
     * last-ulps, absorbed by the suite-wide 6-dp rounding contract.
-    * Eager (the block merge is an action at build time) — listed in
-    * SuitePlanLintSpec's exclusions like the other eager queries. */
+    * Eager: the block merge is an action at build time. */
   def embCovariance(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val blocks = graft.Tables.embeddings(s, d)

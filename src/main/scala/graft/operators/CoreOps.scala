@@ -3828,7 +3828,7 @@ object CoreOps {
       .select(col("o_orderkey").as("k"), col("o_totalprice").as("price"))
       .repartition(8)
       .write.format("gseg")
-      .option(graft.sources.SegSource.BloomColumnsOption, "k")
+      .option(graft.sources.SegSettings.BloomColumns.key, "k")
       .mode("overwrite").save(dir)
     val t = iso.read.format("gseg").load(dir)
     val half = t.agg(max(col("k"))).head().getLong(0) / 2

@@ -149,7 +149,7 @@ object SegCdf {
       SegMeta.read(java.nio.file.Paths.get(dir))
         // the UNDERLYING columns: a bucket(n, col) layout keys CDC
         // rows by col, not by its bucket id
-        .map(_.clusterCols.map(c => SegSource.ClusterKey.parse(c).col))
+        .map(_.settings.cluster.map(c => SegSource.ClusterKey.parse(c).col))
         .getOrElse(Nil))
     require(keys.nonEmpty,
       s"gseg changefeed: no key columns — pass ${KeysOption}=col[,col] " +

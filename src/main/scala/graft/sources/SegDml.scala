@@ -103,59 +103,6 @@ class SegCatalog extends TableCatalog
   // declared clustering column) lives in the unified atomic sidecar —
   // see [[SegMeta]]
 
-  /** `PARTITIONED BY` → the catalog-declared clustering keys:
-    *  - IDENTITY transforms over BIGINT/INT/STRING/DATE/TIMESTAMP
-    *    columns (one partition per distinct value — the layout the
-    *    keyed writer rolls and the scan recovers from header stats;
-    *    string keys recover through the v3 ASCII-exact string zone
-    *    stats, so a non-ASCII or >48-byte key value degrades the scan
-    *    to unknown partitioning — never wrong, only shuffled);
-    *  - `bucket(n, col)` transforms for HIGH-CARDINALITY keys (one
-    *    partition per hash bucket — fact⋈fact SPJ without enumerating
-    *    the key domain; the writer stamps each segment's bucket id
-    *    into the v4 header, the scan reports
-    *    KeyGroupedPartitioning(bucket(n, col)), and [[SegCatalog]]
-    *    serves the `bucket` V2 function Spark resolves it through).
-    * A multi-transform declaration forms a COMPOSITE key. Anything
-    * else is rejected loudly rather than silently ignored. */
-  private def clusterOf(partitions: Array[Transform],
-      schema: StructType): Seq[String] = {
-    if (partitions == null || partitions.isEmpty) return Nil
-    val cols = partitions.toSeq.map { t =>
-      val spec = SegSource.ClusterKey.ofTransform(t)
-      val c = spec.col
-      val f = schema.fields.find(_.name == c).getOrElse(
-        throw new IllegalArgumentException(
-          s"gseg: PARTITIONED BY column '$c' is not in the schema"))
-      spec match {
-        case SegSource.ClusterKey(_, Some(_), _, _) =>
-          require(SegSource.bucketClusterType(f.dataType),
-            s"gseg: bucket(n, $c) needs a " +
-              "BIGINT/INT/STRING/DATE/TIMESTAMP column, " +
-              s"got ${f.dataType.simpleString}")
-        case SegSource.ClusterKey(_, None, Some(u), _) =>
-          require(SegSource.temporalClusterType(u, f.dataType),
-            s"gseg: $u($c) needs a TIMESTAMP" +
-              (if (u == "hours") "" else " or DATE") +
-              s" column, got ${f.dataType.simpleString}")
-        case SegSource.ClusterKey(_, None, None, Some(_)) =>
-          require(SegSource.truncClusterType(f.dataType),
-            s"gseg: truncate(w, $c) needs a BIGINT/INT/STRING " +
-              s"column, got ${f.dataType.simpleString}")
-        case _ =>
-          require(SegSource.identityClusterType(f.dataType),
-            s"gseg: PARTITIONED BY column '$c' must be " +
-              "BIGINT/INT/STRING/DATE/TIMESTAMP/DECIMAL (identity " +
-              s"clustering), got ${f.dataType.simpleString}")
-      }
-      spec.render
-    }
-    val names = cols.map(SegSource.ClusterKey.parse(_).col)
-    require(names.distinct.size == names.size,
-      s"gseg: duplicate PARTITIONED BY column in ${names.mkString(",")}")
-    cols
-  }
-
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     val ns = Paths.get((warehouse +: namespace.toSeq).mkString("/"))
     if (!Files.isDirectory(ns)) return Array.empty
@@ -211,7 +158,7 @@ class SegCatalog extends TableCatalog
         inferred
     }
     SegManifest.ensure(dir.toString)
-    new SegDmlTable(meta.schema, dir.toString, meta.clusterCols, meta.props)
+    new SegDmlTable(meta.schema, dir.toString, meta.settings)
   }
 
   /** TIME TRAVEL — `SELECT ... FROM t VERSION AS OF <gen>`: resolve
@@ -300,23 +247,22 @@ class SegCatalog extends TableCatalog
         (Files.isDirectory(dir) &&
           SegSource.listSegments(dir.toString).nonEmpty))
       throw new TableAlreadyExistsException(ident)
-    // `_file` / `_pos` / `__row_operation` are reserved (metadata
-    // columns and rewrite marker): a stored column under any of these
-    // names would be silently shadowed on every read (ADVICE r11)
-    Seq(SegSource.FileMetaName, SegSource.PosMetaName,
-      org.apache.spark.sql.catalyst.util.RowDeltaUtils.OPERATION_COLUMN)
-      .foreach(r => require(!schema.fieldNames.contains(r),
-        s"gseg: '$r' is a reserved column name"))
-    schema.fields.foreach(f => SegSource.tag(f.dataType)) // supported types only
-    val cluster = clusterOf(partitions, schema)
-    // persist the gseg.* property namespace (validated — an unknown
-    // engine property is a typo, not a request); everything else in
-    // the map is Spark bookkeeping (provider, location, owner)
-    val props = SegCatalog.gsegProps(properties)
-    SegMeta.write(dir,
-      SegMeta.TableMeta(schema, Set.empty, Map.empty, cluster, props))
+    val meta = newTableMeta(schema, partitions, properties)
+    SegMeta.write(dir, meta)
     SegManifest.ensure(dir.toString)
-    new SegDmlTable(schema, dir.toString, cluster, props)
+    new SegDmlTable(schema, dir.toString, meta.settings)
+  }
+
+  /** The metadata a new table starts with, shared by CREATE, CTAS, RTAS
+    * and CREATE OR REPLACE: the schema (reserved names and unstorable
+    * types fail) and its [[SegSettings]] from `PARTITIONED BY`,
+    * TBLPROPERTIES and OPTIONS. */
+  private def newTableMeta(schema: StructType, partitions: Array[Transform],
+      properties: java.util.Map[String, String]): SegMeta.TableMeta = {
+    schema.fieldNames.foreach(SegSource.requireUnreserved)
+    schema.fields.foreach(f => SegSource.tag(f.dataType)) // supported types only
+    SegMeta.TableMeta(schema, Set.empty, Map.empty,
+      SegSettings.of(properties, partitions, schema))
   }
 
   /** ALTER TABLE ADD/DROP/RENAME COLUMN: sidecar-only schema
@@ -359,9 +305,7 @@ class SegCatalog extends TableCatalog
             "(existing segments null-fill it)")
         require(add.position() == null,
           "gseg: ADD COLUMN supports tail position only")
-        require(colName != SegSource.FileMetaName && colName !=
-          org.apache.spark.sql.catalyst.util.RowDeltaUtils.OPERATION_COLUMN,
-          s"gseg: '$colName' is a reserved column name")
+        SegSource.requireUnreserved(colName)
         require(!m.schema.fieldNames.contains(colName),
           s"gseg: column '$colName' already exists")
         require(!m.reservedNames.contains(colName),
@@ -380,7 +324,7 @@ class SegCatalog extends TableCatalog
           m
         } else {
           require(m.schema.length > 1, "gseg: cannot drop the last column")
-          require(!m.clusterCols.exists(spec =>
+          require(!m.settings.cluster.exists(spec =>
             SegSource.parseZOrder(spec) match {
               case Some((a, b)) => a == colName || b == colName
               case None => SegSource.ClusterKey.parse(spec).col == colName
@@ -404,9 +348,7 @@ class SegCatalog extends TableCatalog
           s"gseg: no column '$oldName' to rename")
         require(newName.nonEmpty && newName != oldName,
           s"gseg: bad rename target '$newName'")
-        require(newName != SegSource.FileMetaName && newName !=
-          org.apache.spark.sql.catalyst.util.RowDeltaUtils.OPERATION_COLUMN,
-          s"gseg: '$newName' is a reserved column name")
+        SegSource.requireUnreserved(newName)
         require(!m.schema.fieldNames.contains(newName),
           s"gseg: rename target '$newName' already exists")
         require(!m.reservedNames.contains(newName),
@@ -420,19 +362,9 @@ class SegCatalog extends TableCatalog
           // column's blocks were ever stored under, newest first
           aliases = (m.aliases - oldName) +
             (newName -> (oldName +: m.aliases.getOrElse(oldName, Nil))),
-          // a renamed clustering column keeps clustering (the layout
-          // recovery resolves the alias like every other read);
-          // bucket(n, col) specs rename their inner column, zorder
-          // specs both of theirs
-          clusterCols = m.clusterCols.map(c =>
-            SegSource.parseZOrder(c) match {
-              case Some((a, b)) =>
-                def r(x: String) = if (x == oldName) newName else x
-                s"zorder(${r(a)},${r(b)})"
-              case None =>
-                SegSource.ClusterKey.parse(c).renamed(oldName, newName)
-                  .render
-            }))
+          // a renamed clustering or bloom column keeps its role (the
+          // layout recovery resolves the alias like every other read)
+          settings = m.settings.renamed(oldName, newName))
       // ALTER COLUMN TYPE — WIDENING only, the three safe families:
       // INT -> BIGINT, FLOAT -> DOUBLE (every float is exactly a
       // double), DECIMAL(p,s) -> DECIMAL(p+k,s) (same scale, wider
@@ -454,7 +386,7 @@ class SegCatalog extends TableCatalog
         val f = m.schema.fields.find(_.name == colName).getOrElse(
           throw new IllegalArgumentException(
             s"gseg: no column '$colName' to alter"))
-        require(!m.clusterCols.exists(spec =>
+        require(!m.settings.cluster.exists(spec =>
           SegSource.ClusterKey.parse(spec).col == colName),
           s"gseg: cannot change the type of clustering column " +
             s"'$colName' — recreate the table to re-key its layout")
@@ -483,31 +415,18 @@ class SegCatalog extends TableCatalog
               s"FLOAT -> DOUBLE, DECIMAL(p,s) -> DECIMAL(p+k,s) only, " +
               s"got ${from.simpleString} -> ${to.simpleString}")
         }
-      // ALTER TABLE SET/UNSET TBLPROPERTIES — the gseg.* namespace
-      // only, validated exactly like CREATE TABLE's (an unknown
-      // engine property is a typo, not a request); Spark-reserved
-      // bookkeeping keys are rejected rather than silently absorbed
+      // ALTER TABLE SET/UNSET TBLPROPERTIES — the settings only,
+      // validated exactly like CREATE TABLE's; any other key (Spark's
+      // bookkeeping included) fails rather than silently absorbed
       case (m, set: TableChange.SetProperty) =>
-        // gsegProps FILTERS non-gseg keys out before validating, so
-        // without this guard a typo'd key would validate to an empty
-        // map and the SET would silently no-op — mirror
-        // RemoveProperty's loud rejection instead
-        require(set.property.startsWith("gseg."),
-          s"gseg: unknown table property '${set.property}' " +
-            "(the gseg.* namespace is the configurable surface)")
-        m.copy(props = m.props ++
-          SegCatalog.gsegProps(java.util.Map.of(set.property, set.value)))
+        m.copy(settings = m.settings.set(set.property, set.value, m.schema))
       case (m, rm: TableChange.RemoveProperty) =>
-        require(rm.property.startsWith("gseg."),
-          s"gseg: unknown table property '${rm.property}' " +
-            "(the gseg.* namespace is the configurable surface)")
-        m.copy(props = m.props - rm.property)
+        m.copy(settings = m.settings.unset(rm.property))
       case (_, other) => throw new UnsupportedOperationException(
         s"gseg: ALTER TABLE change $other")
     }
     SegMeta.write(dir, after) // ONE atomic metadata commit
-    new SegDmlTable(after.schema, dir.toString, after.clusterCols,
-      after.props)
+    new SegDmlTable(after.schema, dir.toString, after.settings)
   }
 
   // -------- atomic CTAS / RTAS (StagingTableCatalog) --------
@@ -533,8 +452,8 @@ class SegCatalog extends TableCatalog
     * staged metadata rides into the swap via metaOverride, and
     * SegDmlSpec's as-of-schema case proves the replaced generation
     * serves its old columns). */
-  private def stageWrite(ident: Identifier, schema: StructType,
-      partitions: Array[Transform],
+  private def stageWrite(ident: Identifier,
+      info: org.apache.spark.sql.connector.catalog.TableInfo,
       replace: Option[Boolean]): org.apache.spark.sql.connector.catalog.StagedTable = {
     val dir = dirOf(ident)
     val present = SegMeta.exists(dir) || SegManifest.exists(dir.toString) ||
@@ -545,12 +464,7 @@ class SegCatalog extends TableCatalog
       case Some(true) if !present => throw new NoSuchTableException(ident)
       case _ => ()
     }
-    Seq(SegSource.FileMetaName,
-      org.apache.spark.sql.catalyst.util.RowDeltaUtils.OPERATION_COLUMN)
-      .foreach(r => require(!schema.fieldNames.contains(r),
-        s"gseg: '$r' is a reserved column name"))
-    schema.fields.foreach(f => SegSource.tag(f.dataType))
-    val cluster = clusterOf(partitions, schema)
+    val meta = newTableMeta(info.schema(), info.partitions(), info.properties())
     val expect: Option[Option[Long]] =
       if (present) {
         loadTable(ident) // migration moment: sidecar + manifest
@@ -558,21 +472,21 @@ class SegCatalog extends TableCatalog
       } else Some(None) // CAS: the table must still be absent at commit
     Files.createDirectories(dir)
     val tmp = Files.createTempDirectory(dir, ".ctas-tmp-")
-    new SegStagedTable(schema, dir, tmp, present, expect, cluster)
+    new SegStagedTable(meta, dir, tmp, present, expect)
   }
 
   override def stageCreate(ident: Identifier,
       info: org.apache.spark.sql.connector.catalog.TableInfo)
       : org.apache.spark.sql.connector.catalog.StagedTable =
-    stageWrite(ident, info.schema(), info.partitions(), replace = Some(false))
+    stageWrite(ident, info, replace = Some(false))
   override def stageReplace(ident: Identifier,
       info: org.apache.spark.sql.connector.catalog.TableInfo)
       : org.apache.spark.sql.connector.catalog.StagedTable =
-    stageWrite(ident, info.schema(), info.partitions(), replace = Some(true))
+    stageWrite(ident, info, replace = Some(true))
   override def stageCreateOrReplace(ident: Identifier,
       info: org.apache.spark.sql.connector.catalog.TableInfo)
       : org.apache.spark.sql.connector.catalog.StagedTable =
-    stageWrite(ident, info.schema(), info.partitions(), replace = None)
+    stageWrite(ident, info, replace = None)
 
   override def dropTable(ident: Identifier): Boolean = {
     val dir = dirOf(ident)
@@ -612,49 +526,6 @@ class SegCatalog extends TableCatalog
     dirOf(ident)
 }
 
-object SegCatalog {
-  /** The per-command execution-strategy properties (Iceberg's
-    * write.<cmd>.mode shape): `copy_on_write` (default — rewrite the
-    * affected groups) or `merge_on_read`. A merge-on-read DELETE
-    * writes positional deletion vectors only; a merge-on-read
-    * UPDATE/MERGE masks the OLD row versions with vectors and APPENDS
-    * the new versions as fresh segments — the touched segments stay
-    * byte-identical either way. */
-  val DeleteModeProp = "gseg.delete.mode"
-  val UpdateModeProp = "gseg.update.mode"
-  val MergeModeProp = "gseg.merge.mode"
-  private[sources] val DeleteModeMor = "merge_on_read"
-  private[sources] val DeleteModeCow = "copy_on_write"
-
-  /** Extract + validate the gseg.* property namespace from a catalog
-    * property map. Unknown gseg.* keys fail loudly; non-gseg keys are
-    * Spark bookkeeping (provider, location, owner, comment) and pass
-    * through untouched/unpersisted. */
-  private[sources] def gsegProps(
-      properties: java.util.Map[String, String]): Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    properties.asScala.filter(_._1.startsWith("gseg.")).map {
-      case (k @ (DeleteModeProp | UpdateModeProp | MergeModeProp), v) =>
-        require(v == DeleteModeCow || v == DeleteModeMor,
-          s"gseg: $k must be '$DeleteModeCow' or " +
-            s"'$DeleteModeMor', got '$v'")
-        k -> v
-      // ANN-index registration: `gseg.index.<column>` = '<method>:<cells>'
-      // — written by CALL create_index, removed by CALL drop_index, so
-      // SHOW TBLPROPERTIES tells an operator (and a planner) which
-      // columns carry a persisted index without probing table names
-      case (k, v) if k.startsWith("gseg.index.") =>
-        require(v.matches("(ivf|lsh):[0-9]+"),
-          s"gseg: $k must be '<ivf|lsh>:<cells>', got '$v'")
-        k -> v
-      case (k, _) => throw new IllegalArgumentException(
-        s"gseg: unknown table property '$k' " +
-          s"(have: $DeleteModeProp, $UpdateModeProp, $MergeModeProp, " +
-          "gseg.index.<column>)")
-    }.toMap
-  }
-}
-
 /** The table a CTAS/RTAS query writes into before it exists: writes
   * land in a hidden `.ctas-tmp-` staging dir through the ordinary
   * task-commit protocol ([[SegWriteBuilder]] pointed at the temp), so
@@ -668,23 +539,20 @@ object SegCatalog {
   * data is never partial, schema fidelity (nullability flags) is the
   * only thing at stake in that window. Abort deletes the staging and,
   * for a fresh create, the empty directory shell. */
-class SegStagedTable(tschema: StructType, dir: java.nio.file.Path,
+class SegStagedTable(meta: SegMeta.TableMeta, dir: java.nio.file.Path,
     tmp: java.nio.file.Path, replacing: Boolean,
-    expectGen: Option[Option[Long]],
-    clusterCols: Seq[String] = Nil)
+    expectGen: Option[Option[Long]])
     extends Table with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.StagedTable {
   import org.apache.spark.sql.connector.catalog.TableCapability
 
   override def name(): String = s"gseg:$dir (staged)"
-  override def schema(): StructType = tschema
+  override def schema(): StructType = meta.schema
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_WRITE,
       TableCapability.TRUNCATE)
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new SegWriteBuilder(tmp.toString, info.schema(),
-      Option(info.options().get(SegSource.PartitionColOption))
-        .map(SegSource.splitClusterSpecs).getOrElse(clusterCols))
+    SegWriteBuilder(tmp.toString, info, meta.settings)
 
   override def commitStagedChanges(): Unit = {
     val gen = java.util.UUID.randomUUID.toString.take(8)
@@ -702,11 +570,9 @@ class SegStagedTable(tschema: StructType, dir: java.nio.file.Path,
     // the staged meta rides INTO the swap (metaOverride): the sidecar
     // lands after the commit point, but the v3 snapshot must pin the
     // NEW schema, not the replaced one
-    val newMeta = SegMeta.TableMeta(tschema, Set.empty, Map.empty,
-      clusterCols)
     SegManifest.swap(dir.toString, names, expectGen,
-      metaOverride = Some(SegMeta.render(newMeta)))
-    SegMeta.write(dir, newMeta)
+      metaOverride = Some(SegMeta.render(meta)))
+    SegMeta.write(dir, meta)
     graft.Fs.deleteRecursively(tmp)
   }
 
@@ -736,29 +602,28 @@ class SegStagedTable(tschema: StructType, dir: java.nio.file.Path,
   * #affected-files, never #matching-rows (the Iceberg `_file`
   * design; value-based filter attributes would broadcast data). */
 class SegDmlTable(tschema: StructType, path: String,
-    clusterCols: Seq[String] = Nil,
-    tableProps: Map[String, String] = Map.empty)
-    extends SegTable(tschema, path, clusterCols)
+    settings: SegSettings = SegSettings())
+    extends SegTable(tschema, path, settings)
     with SupportsRowLevelOperations with TruncatableTable
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
 
   /** Observability through the standard surface: `SHOW TBLPROPERTIES`
     * / `DESCRIBE TABLE EXTENDED` report the live generation, its
-    * width, the declared clustering, and the persisted gseg.*
-    * properties — the numbers an operator reaches for before
+    * width, the declared clustering, and the other settings — the numbers an operator reaches for before
     * vacuum/compact decisions, with CALL history as the full ledger.
     * Values snapshot at loadTable time (the manifest read the load
     * already pays). */
   override def properties(): java.util.Map[String, String] = {
     val m = new java.util.HashMap[String, String]()
-    tableProps.foreach { case (k, v) => m.put(k, v) }
+    settings.props.foreach { case (k, v) => m.put(k, v) }
     SegManifest.readManifest(path).foreach { man =>
       m.put("generation", man.gen.toString)
       m.put("segments", man.names.size.toString)
       if (man.dvs.nonEmpty)
         m.put("deletion_vectors", man.dvs.size.toString)
     }
-    if (clusterCols.nonEmpty) m.put("clustering", clusterCols.mkString(","))
+    if (settings.cluster.nonEmpty)
+      m.put("clustering", settings.cluster.mkString(","))
     m
   }
 
@@ -783,18 +648,12 @@ class SegDmlTable(tschema: StructType, path: String,
       info: RowLevelOperationInfo): RowLevelOperationBuilder =
     new RowLevelOperationBuilder {
       override def build(): RowLevelOperation = {
-        // each command's strategy property routes it to the DELTA
+        // each command's mode setting routes it to the DELTA
         // (deletion-vector) path or the group-based rewrite
-        val modeProp = info.command() match {
-          case RowLevelOperation.Command.DELETE => SegCatalog.DeleteModeProp
-          case RowLevelOperation.Command.UPDATE => SegCatalog.UpdateModeProp
-          case _ => SegCatalog.MergeModeProp
-        }
-        if (tableProps.get(modeProp).contains(SegCatalog.DeleteModeMor))
-          new SegDeltaRowOperation(path, tschema, info.command(),
-            clusterCols)
+        if (settings.mergeOnRead(info.command()))
+          new SegDeltaRowOperation(path, tschema, info.command(), settings)
         else
-          new SegRowLevelOperation(path, tschema, info.command(), clusterCols)
+          new SegRowLevelOperation(path, tschema, info.command(), settings)
       }
     }
 
@@ -810,7 +669,7 @@ class SegDmlTable(tschema: StructType, path: String,
     // discipline (r13 VERDICT hygiene item)
     if (!SegMeta.exists(Paths.get(path)))
       SegMeta.write(Paths.get(path),
-        SegMeta.TableMeta(tschema, Set.empty, Map.empty, clusterCols))
+        SegMeta.TableMeta(tschema, Set.empty, Map.empty, settings))
     SegManifest.read(path) match {
       case Some((gen, _)) =>
         SegManifest.swap(path, Seq.empty, expectGen = Some(Some(gen)))
@@ -856,7 +715,7 @@ class SegSnapshotTable(tschema: StructType, path: String, gen: Long,
 class SegRowLevelOperation(private[sources] val path: String,
     tschema: StructType,
     cmd: RowLevelOperation.Command,
-    clusterCols: Seq[String] = Nil) extends RowLevelOperation {
+    settings: SegSettings) extends RowLevelOperation {
   @volatile private[sources] var candidates: Seq[String] = Nil
   /** Deletion-vector entries (segment name → vector name) of the
     * candidate files AS PLANNED — the commit re-checks them against
@@ -882,7 +741,7 @@ class SegRowLevelOperation(private[sources] val path: String,
     new SegGroupScanBuilder(tschema, path, this)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new SegReplaceDataWrite(path, info.schema(), this, cmd, clusterCols)
+    new SegReplaceDataWrite(path, info.schema(), this, cmd, settings)
 }
 
 /** Scan builder for a row-level operation. Spark's
@@ -1029,7 +888,7 @@ object SegDml {
   * (the sidecar keeps it loadable). */
 class SegReplaceDataWrite(path: String, schema: StructType,
     op: SegRowLevelOperation, cmd: RowLevelOperation.Command,
-    clusterCols: Seq[String] = Nil)
+    settings: SegSettings)
     extends WriteBuilder with Write
     with BatchWrite
     with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
@@ -1047,7 +906,7 @@ class SegReplaceDataWrite(path: String, schema: StructType,
   // writer's flush-time Morton sort keeps replacement segments
   // z-clustered; see SegDataWriter.zIdx)
   private def distCols: Seq[String] =
-    clusterCols.filter(SegSource.parseZOrder(_).isEmpty)
+    settings.cluster.filter(SegSource.parseZOrder(_).isEmpty)
   override def requiredDistribution()
       : org.apache.spark.sql.connector.distributions.Distribution =
     if (distCols.isEmpty)
@@ -1086,7 +945,7 @@ class SegReplaceDataWrite(path: String, schema: StructType,
       System.err.println(s"[rlo-debug] cmd=$cmd info.schema=" +
         schema.fieldNames.mkString(","))
     SegRloWriterFactory(
-      SegWriterFactory(path, dataSchema, clusterCols, skipEmpty = true),
+      SegWriterFactory(path, dataSchema, settings, skipEmpty = true),
       dataSchema, schema, cmd)
   }
 
@@ -1339,7 +1198,7 @@ private[sources] case class SegRloWriterFactory(inner: SegWriterFactory,
 class SegDeltaRowOperation(private[sources] val path: String,
     tschema: StructType,
     cmd: RowLevelOperation.Command,
-    clusterCols: Seq[String] = Nil)
+    settings: SegSettings)
     extends RowLevelOperation
     with org.apache.spark.sql.connector.write.SupportsDelta {
 
@@ -1368,7 +1227,7 @@ class SegDeltaRowOperation(private[sources] val path: String,
 
   override def newWriteBuilder(info: LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.DeltaWriteBuilder =
-    new SegDvDeltaWrite(path, tschema, info, clusterCols)
+    new SegDvDeltaWrite(path, tschema, info, settings)
 }
 
 /** One task's delta: deleted row ids (segment path → stored ordinals,
@@ -1379,7 +1238,7 @@ private[sources] case class SegDvCommitMessage(
     tmpFiles: Seq[String] = Nil) extends WriterCommitMessage
 
 class SegDvDeltaWrite(path: String, tschema: StructType,
-    info: LogicalWriteInfo, clusterCols: Seq[String] = Nil)
+    info: LogicalWriteInfo, settings: SegSettings)
     extends org.apache.spark.sql.connector.write.DeltaWriteBuilder
     with org.apache.spark.sql.connector.write.DeltaWrite
     with org.apache.spark.sql.connector.write.DeltaBatchWrite {
@@ -1396,7 +1255,7 @@ class SegDvDeltaWrite(path: String, tschema: StructType,
     Files.createDirectories(Paths.get(path))
     SegDvWriterFactory(rowIdSchema.fieldIndex(SegSource.FileMetaName),
       rowIdSchema.fieldIndex(SegSource.PosMetaName),
-      path, info.schema(), clusterCols)
+      path, info.schema(), settings)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -1514,7 +1373,7 @@ class SegDvDeltaWrite(path: String, tschema: StructType,
 }
 
 private[sources] case class SegDvWriterFactory(fileOrd: Int, posOrd: Int,
-    path: String, rowSchema: StructType, clusterCols: Seq[String] = Nil)
+    path: String, rowSchema: StructType, settings: SegSettings)
     extends org.apache.spark.sql.connector.write.DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DeltaWriter[
@@ -1530,7 +1389,7 @@ private[sources] case class SegDvWriterFactory(fileOrd: Int, posOrd: Int,
       private def ins(): SegDataWriter = {
         if (inserter == null)
           inserter = new SegDataWriter(path, rowSchema, partitionId,
-            taskId, clusterCols, skipEmpty = true)
+            taskId, settings, skipEmpty = true)
         inserter
       }
 

@@ -46,10 +46,10 @@ object SegMeta {
   private[sources] val FileName = ".schema.json"
   private[sources] val LegacyDropped = ".dropped"
 
+  /** `settings` rides in the sidecar's `cluster` and `props` fields. */
   case class TableMeta(schema: StructType, dropped: Set[String],
       aliases: Map[String, Seq[String]],
-      clusterCols: Seq[String] = Nil,
-      props: Map[String, String] = Map.empty) {
+      settings: SegSettings = SegSettings()) {
     /** stored-header-name → current-name, for read-side resolution.
       * Built once per metadata read; first (most recent) alias wins
       * if chains ever overlapped (they cannot, by the guards). */
@@ -112,15 +112,15 @@ object SegMeta {
         case JArray(vs) => vs.collect { case JString(c) => c }
         case _ => Nil
       }
-      // "props": engine-recognized table properties (gseg.* keys),
-      // absent from pre-r15 sidecars
+      // "props": every other setting under its key (pre-r15 sidecars
+      // have none)
       val props = (ast \ "props") match {
         case JObject(fields) => fields.collect {
           case (k, JString(v)) => k -> v
         }.toMap
         case _ => Map.empty[String, String]
       }
-      TableMeta(schema, dropped, aliases, cluster, props)
+      TableMeta(schema, dropped, aliases, SegSettings(cluster, props))
     }
   }
 
@@ -133,11 +133,8 @@ object SegMeta {
         ("schema" -> org.json4s.jackson.JsonMethods.parse(meta.schema.json)) ~
         ("dropped" -> meta.dropped.toSeq.sorted) ~
         ("aliases" -> meta.aliases.map { case (k, v) => k -> v }) ~
-        ("cluster" -> (meta.clusterCols match {
-          case Nil => None
-          case cs => Some(cs)
-        })) ~
-        ("props" -> (if (meta.props.isEmpty) None else Some(meta.props)))
+        ("cluster" -> Some(meta.settings.cluster).filter(_.nonEmpty)) ~
+        ("props" -> Some(meta.settings.props).filter(_.nonEmpty))
     org.json4s.jackson.JsonMethods
       .compact(org.json4s.jackson.JsonMethods.render(ast)).getBytes(UTF_8)
   }

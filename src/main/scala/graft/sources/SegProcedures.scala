@@ -222,70 +222,18 @@ object SegProcedures {
       val ident = args.table(0)
       val dir = cat.tableDir(ident)
       val schema = cat.loadTable(ident).schema() // ensures manifest
+      val meta = SegMeta.read(dir).getOrElse(
+        SegMeta.TableMeta(schema, Set.empty, Map.empty))
       // the NEW clustering, validated like CREATE TABLE's
-      val newCluster: Option[Seq[String]] = clusterBy.map { cb =>
-        val specs = SegSource.splitClusterSpecs(cb)
-        // zorder(a,b): layout-only multi-dimensional clustering —
-        // must be the SOLE spec (it owns the write-side sort whole)
-        // over two integer columns
-        if (specs.exists(SegSource.parseZOrder(_).isDefined)) {
-          require(specs.size == 1,
-            s"gseg compact: zorder cannot combine with other " +
-              s"cluster_by specs (got $cb)")
-          val (a, b) = SegSource.parseZOrder(specs.head).get
-          require(a != b, s"gseg compact: zorder needs two distinct " +
-            s"columns, got $cb")
-          Seq(a, b).foreach { c =>
-            val f = schema.fields.find(_.name == c).getOrElse(
-              throw new IllegalArgumentException(
-                s"gseg compact: zorder column '$c' is not in the schema"))
-            require(SegSource.zorderClusterType(f.dataType),
-              s"gseg compact: zorder('$c') needs a BIGINT/INT column, " +
-                s"got ${f.dataType.simpleString}")
-          }
-          Seq(s"zorder($a,$b)")
-        } else {
-        specs.foreach { sp =>
-          val k = SegSource.ClusterKey.parse(sp)
-          val f = schema.fields.find(_.name == k.col).getOrElse(
-            throw new IllegalArgumentException(
-              s"gseg compact: cluster_by column '${k.col}' is not " +
-                "in the schema"))
-          k match {
-            case SegSource.ClusterKey(_, Some(_), _, _) =>
-              require(SegSource.bucketClusterType(f.dataType),
-                s"gseg compact: bucket(n, ${k.col}) needs a " +
-                  "BIGINT/INT/STRING/DATE/TIMESTAMP column, got " +
-                  f.dataType.simpleString)
-            case SegSource.ClusterKey(_, None, Some(u), _) =>
-              require(SegSource.temporalClusterType(u, f.dataType),
-                s"gseg compact: $u(${k.col}) needs a TIMESTAMP" +
-                  (if (u == "hours") "" else " or DATE") +
-                  s" column, got ${f.dataType.simpleString}")
-            case SegSource.ClusterKey(_, None, None, Some(_)) =>
-              require(SegSource.truncClusterType(f.dataType),
-                s"gseg compact: truncate(w, ${k.col}) needs a " +
-                  s"BIGINT/INT/STRING column, got " +
-                  f.dataType.simpleString)
-            case _ =>
-              require(SegSource.identityClusterType(f.dataType),
-                s"gseg compact: cluster_by column '${k.col}' must be " +
-                  "BIGINT/INT/STRING/DATE/TIMESTAMP, got " +
-                  f.dataType.simpleString)
-          }
-        }
-        val names = specs.map(SegSource.ClusterKey.parse(_).col)
-        require(names.distinct.size == names.size,
-          s"gseg compact: duplicate cluster_by column in $cb")
-        specs.map(SegSource.ClusterKey.parse(_).render)
-        }
-      }
+      val newCluster: Option[Seq[String]] = clusterBy.map(cb =>
+        SegSettings.checkCluster(SegSource.splitClusterSpecs(cb), schema,
+          "compact cluster_by"))
       // a PARTITIONED BY table compacts CLUSTERED by default — an
       // unqualified CALL compact must not quietly destroy the
       // layout the table declared; cluster_by overrides everything
       val sortByEff: Seq[String] = newCluster.getOrElse(
         sortBy.map(SegSource.splitClusterSpecs)
-          .getOrElse(SegMeta.read(dir).map(_.clusterCols).getOrElse(Nil)))
+          .getOrElse(meta.settings.cluster))
       sortByEff.foreach(c => SegSource.parseZOrder(c) match {
         case Some((a, b)) =>
           require(schema.fieldNames.contains(a) &&
@@ -359,14 +307,18 @@ object SegProcedures {
                 toRewrite.map(f => Paths.get(f).getFileName.toString)
                   .mkString(",")))
               .load(dir.toString)
+            // the table's blooms and budgets ride along as write
+            // options; each layout below sets its own clustering
+            def rewrite(df: org.apache.spark.sql.DataFrame, cluster: String) =
+              df.write.format("gseg").options(meta.settings.props)
+                .option(SegSource.PartitionColOption, cluster)
+                .mode("overwrite")
             sortByEff match {
               case Nil =>
                 // distributed, shuffle-free: existing partitions
                 // merge into `target` output tasks in one
                 // read+write pass
-                src.coalesce(target)
-                  .write.format("gseg").mode("overwrite")
-                  .save(tmp.toString)
+                rewrite(src.coalesce(target), "").save(tmp.toString)
               case Seq(zs) if SegSource.parseZOrder(zs).isDefined =>
                 // Z-ORDER re-layout: one global range shuffle on the
                 // Morton code (graft.operators.ZOrder.morton2 — the
@@ -378,15 +330,12 @@ object SegProcedures {
                 val zc = graft.operators.ZOrder.morton2(
                   org.apache.spark.sql.functions.col(za),
                   org.apache.spark.sql.functions.col(zb))
-                src.withColumn("_z", zc)
+                rewrite(src.withColumn("_z", zc)
                   .repartitionByRange(target,
                     org.apache.spark.sql.functions.col("_z"))
                   .sortWithinPartitions(
                     org.apache.spark.sql.functions.col("_z"))
-                  .drop("_z")
-                  .write.format("gseg")
-                  .option(SegSource.PartitionColOption, zs)
-                  .mode("overwrite").save(tmp.toString)
+                  .drop("_z"), zs).save(tmp.toString)
               case cs if cs.exists { c =>
                   val k = SegSource.ClusterKey.parse(c)
                   k.buckets.isDefined || k.unit.isDefined ||
@@ -399,20 +348,16 @@ object SegProcedures {
                 // flush-time key sort forms the single-bucket,
                 // stamped runs; the table is ALREADY bucket-laid,
                 // so merging within the layout needs no shuffle
-                src.coalesce(target)
-                  .write.format("gseg")
-                  .option(SegSource.PartitionColOption, cs.mkString(","))
+                rewrite(src.coalesce(target), cs.mkString(","))
                   .option(SegSource.ClusterLocalOption, "true")
-                  .mode("overwrite").save(tmp.toString)
+                  .save(tmp.toString)
               case cs =>
                 // layout-preserving: the identity-clustered write
                 // path (required distribution + in-partition sort)
                 // rolls one segment per key value — min==max stats
                 // the SPJ scan groups by, exactly the layout the
                 // keyed writer produced originally
-                src.write.format("gseg")
-                  .option(SegSource.PartitionColOption, cs.mkString(","))
-                  .mode("overwrite").save(tmp.toString)
+                rewrite(src, cs.mkString(",")).save(tmp.toString)
             }
             val gen = java.util.UUID.randomUUID.toString.take(8)
             val newNames = SegSource.listSegments(tmp.toString)
@@ -427,10 +372,8 @@ object SegProcedures {
             // re-clustering pins the NEW layout into the commit's
             // snapshot (as-of-schema semantics) and persists it in
             // the sidecar AFTER the commit point, mirroring CTAS
-            val newMeta = newCluster.map { nc =>
-              SegMeta.read(dir).getOrElse(SegMeta.TableMeta(
-                schema, Set.empty, Map.empty)).copy(clusterCols = nc)
-            }
+            val newMeta = newCluster.map(nc =>
+              meta.copy(settings = meta.settings.copy(cluster = nc)))
             SegManifest.swap(dir.toString, sharedNames ++ newNames,
               expectGen = Some(liveGen),
               metaOverride = newMeta.map(SegMeta.render))
@@ -846,30 +789,10 @@ object SegProcedures {
         throw new IllegalStateException(
           s"gseg set_clustering: no sidecar at $dir"))
       // same spec grammar and validation as compact's cluster_by
-      val specs: Seq[String] =
-        if (cb.trim.isEmpty) Nil
-        else SegSource.splitClusterSpecs(cb).map { c =>
-          SegSource.parseZOrder(c) match {
-            case Some((a, b)) =>
-              require(meta.schema.fieldNames.contains(a) &&
-                meta.schema.fieldNames.contains(b),
-                s"gseg set_clustering: zorder column of '$c' is not " +
-                  "in the schema")
-              c
-            case None =>
-              val k = SegSource.ClusterKey.parse(c)
-              require(meta.schema.fieldNames.contains(k.col),
-                s"gseg set_clustering: column '${k.col}' is not in " +
-                  "the schema")
-              k.render
-          }
-        }
-      val names = specs.map(c => SegSource.parseZOrder(c)
-        .map(_.toString).getOrElse(SegSource.ClusterKey.parse(c).col))
-      require(names.distinct.size == names.size,
-        s"gseg set_clustering: duplicate cluster column in '$cb'")
-      SegMeta.write(dir, meta.copy(clusterCols = specs)) // ONE commit
-      Seq((tbl, meta.clusterCols.mkString(","), specs.mkString(",")))
+      val after = meta.settings.set(SegSettings.Cluster.key, cb, meta.schema)
+      SegMeta.write(dir, meta.copy(settings = after)) // ONE commit
+      Seq((tbl, meta.settings.cluster.mkString(","),
+        after.cluster.mkString(",")))
     })
 
   /** `CALL <catalog>.create_index('ns.t', '<vector col>', '<key col>',
@@ -920,10 +843,10 @@ object SegProcedures {
       val meta0 = SegMeta.read(tblDir).getOrElse(
         throw new IllegalStateException(
           s"gseg create_index: no sidecar at $tblDir"))
-      require(!meta0.props.contains(s"gseg.index.$colN"),
+      val key = SegSettings.Index.key + colN
+      require(!meta0.settings.props.contains(key),
         s"gseg create_index: '$colN' already carries index " +
-          s"'${meta0.props(s"gseg.index.$colN")}' — CALL drop_index " +
-          "first")
+          s"'${meta0.settings.props(key)}' — CALL drop_index first")
       val df = spark.table(fqn)
       val vf = df.schema.fields.find(_.name == colN).getOrElse(
         throw new IllegalArgumentException(
@@ -981,8 +904,8 @@ object SegProcedures {
       }
       // register the index on the TABLE (gseg.index.<col>) so SHOW
       // TBLPROPERTIES reveals it and drop_index can resolve it
-      SegMeta.write(tblDir, meta0.copy(props = meta0.props +
-        (s"gseg.index.$colN" -> s"$method:$cells")))
+      SegMeta.write(tblDir, meta0.copy(settings =
+        meta0.settings.set(key, s"$method:$cells", meta0.schema)))
       Seq((tbl, method, fq("assign"), cells, n))
     })
 
@@ -1004,8 +927,8 @@ object SegProcedures {
       val meta = SegMeta.read(tblDir).getOrElse(
         throw new IllegalStateException(
           s"gseg drop_index: no sidecar at $tblDir"))
-      val key = s"gseg.index.$colN"
-      val reg = meta.props.getOrElse(key,
+      val key = SegSettings.Index.key + colN
+      val reg = meta.settings.props.getOrElse(key,
         throw new IllegalArgumentException(
           s"gseg drop_index: '$colN' carries no index on $tbl"))
       Seq("cent", "assign").foreach { sfx =>
@@ -1013,7 +936,7 @@ object SegProcedures {
         cat.dropTable(Identifier.of(ident.namespace,
           s"${ident.name}__idx_${colN}_$sfx"))
       }
-      SegMeta.write(tblDir, meta.copy(props = meta.props - key))
+      SegMeta.write(tblDir, meta.copy(settings = meta.settings.unset(key)))
       Seq((tbl, colN, reg))
     })
 

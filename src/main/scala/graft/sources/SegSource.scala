@@ -108,6 +108,15 @@ object SegSource {
     * merge-on-read DELETE writes into the vector. */
   val PosMetaName = "_pos"
 
+  /** Fails on a column name no table may store: the two metadata
+    * columns and Spark's row-level rewrite marker would shadow it on
+    * every read, and `_pos` is the merge-on-read row id.
+    * CREATE, CTAS, ADD COLUMN, RENAME COLUMN and every write check. */
+  private[sources] def requireUnreserved(name: String): Unit =
+    require(!Set(FileMetaName, PosMetaName,
+      org.apache.spark.sql.catalyst.util.RowDeltaUtils.OPERATION_COLUMN)
+      .contains(name), s"gseg: '$name' is a reserved column name")
+
   /** Live deletion-vector map of `dir` as ABSOLUTE paths (segment →
     * vector), from the generation manifest. Empty for plain path
     * dirs and vector-free generations. Time-travel reads override
@@ -176,26 +185,6 @@ object SegSource {
     * stream. Mirrors Delta's `skipChangeCommits`. */
   val SkipChangeCommitsOption = "skip_change_commits"
 
-  /** Write option: ROLL a new segment every N rows instead of
-    * buffering the whole task partition — bounds the writer's memory
-    * to the budget (rows encode and hit disk per chunk) and caps
-    * segment size, the way a production columnar writer rolls at a
-    * byte budget. Default unlimited (one segment per task — the
-    * shape the zone-map and layout tests pin); rolling also tightens
-    * zone maps: each chunk of a sorted partition carries its own
-    * [min,max], so range-laid tables prune at finer grain. */
-  val MaxRowsPerSegmentOption = "max_rows_per_segment"
-
-  /** Write option: ROLL a new segment when the buffered rows' encoded
-    * size reaches N bytes — the PRODUCTION rolling contract (a row
-    * budget misjudges wide rows by orders of magnitude; 128 MB
-    * parquet-style targets are byte targets). Tracked from the
-    * writer's own cell encoding (fixed widths + string bytes + null
-    * bitmap), so the estimate is the real block size to within
-    * per-column header overhead. Composes with the row budget:
-    * whichever trips first rolls. */
-  val MaxBytesPerSegmentOption = "max_bytes_per_segment"
-
   /** Write option: lay out the declared clustering WITHOUT requiring
     * a Spark-side distribution — the task writer SORTS its buffer by
     * the effective keys at flush, so every segment is still
@@ -208,17 +197,6 @@ object SegSource {
     * coalesce bounding the task count) to keep bucket tables
     * compactable. */
   val ClusterLocalOption = "cluster_local"
-
-  /** Write option: comma list of columns to build a PER-SEGMENT BLOOM
-    * FILTER for (long/int/string/date/timestamp). Zone maps prune
-    * point lookups only on SORTED keys; a bloom prunes them on ANY
-    * layout — the 100 TB "find one id in an unsorted fact table"
-    * case. ~10 bits per non-null value (1% false-positive rate),
-    * k = 7 hashes derived from the same 64-bit cell hash the bucket
-    * layout uses. Bloom blocks live AFTER the column data (v5), so
-    * headers stay cheap to parse and the filter bytes are read LAZILY
-    * — only at planning, only when a pushed =/IN targets the column. */
-  val BloomColumnsOption = "bloom_columns"
 
   private[sources] val Magic = Array[Byte]('G', 'S', 'E', 'G')
   /** v3 adds OPTIONAL string zone-map stats (flag byte 2: two
@@ -1969,15 +1947,14 @@ case class SegTruncateWidthFunction(w: Int, keyType: DataType)
     else SegSource.truncateOf(w, input.get(0, keyType)).asInstanceOf[AnyRef]
 }
 
-/** `defaultCluster` is the CATALOG-declared clustering spec list
-  * (`CREATE TABLE ... PARTITIONED BY (k)` / `bucket(16, k)`,
-  * persisted in the [[SegMeta]] sidecar): every read recovers the
-  * storage-partitioned layout and every write maintains it without
-  * the caller passing the `partition_col` option — the option, when
-  * present, still wins (path-based reads of a catalog dir can opt
-  * out or in). */
+/** `settings` are the table's [[SegSettings]] (a catalog table's, from
+  * its [[SegMeta]] sidecar; none for a path): every read recovers the
+  * declared storage-partitioned layout and every write keeps the
+  * layout, blooms and budgets without the caller passing options — an
+  * option, when present, still wins for that read or write (path-based
+  * reads of a catalog dir can opt out or in). */
 class SegTable(tschema: StructType, path: String,
-    defaultCluster: Seq[String] = Nil)
+    settings: SegSettings = SegSettings())
     extends Table with SupportsRead with SupportsWrite {
   override def name(): String = s"gseg:$path"
   override def schema(): StructType = tschema
@@ -1987,12 +1964,12 @@ class SegTable(tschema: StructType, path: String,
       TableCapability.MICRO_BATCH_READ, TableCapability.STREAMING_WRITE)
   override def partitioning(): Array[Transform] =
     // zorder specs are layout-only (no V2 transform, no key groups)
-    defaultCluster.filter(SegSource.parseZOrder(_).isEmpty).map(c =>
+    settings.cluster.filter(SegSource.parseZOrder(_).isEmpty).map(c =>
       SegSource.ClusterKey.parse(c).toV2: Transform).toArray
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new SegScanBuilder(tschema, path,
       Option(options.get(SegSource.PartitionColOption))
-        .map(SegSource.splitClusterSpecs).getOrElse(defaultCluster),
+        .map(SegSource.splitClusterSpecs).getOrElse(settings.cluster),
       Option(options.get(SegSource.PinnedFilesOption)).map(v =>
         v.split(',').toSeq.filter(_.nonEmpty).sorted.map(n => s"$path/$n")),
       options.getBoolean(SegSource.SkipChangeCommitsOption, false),
@@ -2001,17 +1978,7 @@ class SegTable(tschema: StructType, path: String,
       dvOverride = Option(options.get(SegSource.PinnedDvsOption))
         .map(SegSource.parsePinnedDvs(path, _)))
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new SegWriteBuilder(path, info.schema(),
-      Option(info.options().get(SegSource.PartitionColOption))
-        .map(SegSource.splitClusterSpecs).getOrElse(defaultCluster),
-      Option(info.options().get(SegSource.MaxRowsPerSegmentOption))
-        .map(_.toInt),
-      Option(info.options().get(SegSource.MaxBytesPerSegmentOption))
-        .map(_.toLong),
-      "true".equalsIgnoreCase(
-        info.options().get(SegSource.ClusterLocalOption)),
-      Option(info.options().get(SegSource.BloomColumnsOption))
-        .map(v => SegSource.splitCols(v).toSet).getOrElse(Set.empty))
+    SegWriteBuilder(path, info, settings)
 }
 
 // ---------------- read side ----------------
@@ -3237,37 +3204,24 @@ class SegPartitionReader(file: String, required: StructType,
 
 // ---------------- write side ----------------
 
+object SegWriteBuilder {
+  /** The builder for one write into a table with `settings`: the
+    * write's own options override them for this write. */
+  def apply(path: String, info: LogicalWriteInfo,
+      settings: SegSettings): SegWriteBuilder =
+    new SegWriteBuilder(path, info.schema(),
+      settings.forWrite(info.options(), info.schema()),
+      "true".equalsIgnoreCase(
+        info.options().get(SegSource.ClusterLocalOption)))
+}
+
 class SegWriteBuilder(path: String, schema: StructType,
-    partitionCols: Seq[String] = Nil,
-    maxRowsPerSegment: Option[Int] = None,
-    maxBytesPerSegment: Option[Long] = None,
-    clusterLocal: Boolean = false,
-    bloomCols: Set[String] = Set.empty)
+    settings: SegSettings, clusterLocal: Boolean)
     extends WriteBuilder with SupportsTruncate {
   // plan-time type validation: an unstorable type (decimal precision
   // > 18, binary, nested) fails HERE, loudly, not per-task mid-write
   schema.fields.foreach(f => SegSource.tag(f.dataType))
-  bloomCols.foreach { c =>
-    val f = schema.fields.find(_.name == c).getOrElse(
-      throw new IllegalArgumentException(
-        s"gseg: bloom_columns column '$c' is not in the schema"))
-    require(f.dataType match {
-      case DoubleType | FloatType | BooleanType | _: DecimalType |
-           _: ArrayType => false
-      case _ => true
-    }, s"gseg: bloom_columns does not support ${f.dataType.simpleString} " +
-      s"('$c') — floating types have no stable value identity, booleans " +
-      "no selectivity, decimal filter values can't be hashed without " +
-      "scale context, vectors take no point lookups")
-  }
-  // `_file` is the synthesized metadata column and `__row_operation`
-  // the rewrite op marker: a stored data column under either name
-  // would be silently shadowed on read (ADVICE r11), so the write
-  // rejects them up front
-  Seq(SegSource.FileMetaName,
-    org.apache.spark.sql.catalyst.util.RowDeltaUtils.OPERATION_COLUMN)
-    .foreach(r => require(!schema.fieldNames.contains(r),
-      s"gseg: '$r' is a reserved column name"))
+  schema.fieldNames.foreach(SegSource.requireUnreserved)
 
   private var truncateFirst = false
   override def truncate(): WriteBuilder = { truncateFirst = true; this }
@@ -3297,7 +3251,7 @@ class SegWriteBuilder(path: String, schema: StructType,
     // segments locally, and the compact rewrite adds the global
     // range shuffle when re-laying the whole table
     private def distCols: Seq[String] =
-      partitionCols.filter(SegSource.parseZOrder(_).isEmpty)
+      settings.cluster.filter(SegSource.parseZOrder(_).isEmpty)
     override def requiredDistribution(): Distribution =
       // cluster_local: no Spark-side distribution at all — the
       // writer's flush-time buffer sort alone forms the runs (the
@@ -3314,12 +3268,13 @@ class SegWriteBuilder(path: String, schema: StructType,
         Expressions.sort(keyExpr(c), SortDirection.ASCENDING)
           : V2SortOrder).toArray
     override def toBatch: BatchWrite =
-      SegBatchWrite(path, schema, truncateFirst, partitionCols,
-        maxRowsPerSegment, maxBytesPerSegment, bloomCols)
+      SegBatchWrite(path, schema, truncateFirst, settings)
+    // the stream sink keeps no clustering: an epoch appends one
+    // segment per task
     override def toStreaming
         : org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-      SegStreamingWrite(path, schema, truncateFirst, maxRowsPerSegment,
-        maxBytesPerSegment)
+      SegStreamingWrite(path, schema, truncateFirst,
+        settings.copy(cluster = Nil))
   }
 }
 
@@ -3340,8 +3295,7 @@ class SegWriteBuilder(path: String, schema: StructType,
   * empty partitions stage nothing (skipEmpty) so a quiet stream
   * doesn't mint a segment per shuffle partition per epoch. */
 case class SegStreamingWrite(path: String, schema: StructType,
-    truncateEachEpoch: Boolean, maxRowsPerSegment: Option[Int] = None,
-    maxBytesPerSegment: Option[Long] = None)
+    truncateEachEpoch: Boolean, settings: SegSettings = SegSettings())
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
   import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
 
@@ -3351,8 +3305,8 @@ case class SegStreamingWrite(path: String, schema: StructType,
     new StreamingDataWriterFactory {
       override def createWriter(partitionId: Int, taskId: Long,
           epochId: Long): DataWriter[InternalRow] =
-        new SegDataWriter(path, schema, partitionId, taskId, Nil,
-          skipEmpty = true, maxRowsPerSegment, maxBytesPerSegment)
+        new SegDataWriter(path, schema, partitionId, taskId, settings,
+          skipEmpty = true)
     }
   }
 
@@ -3436,18 +3390,12 @@ case class SegCommitMessage(partitionId: Int, tmpFiles: Seq[String])
   * intact). Spark's commit coordinator guarantees one committed
   * attempt per partition, so renames never race. */
 case class SegBatchWrite(path: String, schema: StructType,
-    truncateFirst: Boolean, partitionCols: Seq[String] = Nil,
-    maxRowsPerSegment: Option[Int] = None,
-    maxBytesPerSegment: Option[Long] = None,
-    bloomCols: Set[String] = Set.empty)
+    truncateFirst: Boolean, settings: SegSettings)
     extends BatchWrite {
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory = {
     Files.createDirectories(Paths.get(path))
-    SegWriterFactory(path, schema, partitionCols,
-      maxRowsPerSegment = maxRowsPerSegment,
-      maxBytesPerSegment = maxBytesPerSegment,
-      bloomCols = bloomCols)
+    SegWriterFactory(path, schema, settings)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -3546,20 +3494,17 @@ case class SegBatchWrite(path: String, schema: StructType,
 }
 
 case class SegWriterFactory(path: String, schema: StructType,
-    partitionCols: Seq[String] = Nil, skipEmpty: Boolean = false,
-    maxRowsPerSegment: Option[Int] = None,
-    maxBytesPerSegment: Option[Long] = None,
-    bloomCols: Set[String] = Set.empty)
+    settings: SegSettings, skipEmpty: Boolean = false)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int,
       taskId: Long): DataWriter[InternalRow] =
-    new SegDataWriter(path, schema, partitionId, taskId, partitionCols,
-      skipEmpty, maxRowsPerSegment, maxBytesPerSegment, bloomCols)
+    new SegDataWriter(path, schema, partitionId, taskId, settings, skipEmpty)
 }
 
 /** Buffers the partition's rows as writer cells (boxed primitives /
   * UTF-8 byte arrays), encodes segments into hidden temp files, and
-  * hands the paths to the job commit. With `maxRowsPerSegment` the
+  * hands the paths to the job commit. Under a segment budget
+  * ([[SegSettings.MaxRows]], [[SegSettings.MaxBytes]]) the
   * buffer FLUSHES to a rolled segment every N rows — writer memory
   * is bounded by the budget instead of the task partition size, the
   * production-writer contract at 100 TB task widths (and each rolled
@@ -3575,14 +3520,12 @@ case class SegWriterFactory(path: String, schema: StructType,
   * int32 deletion ordinals both lean on this — see the SegDv
   * scaladoc before changing how segments are staged. */
 class SegDataWriter(path: String, schema: StructType, partitionId: Int,
-    taskId: Long, partitionCols: Seq[String] = Nil,
-    skipEmpty: Boolean = false, maxRowsPerSegment: Option[Int] = None,
-    maxBytesPerSegment: Option[Long] = None,
-    bloomCols: Set[String] = Set.empty)
+    taskId: Long, settings: SegSettings = SegSettings(),
+    skipEmpty: Boolean = false)
     extends DataWriter[InternalRow] {
   private val buf = scala.collection.mutable.ArrayBuffer.empty[Array[AnyRef]]
   private val keySpecs: Seq[SegSource.ClusterKey] =
-    partitionCols.filter(SegSource.parseZOrder(_).isEmpty)
+    settings.cluster.filter(SegSource.parseZOrder(_).isEmpty)
       .map(SegSource.ClusterKey.parse)
   private val keyIdx: Seq[Int] = keySpecs.map(k => schema.fieldIndex(k.col))
   /** `zorder(a,b)` layout: the (a, b) field ordinals to Morton-sort
@@ -3593,11 +3536,11 @@ class SegDataWriter(path: String, schema: StructType, partitionId: Int,
     * (compact/DDL): mixing z-order with key clustering would make
     * two owners of the flush sort. */
   private val zIdx: Option[(Int, Int)] =
-    partitionCols.flatMap(SegSource.parseZOrder(_)).headOption
+    settings.cluster.flatMap(SegSource.parseZOrder(_)).headOption
       .map { case (a, b) => (schema.fieldIndex(a), schema.fieldIndex(b)) }
   require(zIdx.isEmpty || keySpecs.isEmpty,
     s"gseg: zorder cannot combine with other clustering keys " +
-      s"(got $partitionCols)")
+      s"(got ${settings.cluster})")
 
   /** The EFFECTIVE key of a buffered row for run splitting: the cell
     * itself for identity keys, its bucket id for bucket keys (the
@@ -3715,8 +3658,8 @@ class SegDataWriter(path: String, schema: StructType, partitionId: Int,
     }
     buf += cells
     bufBytes += rowBytes
-    if (maxRowsPerSegment.exists(buf.length >= _) ||
-        maxBytesPerSegment.exists(bufBytes >= _)) flush()
+    if (settings.maxRows.exists(buf.length >= _) ||
+        settings.maxBytes.exists(bufBytes >= _)) flush()
   }
 
   /** Encode the buffered rows as segment temp(s) and clear the
@@ -3787,7 +3730,7 @@ class SegDataWriter(path: String, schema: StructType, partitionId: Int,
           s"bucket.${k.col}" ->
             s"${k.buckets.get}:${effKey(run.head, si)}"
       }.toMap
-      SegSource.writeSegment(run, schema, tmp, props, bloomCols)
+      SegSource.writeSegment(run, schema, tmp, props, settings.bloomCols)
       rolled += tmp
     }
     buf.clear()

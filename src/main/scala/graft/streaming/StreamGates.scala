@@ -315,6 +315,10 @@ object StreamGates {
     new java.util.concurrent.ConcurrentHashMap[String, TwsSliceHolder]()
   private def twsSliceOf(iso: SparkSession, d: String): Option[TwsSlice] =
     twsSliceCache.computeIfAbsent(d, _ => new TwsSliceHolder(iso, d)).value
+  /** A slice file, read with the schema in its footer: a bare
+    * `read.parquet` would run a schema-inference job in the gate. */
+  private def readSlice(iso: SparkSession, p: Path): DataFrame =
+    iso.read.schema(Tables.schemaOf(iso, p.toString)).parquet(p.toString)
   private def buildTwsSlice(iso: SparkSession, d: String)
       : Option[TwsSlice] = {
       val ev = Tables.events(iso, d)
@@ -1170,7 +1174,7 @@ object StreamGates {
       case None => Seq((false, 0L, false)).toDF("tws_parity", "n_users", "rocksdb_state")
       case Some(sl) =>
         dropChunks(Seq(sl.halfA, sl.halfB), inDir)
-        val ev = iso.read.parquet(sl.full.toString)
+        val ev = readSlice(iso, sl.full)
 
         // the batch referee reads only the cached slice file
         val (batchTotals, _) = graft.Overlap.run(iso) {
@@ -1231,7 +1235,7 @@ object StreamGates {
     twsSliceOf(iso, d) match {
       case None => Seq((false, 0L)).toDF("tws_batch_parity", "n_users")
       case Some(sl) =>
-        val ev = iso.read.parquet(sl.full.toString)
+        val ev = readSlice(iso, sl.full)
         val batchTws = Streams.runningTotalsTws(
           ev.select(col("user_id"), col("event_type"), col("value"))
             .as[(Long, String, Double)](Encoders.product[(Long, String, Double)]))
@@ -1283,7 +1287,7 @@ object StreamGates {
         Seq((false, 0L, 0L)).toDF("timer_parity", "n_timer_flushed", "n_sessions")
       case Some(sl) =>
         dropFile(sl.full, inDir, "slice.parquet")
-        val ev = iso.read.parquet(sl.full.toString)
+        val ev = readSlice(iso, sl.full)
 
         // the batch referee is a sessionize of the cached slice
         val (batchSess, _) = graft.Overlap.run(iso) {
@@ -1366,9 +1370,9 @@ object StreamGates {
       case None => Seq((false, 0L, 0L)).toDF("init_parity", "n_users", "n_boot_users")
       case Some(sl) =>
         dropFile(sl.halfB, inDir, "half-b.parquet")
-        val halfA = iso.read.parquet(sl.halfA.toString)
-        val halfB = iso.read.parquet(sl.halfB.toString)
-        val ev = iso.read.parquet(sl.full.toString)
+        val halfA = readSlice(iso, sl.halfA)
+        val halfB = readSlice(iso, sl.halfB)
+        val ev = readSlice(iso, sl.full)
 
         // the batch past: one (n, Σ) row per half-A user
         val initState = userTotals(halfA, types = false)
@@ -1440,7 +1444,7 @@ object StreamGates {
       case None =>
         Seq.empty[(Long, Long, Long)].toDF("user_id", "lastk_n", "lastk_cents")
       case Some(sl) =>
-        val ev = g.cache(iso.read.parquet(sl.full.toString)
+        val ev = g.cache(readSlice(iso, sl.full)
           .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
             col("event_id"),
             (col("value").cast(DecimalType(18, 2)) * 100).cast("long").as("cents")))
@@ -1533,9 +1537,9 @@ object StreamGates {
       case None =>
         Seq((false, 0L, 0L)).toDF("restart_parity", "n_users", "n_boot_users")
       case Some(sl) =>
-        val halfA = iso.read.parquet(sl.halfA.toString)
-        val halfB = iso.read.parquet(sl.halfB.toString)
-        val ev = iso.read.parquet(sl.full.toString)
+        val halfA = readSlice(iso, sl.halfA)
+        val halfB = readSlice(iso, sl.halfB)
+        val ev = readSlice(iso, sl.full)
         dropFile(sl.halfA, inDir, "half-a.parquet")
 
         // per-run input-row counts land in a runId-keyed map via the
@@ -2241,12 +2245,12 @@ object StreamGates {
         val streamRows = iso.table("ssj_enriched")
           .select(col("event_id"), coalesce(col("segment"), lit("∅")).as("seg"))
         val batchRows = Streams.enrichedByUser(
-            iso.read.parquet(sl.full.toString).select(col("event_id"),
+            readSlice(iso, sl.full).select(col("event_id"),
               col("user_id")), dim)
           .select(col("event_id"), coalesce(col("segment"), lit("∅")).as("seg"))
-        val multiBatch = iso.read.parquet(sl.halfB.toString)
+        val multiBatch = readSlice(iso, sl.halfB)
           .select(col("user_id")).distinct()
-          .join(iso.read.parquet(sl.halfA.toString)
+          .join(readSlice(iso, sl.halfA)
             .select(col("user_id")).distinct(), Seq("user_id"), "left_semi")
         symDiffEmpty(streamRows, batchRows, key)
           .crossJoin(streamRows.agg(count(lit(1)).as("n_rows")))
@@ -2295,7 +2299,7 @@ object StreamGates {
         Seq((false, 0L, 0L)).toDF("state_reader_parity", "n_users", "n_type_entries")
       case Some(sl) =>
         dropFile(sl.full, inDir, "slice.parquet")
-        val ev = iso.read.parquet(sl.full.toString)
+        val ev = readSlice(iso, sl.full)
         val q = g.start(Streams.runningTotalsTws(
             twsStream(iso, inDir, oneFilePerTrigger = false))
           .writeStream.outputMode(OutputMode.Update())
@@ -2400,14 +2404,14 @@ object StreamGates {
         def misfolds(state: DataFrame, ref: DataFrame): DataFrame =
           state.join(userTotals(ref, types = false), Seq("user_id"), "full_outer")
             .agg(misfoldCount(types = false))
-        val halfA = iso.read.parquet(sl.halfA.toString)
-        val halfB = iso.read.parquet(sl.halfB.toString)
+        val halfA = readSlice(iso, sl.halfA)
+        val halfB = readSlice(iso, sl.halfB)
         val batch0 = feed.filter(col("batch_id") === 0)
         val interBad = misfolds(batch0, halfA).toDF("b0_bad")
         val lastPer = feed.groupBy(col("user_id")).agg(
           max_by(col("n"), col("batch_id")).as("n"),
           max_by(col("sum_v"), col("batch_id")).as("sum_v"))
-        val finalBad = misfolds(lastPer, iso.read.parquet(sl.full.toString))
+        val finalBad = misfolds(lastPer, readSlice(iso, sl.full))
           .toDF("fin_bad")
         val set0 = symDiffEmpty(batch0.select(col("user_id")),
             halfA.select(col("user_id")).distinct(), Seq("user_id"))

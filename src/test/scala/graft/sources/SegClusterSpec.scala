@@ -205,7 +205,7 @@ class SegClusterSpec extends SparkSpec {
     val dir = iso.table("tc.ns.g4").queryExecution.optimizedPlan
     assert(SegMeta.read(java.nio.file.Paths.get(
       iso.conf.get("spark.sql.catalog.tc.warehouse") + "/ns/g4"))
-      .get.clusterCols == Seq("bucket(4,key)"))
+      .get.settings.cluster == Seq("bucket(4,key)"))
   }
 
   test("v4 NDV sketches: header HLLs merge to table-level distinct counts") {
@@ -403,11 +403,11 @@ class SegClusterSpec extends SparkSpec {
       .repartition(3)
       .write.format("gseg").mode("overwrite").save(dir)
     iso.table("tc.ns.t").count() // migrate: manifest + sidecar
-    assert(SegMeta.read(java.nio.file.Paths.get(dir)).get.clusterCols.isEmpty)
+    assert(SegMeta.read(java.nio.file.Paths.get(dir)).get.settings.cluster.isEmpty)
 
     // 1. re-cluster to IDENTITY(k): persisted, SPJ-able, DML-durable
     iso.sql("CALL tc.compact('ns.t', cluster_by => 'k')")
-    assert(SegMeta.read(java.nio.file.Paths.get(dir)).get.clusterCols ==
+    assert(SegMeta.read(java.nio.file.Paths.get(dir)).get.settings.cluster ==
       Seq("k"))
     def jId = iso.table("tc.ns.t").join(iso.table("tc.ns.pid"), "k")
     assert(hasSmj(jId) && shuffles(jId) == 0,
@@ -419,7 +419,7 @@ class SegClusterSpec extends SparkSpec {
 
     // 2. re-cluster to BUCKET(8, k): stamps + bucket SPJ
     iso.sql("CALL tc.compact('ns.t', cluster_by => 'bucket(8,k)')")
-    assert(SegMeta.read(java.nio.file.Paths.get(dir)).get.clusterCols ==
+    assert(SegMeta.read(java.nio.file.Paths.get(dir)).get.settings.cluster ==
       Seq("bucket(8,k)"))
     SegSource.resolveSegments(dir).foreach { f =>
       assert(SegSource.headerOf(f).props.get("bucket.k")
@@ -434,7 +434,7 @@ class SegClusterSpec extends SparkSpec {
 
     // 3. DE-cluster: empty spec clears the layout
     iso.sql("CALL tc.compact('ns.t', cluster_by => '')")
-    assert(SegMeta.read(java.nio.file.Paths.get(dir)).get.clusterCols.isEmpty)
+    assert(SegMeta.read(java.nio.file.Paths.get(dir)).get.settings.cluster.isEmpty)
     assert(iso.table("tc.ns.t").count() == 270)
 
     // guards
@@ -503,7 +503,7 @@ class SegClusterSpec extends SparkSpec {
       "x-sorted files should span the whole y domain")
     // re-lay in z-order
     iso.sql("CALL tc.compact('ns.t', 16, cluster_by => 'zorder(x,y)')")
-    assert(SegMeta.read(java.nio.file.Paths.get(dir)).get.clusterCols ==
+    assert(SegMeta.read(java.nio.file.Paths.get(dir)).get.settings.cluster ==
       Seq("zorder(x,y)"), "the declared layout must persist")
     assert(t().count() == 128L * 128L)
     assert(t().agg(sum($"v")).head().getDouble(0) ==
@@ -530,7 +530,7 @@ class SegClusterSpec extends SparkSpec {
     // survives, answers stay right
     iso.sql("DELETE FROM tc.ns.t WHERE x = 200")
     assert(t().count() == 128L * 128L)
-    assert(SegMeta.read(java.nio.file.Paths.get(dir)).get.clusterCols ==
+    assert(SegMeta.read(java.nio.file.Paths.get(dir)).get.settings.cluster ==
       Seq("zorder(x,y)"))
     // guards: zorder is sole, two distinct int columns
     intercept[Exception](iso.sql(

@@ -1942,7 +1942,7 @@ class SegDmlSpec extends SparkSpec {
     assert(r0.getString(1) == "k1" && r0.getString(2) == "k2")
     // pure metadata: not one file rewritten
     assert(SegManifest.read(dir).get._2.toSet == before)
-    assert(SegMeta.read(java.nio.file.Paths.get(dir)).get.clusterCols
+    assert(SegMeta.read(java.nio.file.Paths.get(dir)).get.settings.cluster
       == Seq("k2"))
     // half B lays out under identity(k2)
     iso.range(2000, 4000)
@@ -1979,7 +1979,7 @@ class SegDmlSpec extends SparkSpec {
     // post-migration the scan recovers the identity(k2) layout WHOLE
     // and reports KeyGroupedPartitioning — pruning moves from the
     // per-file zone grain (mixed table) to the key-GROUP grain
-    assert(SegMeta.read(java.nio.file.Paths.get(dir)).get.clusterCols
+    assert(SegMeta.read(java.nio.file.Paths.get(dir)).get.settings.cluster
       == Seq("k2"))
     graft.Counters.drain()
     assert(iso.table("tc.ns.t").filter($"k2" === 7L).count() ==
@@ -1997,7 +1997,7 @@ class SegDmlSpec extends SparkSpec {
     intercept[Exception](
       iso.sql("CALL tc.set_clustering('ns.t', 'nope')"))
     iso.sql("CALL tc.set_clustering('ns.t', '')")
-    assert(SegMeta.read(java.nio.file.Paths.get(dir)).get.clusterCols
+    assert(SegMeta.read(java.nio.file.Paths.get(dir)).get.settings.cluster
       .isEmpty)
   }
 

@@ -31,7 +31,7 @@ class SegInterplaySpec extends SparkSpec {
       .select(col("id").cast("int").as("k"), (col("id") * 3).as("v"))
       .repartition(8)
       .write.format("gseg")
-      .option(SegSource.BloomColumnsOption, "k")
+      .option(SegSettings.BloomColumns.key, "k")
       .mode("overwrite").save(dir)
     assert(iso.table("tc.ns.t").count() == 4000L) // migration moment
     graft.Counters.clear()
@@ -87,7 +87,7 @@ class SegInterplaySpec extends SparkSpec {
     iso.range(1000).select(col("id").as("k"), col("id").as("v"))
       .repartition(4)
       .write.format("gseg")
-      .option(SegSource.BloomColumnsOption, "k")
+      .option(SegSettings.BloomColumns.key, "k")
       .mode("append").save(dir)
     assert(iso.table("tc.ns.t").count() == 1000L)
     iso.sql("DELETE FROM tc.ns.t WHERE k = 777")

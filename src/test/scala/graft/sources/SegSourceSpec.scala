@@ -84,7 +84,7 @@ class SegSourceSpec extends SparkSpec {
     // guards: floating/decimal columns refuse blooms (precision > 18
     // became storable with tag 11 — the v7 test covers it)
     intercept[Exception](
-      src.write.format("gseg").option(SegSource.BloomColumnsOption, "f")
+      src.write.format("gseg").option(SegSettings.BloomColumns.key, "f")
         .mode("overwrite").save(d + "_bloom"))
   }
 
@@ -241,9 +241,9 @@ class SegSourceSpec extends SparkSpec {
       .select($"k", encode($"s", "UTF-8").as("b"))
     // two files, blooms opted in on the payload column
     src.filter($"k" <= 2).coalesce(1).write.format("gseg")
-      .option(SegSource.BloomColumnsOption, "b").mode("overwrite").save(d)
+      .option(SegSettings.BloomColumns.key, "b").mode("overwrite").save(d)
     src.filter($"k" > 2).coalesce(1).write.format("gseg")
-      .option(SegSource.BloomColumnsOption, "b").mode("append").save(d)
+      .option(SegSettings.BloomColumns.key, "b").mode("append").save(d)
     val t = spark.read.format("gseg").load(d)
     assert(t.schema("b").dataType === org.apache.spark.sql.types.BinaryType)
     // roundtrip (compare through decode — Array[Byte] equality is
@@ -917,7 +917,7 @@ class SegSourceSpec extends SparkSpec {
     spark.range(0, 1000).select($"id".as("k"), ($"id" % 7).as("v"))
       .coalesce(1).sortWithinPartitions($"k")
       .write.format("gseg")
-      .option(SegSource.MaxRowsPerSegmentOption, "100")
+      .option(SegSettings.MaxRows.key, "100")
       .mode("overwrite").save(dir)
     val files = SegSource.listSegments(dir)
     assert(files.size == 10, s"expected 10 rolled segments, got ${files.size}")
@@ -942,7 +942,7 @@ class SegSourceSpec extends SparkSpec {
     spark.range(0, 400).select($"id".as("r"), ($"id" % 4).as("k"))
       .write.format("gseg")
       .option(SegSource.PartitionColOption, "k")
-      .option(SegSource.MaxRowsPerSegmentOption, "30")
+      .option(SegSettings.MaxRows.key, "30")
       .mode("overwrite").save(dir2)
     val fs2 = SegSource.listSegments(dir2)
     assert(fs2.size > 4, s"budget must split key runs: ${fs2.size}")
@@ -967,7 +967,7 @@ class SegSourceSpec extends SparkSpec {
           $"id".cast("string")).as("payload"))
       .coalesce(1).sortWithinPartitions($"k")
       .write.format("gseg")
-      .option(SegSource.MaxBytesPerSegmentOption, (16 * 1024).toString)
+      .option(SegSettings.MaxBytes.key, (16 * 1024).toString)
       .mode("overwrite").save(dir)
     val files = SegSource.listSegments(dir)
     assert(files.size >= 10 && files.size <= 20,
@@ -1031,7 +1031,7 @@ class SegSourceSpec extends SparkSpec {
         concat(lit("name-"), $"id".cast("string")).as("s"))
     src.repartition(8)
       .write.format("gseg")
-      .option(SegSource.BloomColumnsOption, "k,s")
+      .option(SegSettings.BloomColumns.key, "k,s")
       .mode("overwrite").save(dir)
     val t = spark.read.format("gseg").load(dir)
     val probeRow = src.filter($"v" === 12345L).head()
@@ -1066,11 +1066,11 @@ class SegSourceSpec extends SparkSpec {
     assert(t.filter($"v" === 12345L).count() == 1)
     // guards: unknown and unsupported bloom columns fail loudly
     intercept[Exception](spark.range(5).select($"id".as("k"))
-      .write.format("gseg").option(SegSource.BloomColumnsOption, "zz")
+      .write.format("gseg").option(SegSettings.BloomColumns.key, "zz")
       .mode("overwrite").save(graft.Fs.fastTempDir("graft_bl2").toString))
     intercept[Exception](spark.range(5)
       .select($"id".cast("double").as("d"))
-      .write.format("gseg").option(SegSource.BloomColumnsOption, "d")
+      .write.format("gseg").option(SegSettings.BloomColumns.key, "d")
       .mode("overwrite").save(graft.Fs.fastTempDir("graft_bl3").toString))
   }
 }

@@ -194,7 +194,7 @@ class SegTemporalSpec extends SparkSpec {
       .writeTo("tc.ns.t").append()
     iso.sql("ALTER TABLE tc.ns.t RENAME COLUMN ts TO event_ts")
     assert(SegMeta.read(java.nio.file.Paths.get(s"$wh/ns/t")).get
-      .clusterCols == Seq("days(event_ts)"))
+      .settings.cluster == Seq("days(event_ts)"))
     val j = iso.table("tc.ns.t").as("x")
       .join(iso.table("tc.ns.t").as("y"), "event_ts")
     assert(shuffles(j) == 0, "rename must keep the temporal layout")
