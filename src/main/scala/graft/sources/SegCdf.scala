@@ -159,22 +159,6 @@ object SegCdf {
     keys
   }
 
-  /** A committed generation's manifest (segment names + deletion-
-    * vector map): its retained snapshot, the live manifest for the
-    * current generation. Loud past the vacuum retention window — the
-    * VERSION AS OF contract. */
-  private[sources] def genManifestOf(dir: String,
-      g: Long): SegManifest.Manifest =
-    SegManifest.readSnapshotManifest(dir, g).orElse(
-      SegManifest.readManifest(dir).filter(_.gen == g))
-      .getOrElse(throw new IllegalStateException(
-        s"gseg changefeed: generation $g of $dir is not retained — " +
-          "never committed, or retired by vacuum (raise keep_last / " +
-          "older_than_ms, or vacuum less often)"))
-
-  private[sources] def genNames(dir: String, g: Long): Seq[String] =
-    genManifestOf(dir, g).names
-
   /** Admission-control clamp for a stream's FIRST batch (no starting
     * bound): the initial-snapshot batch pins the snapshot of the
     * admitted offset, so that offset must be a RETAINED generation —
@@ -302,12 +286,12 @@ object SegCdf {
       buckets: Int, tagOk: String => Boolean = _ => true,
       prevGen: Option[Long] = None)
       : Seq[InputPartition] = {
-    val curM = genManifestOf(dir, g)
+    val curM = SegManifest.retained(dir, g, "changefeed")
     // generation 0's "changes" are its creation: a diff against
     // empty; a branch step names its explicit lineage predecessor
     val prevM = prevGen.getOrElse(g - 1) match {
       case p if p < 0 => SegManifest.Manifest(-1L, None, Nil)
-      case p => genManifestOf(dir, p)
+      case p => SegManifest.retained(dir, p, "changefeed")
     }
     val cur = curM.names.toSet
     val prev = prevM.names.toSet
@@ -918,7 +902,7 @@ class SegCdfMicroBatchStream(path: String, table: StructType,
       // initial snapshot: the complete generation at hi (main's live,
       // or the branch head at stream start), as inserts — net of its
       // deletion vectors (masked rows are not live)
-      val m = SegCdf.genManifestOf(path, hi)
+      val m = SegManifest.retained(path, hi, "changefeed")
       val names = m.names.sorted
       val us = SegCdf.commitUsOf(path, hi)
       graft.Counters.add("gseg_cdf_initial_files", names.size.toLong)

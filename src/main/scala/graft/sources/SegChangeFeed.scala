@@ -57,13 +57,8 @@ object SegChangeFeed {
     require(keyCols.nonEmpty, "gseg changefeed: keyCols must be non-empty")
     keyCols.foreach(k => require(schema.fieldNames.contains(k),
       s"gseg changefeed: key column '$k' is not in the schema"))
-    def snap(gen: Long): SegManifest.Manifest =
-      SegManifest.readSnapshotManifest(dir, gen).getOrElse(
-        throw new IllegalArgumentException(
-          s"gseg changefeed: no snapshot for generation $gen at $dir — " +
-            "never committed, or retired by vacuum"))
-    val from = snap(fromGen)
-    val to = snap(toGen)
+    val from = SegManifest.retained(dir, fromGen, "changefeed")
+    val to = SegManifest.retained(dir, toGen, "changefeed")
     val fromSet = from.names.toSet
     val toSet = to.names.toSet
     // a carried segment whose deletion vector CHANGED between the

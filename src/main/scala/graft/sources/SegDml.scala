@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -147,17 +147,21 @@ class SegCatalog extends TableCatalog
       }
     }
     val meta = SegMeta.read(dir) match {
-      case Some(m) => m
+      case Some(m) =>
+        SegManifest.ensure(dir.toString)
+        m
       case None =>
         if (!Files.isDirectory(dir)) throw new NoSuchTableException(ident)
         val files = SegSource.resolveSegments(dir.toString)
         if (files.isEmpty) throw new NoSuchTableException(ident)
         val inferred = SegMeta.TableMeta(
           SegSource.headerOf(files.head).schema, Set.empty, Map.empty)
+        // CTAS's order: the manifest commit pins the inferred meta and
+        // the sidecar follows it, so a refused migration writes nothing
+        SegManifest.ensure(dir.toString, Some(SegMeta.render(inferred)))
         SegMeta.write(dir, inferred)
         inferred
     }
-    SegManifest.ensure(dir.toString)
     new SegDmlTable(meta.schema, dir.toString, meta.settings)
   }
 
@@ -197,10 +201,7 @@ class SegCatalog extends TableCatalog
             s"gseg: VERSION AS OF wants a generation number, a tag or " +
               s"a branch name, and '$name' is none of ${ident.name}"))
     }
-    val snap = SegManifest.readSnapshotManifest(dir.toString, gen).getOrElse(
-      throw new IllegalArgumentException(
-        s"gseg: no snapshot for generation $gen of ${ident.name} — " +
-          "never committed, or retired by vacuum"))
+    val snap = SegManifest.retained(dir.toString, gen, "VERSION AS OF")
     val names = snap.names
     // the snapshot's deletion vectors, pinned with its files
     val dvs = snap.dvs.map { case (s, d) => s"$dir/$s" -> s"$dir/$d" }
@@ -555,23 +556,14 @@ class SegStagedTable(meta: SegMeta.TableMeta, dir: java.nio.file.Path,
     SegWriteBuilder(tmp.toString, info, meta.settings)
 
   override def commitStagedChanges(): Unit = {
-    val gen = java.util.UUID.randomUUID.toString.take(8)
-    val staged = SegSource.listSegments(tmp.toString)
-    val names = staged.zipWithIndex.map { case (f, i) =>
-      val n = f".ctas-$gen-$i%05d.gseg"
-      Files.move(Paths.get(f), dir.resolve(n),
-        StandardCopyOption.REPLACE_EXISTING)
-      n
-    }
-    // THE commit point: manifest existence IS table existence for a
-    // fresh CTAS; a REPLACE CASes on the generation read at stage
-    // time and retains the replaced generation as time-travel
-    // history (VERSION AS OF reaches across the REPLACE)
-    // the staged meta rides INTO the swap (metaOverride): the sidecar
-    // lands after the commit point, but the v3 snapshot must pin the
-    // NEW schema, not the replaced one
-    SegManifest.swap(dir.toString, names, expectGen,
-      metaOverride = Some(SegMeta.render(meta)))
+    // manifest existence IS table existence for a fresh CTAS; a
+    // REPLACE retains the replaced generation as time-travel history.
+    // The staged meta rides INTO the swap: the sidecar lands after the
+    // commit point, but the snapshot must pin the NEW schema
+    SegManifest.commitStaged(dir.toString, SegManifest.stampedPrefix(".ctas"),
+      SegManifest.Staged.flat(SegSource.listSegments(tmp.toString)),
+      commutes = false, branchScoped = false, expectGen = expectGen,
+      metaOverride = Some(SegMeta.render(meta)))(_ => SegManifest.Kept(Nil))
     SegMeta.write(dir, meta)
     graft.Fs.deleteRecursively(tmp)
   }
@@ -941,89 +933,37 @@ class SegReplaceDataWrite(path: String, schema: StructType,
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory = {
     Files.createDirectories(Paths.get(path))
-    if (sys.env.contains("GRAFT_RLO_DEBUG"))
-      System.err.println(s"[rlo-debug] cmd=$cmd info.schema=" +
-        schema.fieldNames.mkString(","))
     SegRloWriterFactory(
       SegWriterFactory(path, dataSchema, settings, skipEmpty = true),
       dataSchema, schema, cmd)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val msgs = messages.collect { case m: SegCommitMessage => m }
+    val msgs = messages.toSeq.collect { case m: SegCommitMessage => m }
     val candNames =
       op.candidates.map(f => Paths.get(f).getFileName.toString).toSet
-    val gen = java.util.UUID.randomUUID.toString.take(8)
-    // rename staged temps to their final names: generation-stamped,
-    // collision-free, and — critically — still absent from the
-    // manifest, so no reader resolves them yet
-    val newNames = msgs.flatMap { m =>
-      m.tmpFiles.zipWithIndex.map { case (tmp, i) =>
-        val name = f"rlo-$gen-${m.partitionId}%05d-$i%03d.gseg"
-        Files.move(Paths.get(tmp), Paths.get(s"$path/$name"),
-          StandardCopyOption.REPLACE_EXISTING)
-        name
-      }
-    }.toSeq
-    if (candNames.nonEmpty || newNames.nonEmpty) {
-      // THE commit point: one atomic pointer swap, CAS'd on the base
-      // generation — with the COMMUTABILITY check in front: the
-      // rewrite was computed from the candidate files' planned state,
-      // so every candidate must still be live with the SAME deletion
-      // vector. A foreign commit that replaced a candidate (the
-      // rewrite would double its rows) or re-vectored it (the rewrite
-      // would resurrect the newly deleted rows) fails LOUDLY — retry
-      // the DML. Anything else (appends, vector-deletes on OTHER
-      // files, rewrites of disjoint groups) commutes: a lost CAS
-      // re-reads and re-swaps.
-      //
-      // Under spark.gseg.wap.branch (and this table carrying the
-      // ref), the WHOLE cycle is branch-scoped: the rewrite scan read
-      // the branch head (resolveSegmentsForSession), so validation
-      // and the commit run against that head and the swap advances
-      // the REF — main's pointer and readers stay byte-untouched
-      // until CALL fast_forward.
-      def validate(m: SegManifest.Manifest): Unit =
+    if (candNames.nonEmpty || msgs.exists(_.tmpFiles.nonEmpty)) {
+      // the COMMUTABILITY check: the rewrite was computed from the
+      // candidate files' planned state, so every candidate must still
+      // be in the base with the SAME deletion vector. A foreign commit
+      // that replaced a candidate (the rewrite would double its rows)
+      // or re-vectored it (the rewrite would resurrect the newly
+      // deleted rows) fails LOUDLY — retry the DML. Anything else
+      // (appends, vector-deletes on OTHER files, rewrites of disjoint
+      // groups) commutes. The superseded candidates stay on disk as
+      // earlier generations' data (time travel) until vacuum.
+      SegManifest.commitStaged(path, SegManifest.stampedPrefix("rlo"),
+        SegManifest.Staged.byTask(msgs), commutes = true) { base =>
         candNames.foreach { n =>
-          require(m.names.contains(n),
+          require(base.names.contains(n),
             s"gseg rlo commit: candidate '$n' was replaced by a " +
               "concurrent commit — retry the DML")
-          require(m.dvs.get(n) == op.plannedDvs.get(n),
+          require(base.dvs.get(n) == op.plannedDvs.get(n),
             s"gseg rlo commit: candidate '$n' gained a deletion vector " +
               "mid-DML (a concurrent DELETE) — retry the DML")
         }
-      SegManifest.wapBranch()
-        .filter(b => SegManifest.refs(path).contains(b)) match {
-        case Some(b) =>
-          SegManifest.withConflictRetry("rlo-branch") {
-            val (head, _) = SegManifest.refs(path).getOrElse(b,
-              throw new IllegalStateException(
-                s"gseg rlo commit: branch '$b' vanished mid-DML"))
-            val headM = SegManifest.readSnapshotManifest(path, head)
-              .getOrElse(throw new IllegalStateException(
-                s"gseg rlo commit: no snapshot for branch head $head"))
-            validate(headM)
-            SegDml.commitHook("staged")
-            SegManifest.branchSwap(path, b,
-              headM.names.filterNot(candNames.contains) ++ newNames,
-              expectHead = Some(head))
-          }
-        case None =>
-          SegManifest.withConflictRetry("rlo") {
-            val liveM = SegManifest.readManifest(path).getOrElse(
-              throw new IllegalStateException(
-                s"gseg rlo commit: no generation manifest at $path — " +
-                  "row-level DML runs through the catalog, whose " +
-                  "loadTable synthesizes one"))
-            validate(liveM)
-            SegDml.commitHook("staged")
-            // The superseded candidate files are NOT deleted here —
-            // they remain the data of earlier generations' snapshots
-            // (time travel) until `CALL vacuum` retires them.
-            SegManifest.swap(path,
-              liveM.names.filterNot(candNames.contains) ++ newNames,
-              expectGen = Some(Some(liveM.gen)))
-          }
+        SegDml.commitHook("staged")
+        SegManifest.Kept(base.names.filterNot(candNames.contains))
       }
       SegDml.commitHook("swapped")
     }
@@ -1034,8 +974,7 @@ class SegReplaceDataWrite(path: String, schema: StructType,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.collect { case m: SegCommitMessage => m }
-      .foreach(_.tmpFiles.foreach(t => Files.deleteIfExists(Paths.get(t))))
+    SegManifest.discard(messages)
 }
 
 /** Wraps the ordinary segment writer with a
@@ -1132,9 +1071,6 @@ private[sources] case class SegRloWriterFactory(inner: SegWriterFactory,
             }
           if (ordinals.length != n)
             fail(r, s"resolved ${ordinals.length} data ordinals")
-          if (sys.env.contains("GRAFT_RLO_DEBUG"))
-            System.err.println(s"[rlo-debug] cmd=$cmd width=${r.numFields}" +
-              s" n=$n ordinals=${ordinals.mkString(",")}")
           proj = org.apache.spark.sql.catalyst.ProjectingInternalRow(
             dataSchema, ordinals)
         }
@@ -1268,17 +1204,9 @@ class SegDvDeltaWrite(path: String, tschema: StructType,
           scala.collection.mutable.ArrayBuffer.empty[Int]) ++= ps
       })
     // INSERTED row versions (a mor UPDATE/MERGE's new rows, a MERGE's
-    // not-matched inserts): staged temps rename to final — still
-    // unreferenced — names once; the swap publishes them
-    val gen8 = java.util.UUID.randomUUID.toString.take(8)
-    val newNames = msgs.flatMap(_.tmpFiles).zipWithIndex.map {
-      case (tmp, i) =>
-        val name = f"dlt-$gen8-$i%05d.gseg"
-        Files.move(Paths.get(tmp), Paths.get(s"$path/$name"),
-          StandardCopyOption.REPLACE_EXISTING)
-        name
-    }.toSeq
-    if (byFile.isEmpty && newNames.isEmpty) return // no-op: no commit
+    // not-matched inserts) stage as temps the commit publishes
+    val inserted = msgs.flatMap(_.tmpFiles).toSeq
+    if (byFile.isEmpty && inserted.isEmpty) return // no-op: no commit
     val dir = Paths.get(path)
     var dropped = 0L
     var written = 0L
@@ -1286,19 +1214,13 @@ class SegDvDeltaWrite(path: String, tschema: StructType,
     // a VECTOR DELETE commutes with every commit that keeps the
     // touched segments live: foreign appends add disjoint names,
     // foreign vector-deletes union different ordinals of the same
-    // immutable file. A lost CAS re-reads and re-merges (the retry's
-    // superseded vector files are vacuum-reclaimable orphans); only
-    // a foreign commit that REPLACED or DROPPED a touched segment is
-    // a real conflict — the positions address a file that is no
-    // longer the table — and that fails loudly (retry the DELETE).
-    // Under spark.gseg.wap.branch (table carrying the ref), the
-    // vector merge reads the BRANCH head's manifest — the state the
-    // delta scan planned against (resolveSegmentsForSession) — and
-    // the commit advances the ref, leaving main byte-untouched.
-    val wapB = SegManifest.wapBranch()
-      .filter(b => SegManifest.refs(path).contains(b))
-    def mergeAndCommit(base: SegManifest.Manifest,
-        commit: (Seq[String], Map[String, String]) => Long): Unit = {
+    // immutable file (a retry's superseded vector files are
+    // vacuum-reclaimable orphans). Only a foreign commit that
+    // REPLACED or DROPPED a touched segment is a real conflict — the
+    // positions address a file that is no longer the table — and
+    // that fails loudly (retry the DELETE).
+    SegManifest.commitStaged(path, SegManifest.stampedPrefix("dlt"),
+      SegManifest.Staged.flat(inserted), commutes = true) { base =>
       var names = base.names
       val dvs = scala.collection.mutable.Map.empty[String, String] ++ base.dvs
       dropped = 0L; written = 0L; rows = 0L
@@ -1329,47 +1251,20 @@ class SegDvDeltaWrite(path: String, tschema: StructType,
         }
       }
       SegDml.commitHook("staged")
-      commit(names ++ newNames,
-        dvs.toMap.filter { case (seg, _) => names.contains(seg) })
-      ()
-    }
-    wapB match {
-      case Some(b) =>
-        SegManifest.withConflictRetry("dv-delete-branch") {
-          val (head, _) = SegManifest.refs(path).getOrElse(b,
-            throw new IllegalStateException(
-              s"gseg dv delete: branch '$b' vanished mid-DML"))
-          val headM = SegManifest.readSnapshotManifest(path, head)
-            .getOrElse(throw new IllegalStateException(
-              s"gseg dv delete: no snapshot for branch head $head"))
-          mergeAndCommit(headM, (ns, dm) =>
-            SegManifest.branchSwap(path, b, ns,
-              expectHead = Some(head), dvs = Some(dm)))
-        }
-      case None =>
-        SegManifest.withConflictRetry("dv-delete") {
-          val live = SegManifest.readManifest(path).getOrElse(
-            throw new IllegalStateException(
-              s"gseg dv delete: no generation manifest at $path — " +
-                "row-level DML runs through the catalog, whose " +
-                "loadTable synthesizes one"))
-          mergeAndCommit(live, (ns, dm) =>
-            SegManifest.swap(path, ns,
-              expectGen = Some(Some(live.gen)), dvs = Some(dm)))
-        }
+      SegManifest.Kept(names,
+        Some(dvs.toMap.filter { case (seg, _) => names.contains(seg) }))
     }
     SegDml.commitHook("swapped")
     graft.Counters.add("gseg_dv_deleted_rows", rows)
     graft.Counters.add("gseg_dv_vectors_written", written)
     graft.Counters.add("gseg_dv_segments_dropped", dropped)
-    graft.Counters.add("gseg_dv_appended_files", newNames.size.toLong)
+    graft.Counters.add("gseg_dv_appended_files", inserted.size.toLong)
   }
 
   /** Deletion vectors are written inside the commit; the staged
     * INSERT temps are the only pre-commit disk state to clean. */
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.collect { case m: SegDvCommitMessage => m }
-      .foreach(_.tmpFiles.foreach(t => Files.deleteIfExists(Paths.get(t))))
+    SegManifest.discard(messages)
 }
 
 private[sources] case class SegDvWriterFactory(fileOrd: Int, posOrd: Int,

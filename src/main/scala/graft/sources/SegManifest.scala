@@ -107,6 +107,31 @@ private[sources] object PosixCommitProvider extends CommitProvider {
   }
 }
 
+/** Commit protocol: every commit kind, the prefix its new files take,
+  * the ref it lands on and what it does when another commit moved
+  * that ref first. Branch-scoped commits land on the session's WAP
+  * branch when the table carries it ([[commitTarget]], the rule table
+  * reads follow too); every other commit moves MAIN and is refused
+  * while the session names a WAP branch. A commit that commutes
+  * re-reads its base and retries a lost CAS ([[withConflictRetry]]); a
+  * commit that replaces is single-shot. Staged segments become a
+  * generation through [[commitStaged]] only.
+  * {{{
+  *   commit kind             prefix             target         lost CAS
+  *   append                  part-<stamp>-      branch-scoped  commutes (retry)
+  *   overwrite               part-<stamp>-      branch-scoped  replaces (single-shot)
+  *   copy-on-write rewrite   rlo-<stamp>-       branch-scoped  commutes (retry)
+  *   vector delete           dlt-<stamp>-       branch-scoped  commutes (retry)
+  *   stream epoch, append    str-<epoch>-       main-only      commutes (retry)
+  *   stream epoch, Complete  str-<epoch>-       main-only      replaces (single-shot)
+  *   CTAS / RTAS             .ctas-<stamp>-     main-only      replaces (single-shot)
+  *   compact                 cmp-<stamp>-       main-only      replaces (single-shot)
+  *   clone                   .ctas-cl-<stamp>-  main-only      replaces (single-shot)
+  *   rollback                (no new files)     main-only      replaces (single-shot)
+  *   truncate                (no new files)     main-only      replaces (single-shot)
+  * }}}
+  * Clone hard-links its files rather than staging them; it, rollback
+  * and truncate call [[swap]] directly. */
 object SegManifest {
   private[sources] val FileName = ".manifest"
 
@@ -124,20 +149,18 @@ object SegManifest {
     extends RuntimeException(msg)
 
   /** Run a read-validate-swap `body` again when its swap loses the
-    * CAS — the optimistic-concurrency retry loop every COMMUTABLE
-    * commit wears (appends and vector-deletes: their files are fresh
-    * names no other committer references, so a lost race costs one
-    * re-read, never correctness). The body must RE-READ the live
-    * manifest each attempt and re-validate its own preconditions.
-    * Only [[CommitConflictException]] retries; a body whose own
+    * CAS — the optimistic-concurrency retry loop of every commit that
+    * commutes (its files are fresh names no other committer
+    * references, so a lost race costs one re-read, never
+    * correctness). The body must RE-READ the live manifest each
+    * attempt and re-validate its own preconditions. Only
+    * [[CommitConflictException]] retries; a body whose own
     * preconditions no longer hold (the `require` guards in the DML
-    * bodies) throws IllegalArgumentException and fails SINGLE-SHOT,
+    * commits) throws IllegalArgumentException and fails SINGLE-SHOT,
     * loudly — deliberate: a precondition that a racing commit
     * invalidated (a segment the body meant to mask no longer exists)
     * is a semantic conflict the caller must re-plan, not a CAS loss
-    * this loop can paper over by re-running the same stale plan.
-    * Non-commutable commits (overwrite, REPLACE, compact) stay
-    * single-shot loud. */
+    * this loop can paper over by re-running the same stale plan. */
   private[sources] def withConflictRetry[T](what: String,
       maxRetries: Int = 10)(body: => T): T = {
     var n = 0
@@ -366,22 +389,7 @@ object SegManifest {
       require(names.contains(seg),
         s"gseg: dv entry for '$seg' which is not in the new generation")
     })
-    // WAP mode: while the session names a write branch, moving the
-    // MAIN pointer would leak unaudited rows past the audit gate —
-    // every remaining main-pointer commit (compact, rollback, CTAS,
-    // clone, streaming epochs...) is refused loudly until the conf is
-    // unset. Appends/overwrites and row-level DML don't reach here in
-    // WAP mode: their commit paths route through [[branchSwap]] when
-    // the table carries the ref (and a WAP write to a table WITHOUT
-    // the ref lands here — loud, by design).
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .map(_.conf.get(WapBranchConf, "")).filter(_.nonEmpty)
-      .foreach { b =>
-        throw new UnsupportedOperationException(
-          s"gseg: $WapBranchConf='$b' is set — this operation commits " +
-            "to MAIN and is not branch-scoped; unset the conf (publish " +
-            "via CALL fast_forward first) or drop the branch")
-      }
+    refuseMainUnderWap(dir)
     lockFor(dir).synchronized {
       val token = acquireProcessLock(dir)
       try swapLocked(dir, names, expectGen, metaOverride, dvs)
@@ -497,6 +505,18 @@ object SegManifest {
     Some(parseFile(p))
   }
 
+  /** A committed generation's manifest: its retained snapshot, or the
+    * live manifest when `gen` is live. Loud past the vacuum retention
+    * window; `op` prefixes the message. */
+  private[sources] def retained(dir: String, gen: Long, op: String): Manifest =
+    readSnapshotManifest(dir, gen)
+      .orElse(readManifest(dir).filter(_.gen == gen))
+      .getOrElse(throw new IllegalArgumentException(
+        s"gseg $op: generation $gen of $dir is not retained — never " +
+          "committed, or retired by vacuum, which keeps the newest " +
+          "keep_last generations and those younger than older_than_ms " +
+          "(raise them, or vacuum less often)"))
+
   /** The table metadata PINNED in a committed generation's snapshot
     * (v3), parsed — as-of-schema time travel's source of truth. None
     * for v1/v2 legacy snapshots (reads fall back to the CURRENT
@@ -570,12 +590,12 @@ object SegManifest {
   /** Synthesize the manifest from the directory listing if absent —
     * the migration moment for dirs created by path-based writes
     * before they are first served through the catalog. */
-  def ensure(dir: String): Unit =
+  def ensure(dir: String, metaOverride: Option[Array[Byte]] = None): Unit =
     lockFor(dir).synchronized {
       if (!exists(dir)) {
         swap(dir, SegSource.listSegments(dir)
           .map(f => Paths.get(f).getFileName.toString),
-          expectGen = Some(None))
+          expectGen = Some(None), metaOverride = metaOverride)
       }
     }
 
@@ -838,23 +858,141 @@ object SegManifest {
   val WapBranchConf = "spark.gseg.wap.branch"
 
   /** The branch the active session stages writes to, if any. */
-  private[sources] def wapBranch(): Option[String] =
+  private def wapBranch(): Option[String] =
     org.apache.spark.sql.SparkSession.getActiveSession
       .map(_.conf.get(WapBranchConf, "")).filter(_.nonEmpty)
 
+  /** THE main-or-branch rule: the session's WAP branch when it names
+    * one and the table at `dir` carries that ref, otherwise main
+    * (None). Reads and branch-scoped commits both resolve through it. */
+  private def sessionBranch(dir: String): Option[String] =
+    wapBranch().filter(b => refs(dir).contains(b))
+
+  /** While the session names a WAP branch, moving MAIN would leak
+    * unaudited rows past the audit gate: refused, with one message for
+    * main-only commits and for branch-scoped writes to a table (or
+    * path dir) without the branch. */
+  private def refuseMainUnderWap(dir: String): Unit =
+    wapBranch().foreach { b =>
+      throw new UnsupportedOperationException(
+        s"gseg: $WapBranchConf='$b' is set, and this commit would move " +
+          s"MAIN of $dir: the operation is main-only, or the table has " +
+          s"no branch '$b' (CALL branch first). Unset the conf to commit " +
+          "to main (publish via CALL fast_forward first)")
+    }
+
+  /** Where a commit to `dir` lands: the branch a branch-scoped commit
+    * goes to under [[sessionBranch]], or None for main. A main commit
+    * under WAP fails here, before the writer has moved a file. */
+  private[sources] def commitTarget(dir: String,
+      branchScoped: Boolean): Option[String] = {
+    val branch = if (branchScoped) sessionBranch(dir) else None
+    if (branch.isEmpty) refuseMainUnderWap(dir)
+    branch
+  }
+
   /** The manifest a TABLE READ under this session resolves: the WAP
-    * branch's HEAD when the session names one and this table carries
-    * that ref — Iceberg's `spark.wap.branch` read semantics, so the
-    * staged data audits through PLAIN reads of the table (and
-    * row-level DML's rewrite scan sees the branch state it will
-    * commit against). Tables WITHOUT the ref — join and MERGE
-    * sources, the index tables a gate consults — resolve the live
-    * manifest, unaffected. */
+    * branch's HEAD under [[sessionBranch]] — Iceberg's
+    * `spark.wap.branch` read semantics, so the staged data audits
+    * through PLAIN reads of the table (and row-level DML's rewrite
+    * scan sees the branch state it will commit against). Tables
+    * WITHOUT the ref — join and MERGE sources, the index tables a gate
+    * consults — resolve the live manifest, unaffected. */
   private[sources] def readManifestForSession(dir: String): Option[Manifest] =
-    wapBranch().flatMap(b => refs(dir).get(b)) match {
+    sessionBranch(dir).flatMap(b => refs(dir).get(b)) match {
       case Some((head, _)) => readSnapshotManifest(dir, head)
       case None => readManifest(dir)
     }
+
+  // ---------------- the commit path of staged segments ----------------
+
+  /** Staged segment files, each with the name it takes after the
+    * writer's prefix. */
+  private[sources] case class Staged(files: Seq[(String, String)])
+  private[sources] object Staged {
+    /** Task temps as `<partition>-<i><tail>.gseg`: a listing keeps the
+      * write's partition order (the limit/TopN front-take reads it). */
+    def byTask(msgs: Seq[SegCommitMessage], tail: String = ""): Staged =
+      Staged(msgs.flatMap(m => m.tmpFiles.zipWithIndex.map { case (t, i) =>
+        t -> f"${m.partitionId}%05d-$i%03d$tail.gseg" }))
+    /** One ordered list as `<i>.gseg`. */
+    def flat(files: Seq[String]): Staged =
+      Staged(files.zipWithIndex.map { case (t, i) => t -> f"$i%05d.gseg" })
+  }
+
+  /** `<kind>-<8 random chars>-`: fresh names that can never collide
+    * with (and replace) a live segment. */
+  private[sources] def stampedPrefix(kind: String): String =
+    s"$kind-${java.util.UUID.randomUUID.toString.take(8)}-"
+
+  /** Rename staged files into `dir` under `prefix`; returns the new
+    * names. On a manifest table they stay invisible until the swap
+    * names them; on a plain path dir the rename is the publish. */
+  private[sources] def renameStaged(dir: String, prefix: String,
+      staged: Staged): Seq[String] =
+    staged.files.map { case (tmp, suffix) =>
+      val name = prefix + suffix
+      Files.move(Paths.get(tmp), Paths.get(dir, name),
+        StandardCopyOption.REPLACE_EXISTING)
+      name
+    }
+
+  /** Delete the staged temps of an aborted (or replayed) write. */
+  private[sources] def discard(
+      messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage])
+      : Unit =
+    messages.iterator.flatMap {
+      case m: SegCommitMessage => m.tmpFiles
+      case m: SegDvCommitMessage => m.tmpFiles
+      case _ => Nil
+    }.foreach(t => Files.deleteIfExists(Paths.get(t)))
+
+  /** What a commit keeps of its base generation: the surviving names
+    * (the staged ones are added to them) and, for a commit that
+    * rewrites deletion vectors, the new map — None carries the base's
+    * vectors forward for the surviving names. */
+  private[sources] case class Kept(names: Seq[String],
+      dvs: Option[Map[String, String]] = None)
+
+  /** THE commit of staged segments (see the commit protocol table):
+    * resolve the target once ([[commitTarget]] — a refused commit
+    * fails before any file moves), rename the staged files once, then
+    * read the base (the branch head or the live manifest), ask the
+    * writer what it `keep`s of it, and publish through [[branchSwap]]
+    * or [[swap]] with the CAS on that base. `keep` carries the
+    * writer's own validation; it throws to abort the commit. A commit
+    * that `commutes` re-reads and retries a lost CAS; one that
+    * replaces is single-shot, CAS'd on `expectGen` when the writer
+    * pinned its base earlier (at stage or plan time). Returns the new
+    * generation. */
+  private[sources] def commitStaged(dir: String, prefix: String,
+      staged: Staged, commutes: Boolean, branchScoped: Boolean = true,
+      expectGen: Option[Option[Long]] = None,
+      metaOverride: Option[Array[Byte]] = None)(
+      keep: Manifest => Kept): Long = {
+    val branch = commitTarget(dir, branchScoped)
+    val added = renameStaged(dir, prefix, staged)
+    def attempt(): Long = branch match {
+      case Some(b) =>
+        val head = refs(dir).getOrElse(b, throw new IllegalStateException(
+          s"gseg: branch '$b' of $dir was dropped mid-commit"))._1
+        val base = readSnapshotManifest(dir, head).getOrElse(
+          throw new IllegalStateException(
+            s"gseg: no snapshot for head $head of branch '$b' at $dir"))
+        val k = keep(base)
+        branchSwap(dir, b, k.names ++ added, Some(head), k.dvs)
+      case None =>
+        val live = readManifest(dir)
+        if (live.isEmpty && expectGen.isEmpty)
+          throw new IllegalStateException(
+            s"gseg: no generation manifest at $dir — catalog tables " +
+              "always carry one (loadTable synthesizes it)")
+        val k = keep(live.getOrElse(Manifest(-1L, None, Nil)))
+        swap(dir, k.names ++ added,
+          Some(expectGen.getOrElse(live.map(_.gen))), metaOverride, k.dvs)
+    }
+    if (commutes) withConflictRetry(prefix)(attempt()) else attempt()
+  }
 
   private def refsPath(dir: String): Path = Paths.get(dir, ".refs")
 

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException
@@ -359,14 +359,7 @@ object SegProcedures {
                 // keyed writer produced originally
                 rewrite(src, cs.mkString(",")).save(tmp.toString)
             }
-            val gen = java.util.UUID.randomUUID.toString.take(8)
-            val newNames = SegSource.listSegments(tmp.toString)
-              .zipWithIndex.map { case (f, i) =>
-                val name = f"cmp-$gen-$i%05d.gseg"
-                Files.move(Paths.get(f), dir.resolve(name),
-                  StandardCopyOption.REPLACE_EXISTING)
-                name
-              }
+            val rewritten = SegSource.listSegments(tmp.toString)
             val sharedNames =
               shared.map(f => Paths.get(f).getFileName.toString)
             // re-clustering pins the NEW layout into the commit's
@@ -374,11 +367,15 @@ object SegProcedures {
             // the sidecar AFTER the commit point, mirroring CTAS
             val newMeta = newCluster.map(nc =>
               meta.copy(settings = meta.settings.copy(cluster = nc)))
-            SegManifest.swap(dir.toString, sharedNames ++ newNames,
-              expectGen = Some(liveGen),
-              metaOverride = newMeta.map(SegMeta.render))
+            SegManifest.commitStaged(dir.toString,
+              SegManifest.stampedPrefix("cmp"),
+              SegManifest.Staged.flat(rewritten), commutes = false,
+              branchScoped = false, expectGen = Some(liveGen),
+              metaOverride = newMeta.map(SegMeta.render)) { _ =>
+              SegManifest.Kept(sharedNames)
+            }
             newMeta.foreach(SegMeta.write(dir, _))
-            (sharedNames.size + newNames.size).toLong
+            (sharedNames.size + rewritten.size).toLong
           } finally graft.Fs.deleteRecursively(tmp)
         }
       Seq((tbl, live.size.toLong, after))
@@ -448,10 +445,7 @@ object SegProcedures {
       val gen = args.long(1)
       val ident = args.table(0)
       val dir = cat.tableDir(ident)
-      val snap = SegManifest.readSnapshotManifest(dir.toString, gen)
-        .getOrElse(throw new IllegalArgumentException(
-          s"gseg rollback: no snapshot for generation $gen of " +
-            s"${ident.name} — never committed, or retired by vacuum"))
+      val snap = SegManifest.retained(dir.toString, gen, "rollback")
       val names = snap.names
       val missing = (names ++ snap.dvs.values)
         .filterNot(n => Files.exists(dir.resolve(n)))
@@ -490,13 +484,8 @@ object SegProcedures {
       val toGen = args.long(2)
       val ident = args.table(0)
       val dir = cat.tableDir(ident).toString
-      def snap(g: Long): SegManifest.Manifest =
-        SegManifest.readSnapshotManifest(dir, g).getOrElse(
-          throw new IllegalArgumentException(
-            s"gseg changes: no snapshot for generation $g of " +
-              s"${ident.name} — never committed, or retired by vacuum"))
-      val fromM = snap(fromGen)
-      val toM = snap(toGen)
+      val fromM = SegManifest.retained(dir, fromGen, "changes")
+      val toM = SegManifest.retained(dir, toGen, "changes")
       val from = fromM.names.toSet
       val to = toM.names.toSet
       // a carried segment whose DELETION VECTOR changed is part of
@@ -577,10 +566,7 @@ object SegProcedures {
         else SegManifest.readManifest(srcDir).map(_.gen).getOrElse(
           throw new IllegalStateException(
             s"gseg clone: no generation manifest at $srcDir"))
-      val snap = SegManifest.readSnapshotManifest(srcDir, gen).getOrElse(
-        throw new IllegalArgumentException(
-          s"gseg clone: no snapshot for generation $gen of $src — " +
-            "never committed, or retired by vacuum"))
+      val snap = SegManifest.retained(srcDir, gen, "clone")
       // the generation's PINNED metadata (as-of-schema) — fall back
       // to the current sidecar for legacy pre-pin snapshots
       val meta = SegManifest.readSnapshotMeta(srcDir, gen)

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.io.{BufferedOutputStream, DataInputStream, DataOutputStream, EOFException, FileOutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -2715,18 +2715,6 @@ class SegGenMicroBatchStream(path: String, required: StructType,
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 
-  /** A committed generation's manifest (names + deletion-vector
-    * map): its retained snapshot, with the live manifest as fallback
-    * for the current generation. */
-  private def genManifest(g: Long): SegManifest.Manifest =
-    SegManifest.readSnapshotManifest(path, g).orElse(
-      SegManifest.readManifest(path).filter(_.gen == g))
-      .getOrElse(throw new IllegalStateException(
-        s"gseg stream: generation $g of $path is not retained — the " +
-          "stream lagged past the vacuum retention window (raise " +
-          "keep_last or vacuum less often), or the generation never " +
-          "committed"))
-
   override def planInputPartitions(start: Offset, end: Offset)
       : Array[InputPartition] = {
     val lo = start.asInstanceOf[SegGenOffset].gen
@@ -2736,11 +2724,11 @@ class SegGenMicroBatchStream(path: String, required: StructType,
       if (lo < 0) {
         // initial snapshot: the generation's own deletion vectors
         // mask rows already deleted — they must not stream as live
-        val m = genManifest(hi)
+        val m = SegManifest.retained(path, hi, "stream")
         m.names.sorted.map(n => (n, m.dvs.get(n)))
       } else (lo + 1 to hi).flatMap { g =>
-        val curM = genManifest(g)
-        val prevM = genManifest(g - 1)
+        val curM = SegManifest.retained(path, g, "stream")
+        val prevM = SegManifest.retained(path, g - 1, "stream")
         val cur = curM.names.toSet
         val prev = prevM.names.toSet
         val removed = prev -- cur
@@ -3314,7 +3302,7 @@ case class SegStreamingWrite(path: String, schema: StructType,
 
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
-    val msgs = messages.collect { case m: SegCommitMessage => m }
+    val msgs = messages.toSeq.collect { case m: SegCommitMessage => m }
     val prefix = epochPrefix(epochId)
     val manifest = SegManifest.read(path)
     val manifested = manifest.isDefined
@@ -3327,8 +3315,7 @@ case class SegStreamingWrite(path: String, schema: StructType,
         // the prefix is IN THE MANIFEST, which only the completed
         // swap can put there — the first commit landed whole, discard
         // the replay
-        msgs.foreach(_.tmpFiles.foreach(t =>
-          Files.deleteIfExists(Paths.get(t))))
+        SegManifest.discard(messages)
         return
       } else {
         // path-based dir: the prefix comes from the LISTING, which a
@@ -3342,42 +3329,29 @@ case class SegStreamingWrite(path: String, schema: StructType,
           Files.deleteIfExists(Paths.get(s"$path/$n")))
       }
     }
-    val newNames = msgs.flatMap { m =>
-      m.tmpFiles.zipWithIndex.map { case (tmp, i) =>
-        val name = f"$prefix${m.partitionId}%05d-$i%03d.gseg"
-        Files.move(Paths.get(tmp), Paths.get(s"$path/$name"),
-          StandardCopyOption.REPLACE_EXISTING)
-        name
-      }
-    }.toSeq
-    if (manifested) {
-      if (truncateEachEpoch) {
-        // Complete-mode replacement: a racing commit is a real
-        // serialization conflict — loud, like batch OVERWRITE
-        SegManifest.swap(path, newNames,
-          expectGen = Some(manifest.map(_._1)))
-      } else if (newNames.nonEmpty)
-        SegManifest.withConflictRetry("stream-epoch") {
-          // epoch APPEND commutes like batch append: re-read, re-swap
-          val m = SegManifest.read(path)
-          SegManifest.swap(path, m.map(_._2).getOrElse(Seq.empty) ++ newNames,
-            expectGen = Some(m.map(_._1)))
-        }
-    } else if (truncateEachEpoch) {
+    val staged = SegManifest.Staged.byTask(msgs)
+    if (!manifested) {
+      SegManifest.renameStaged(path, prefix, staged)
       // path-based Complete mode: legacy listing protocol — the new
       // epoch is fully renamed in (epoch-prefixed, collision-free)
-      // before the superseded files go; only a manifest table gets
-      // the atomic flavor of this replacement
-      existing.foreach(n => Files.deleteIfExists(Paths.get(s"$path/$n")))
-    }
+      // before the superseded files go
+      if (truncateEachEpoch)
+        existing.foreach(n => Files.deleteIfExists(Paths.get(s"$path/$n")))
+    } else if (truncateEachEpoch)
+      SegManifest.commitStaged(path, prefix, staged, commutes = false,
+        branchScoped = false, expectGen = Some(manifest.map(_._1))) { _ =>
+        SegManifest.Kept(Nil)
+      }
+    else if (staged.files.nonEmpty)
+      SegManifest.commitStaged(path, prefix, staged, commutes = true,
+        branchScoped = false)(base => SegManifest.Kept(base.names))
     graft.Counters.add("gseg_stream_sink_epochs", 1L)
-    graft.Counters.add("gseg_stream_sink_files", newNames.size.toLong)
+    graft.Counters.add("gseg_stream_sink_files", staged.files.size.toLong)
   }
 
   override def abort(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit =
-    messages.collect { case m: SegCommitMessage => m }
-      .foreach(_.tmpFiles.foreach(t => Files.deleteIfExists(Paths.get(t))))
+    SegManifest.discard(messages)
 }
 
 case class SegCommitMessage(partitionId: Int, tmpFiles: Seq[String])
@@ -3399,98 +3373,34 @@ case class SegBatchWrite(path: String, schema: StructType,
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val msgs = messages.collect { case m: SegCommitMessage => m }
-    // WAP: a session-named write branch routes this commit through
-    // the branch head — MAIN's pointer (and every main reader) is
-    // untouched until CALL fast_forward publishes. Manifest tables
-    // only: a path-based dir has no refs to advance.
-    val wapBranch = org.apache.spark.sql.SparkSession.getActiveSession
-      .map(_.conf.get(SegManifest.WapBranchConf, "")).filter(_.nonEmpty)
-    if (wapBranch.isDefined) {
-      val b = wapBranch.get
-      require(SegManifest.exists(path),
-        s"gseg: ${SegManifest.WapBranchConf}='$b' needs a catalog " +
-          "(manifest) table — path-based dirs have no branch refs")
-      val gen = java.util.UUID.randomUUID.toString.take(8)
-      val newNames = msgs.flatMap { m =>
-        m.tmpFiles.zipWithIndex.map { case (tmp, i) =>
-          val name = f"part-$gen-${m.partitionId}%05d-$i%03d.gseg"
-          Files.move(Paths.get(tmp), Paths.get(s"$path/$name"),
-            StandardCopyOption.REPLACE_EXISTING)
-          name
-        }
-      }.toSeq
-      if (truncateFirst) {
-        // branch overwrite: replace the BRANCH content, single-shot
-        val head = SegManifest.refs(path).getOrElse(b,
-          throw new IllegalArgumentException(
-            s"gseg: no branch '$b' — CALL branch first"))._1
-        SegManifest.branchSwap(path, b, newNames, expectHead = Some(head))
-      } else SegManifest.withConflictRetry("branch-append") {
-        // branch append commutes exactly like a main append
-        val head = SegManifest.refs(path).getOrElse(b,
-          throw new IllegalArgumentException(
-            s"gseg: no branch '$b' — CALL branch first"))._1
-        val old = SegManifest.readSnapshotManifest(path, head)
-          .map(_.names).getOrElse(Seq.empty)
-        SegManifest.branchSwap(path, b, old ++ newNames,
-          expectHead = Some(head))
-      }
-    } else if (SegManifest.exists(path)) {
-      // manifest table (catalog): crash-atomic protocol. Final names
-      // are generation-stamped so they can never collide with (and
-      // REPLACE) a live segment; renamed files stay invisible to
-      // readers until the single manifest swap — a crash anywhere
-      // leaves the table serving exactly one complete generation. An
-      // overwrite's superseded generation is RETAINED as time-travel
-      // history until vacuum reclaims it.
-      val gen = java.util.UUID.randomUUID.toString.take(8)
-      val newNames = msgs.flatMap { m =>
-        m.tmpFiles.zipWithIndex.map { case (tmp, i) =>
-          val name = f"part-$gen-${m.partitionId}%05d-$i%03d.gseg"
-          Files.move(Paths.get(tmp), Paths.get(s"$path/$name"),
-            StandardCopyOption.REPLACE_EXISTING)
-          name
-        }
-      }.toSeq
-      if (truncateFirst) {
-        // OVERWRITE replaces whatever is live: a racing commit is a
-        // real serialization conflict — loud, single-shot (Delta's
-        // verdict), the caller decides whether to redo the overwrite
-        val (oldGen, _) = SegManifest.read(path).get
-        SegManifest.swap(path, newNames, expectGen = Some(Some(oldGen)))
-      } else SegManifest.withConflictRetry("append") {
-        // APPEND commutes with every foreign commit (fresh names, no
-        // file replaced): a lost CAS just re-reads and re-swaps —
-        // concurrent appenders on one table all land, in some order
-        val (oldGen, old) = SegManifest.read(path).get
-        SegManifest.swap(path, old ++ newNames,
-          expectGen = Some(Some(oldGen)))
+    val msgs = messages.toSeq.collect { case m: SegCommitMessage => m }
+    if (SegManifest.exists(path)) {
+      // an overwrite's superseded generation is RETAINED as
+      // time-travel history until vacuum reclaims it
+      SegManifest.commitStaged(path, SegManifest.stampedPrefix("part"),
+        SegManifest.Staged.byTask(msgs), commutes = !truncateFirst) { base =>
+        SegManifest.Kept(if (truncateFirst) Nil else base.names)
       }
     } else {
       // plain path-based dir: original listing protocol (durability
-      // here is Spark's job-level retry, as before). Names lead with
-      // the partition id (range-ordered listings for the limit/TopN
-      // front-take) and carry a per-JOB stamp so an APPEND can never
-      // collide with — and silently replace — an earlier job's
-      // same-numbered segments.
+      // here is Spark's job-level retry, as before). It has no branch
+      // refs, so under WAP this fails before anything moves. Names
+      // lead with the partition id (range-ordered listings for the
+      // limit/TopN front-take) and carry a per-JOB stamp so an APPEND
+      // can never collide with — and silently replace — an earlier
+      // job's same-numbered segments.
+      SegManifest.commitTarget(path, branchScoped = true)
       if (truncateFirst)
         SegSource.listSegments(path).foreach(f =>
           Files.deleteIfExists(Paths.get(f)))
       val job = java.util.UUID.randomUUID.toString.take(8)
-      msgs.foreach { m =>
-        m.tmpFiles.zipWithIndex.foreach { case (tmp, i) =>
-          Files.move(Paths.get(tmp),
-            Paths.get(f"$path/part-${m.partitionId}%05d-$i%03d-$job.gseg"),
-            StandardCopyOption.REPLACE_EXISTING)
-        }
-      }
+      SegManifest.renameStaged(path, "part-",
+        SegManifest.Staged.byTask(msgs, tail = s"-$job"))
     }
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.collect { case m: SegCommitMessage => m }
-      .foreach(_.tmpFiles.foreach(t => Files.deleteIfExists(Paths.get(t))))
+    SegManifest.discard(messages)
 }
 
 case class SegWriterFactory(path: String, schema: StructType,

@@ -70,7 +70,7 @@ class SparkEntrySpec extends SparkSpec with BeforeAndAfterAll {
     allow("writes the files it reads: small files to compact, bucketed tables, " +
         "partitioned or nested parquet, the pipeline's text output")(
       "b1_bucketed_join" -> 3, "compact_small_files" -> 20, "eth_csv_pipeline" -> 2,
-      "p1_partition_pruning" -> 2, "p2_dynamic_pruning" -> 2, "p4_nested_pruning" -> 3) ++
+      "p1_partition_pruning" -> 2, "p4_nested_pruning" -> 3) ++
     allow(
       "iterative: counts and checkpoints each round to pick the loop bound and join sides")(
       "dedup_cc_clusters" -> 42, "dedup_corpus" -> 32, "g2_pagerank" -> 42,

@@ -1,7 +1,9 @@
 package graft.sources
 
-import java.nio.file.Paths
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicBoolean
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -316,5 +318,193 @@ class SegConcurrencySpec extends SparkSpec {
     } finally iso.conf.unset(SegManifest.WapBranchConf)
     iso.sql("CALL tc.fast_forward('ns.t', 'wap')")
     assert(iso.table("tc.ns.t").count() == 80)
+  }
+
+  // ---------------- one commit path: routing under WAP ----------------
+
+  /** Every name in `dir`, dot-files included. */
+  private def listing(dir: String): Seq[String] = {
+    val l = Files.list(Paths.get(dir))
+    try l.iterator().asScala.map(_.getFileName.toString).toSeq.sorted
+    finally l.close()
+  }
+
+  private def chain(t: Throwable): Seq[String] =
+    if (t == null) Nil else Option(t.getMessage).toSeq ++ chain(t.getCause)
+
+  /** The one message of a commit that would move MAIN under WAP. */
+  private val MovesMain = "would move MAIN"
+
+  /** INSERT, INSERT OVERWRITE, a copy-on-write UPDATE and a
+    * merge-on-read DELETE against `t`. */
+  private def fourWrites(iso: SparkSession, t: String): Seq[(String, () => Unit)] =
+    Seq(
+      "INSERT" -> (() => iso.sql(s"INSERT INTO $t VALUES (100, 100)")),
+      "INSERT OVERWRITE" -> (() =>
+        iso.sql(s"INSERT OVERWRITE $t SELECT id, id FROM range(0, 20)")),
+      "UPDATE" -> (() => iso.sql(s"UPDATE $t SET v = -1 WHERE id < 5")),
+      "DELETE" -> (() => iso.sql(s"DELETE FROM $t WHERE id >= 7")))
+
+  private def dmlTable(iso: SparkSession): Unit = {
+    iso.sql("CREATE TABLE tc.ns.t (id BIGINT, v BIGINT) USING gseg " +
+      "TBLPROPERTIES('gseg.delete.mode'='merge_on_read')")
+    iso.range(10).select(col("id"), col("id").as("v"))
+      .writeTo("tc.ns.t").append()
+  }
+
+  test("under WAP every branch-scoped write lands on the branch and " +
+      "main's manifest keeps its bytes") {
+    val (iso, wh) = cat("waproute")
+    dmlTable(iso)
+    iso.sql("CALL tc.branch('ns.t', 'wap')")
+    val dir = s"$wh/ns/t"
+    val manifest = Paths.get(dir, ".manifest")
+    val mainBytes = Files.readAllBytes(manifest)
+    // branch row count after each write: 11 after the INSERT, 20
+    // after the OVERWRITE, the UPDATE keeps 20, the DELETE leaves 7
+    val counts = Seq(11L, 20L, 20L, 7L)
+    iso.conf.set(SegManifest.WapBranchConf, "wap")
+    try fourWrites(iso, "tc.ns.t").zip(counts).foreach {
+      case ((what, write), n) =>
+        val head = SegManifest.refs(dir)("wap")._1
+        write()
+        assert(SegManifest.refs(dir)("wap")._1 > head,
+          s"$what must advance the branch head")
+        assert(Files.readAllBytes(manifest).sameElements(mainBytes),
+          s"$what must not move main")
+        assert(iso.table("tc.ns.t").count() == n, what)
+    } finally iso.conf.unset(SegManifest.WapBranchConf)
+    assert(iso.sql("SELECT * FROM tc.ns.t VERSION AS OF 'wap' " +
+      "WHERE v = -1").count() == 5L)
+    assert(iso.table("tc.ns.t").count() == 10L) // main
+  }
+
+  test("under WAP a table without the branch and a plain path dir " +
+      "refuse every write with one message, before anything moves") {
+    val (iso, wh) = cat("wapnoref")
+    dmlTable(iso)
+    val dir = s"$wh/ns/t"
+    // a plain path dir: segments only, no manifest and no sidecar
+    val pdir = s"$wh/ns/p"
+    val rows = iso.range(10).select(col("id"), col("id").as("v"))
+    SegSource.write(rows, pdir)
+    val before = (listing(dir), listing(pdir))
+    def refused(what: String)(write: => Any): Unit = {
+      val e = intercept[Exception](write)
+      assert(chain(e).exists(_.contains(MovesMain)),
+        s"$what: ${chain(e).mkString("; ")}")
+    }
+    iso.conf.set(SegManifest.WapBranchConf, "wap")
+    try {
+      fourWrites(iso, "tc.ns.t").foreach { case (what, write) =>
+        refused(what)(write())
+      }
+      // path writes go through the listing protocol; the catalog's DML
+      // first migrates the dir to a manifest, a main commit
+      refused("path INSERT")(
+        rows.write.format("gseg").mode("append").save(pdir))
+      refused("path INSERT OVERWRITE")(
+        rows.write.format("gseg").mode("overwrite").save(pdir))
+      refused("path UPDATE")(
+        iso.sql("UPDATE tc.ns.p SET v = -1 WHERE id < 5"))
+      refused("path DELETE")(iso.sql("DELETE FROM tc.ns.p WHERE id >= 5"))
+    } finally iso.conf.unset(SegManifest.WapBranchConf)
+    // the aborted writes' temps are gone, and nothing else moved
+    assert(listing(dir) == before._1)
+    assert(listing(pdir) == before._2)
+    assert(iso.table("tc.ns.t").count() == 10L)
+  }
+
+  test("an aborted write leaves no staged temp, whichever writer staged it") {
+    val (iso, wh) = cat("abort")
+    dmlTable(iso)
+    val dir = s"$wh/ns/t"
+    val schema = iso.table("tc.ns.t").schema
+    var n = 0
+    def staged(): SegCommitMessage = {
+      n += 1
+      val tmp = s"$dir/.tmp-$n.gseg"
+      SegSource.writeSegment(IndexedSeq(Array[AnyRef](
+        java.lang.Long.valueOf(n), java.lang.Long.valueOf(n))), schema, tmp)
+      SegCommitMessage(0, Seq(tmp))
+    }
+    def temps: Seq[String] = listing(dir).filter(_.startsWith(".tmp-"))
+    val settings = SegSettings()
+    val update = org.apache.spark.sql.connector.write.RowLevelOperation
+      .Command.UPDATE
+    val aborts: Seq[(String, Array[
+        org.apache.spark.sql.connector.write.WriterCommitMessage] => Unit)] =
+      Seq(
+        "batch" -> (m => SegBatchWrite(dir, schema, false, settings).abort(m)),
+        "stream" -> (m => SegStreamingWrite(dir, schema, false).abort(0L, m)),
+        "copy-on-write" -> (m => new SegReplaceDataWrite(dir, schema,
+          new SegRowLevelOperation(dir, schema, update, settings), update,
+          settings).abort(m)),
+        "vector delete" -> (m => new SegDvDeltaWrite(dir, schema, null,
+          settings).abort(m)))
+    aborts.foreach { case (what, abort) =>
+      val msgs: Array[org.apache.spark.sql.connector.write.WriterCommitMessage] =
+        if (what == "vector delete")
+          Array(SegDvCommitMessage(Map.empty, staged().tmpFiles))
+        else Array(staged(), staged())
+      assert(temps.nonEmpty)
+      abort(msgs)
+      assert(temps.isEmpty, s"$what abort left ${temps.mkString(", ")}")
+    }
+    // a stream epoch commits to MAIN: refused under WAP even on a
+    // table carrying the branch, before its temps move
+    iso.sql("CALL tc.branch('ns.t', 'wap')")
+    val before = listing(dir)
+    val epoch = Array[org.apache.spark.sql.connector.write.WriterCommitMessage](
+      staged())
+    val active = SparkSession.getActiveSession
+    iso.conf.set(SegManifest.WapBranchConf, "wap")
+    SparkSession.setActiveSession(iso)
+    try {
+      val e = intercept[Exception](
+        SegStreamingWrite(dir, schema, false).commit(1L, epoch))
+      assert(chain(e).exists(_.contains(MovesMain)), chain(e).mkString("; "))
+    } finally {
+      active.fold(SparkSession.clearActiveSession())(
+        SparkSession.setActiveSession)
+      iso.conf.unset(SegManifest.WapBranchConf)
+    }
+    SegStreamingWrite(dir, schema, false).abort(1L, epoch)
+    assert(listing(dir) == before)
+  }
+
+  test("src/main keeps the commit path in SegManifest: no other file " +
+      "resolves the WAP branch, swaps a branch or renames staged segments") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"${root.toAbsolutePath} not found")
+    val walk = Files.walk(root)
+    val lines =
+      try walk.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") &&
+          p.getFileName.toString != "SegManifest.scala")
+        .flatMap(p => Files.readAllLines(p).asScala.zipWithIndex.map {
+          case (l, i) => (p, i + 1, l) })
+        .toList
+      finally walk.close()
+    val wap = lines.collect {
+      case (p, n, l) if l.contains("branchSwap(") || l.contains("wapBranch(") ||
+          (l.contains("WapBranchConf") && l.contains("conf.get")) => s"$p:$n"
+    }
+    assert(wap.isEmpty, s"main-or-branch decisions outside SegManifest: " +
+      wap.mkString(", "))
+    // the one move each of these files makes is not a staged segment
+    val otherMoves = Map(
+      "SegMeta.scala" -> "the sidecar's atomic publish",
+      "SegDv.scala" -> "a deletion vector's atomic publish",
+      "SegDml.scala" -> "RENAME TABLE moves the table directory",
+      "StreamGates.scala" -> "a gate feeds committed segments to a stream")
+    val moves = lines.filter(_._3.contains("Files.move("))
+      .groupBy(_._1.getFileName.toString)
+    val offenders = moves.toSeq.flatMap { case (f, ls) =>
+      if (otherMoves.contains(f) && ls.size == 1) Nil
+      else ls.map { case (p, n, _) => s"$p:$n" }
+    }
+    assert(offenders.isEmpty, "file moves outside SegManifest that may " +
+      s"rename staged segments: ${offenders.mkString(", ")}")
   }
 }
