@@ -116,11 +116,11 @@ class SegCatalog extends TableCatalog
 
   /** Schema from the `.schema.json` sidecar when present (dot-file —
     * invisible to [[SegSource.listSegments]]), else inferred from the
-    * first segment header. First catalog touch of a dir created by
-    * path-based writes is the MIGRATION moment: the inferred schema
-    * is persisted (so a deleted-to-empty table stays loadable) and a
-    * generation manifest is synthesized from the listing (so every
-    * later commit is an atomic swap). Both are idempotent
+    * first segment header. The first catalog touch of a dir written
+    * by path-based writes persists the inferred schema (so a
+    * deleted-to-empty table stays loadable) and, for a dir an older
+    * build left without a manifest, commits generation 0 over its
+    * listing ([[SegManifest.ensure]]). Both are idempotent
     * write-if-missing under the single-writer contract. */
   override def loadTable(ident: Identifier): Table = {
     val dir = dirOf(ident)
@@ -136,12 +136,11 @@ class SegCatalog extends TableCatalog
       val parent = Identifier.of(ident.namespace.init,
         ident.namespace.last)
       val pdir = dirOf(parent)
-      // the parent must actually BE a table (sidecar or manifest) — a
-      // bare NAMESPACE directory must not resolve (cat.ns.files for a
-      // nonexistent table would otherwise mint a manifest INTO the
-      // namespace dir and shadow a legitimate CREATE there)
-      if (Files.isDirectory(pdir) &&
-          (SegMeta.exists(pdir) || SegManifest.exists(pdir.toString))) {
+      // the parent must actually BE a table — a bare NAMESPACE
+      // directory must not resolve (cat.ns.files for a nonexistent
+      // table would otherwise mint a manifest INTO the namespace dir
+      // and shadow a legitimate CREATE there)
+      if (SegManifest.isTable(pdir)) {
         SegManifest.ensure(pdir.toString)
         return new SegMetaTable(pdir.toString, ident.name)
       }
@@ -156,8 +155,10 @@ class SegCatalog extends TableCatalog
         if (files.isEmpty) throw new NoSuchTableException(ident)
         val inferred = SegMeta.TableMeta(
           SegSource.headerOf(files.head).schema, Set.empty, Map.empty)
-        // CTAS's order: the manifest commit pins the inferred meta and
-        // the sidecar follows it, so a refused migration writes nothing
+        // the migration is a main commit: refused under WAP before
+        // anything is written. CTAS's order: the manifest commit pins
+        // the inferred meta and the sidecar follows it
+        SegManifest.commitTarget(dir.toString, branchScoped = false)
         SegManifest.ensure(dir.toString, Some(SegMeta.render(inferred)))
         SegMeta.write(dir, inferred)
         inferred
@@ -244,10 +245,7 @@ class SegCatalog extends TableCatalog
     // and its sidecar write leaves only dot-hidden .ctas-* data plus
     // the manifest — CREATE TABLE must not bind a new schema over the
     // already-committed data (ADVICE r13)
-    if (SegMeta.exists(dir) || SegManifest.exists(dir.toString) ||
-        (Files.isDirectory(dir) &&
-          SegSource.listSegments(dir.toString).nonEmpty))
-      throw new TableAlreadyExistsException(ident)
+    if (SegManifest.isTable(dir)) throw new TableAlreadyExistsException(ident)
     val meta = newTableMeta(schema, partitions, properties)
     SegMeta.write(dir, meta)
     SegManifest.ensure(dir.toString)
@@ -457,9 +455,7 @@ class SegCatalog extends TableCatalog
       info: org.apache.spark.sql.connector.catalog.TableInfo,
       replace: Option[Boolean]): org.apache.spark.sql.connector.catalog.StagedTable = {
     val dir = dirOf(ident)
-    val present = SegMeta.exists(dir) || SegManifest.exists(dir.toString) ||
-      (Files.isDirectory(dir) &&
-        SegSource.listSegments(dir.toString).nonEmpty)
+    val present = SegManifest.isTable(dir)
     replace match {
       case Some(false) if present => throw new TableAlreadyExistsException(ident)
       case Some(true) if !present => throw new NoSuchTableException(ident)
@@ -573,9 +569,7 @@ class SegStagedTable(meta: SegMeta.TableMeta, dir: java.nio.file.Path,
     if (!replacing) {
       // fresh create: remove the empty shell so the failed CTAS
       // leaves NO trace (only if nothing else claimed the dir)
-      val empty = Files.isDirectory(dir) &&
-        !SegMeta.exists(dir) && !SegManifest.exists(dir.toString) &&
-        SegSource.listSegments(dir.toString).isEmpty
+      val empty = Files.isDirectory(dir) && !SegManifest.isTable(dir)
       if (empty) {
         val l = Files.list(dir)
         val nothingElse = try !l.iterator().hasNext finally l.close()
@@ -653,8 +647,7 @@ class SegDmlTable(tschema: StructType, path: String,
     * manifest swap — readers flip from all to nothing, never a
     * partial); the truncated generation stays time-travelable until
     * vacuum. The schema survives in the sidecar (written here if
-    * none exists). Path-based dirs (no manifest) keep the original
-    * delete semantics. */
+    * none exists). */
   override def truncateTable(): Boolean = {
     // route through the unified atomic sidecar — the legacy in-place
     // raw-schema write here was the one write that skipped SegMeta
@@ -662,12 +655,8 @@ class SegDmlTable(tschema: StructType, path: String,
     if (!SegMeta.exists(Paths.get(path)))
       SegMeta.write(Paths.get(path),
         SegMeta.TableMeta(tschema, Set.empty, Map.empty, settings))
-    SegManifest.read(path) match {
-      case Some((gen, _)) =>
-        SegManifest.swap(path, Seq.empty, expectGen = Some(Some(gen)))
-      case None => SegSource.listSegments(path).foreach(f =>
-        Files.deleteIfExists(Paths.get(f)))
-    }
+    SegManifest.swap(path, Seq.empty,
+      expectGen = Some(SegManifest.read(path).map(_._1)))
     true
   }
 }

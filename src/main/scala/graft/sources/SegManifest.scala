@@ -5,59 +5,6 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption
 
 import scala.jdk.CollectionConverters._
 
-/** Per-table GENERATION MANIFEST: one small dot-file naming the live
-  * segment set, so every commit against a catalog table is a single
-  * atomic pointer swap instead of a delete-then-rename choreography.
-  *
-  * Why it exists (the 100 TB durability argument): a copy-on-write
-  * DML rewrites thousands of files per commit. Any protocol that
-  * mutates the DIRECTORY as its source of truth has a window — after
-  * the first delete, before the last rename — where a driver crash
-  * leaves the table serving a partial generation with no recovery
-  * pointer. The manifest closes it the way every lakehouse format
-  * does (Iceberg snapshots, Delta's log): stage the whole new
-  * generation under names no reader resolves, fsync, then swap ONE
-  * file with an atomic rename. A crash strictly before the swap
-  * leaves the old generation fully live (the staged files are
-  * invisible orphans, reclaimed by [[vacuum]]); a crash strictly
-  * after serves the new generation completely (the old files are
-  * orphans, same reclaim). There is no intermediate state.
-  *
-  * Scope and migration: CATALOG tables ([[SegCatalog]]) always have a
-  * manifest — `createTable` writes one and `loadTable` synthesizes
-  * one from the directory listing the first time it sees a dir
-  * created by path-based writes. Plain path-based dirs (no manifest)
-  * keep the original listing protocol untouched;
-  * [[SegSource.resolveSegments]] picks per-dir.
-  *
-  * Concurrency contract: the swap is OPTIMISTIC — a committer reads
-  * the generation it is replacing and passes it as `expectGen`; the
-  * swap re-checks under a per-table lock and throws a retryable
-  * [[SegManifest.CommitConflictException]] if the live pointer moved
-  * in between, so two racing committers can never silently
-  * last-swap-wins each other's files out of the table. The lock is
-  * JVM-wide (all Spark drivers in local mode share it); a
-  * multi-driver deployment would route the same compare-and-swap
-  * through its metastore — the protocol shape here is exactly that
-  * CAS, with the filesystem rename as the publish step.
-  *
-  * Format v3 (text, one token per line — segment names are this
-  * writer's own `[A-Za-z0-9._-]` names, and [[swap]] rejects anything
-  * that could break line framing; base64 has no newlines):
-  * {{{
-  *   gseg-manifest-v3
-  *   <generation counter>
-  *   <commit epoch millis>       (the embedded commit clock)
-  *   <segment count>             (torn-write detector)
-  *   <meta64 | ->                (base64'd table metadata pinned at
-  *                                commit — as-of-schema time travel)
-  *   <segment file name>         (exactly count lines, sorted)
-  * }}}
-  * v2 files (no pinned metadata) and v1 files (no clock, no count)
-  * remain readable: time travel falls back to the current sidecar
-  * schema, the clock to file mtime — strictly the old guarantees for
-  * old files, never a refusal to read them.
-  */
 /** The two filesystem primitives the commit protocol's safety leans
   * on, extracted so an OBJECT STORE can supply them differently:
   *
@@ -107,7 +54,65 @@ private[sources] object PosixCommitProvider extends CommitProvider {
   }
 }
 
-/** Commit protocol: every commit kind, the prefix its new files take,
+/** Per-table GENERATION MANIFEST: one small dot-file naming the live
+  * segment set, so every commit to a gseg directory is a single
+  * atomic pointer swap instead of a delete-then-rename choreography.
+  *
+  * Why it exists (the 100 TB durability argument): a copy-on-write
+  * DML rewrites thousands of files per commit. Any protocol that
+  * mutates the DIRECTORY as its source of truth has a window — after
+  * the first delete, before the last rename — where a driver crash
+  * leaves the table serving a partial generation with no recovery
+  * pointer. The manifest closes it the way every lakehouse format
+  * does (Iceberg snapshots, Delta's log): stage the whole new
+  * generation under names no reader resolves, fsync, then swap ONE
+  * file with an atomic rename. A crash strictly before the swap
+  * leaves the old generation fully live (the staged files are
+  * invisible orphans, reclaimed by [[vacuum]]); a crash strictly
+  * after serves the new generation completely (the old files are
+  * orphans, same reclaim). There is no intermediate state.
+  *
+  * Scope and migration: every gseg directory is a manifest table,
+  * catalog table or plain path (`format("gseg").save(dir)`). A
+  * directory without a manifest (fresh, or written by an older build
+  * that published by renaming files in) becomes one at its first
+  * commit: [[commitStaged]], like [[ensure]] (which
+  * `SegCatalog.loadTable` calls), takes the directory's LISTED
+  * segments as the base and commits generation 0 with the CAS on "no
+  * manifest". Until then such a directory still reads:
+  * [[SegSource.resolveSegments]] keeps one read-only listing
+  * fallback, so a read never writes. A file dropped into a manifest
+  * directory by hand is not part of the table.
+  *
+  * Concurrency contract: the swap is OPTIMISTIC — a committer reads
+  * the generation it is replacing and passes it as `expectGen`; the
+  * swap re-checks under a per-table lock and throws a retryable
+  * [[SegManifest.CommitConflictException]] if the live pointer moved
+  * in between, so two racing committers can never silently
+  * last-swap-wins each other's files out of the table. The lock is
+  * JVM-wide (all Spark drivers in local mode share it); a
+  * multi-driver deployment would route the same compare-and-swap
+  * through its metastore — the protocol shape here is exactly that
+  * CAS, with the filesystem rename as the publish step.
+  *
+  * Format v3 (text, one token per line — segment names are this
+  * writer's own `[A-Za-z0-9._-]` names, and [[swap]] rejects anything
+  * that could break line framing; base64 has no newlines):
+  * {{{
+  *   gseg-manifest-v3
+  *   <generation counter>
+  *   <commit epoch millis>       (the embedded commit clock)
+  *   <segment count>             (torn-write detector)
+  *   <meta64 | ->                (base64'd table metadata pinned at
+  *                                commit — as-of-schema time travel)
+  *   <segment file name>         (exactly count lines, sorted)
+  * }}}
+  * v2 files (no pinned metadata) and v1 files (no clock, no count)
+  * remain readable: time travel falls back to the current sidecar
+  * schema, the clock to file mtime — strictly the old guarantees for
+  * old files, never a refusal to read them.
+  *
+  * Commit protocol: every commit kind, the prefix its new files take,
   * the ref it lands on and what it does when another commit moved
   * that ref first. Branch-scoped commits land on the session's WAP
   * branch when the table carries it ([[commitTarget]], the rule table
@@ -131,7 +136,9 @@ private[sources] object PosixCommitProvider extends CommitProvider {
   *   truncate                (no new files)     main-only      replaces (single-shot)
   * }}}
   * Clone hard-links its files rather than staging them; it, rollback
-  * and truncate call [[swap]] directly. */
+  * and truncate call [[swap]] directly. An overwrite or Complete-mode
+  * epoch on a plain path dir (no sidecar) retires the superseded
+  * generation at commit ([[commitWrite]]). */
 object SegManifest {
   private[sources] val FileName = ".manifest"
 
@@ -341,7 +348,7 @@ object SegManifest {
   }
 
   /** (generation, segment file NAMES) — None when the dir carries no
-    * manifest (path-based dir: callers fall back to the listing). */
+    * manifest yet (see "Scope and migration" above). */
   def read(dir: String): Option[(Long, Seq[String])] =
     readManifest(dir).map(m => (m.gen, m.names))
 
@@ -483,10 +490,6 @@ object SegManifest {
     Some(parseFile(p).names)
   }
 
-  /** The full parsed snapshot of a COMMITTED retained generation —
-    * names AND deletion-vector map (time travel, rollback and the
-    * changefeed need both; [[readSnapshot]] keeps the names-only
-    * shape its callers pin). Same phantom/retention gates. */
   /** A generation is RESOLVABLE when its snapshot exists and it
     * committed: at-or-below the live pointer, or published through a
     * branch ref's CAS (heads/bases sit ABOVE live until
@@ -497,6 +500,10 @@ object SegManifest {
       refsFull(dir).values.exists { case (h, b, c) =>
         h == gen || b == gen || c.contains(gen) }
 
+  /** The full parsed snapshot of a COMMITTED retained generation —
+    * names AND deletion-vector map (time travel, rollback and the
+    * changefeed need both; [[readSnapshot]] keeps the names-only
+    * shape its callers pin). Same phantom/retention gates. */
   private[sources] def readSnapshotManifest(dir: String,
       gen: Long): Option[Manifest] = {
     val p = snapshotPath(dir, gen)
@@ -587,17 +594,37 @@ object SegManifest {
     finally l.close()
   }
 
-  /** Synthesize the manifest from the directory listing if absent —
-    * the migration moment for dirs created by path-based writes
-    * before they are first served through the catalog. */
+  /** The base a dir without a manifest commits over: its listed
+    * segments, as an older build that renamed files in left them
+    * (none for a fresh dir). */
+  private def listed(dir: String): Manifest =
+    Manifest(-1L, None, SegSource.listSegments(dir)
+      .map(f => Paths.get(f).getFileName.toString))
+
+  /** Commit generation 0 over the [[listed]] segments if the dir has
+    * no manifest yet — what a dir's first [[commitStaged]] does, for
+    * a dir that `SegCatalog.loadTable` serves before any write. */
   def ensure(dir: String, metaOverride: Option[Array[Byte]] = None): Unit =
     lockFor(dir).synchronized {
-      if (!exists(dir)) {
-        swap(dir, SegSource.listSegments(dir)
-          .map(f => Paths.get(f).getFileName.toString),
-          expectGen = Some(None), metaOverride = metaOverride)
-      }
+      if (!exists(dir))
+        swap(dir, listed(dir).names, expectGen = Some(None),
+          metaOverride = metaOverride)
     }
+
+  /** Does `dir` hold a table: a sidecar, a manifest, or listed
+    * segments an older build left? The existence test of CREATE,
+    * CTAS, clone and the metadata tables. */
+  private[sources] def isTable(dir: Path): Boolean =
+    Files.isDirectory(dir) && (SegMeta.exists(dir) ||
+      exists(dir.toString) || SegSource.listSegments(dir.toString).nonEmpty)
+
+  /** Staging temps younger than this survive vacuum: the per-table
+    * lock covers only the SWAP, not a staging lifetime, so a vacuum
+    * racing an in-flight CTAS/compact/batch write must not delete its
+    * temp dir mid-stage (ADVICE r13). A crashed commit's strands are
+    * hours old by the time anyone vacuums; 20 minutes bounds the live
+    * window without delaying real reclaim. Spec-tunable. */
+  @volatile private[sources] var tempReclaimGraceMs: Long = 20L * 60 * 1000
 
   /** Reclaim storage outside the RETAINED time-travel window. The
     * PROTECTED set is the live generation plus the `keepLast - 1`
@@ -616,23 +643,17 @@ object SegManifest {
     * not thrown on: the reclaim procedure must never be blocked by
     * the very corruption it exists to clean up. Snapshots retire
     * BEFORE their files go, so no retained snapshot ever references
-    * a deleted file. Returns the reclaimed names, sorted. */
-  /** Staging temps younger than this survive vacuum: the per-table
-    * lock covers only the SWAP, not a staging lifetime, so a vacuum
-    * racing an in-flight CTAS/compact/batch write must not delete its
-    * temp dir mid-stage (ADVICE r13). A crashed commit's strands are
-    * hours old by the time anyone vacuums; 20 minutes bounds the live
-    * window without delaying real reclaim. Spec-tunable. */
-  @volatile private[sources] var tempReclaimGraceMs: Long = 20L * 60 * 1000
-
-  /** `olderThanMs` is the TIME retention horizon (operators schedule
+    * a deleted file. Returns the reclaimed names, sorted.
+    *
+    * `olderThanMs` is the TIME retention horizon (operators schedule
     * by time, not commit count): a committed generation younger than
     * the horizon — judged by the commit clock EMBEDDED in its v2
     * snapshot, never file mtime, so a restored/copied table still
     * retains by its real history — is protected even when it falls
     * outside `keepLast`. The two compose as retention floors:
-    * protected = live ∪ (keepLast newest) ∪ (younger than horizon). */
-  /** `dryRun` reports what a real run WOULD reclaim (same
+    * protected = live ∪ (keepLast newest) ∪ (younger than horizon).
+    *
+    * `dryRun` reports what a real run WOULD reclaim (same
     * computation under the same locks) without deleting anything —
     * the operator's look-before-you-leap on a retention change. */
   def vacuum(dir: String, keepLast: Int = 1,
@@ -642,7 +663,7 @@ object SegManifest {
     olderThanMs.foreach(h => require(h >= 0,
       s"gseg vacuum: older_than_ms $h < 0"))
     lockFor(dir).synchronized {
-      if (readManifest(dir).isEmpty) return Nil // path-based dir: no-op
+      if (readManifest(dir).isEmpty) return Nil // no generation yet
       // lock FIRST, then read the manifest INSIDE it (mirroring
       // swap/swapLocked): a foreign-process commit landing between a
       // pre-lock read and the lock would make the just-committed
@@ -910,11 +931,11 @@ object SegManifest {
     * writer's prefix. */
   private[sources] case class Staged(files: Seq[(String, String)])
   private[sources] object Staged {
-    /** Task temps as `<partition>-<i><tail>.gseg`: a listing keeps the
-      * write's partition order (the limit/TopN front-take reads it). */
-    def byTask(msgs: Seq[SegCommitMessage], tail: String = ""): Staged =
+    /** Task temps as `<partition>-<i>.gseg`: the sorted manifest keeps
+      * the write's partition order (the limit/TopN front-take reads it). */
+    def byTask(msgs: Seq[SegCommitMessage]): Staged =
       Staged(msgs.flatMap(m => m.tmpFiles.zipWithIndex.map { case (t, i) =>
-        t -> f"${m.partitionId}%05d-$i%03d$tail.gseg" }))
+        t -> f"${m.partitionId}%05d-$i%03d.gseg" }))
     /** One ordered list as `<i>.gseg`. */
     def flat(files: Seq[String]): Staged =
       Staged(files.zipWithIndex.map { case (t, i) => t -> f"$i%05d.gseg" })
@@ -926,9 +947,8 @@ object SegManifest {
     s"$kind-${java.util.UUID.randomUUID.toString.take(8)}-"
 
   /** Rename staged files into `dir` under `prefix`; returns the new
-    * names. On a manifest table they stay invisible until the swap
-    * names them; on a plain path dir the rename is the publish. */
-  private[sources] def renameStaged(dir: String, prefix: String,
+    * names. They stay invisible until the swap names them. */
+  private def renameStaged(dir: String, prefix: String,
       staged: Staged): Seq[String] =
     staged.files.map { case (tmp, suffix) =>
       val name = prefix + suffix
@@ -963,8 +983,9 @@ object SegManifest {
     * writer's own validation; it throws to abort the commit. A commit
     * that `commutes` re-reads and retries a lost CAS; one that
     * replaces is single-shot, CAS'd on `expectGen` when the writer
-    * pinned its base earlier (at stage or plan time). Returns the new
-    * generation. */
+    * pinned its base earlier (at stage or plan time). A dir without a
+    * manifest commits generation 0 over its [[listed]] segments, with
+    * the CAS on "no manifest". Returns the new generation. */
   private[sources] def commitStaged(dir: String, prefix: String,
       staged: Staged, commutes: Boolean, branchScoped: Boolean = true,
       expectGen: Option[Option[Long]] = None,
@@ -983,15 +1004,39 @@ object SegManifest {
         branchSwap(dir, b, k.names ++ added, Some(head), k.dvs)
       case None =>
         val live = readManifest(dir)
-        if (live.isEmpty && expectGen.isEmpty)
-          throw new IllegalStateException(
-            s"gseg: no generation manifest at $dir — catalog tables " +
-              "always carry one (loadTable synthesizes it)")
-        val k = keep(live.getOrElse(Manifest(-1L, None, Nil)))
-        swap(dir, k.names ++ added,
+        val k = keep(live.getOrElse(listed(dir)))
+        // a listing taken after the rename holds `added` already, and
+        // so may a racing first commit's generation 0
+        swap(dir, (k.names ++ added).distinct,
           Some(expectGen.getOrElse(live.map(_.gen))), metaOverride, k.dvs)
     }
     if (commutes) withConflictRetry(prefix)(attempt()) else attempt()
+  }
+
+  /** [[commitStaged]] for the Spark writers ([[SegBatchWrite]],
+    * [[SegStreamingWrite]]) of rows with `schema`: an append keeps its
+    * base, a write that `replaces` (overwrite, a Complete-mode epoch)
+    * keeps nothing of it. A dir with no SegMeta sidecar has never
+    * been a catalog table: each generation pins the written schema
+    * (as `SegCatalog.loadTable` pins the inferred one), and a replacing
+    * commit retires the superseded generation right after the swap.
+    * Such a dir has no branches or tags to pin old generations, and
+    * path overwrites have always deleted the old files, so no reader
+    * loses a guarantee and reruns into one dir pile up nothing. */
+  private[sources] def commitWrite(dir: String, prefix: String,
+      staged: Staged, schema: org.apache.spark.sql.types.StructType,
+      replaces: Boolean, branchScoped: Boolean,
+      expectGen: Option[Option[Long]] = None): Unit = {
+    val pathDir = !SegMeta.exists(Paths.get(dir))
+    // nullable, as segment headers (and so the inferred schema) are
+    val pin = if (!pathDir) None else Some(SegMeta.render(SegMeta.TableMeta(
+      org.apache.spark.sql.types.StructType(
+        schema.map(_.copy(nullable = true))), Set.empty, Map.empty)))
+    commitStaged(dir, prefix, staged, commutes = !replaces, branchScoped,
+      expectGen, pin) { base =>
+      Kept(if (replaces) Nil else base.names)
+    }
+    if (replaces && pathDir) vacuum(dir)
   }
 
   private def refsPath(dir: String): Path = Paths.get(dir, ".refs")

@@ -574,9 +574,7 @@ object SegProcedures {
         .getOrElse(throw new IllegalStateException(
           s"gseg clone: no table metadata for $src"))
       // target must not exist (CREATE TABLE's existence contract)
-      if (SegMeta.exists(dstDir) || SegManifest.exists(dstDir.toString) ||
-          (Files.isDirectory(dstDir) &&
-            SegSource.listSegments(dstDir.toString).nonEmpty))
+      if (SegManifest.isTable(dstDir))
         throw new TableAlreadyExistsException(dstIdent)
       Files.createDirectories(dstDir)
       val stamp = java.util.UUID.randomUUID.toString.take(8)

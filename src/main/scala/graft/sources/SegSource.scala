@@ -53,12 +53,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *     job commit renames winners into place and job abort deletes
   *     them — a speculative or retried task attempt can never leave a
   *     half-segment visible. Overwrite goes through
-  *     [[SupportsTruncate]]. On CATALOG tables the job commit is
-  *     additionally CRASH-ATOMIC: it stages generation-stamped names
-  *     and flips the [[SegManifest]] pointer in one atomic rename,
-  *     retaining the superseded generation as time-travel history
-  *     until vacuum (plain path-based dirs keep the simpler listing
-  *     protocol).
+  *     [[SupportsTruncate]]. The job commit is CRASH-ATOMIC on every
+  *     gseg dir: it stages generation-stamped names and flips the
+  *     [[SegManifest]] pointer in one atomic rename. A catalog table
+  *     retains the superseded generation as time-travel history until
+  *     vacuum; a plain path dir's overwrite retires it at commit.
   *
   * Segments buffer per task (segment size = task partition size);
   * a production writer would roll segments at a byte budget and stage
@@ -118,7 +117,7 @@ object SegSource {
       .contains(name), s"gseg: '$name' is a reserved column name")
 
   /** Live deletion-vector map of `dir` as ABSOLUTE paths (segment →
-    * vector), from the generation manifest. Empty for plain path
+    * vector), from the generation manifest. Empty for manifest-less
     * dirs and vector-free generations. Time-travel reads override
     * this with their snapshot's own map. */
   private[sources] def dvPathsOf(dir: String): Map[String, String] =
@@ -139,8 +138,8 @@ object SegSource {
     * planning all describe the SAME committed generation (a commit
     * racing past the snapshot means the scan serves the older —
     * still consistent — generation: ordinary snapshot isolation).
-    * None = no manifest (plain path dir: names come from the
-    * listing, which never carries vectors). */
+    * None = no manifest yet (a dir an older build wrote: names come
+    * from the listing, which never carries vectors). */
   private[sources] def manifestSnapshot(dir: String)
       : Option[(Seq[String], Map[String, String])] =
     // session-aware: under spark.gseg.wap.branch, tables carrying the
@@ -1322,10 +1321,11 @@ object SegSource {
   }
 
   /** The segment set a READ of `dir` must serve: the generation
-    * manifest when one exists (catalog tables — the committed
-    * generation, never a mid-commit mixture; see [[SegManifest]]),
-    * else the directory listing (plain path-based dirs, original
-    * protocol). */
+    * manifest's committed generation, never a mid-commit mixture (see
+    * [[SegManifest]]). A dir with no manifest yet (one an older build
+    * wrote by renaming files in) reads its listing: the one read-only
+    * listing fallback, so a read never writes; the dir's first commit
+    * takes that listing as its base. */
   private[sources] def resolveSegments(dir: String): Seq[String] =
     SegManifest.segments(dir).getOrElse(listSegments(dir))
 
@@ -1384,7 +1384,7 @@ object SegSource {
   private[sources] def resolveSegmentsForSession(dir: String): Seq[String] =
     SegManifest.readManifestForSession(dir)
       .map(_.names.sorted.map(n => s"$dir/$n"))
-      .getOrElse(listSegments(dir))
+      .getOrElse(resolveSegments(dir))
 
   // ---------------- filter support ----------------
 
@@ -2127,9 +2127,9 @@ class SegScanBuilder(full: StructType, path: String,
       // gets the snapshot's names, and the dv map is ALWAYS the one
       // the accept decisions above were made against (for
       // caller-pinned live reads that is the live map at build time —
-      // the generation their pins came from). Plain path dirs have
-      // no manifest: pins stay None (the scan lists) and the dv map
-      // pins empty, which is exact (listings never carry vectors).
+      // the generation their pins came from). A dir with no manifest
+      // yet: pins stay None (the scan lists) and the dv map pins
+      // empty, which is exact (listings never carry vectors).
       pinned.orElse(snap.map(_._1)), skipChangeCommits, aliasOverride,
       maxGensPerTrigger, emitPos,
       Some(dvMap))
@@ -2446,13 +2446,8 @@ case class SegScan(path: String, required: StructType,
   override def toBatch: Batch = this
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    // manifest tables stream by GENERATION (sound under DML,
-    // compaction and epoch replacement — see SegGenMicroBatchStream);
-    // plain path dirs keep the original monotone-name watermark
-    if (SegManifest.exists(path))
-      new SegGenMicroBatchStream(path, required, pushed, skipChangeCommits,
-        maxGensPerTrigger)
-    else new SegMicroBatchStream(path, required, pushed)
+    new SegGenMicroBatchStream(path, required, pushed, skipChangeCommits,
+      maxGensPerTrigger)
   override def description(): String = {
     val base = s"gseg path=$path " +
       s"ReadColumns=[${required.fieldNames.mkString(",")}] " +
@@ -2634,15 +2629,15 @@ case class SegFileColumnFactory(inner: PartitionReaderFactory)
     }
 }
 
-/** Streaming offset for MANIFEST tables: a committed GENERATION
-  * number. `-1` is the pre-snapshot initial offset. */
+/** Streaming offset of a gseg dir: a committed GENERATION number.
+  * `-1` is the pre-snapshot initial offset. */
 case class SegGenOffset(gen: Long)
     extends org.apache.spark.sql.connector.read.streaming.Offset {
   override def json(): String = s"""{"gen":$gen}"""
 }
 
-/** Micro-batch streaming read over a gseg CATALOG (manifest) table,
-  * addressed by GENERATION — the offset is the committed generation
+/** Micro-batch streaming read over a gseg dir (catalog table or plain
+  * path), addressed by GENERATION — the offset is the committed generation
   * number, and each batch is derived from retained snapshot
   * manifests, never the directory listing or name ordering:
   *
@@ -2659,15 +2654,17 @@ case class SegGenOffset(gen: Long)
   *    the whole change commit is skipped (Delta's skipChangeCommits
   *    contract: its rows never stream).
   *
-  * Why this replaces the name watermark on catalog tables: DML
-  * rewrites mint `rlo-` names that sort BELOW a sink's `str-` epoch
-  * watermark (silently missed) and carry rewritten-but-unchanged
-  * rows in NEW files (double-read under any name scheme). Generation
-  * diffs see exactly what each commit did. Exactly-once recovery:
-  * a recovered (lo, hi] replans the identical file set from the
+  * Why generations and not file names: DML rewrites mint `rlo-` names
+  * that sort BELOW a sink's `str-` epoch names (a name watermark
+  * silently misses them) and carry rewritten-but-unchanged rows in
+  * NEW files (double-read under any name scheme). Generation diffs
+  * see exactly what each commit did. Exactly-once recovery: a
+  * recovered (lo, hi] replans the identical file set from the
   * retained snapshots — a stream lagging past the vacuum retention
   * window fails loudly ("retired by vacuum"), the same contract as
-  * VERSION AS OF. */
+  * VERSION AS OF. A plain path dir's overwrite retires the generation
+  * it replaced at commit, so a stream cannot step across one. A dir
+  * with no manifest yet streams from its first commit on. */
 class SegGenMicroBatchStream(path: String, required: StructType,
     pushed: Array[Filter], skipChangeCommits: Boolean,
     maxGensPerTrigger: Option[Long] = None)
@@ -2761,107 +2758,6 @@ class SegGenMicroBatchStream(path: String, required: StructType,
       (batch.size - kept.size).toLong)
     kept.map { case (f, dvP) => SegInputPartition(f, dvP) }
       .toArray[InputPartition]
-  }
-  override def createReaderFactory(): PartitionReaderFactory =
-    SegReaderFactory(required, pushed, None)
-}
-
-/** Streaming offset: the lexicographic watermark — the greatest
-  * segment NAME this stream has claimed. Encoded as its own JSON so
-  * checkpoint recovery round-trips through `deserializeOffset`. */
-case class SegOffset(watermark: String)
-    extends org.apache.spark.sql.connector.read.streaming.Offset {
-  // base64 sidesteps JSON escaping entirely: any path round-trips
-  override def json(): String =
-    "{\"wm64\":\"" + java.util.Base64.getEncoder.encodeToString(
-      watermark.getBytes(UTF_8)) + "\"}"
-}
-
-/** Micro-batch streaming read over a gseg directory: each batch is
-  * the set of segments whose NAME is lexicographically above the
-  * previous watermark — segments are immutable once committed (the
-  * batch writer renames them into place atomically), so a name-range
-  * batch is exactly-once by construction and checkpoint recovery
-  * replans the identical file set from two offsets. The demo source
-  * ingests lexicographically-NEW files only (our stream writers stamp
-  * monotone `b{i}-` prefixes); a production source keeps a seen-file
-  * log like Spark's FileStreamSource so out-of-order names can't be
-  * missed — the offset/replan contract demonstrated here is the part
-  * that transfers. Note on pushdown: Spark's V2ScanRelationPushDown
-  * only rewrites BATCH relations, so a streaming scan's builder sees
-  * no pruned columns or pushed filters today — the zone-map check
-  * below is a no-op under an empty filter set and simply engages if
-  * the engine ever starts pushing into streaming scans. */
-class SegMicroBatchStream(path: String, required: StructType,
-    pushed: Array[Filter])
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
-  import org.apache.spark.sql.connector.read.streaming.Offset
-
-  /** MANIFEST-AWARE file listing (ADVICE r12): catalog tables retain
-    * superseded generations and crashed-commit orphans on disk for
-    * time travel, so a directory listing would plan DEAD segments —
-    * duplicate rows from every superseded epoch of a Complete-mode
-    * sink dir, stale rows a DML already replaced. Resolving through
-    * the live generation manifest (when one exists; plain dirs keep
-    * the listing) makes the stream see exactly what a batch read
-    * sees at each trigger. */
-  private def names(): Seq[String] = SegSource.resolveSegments(path)
-
-  /** Monotone-name violation detector. A file whose name sorts at or
-    * below a batch's start watermark can never join a live batch (the
-    * name range has moved past it) — if the writer convention is
-    * violated, that file is silently LOST. `planned` accumulates every
-    * name this instance has put in a batch; names ≤ the start
-    * watermark that were never planned are counted and logged, so the
-    * violation is observable in metrics instead of silent. On
-    * checkpoint recovery the set is seeded from the recovered start
-    * offset (names ≤ start are assumed to be the committed set —
-    * auditing THAT remembered set across restarts is what a persisted
-    * per-batch file log, FileStreamSource-style, would add). */
-  private val planned = scala.collection.mutable.Set[String]()
-  private var seeded = false
-  private def detectLate(ns: Seq[String], lo: String): Unit = synchronized {
-    if (!seeded) { planned ++= ns.filter(_ <= lo); seeded = true }
-    val late = ns.filter(n => n <= lo && !planned.contains(n))
-    if (late.nonEmpty) {
-      graft.Counters.add("gseg_stream_late_files", late.size.toLong)
-      System.err.println(
-        s"[gseg] WARNING: ${late.size} segment(s) below the committed " +
-          s"watermark were never planned (monotone-name violation, " +
-          s"rows lost): ${late.take(3).mkString(", ")}")
-      planned ++= late // count each violation once, not per trigger
-    }
-  }
-
-  override def initialOffset(): Offset = SegOffset("")
-  override def latestOffset(): Offset = {
-    val ns = names()
-    SegOffset(if (ns.isEmpty) "" else ns.last)
-  }
-  override def deserializeOffset(json: String): Offset = {
-    val b64 = json.substring(json.indexOf(':') + 1).trim
-      .stripSuffix("}").trim.stripPrefix("\"").stripSuffix("\"")
-    SegOffset(new String(java.util.Base64.getDecoder.decode(b64), UTF_8))
-  }
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-
-  override def planInputPartitions(start: Offset, end: Offset)
-      : Array[InputPartition] = {
-    val lo = start.asInstanceOf[SegOffset].watermark
-    val hi = end.asInstanceOf[SegOffset].watermark
-    val ns = names()
-    detectLate(ns, lo)
-    val batch = ns.filter(n => n > lo && n <= hi)
-    synchronized { planned ++= batch }
-    val kept = batch.filter(f => {
-      val h = SegSource.resolvedHeaderOf(f)
-      pushed.forall(SegSource.mayMatch(h, _))
-    })
-    graft.Counters.add("gseg_stream_files", batch.size.toLong)
-    graft.Counters.add("gseg_stream_skipped", (batch.size - kept.size).toLong)
-    // plain path-dir stream: no manifest, hence no deletion vectors
-    kept.map(SegInputPartition(_)).toArray
   }
   override def createReaderFactory(): PartitionReaderFactory =
     SegReaderFactory(required, pushed, None)
@@ -3266,22 +3162,20 @@ class SegWriteBuilder(path: String, schema: StructType,
   }
 }
 
-/** Streaming SINK: `writeStream.format("gseg")` / `.toTable(...)` on
-  * a catalog table — each epoch's rows stage as hidden temps through
-  * the ordinary task writers and the driver's per-epoch commit
-  * renames them under an EPOCH-PREFIXED name (`str-<epoch>-…`) and,
-  * on manifest tables, swaps the generation manifest atomically.
-  * Exactly-once over at-least-once epochs: Spark replays an epoch
-  * whose commit it cannot prove durable, so commit is IDEMPOTENT —
-  * if any committed segment already carries this epoch's prefix the
-  * replay discards its temps and returns (names, not a side log, are
-  * the dedup state, which survives anything the table survives).
-  * Epoch prefixes are zero-padded so sink output is itself a valid
-  * MONOTONE-name gseg STREAM source — a gseg dir can sit mid-pipeline
-  * with streams on both sides. Complete-mode truncation rides the
-  * same swap (the epoch's generation simply replaces the manifest);
-  * empty partitions stage nothing (skipEmpty) so a quiet stream
-  * doesn't mint a segment per shuffle partition per epoch. */
+/** Streaming SINK: `writeStream.format("gseg")` / `.toTable(...)` —
+  * each epoch's rows stage as hidden temps through the ordinary task
+  * writers, and the driver's per-epoch commit publishes them under an
+  * EPOCH-PREFIXED name (`str-<epoch>-…`) in one
+  * [[SegManifest.commitWrite]]: an appended generation, or in Complete
+  * mode one that replaces the table. Exactly-once over at-least-once
+  * epochs: Spark replays an epoch whose commit it cannot prove
+  * durable, so commit is IDEMPOTENT — if the live generation already
+  * names a segment with this epoch's prefix, only the completed swap
+  * can have put it there, so the replay discards its temps and
+  * returns (the manifest, not a side log, is the dedup state, which
+  * survives anything the table survives). Empty partitions stage
+  * nothing (skipEmpty) so a quiet stream doesn't mint a segment per
+  * shuffle partition per epoch. Epochs commit to MAIN only. */
 case class SegStreamingWrite(path: String, schema: StructType,
     truncateEachEpoch: Boolean, settings: SegSettings = SegSettings())
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
@@ -3304,47 +3198,16 @@ case class SegStreamingWrite(path: String, schema: StructType,
       messages: Array[WriterCommitMessage]): Unit = {
     val msgs = messages.toSeq.collect { case m: SegCommitMessage => m }
     val prefix = epochPrefix(epochId)
-    val manifest = SegManifest.read(path)
-    val manifested = manifest.isDefined
-    val existing =
-      manifest.map(_._2).getOrElse(SegSource.listSegments(path)
-        .map(f => Paths.get(f).getFileName.toString))
-    if (existing.exists(_.startsWith(prefix))) {
-      if (manifested) {
-        // epoch replay after a commit Spark could not prove durable:
-        // the prefix is IN THE MANIFEST, which only the completed
-        // swap can put there — the first commit landed whole, discard
-        // the replay
-        SegManifest.discard(messages)
-        return
-      } else {
-        // path-based dir: the prefix comes from the LISTING, which a
-        // commit crashed mid-rename also produces — skipping could
-        // drop the missing tail of the epoch. Re-commit by
-        // REPLACEMENT instead: clear the epoch's files and redo the
-        // renames (idempotent under any number of replays; the
-        // transient partial-epoch window is inherent to the listing
-        // protocol — catalog tables get the atomic flavor)
-        existing.filter(_.startsWith(prefix)).foreach(n =>
-          Files.deleteIfExists(Paths.get(s"$path/$n")))
-      }
+    val live = SegManifest.read(path)
+    if (live.exists(_._2.exists(_.startsWith(prefix)))) {
+      SegManifest.discard(messages) // the epoch's first commit landed
+      return
     }
     val staged = SegManifest.Staged.byTask(msgs)
-    if (!manifested) {
-      SegManifest.renameStaged(path, prefix, staged)
-      // path-based Complete mode: legacy listing protocol — the new
-      // epoch is fully renamed in (epoch-prefixed, collision-free)
-      // before the superseded files go
-      if (truncateEachEpoch)
-        existing.foreach(n => Files.deleteIfExists(Paths.get(s"$path/$n")))
-    } else if (truncateEachEpoch)
-      SegManifest.commitStaged(path, prefix, staged, commutes = false,
-        branchScoped = false, expectGen = Some(manifest.map(_._1))) { _ =>
-        SegManifest.Kept(Nil)
-      }
-    else if (staged.files.nonEmpty)
-      SegManifest.commitStaged(path, prefix, staged, commutes = true,
-        branchScoped = false)(base => SegManifest.Kept(base.names))
+    if (truncateEachEpoch || staged.files.nonEmpty)
+      SegManifest.commitWrite(path, prefix, staged, schema,
+        replaces = truncateEachEpoch, branchScoped = false,
+        expectGen = if (truncateEachEpoch) Some(live.map(_._1)) else None)
     graft.Counters.add("gseg_stream_sink_epochs", 1L)
     graft.Counters.add("gseg_stream_sink_files", staged.files.size.toLong)
   }
@@ -3358,11 +3221,16 @@ case class SegCommitMessage(partitionId: Int, tmpFiles: Seq[String])
   extends WriterCommitMessage
 
 /** Job-level commit: every task stages a hidden `.tmp-` segment and
-  * reports it; only the driver's commit renames winners into place
-  * (and, for Overwrite, removes the previous generation — after the
-  * new one is fully staged, so an aborted job leaves the old data
-  * intact). Spark's commit coordinator guarantees one committed
-  * attempt per partition, so renames never race. */
+  * reports it; only the driver's commit publishes them, as one
+  * generation through [[SegManifest.commitWrite]] under a per-job
+  * `part-<stamp>-` prefix ([[SegManifest.Staged.byTask]] keeps the
+  * partition order within the write, which the limit/TopN front-take
+  * reads). An append lands on the session's WAP branch when the table
+  * carries it; Overwrite (SupportsTruncate) replaces the generation,
+  * and a plain path dir under WAP, which has no branch, refuses both
+  * before any file moves. An aborted job leaves the old data intact.
+  * Spark's commit coordinator guarantees one committed attempt per
+  * partition, so the renames never race. */
 case class SegBatchWrite(path: String, schema: StructType,
     truncateFirst: Boolean, settings: SegSettings)
     extends BatchWrite {
@@ -3372,32 +3240,11 @@ case class SegBatchWrite(path: String, schema: StructType,
     SegWriterFactory(path, schema, settings)
   }
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val msgs = messages.toSeq.collect { case m: SegCommitMessage => m }
-    if (SegManifest.exists(path)) {
-      // an overwrite's superseded generation is RETAINED as
-      // time-travel history until vacuum reclaims it
-      SegManifest.commitStaged(path, SegManifest.stampedPrefix("part"),
-        SegManifest.Staged.byTask(msgs), commutes = !truncateFirst) { base =>
-        SegManifest.Kept(if (truncateFirst) Nil else base.names)
-      }
-    } else {
-      // plain path-based dir: original listing protocol (durability
-      // here is Spark's job-level retry, as before). It has no branch
-      // refs, so under WAP this fails before anything moves. Names
-      // lead with the partition id (range-ordered listings for the
-      // limit/TopN front-take) and carry a per-JOB stamp so an APPEND
-      // can never collide with — and silently replace — an earlier
-      // job's same-numbered segments.
-      SegManifest.commitTarget(path, branchScoped = true)
-      if (truncateFirst)
-        SegSource.listSegments(path).foreach(f =>
-          Files.deleteIfExists(Paths.get(f)))
-      val job = java.util.UUID.randomUUID.toString.take(8)
-      SegManifest.renameStaged(path, "part-",
-        SegManifest.Staged.byTask(msgs, tail = s"-$job"))
-    }
-  }
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    SegManifest.commitWrite(path, SegManifest.stampedPrefix("part"),
+      SegManifest.Staged.byTask(
+        messages.toSeq.collect { case m: SegCommitMessage => m }),
+      schema, replaces = truncateFirst, branchScoped = true)
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     SegManifest.discard(messages)

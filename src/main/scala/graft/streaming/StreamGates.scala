@@ -1717,42 +1717,32 @@ object StreamGates {
   }
 
   /** Gate query [stream_dsv2_parity]: the gseg DataSourceV2 connector
-    * serves MICRO-BATCH reads through the same scan stack as batch —
-    * segments arrive (committed by the V2 batch writer, renamed into
-    * the stream directory under monotone names), each name range
-    * becomes exactly one micro-batch, and checkpointed offsets replan
-    * identical file sets. Booleans:
-    *  - first_batch_parity: after only generation-0 segments exist,
-    *    the complete-mode aggregate equals the batch aggregate of
-    *    slice A alone — the stream really consumed ONE increment;
-    *  - final_parity: after generation-1 arrives, the aggregate
-    *    equals the full slice's (and sums ride DECIMAL, so equality
-    *    is exact under any partitioning). Both true together prove
-    *    the source planned the two name ranges as two increments.
+    * serves MICRO-BATCH reads of a plain path dir through the same
+    * scan stack as batch — each increment lands as one commit of the
+    * V2 batch writer (`mode("append").save(dir)`), the stream's offset
+    * is the committed generation, each generation's added segments
+    * become exactly one micro-batch, and checkpointed offsets replan
+    * identical file sets from the retained snapshots. Booleans:
+    *  - first_batch_parity: after only the first increment (slice A,
+    *    generation 0) has landed, the complete-mode aggregate equals
+    *    the batch aggregate of slice A alone — the stream really
+    *    consumed ONE increment;
+    *  - final_parity: after the second increment (generation 1)
+    *    lands, the aggregate equals the full slice's (and sums ride
+    *    DECIMAL, so equality is exact under any partitioning). Both
+    *    true together prove the source planned the two generations as
+    *    two increments.
     * n_types anchors the oracle relationally. */
   def streamSegParity(s: SparkSession, d: String): DataFrame = gate(s) { g =>
     import g.iso
     val streamDir = s"${g.root}/stream"
-    Files.createDirectories(Paths.get(streamDir))
-    // cached: two generation writes + two batch referees
+    // cached: two increment writes + two batch referees
     val (ev, halfA, halfB) = gsegSlice(g, d)
 
-    // stage a generation through the V2 writer, then rename its
-    // committed segments into the stream dir under a monotone prefix
-    def arrive(df: DataFrame, gen: Int): Unit = {
-      val tmp = s"${g.root}/gen$gen"
-      graft.sources.SegSource.write(df, tmp)
-      val listing = Files.list(Paths.get(tmp))
-      try listing.iterator().asScala.toSeq
-        .filter(_.toString.endsWith(".gseg")).sortBy(_.toString)
-        .foreach { f =>
-          Files.move(f, Paths.get(
-            f"$streamDir/b$gen%04d-${f.getFileName.toString}"))
-        }
-      finally listing.close()
-    }
+    def arrive(df: DataFrame): Unit =
+      df.write.format("gseg").mode("append").save(streamDir)
 
-    arrive(halfA, 0)
+    arrive(halfA)
     val q = g.start(typeTotals(iso.readStream.format("gseg")
         .schema(ev.schema).load(streamDir))
       .writeStream.outputMode(OutputMode.Complete)
@@ -1761,7 +1751,7 @@ object StreamGates {
     q.processAllAvailable()
     val got1 = typeMap(iso.table("seg_stream"))
     val firstOk = got1 == typeMap(typeTotals(halfA)) && got1.nonEmpty
-    arrive(halfB, 1)
+    arrive(halfB)
     q.processAllAvailable()
     q.stop()
 

@@ -264,6 +264,8 @@ class SegClusterSpec extends SparkSpec {
     o.writeByte(0); o.writeInt(2); o.write("zz".getBytes("UTF-8")) // s block
     o.flush()
     java.nio.file.Files.write(java.nio.file.Paths.get(legacy), bo.toByteArray)
+    // a file is in the table only once a generation names it
+    SegManifest.swap(dir, SegManifest.read(dir).get._2 :+ "legacy.gseg")
     val st2 = SegScan(dir, schema, Array.empty, None).estimateStatistics()
     val it = st2.columnStats().entrySet().iterator()
     while (it.hasNext) {

@@ -496,8 +496,7 @@ class SegConcurrencySpec extends SparkSpec {
     val otherMoves = Map(
       "SegMeta.scala" -> "the sidecar's atomic publish",
       "SegDv.scala" -> "a deletion vector's atomic publish",
-      "SegDml.scala" -> "RENAME TABLE moves the table directory",
-      "StreamGates.scala" -> "a gate feeds committed segments to a stream")
+      "SegDml.scala" -> "RENAME TABLE moves the table directory")
     val moves = lines.filter(_._3.contains("Files.move("))
       .groupBy(_._1.getFileName.toString)
     val offenders = moves.toSeq.flatMap { case (f, ls) =>
@@ -506,5 +505,40 @@ class SegConcurrencySpec extends SparkSpec {
     }
     assert(offenders.isEmpty, "file moves outside SegManifest that may " +
       s"rename staged segments: ${offenders.mkString(", ")}")
+  }
+
+  test("src/main lists a directory's segments only in SegManifest and " +
+      "SegSource.resolveSegments") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"${root.toAbsolutePath} not found")
+    val walk = Files.walk(root)
+    val calls =
+      try walk.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") &&
+          p.getFileName.toString != "SegManifest.scala")
+        .flatMap { p =>
+          val ls = Files.readAllLines(p).asScala.toIndexedSeq
+          // SegSource: the definition itself, and the read-only
+          // fallback in the two lines after `def resolveSegments(`
+          val resolve = ls.indexWhere(_.contains("def resolveSegments("))
+          ls.zipWithIndex.collect {
+            case (l, i) if l.contains("listSegments(") &&
+                !l.contains("def listSegments(") &&
+                !(p.getFileName.toString == "SegSource.scala" &&
+                  resolve >= 0 && i > resolve && i <= resolve + 2) =>
+              (p.getFileName.toString, s"$p:${i + 1}")
+          }
+        }.toList
+      finally walk.close()
+    // the one listing each of these files makes is of a staging temp
+    // dir the write just filled, never of a table
+    val stagingTemps = Map(
+      "SegDml.scala" -> "CTAS publishes the segments its staging dir holds",
+      "SegProcedures.scala" -> "compact publishes its rewrite's staging dir")
+    val offenders = calls.groupBy(_._1).toSeq.flatMap { case (f, cs) =>
+      if (stagingTemps.contains(f) && cs.size == 1) Nil else cs.map(_._2)
+    }
+    assert(offenders.isEmpty, "segment listings outside SegManifest and " +
+      s"resolveSegments: ${offenders.mkString(", ")}")
   }
 }

@@ -627,33 +627,15 @@ class SegSourceSpec extends SparkSpec {
     assert(back.filter(org.apache.spark.sql.functions.col("k") === 8).count() == 0)
   }
 
-  test("streaming offset JSON round-trips any path through base64") {
-    for (p <- Seq("", "/tmp/a/part-00001.gseg", "a\"b\\c\nd",
-        "sp ace/é中.gseg")) {
-      val off = SegOffset(p)
-      val stream = new SegMicroBatchStream("/tmp", null, Array.empty)
-      assert(stream.deserializeOffset(off.json())
-        .asInstanceOf[SegOffset].watermark === p)
-    }
-  }
-
   test("micro-batch stream: increments, and checkpoint restart is exactly-once") {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("gsegstream")
     val dir = base.toString
-    def arrive(gen: Int, lo: Long, hi: Long): Unit = {
-      val tmp = s"$dir-gen$gen"
-      SegSource.write((lo until hi).map(i => (i, s"v$i")).toDF("k", "s")
-        .repartition(2), tmp)
-      val l = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
-      try {
-        import scala.jdk.CollectionConverters._
-        l.iterator().asScala.toSeq.filter(_.toString.endsWith(".gseg"))
-          .foreach(f => java.nio.file.Files.move(f,
-            java.nio.file.Paths.get(f"$dir/b$gen%04d-${f.getFileName}")))
-      } finally l.close()
-    }
-    arrive(0, 0L, 50L)
+    // each increment is one path append: one committed generation
+    def arrive(lo: Long, hi: Long): Unit =
+      (lo until hi).map(i => (i, s"v$i")).toDF("k", "s").repartition(2)
+        .write.format("gseg").mode("append").save(dir)
+    arrive(0L, 50L)
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("k",
         org.apache.spark.sql.types.LongType),
@@ -676,10 +658,10 @@ class SegSourceSpec extends SparkSpec {
       assert(sunk() === (0L until 50L).toArray)
     } finally if (q != null) q.stop()
     // generation 1 lands while no query is running; a RESTARTED query
-    // must recover the committed watermark from the checkpoint
+    // must recover the committed generation from the checkpoint
     // (deserializeOffset) and emit exactly the new increment —
     // generation 0 is never replayed into the sink
-    arrive(1, 100L, 150L)
+    arrive(100L, 150L)
     q = null
     try {
       q = start()
@@ -690,6 +672,70 @@ class SegSourceSpec extends SparkSpec {
     graft.Fs.deleteRecursively(java.nio.file.Paths.get(outDir))
     graft.Fs.deleteRecursively(base)
     graft.Fs.deleteRecursively(java.nio.file.Paths.get(s"$dir-ckpt"))
+  }
+
+  private val longK = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("k",
+      org.apache.spark.sql.types.LongType)))
+
+  /** One segment of `vals` at `file`, as a task writer stages it. */
+  private def segmentOf(file: String, vals: Long*): String = {
+    SegSource.writeSegment(
+      vals.map(v => Array[AnyRef](java.lang.Long.valueOf(v))).toIndexedSeq,
+      longK, file)
+    file
+  }
+
+  private def keysOf(dir: String): Seq[Long] =
+    spark.read.format("gseg").load(dir).collect().map(_.getLong(0))
+      .toSeq.sorted
+
+  test("a replayed Complete-mode epoch on a path dir keeps the epoch's rows") {
+    val dir = java.nio.file.Files.createTempDirectory("gsegcomplete").toString
+    val sw = SegStreamingWrite(dir, longK, truncateEachEpoch = true)
+    def epoch(e: Long, tag: String, vals: Long*): Unit = sw.commit(e,
+      Array(SegCommitMessage(0, Seq(segmentOf(s"$dir/.tmp-$tag.gseg", vals: _*)))))
+    epoch(6L, "a", 9L)
+    epoch(7L, "b", 1L, 2L, 3L)
+    epoch(7L, "c", 1L, 2L, 3L) // the replay
+    assert(keysOf(dir) === Seq(1L, 2L, 3L))
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(s"$dir/.tmp-c.gseg")),
+      "the replay's staged temp must be discarded")
+  }
+
+  test("a path overwrite leaves only the new generation's segments") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("gsegpathow").toString
+    SegSource.write((0L until 20L).toDF("k").repartition(2), dir)
+    (20L until 30L).toDF("k").write.format("gseg").mode("append").save(dir)
+    SegSource.write(Seq(100L, 101L).toDF("k"), dir)
+    val (gen, live) = SegManifest.read(dir).get
+    assert(gen == 2L)
+    assert(SegSource.listSegments(dir).map(f =>
+      java.nio.file.Paths.get(f).getFileName.toString).sorted === live.sorted)
+    for (old <- Seq(0L, 1L)) {
+      val e = intercept[IllegalArgumentException](
+        SegManifest.retained(dir, old, "travel"))
+      assert(e.getMessage.contains("not retained"), e.getMessage)
+    }
+    assert(keysOf(dir) === Seq(100L, 101L))
+  }
+
+  test("a dir an older build left without a manifest reads, and its " +
+      "first append keeps those segments in generation 0") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("gseglegacy").toString
+    // what the listing protocol published: segments renamed in, no manifest
+    val old = Seq(segmentOf(s"$dir/part-00000-000-0ld.gseg", 1L, 2L),
+      segmentOf(s"$dir/part-00001-000-0ld.gseg", 3L))
+      .map(f => java.nio.file.Paths.get(f).getFileName.toString)
+    assert(keysOf(dir) === Seq(1L, 2L, 3L))
+    assert(!SegManifest.exists(dir), "a read must not write a manifest")
+    Seq(4L).toDF("k").write.format("gseg").mode("append").save(dir)
+    val (gen, names) = SegManifest.read(dir).get
+    assert(gen == 0L && old.forall(names.contains) && names.size == 3, names)
+    assert(keysOf(dir) === Seq(1L, 2L, 3L, 4L))
   }
 
   // ---- limit / TopN pushdown + runtime filtering (round 8) ----
