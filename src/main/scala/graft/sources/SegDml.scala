@@ -728,7 +728,8 @@ class SegRowLevelOperation(private[sources] val path: String,
 /** Scan builder for a row-level operation. Spark's
   * GroupBasedRowLevelOperationScanPlanning pushes the ORIGINAL DML
   * condition here (not the rewrite plan's negation) — it is used
-  * EXCLUSIVELY to prune whole segments via header zone maps; the
+  * EXCLUSIVELY to prune whole segments through the filter stages of
+  * [[SegPrune]] (zone maps, blooms); the
   * reader applies no row filter, because a group that contributes any
   * row must contribute all of them (kept rows ride through the
   * rewrite plan back into the replacement write). Unsupported
@@ -754,13 +755,11 @@ class SegGroupScanBuilder(full: StructType, path: String,
   }
 
   override def build(): Scan = {
-    val files = SegSource.resolveSegmentsForSession(path)
-    val cands = files.filter(f =>
-      pushed.forall(SegSource.mayMatch(SegSource.resolvedHeaderOf(f), _)))
-    op.candidates = cands
-    graft.Counters.add("gseg_rlo_files_total", files.size.toLong)
-    graft.Counters.add("gseg_rlo_candidates", cands.size.toLong)
-    new SegGroupScan(cands, required, emitFile, op)
+    val r = SegPrune(SegSource.resolvedHeaderOf(_), pushed.toSeq)
+      .run(SegSource.resolveSegmentsForSession(path))
+    r.publish(SegPrune.DmlCandidates)
+    op.candidates = r.kept
+    new SegGroupScan(r.kept, required, emitFile, op)
   }
 }
 

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{BufferedOutputStream, DataInputStream, DataOutputStream, EOFException, FileOutputStream}
+import java.io.{BufferedOutputStream, DataInputStream, DataOutputStream, FileOutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
@@ -677,26 +677,6 @@ object SegSource {
   private[sources] def bloomHashOf(v: Any): Option[Long] =
     hashableValue(v).map(cellHash64)
 
-  /** Group-grain bucket pruning: every row of a `bucket(n, col)`
-    * partition hashes to the group's id, so a point predicate on the
-    * UNDERLYING column can only match inside the value's own bucket —
-    * all other groups provably hold no match and empty WITHOUT
-    * changing the reported partition count. The bucket-layout dual of
-    * zone-map identity pruning. */
-  private[sources] def bucketGroupMayMatch(f: Filter, col: String,
-      n: Int, id: Int): Boolean = f match {
-    case EqualTo(a, v) if a == col =>
-      v != null && hashableValue(v).forall(x => bucketOf(x, n) == id)
-    case In(a, vs) if a == col =>
-      vs.exists(v =>
-        v != null && hashableValue(v).forall(x => bucketOf(x, n) == id))
-    case And(l, r) =>
-      bucketGroupMayMatch(l, col, n, id) && bucketGroupMayMatch(r, col, n, id)
-    case Or(l, r) =>
-      bucketGroupMayMatch(l, col, n, id) || bucketGroupMayMatch(r, col, n, id)
-    case _ => true
-  }
-
   /** Standard HLL estimate with the small-range linear-counting
     * correction (Flajolet et al. 2007). */
   private[sources] def hllEstimate(regs: Array[Byte]): Long = {
@@ -1329,51 +1309,90 @@ object SegSource {
   private[sources] def resolveSegments(dir: String): Seq[String] =
     SegManifest.segments(dir).getOrElse(listSegments(dir))
 
-  /** Per-file LAYOUT CONFORMANCE witness for incremental spec
-    * migration (`CALL compact(only_mismatched => true)`): does this
-    * segment provably satisfy every declared clustering key — the
-    * same evidence the scan's layout recovery trusts (identity:
-    * single-valued stats incl. the tag-11 decimal and ASCII-string
-    * forms; bucket: a matching-count writer stamp; temporal/truncate:
-    * single-unit stats under the monotone transform)? Conservative in
-    * the REWRITE direction: an unprovable file (null key cells,
-    * stat-less values) re-selects for rewrite — never wrongly shared.
-    * zorder is the caller's problem (no per-file witness exists). */
-  private[graft] def fileConformsTo(specs: Seq[String],
-      f: String): Boolean = {
-    if (specs.isEmpty) return true
-    val h = resolvedHeaderOf(f)
-    specs.forall { sp =>
-      val k = ClusterKey.parse(sp)
-      h.cols.find(_.name == k.col).exists { c =>
-        if (c.nNulls != 0) false
-        else k match {
-          case ClusterKey(_, Some(n), _, _) =>
-            h.props.get(s"bucket.${k.col}").exists(_.split(':') match {
-              case Array(bn, _) =>
-                scala.util.Try(bn.toInt).toOption.contains(n)
-              case _ => false
-            })
-          case ClusterKey(_, None, Some(u), _) =>
-            c.hasStats && (for { mn <- c.minVal; mx <- c.maxVal }
-              yield temporalOf(u, mn) == temporalOf(u, mx))
-              .getOrElse(false)
-          case ClusterKey(_, None, None, Some(w)) =>
-            if (c.hasStats)
-              (for { mn <- c.minVal; mx <- c.maxVal }
-                yield truncateOf(w, mn) == truncateOf(w, mx))
-                .getOrElse(false)
-            else c.tag == 3 &&
-              (for { mn <- c.minStr; mx <- c.maxStr }
-                yield truncateOf(w, UTF8String.fromString(mn)) ==
-                  truncateOf(w, UTF8String.fromString(mx)))
-                .getOrElse(false)
-          case _ => // identity: single-valued by exact stats
-            (c.hasStats && c.minBits == c.maxBits) ||
-              ((c.tag == 3 || c.tag == 11) &&
-                c.minStr.isDefined && c.minStr == c.maxStr)
+  /** The value of clustering key `k` in a file whose header PROVES the
+    * file holds exactly one, in Spark's internal representation; None
+    * when unprovable. Identity keys: single-valued stats (a non-ASCII
+    * or >48-byte string carries none). bucket(n): the writer's
+    * `bucket.<col> = n:<id>` stamp (stats cannot prove one bucket).
+    * Layout recovery and [[fileConformsTo]] both read keys here. */
+  private[sources] def keyOf(k: ClusterKey, h: SegHeader): Option[Any] = {
+    val cm = h.cols.find(_.name == k.col)
+    k match {
+      case ClusterKey(_, Some(n), _, _) =>
+        h.props.get(s"bucket.${k.col}").flatMap { v =>
+          v.split(':') match {
+            case Array(bn, bid) if bn.toIntOption.contains(n) =>
+              bid.toIntOption.map(java.lang.Integer.valueOf)
+            case _ => None // foreign bucket count: layout degrades
+          }
+        }
+      case ClusterKey(_, None, Some(u), _) =>
+        // temporal: the transform is MONOTONE, so equal unit
+        // ordinals at [min, max] prove the whole file lands in
+        // one unit — stats alone recover the key, no stamp needed
+        cm.flatMap { c =>
+          if (c.nNulls != 0 || !c.hasStats) None
+          else (c.minVal, c.maxVal) match {
+            case (Some(mn), Some(mx)) =>
+              val a = temporalOf(u, mn)
+              val b = temporalOf(u, mx)
+              if (a == b) Some(java.lang.Integer.valueOf(a)) else None
+            case _ => None
+          }
+        }
+      case ClusterKey(_, None, None, Some(w)) =>
+        // truncate: monotone like temporal — numeric stats for
+        // int keys, ASCII string stats (exact-only) for strings
+        cm.flatMap { c =>
+          if (c.nNulls != 0) None
+          else if (c.hasStats) (c.minVal, c.maxVal) match {
+            case (Some(mn), Some(mx)) =>
+              val a = truncateOf(w, mn)
+              val b = truncateOf(w, mx)
+              if (a == b) Some(a) else None
+            case _ => None
+          } else (c.minStr, c.maxStr) match {
+            // tag 3 only: tag 11 stores unscaled-decimal strings
+            // in these slots — never a STRING truncate key
+            case (Some(mn), Some(mx)) if c.tag == 3 =>
+              val a = UTF8String.fromString(mn)
+              val b = UTF8String.fromString(mx)
+              val ta = truncateOf(w, a)
+              val tb = truncateOf(w, b)
+              if (ta == tb) Some(ta) else None
+            case _ => None
+          }
+        }
+      case _ => cm.flatMap { c =>
+        if (c.nNulls != 0) None
+        else if (c.hasStats && c.minBits == c.maxBits) c.minVal
+        // identity key via tag-11 decimal stats: exact strings,
+        // single-valued file → the Decimal key
+        else if (c.tag == 11) (c.minStr, c.maxStr) match {
+          case (Some(mn), Some(mx)) if mn == mx => c.minVal
+          case _ => None
+        }
+        else (c.minStr, c.maxStr) match {
+          case (Some(mn), Some(mx)) if mn == mx && c.tag == 3 =>
+            Some(UTF8String.fromString(mn))
+          case _ => None
         }
       }
+    }
+  }
+
+  /** Per-file LAYOUT CONFORMANCE witness for `CALL compact(only_mismatched
+    * => true)`: does this segment provably hold one value of every
+    * declared key ([[keyOf]]) and no null key cells? An unprovable file
+    * re-selects for rewrite, never wrongly shared. zorder is the
+    * caller's problem (no per-file witness exists). */
+  private[graft] def fileConformsTo(specs: Seq[String],
+      f: String): Boolean = {
+    lazy val h = resolvedHeaderOf(f)
+    specs.forall { sp =>
+      val k = ClusterKey.parse(sp)
+      h.cols.exists(c => c.name == k.col && c.nNulls == 0) &&
+        keyOf(k, h).isDefined
     }
   }
 
@@ -1424,92 +1443,6 @@ object SegSource {
       org.apache.spark.sql.catalyst.util.DateTimeUtils
         .localDateToDays(d).toLong))
     case _ => None
-  }
-
-  /** File-grain zone-map check: can `f` possibly match given the
-    * header's per-column [min,max]? Conservative: unknown shapes and
-    * stat-less columns keep the file. */
-  private[sources] def mayMatch(h: SegHeader, f: Filter): Boolean = {
-    val byName = h.cols.map(c => c.name -> c).toMap
-    def range(attr: String): Option[(java.math.BigDecimal, java.math.BigDecimal)] =
-      for {
-        c <- byName.get(attr)
-        mn <- c.minVal.flatMap(bd)
-        mx <- c.maxVal.flatMap(bd)
-      } yield (mn, mx)
-    // string zone maps (v3, ASCII-exact — see the Version scaladoc:
-    // byte, UTF-16 and UTF8String orders provably agree under the
-    // emission precondition, for ANY filter value)
-    def sRange(attr: String): Option[(String, String)] =
-      // tag 3 only: tag 11 reuses the string-stat SLOTS for unscaled
-      // decimal strings, which must never serve a STRING comparison
-      byName.get(attr).filter(_.tag == 3).flatMap(c =>
-        for { mn <- c.minStr; mx <- c.maxStr } yield (mn, mx))
-    f match {
-      case EqualTo(a, v: String) => sRange(a).forall { case (mn, mx) =>
-        v.compareTo(mn) >= 0 && v.compareTo(mx) <= 0
-      }
-      case GreaterThan(a, v: String) =>
-        sRange(a).forall { case (_, mx) => mx.compareTo(v) > 0 }
-      case GreaterThanOrEqual(a, v: String) =>
-        sRange(a).forall { case (_, mx) => mx.compareTo(v) >= 0 }
-      case LessThan(a, v: String) =>
-        sRange(a).forall { case (mn, _) => mn.compareTo(v) < 0 }
-      case LessThanOrEqual(a, v: String) =>
-        sRange(a).forall { case (mn, _) => mn.compareTo(v) <= 0 }
-      // prefix pruning: some s with s.startsWith(v) can live in
-      // [mn, mx] iff mx >= v AND mn's |v|-prefix <= v (mn < inc(v)
-      // without computing the increment)
-      case StringStartsWith(a, v) if v != null =>
-        sRange(a).forall { case (mn, mx) =>
-          mx.compareTo(v) >= 0 &&
-            mn.substring(0, math.min(mn.length, v.length))
-              .compareTo(v) <= 0
-        }
-      case EqualTo(a, v) => (range(a), bd(v)) match {
-        case (Some((mn, mx)), Some(x)) =>
-          x.compareTo(mn) >= 0 && x.compareTo(mx) <= 0
-        case _ => true
-      }
-      case GreaterThan(a, v) => (range(a), bd(v)) match {
-        case (Some((_, mx)), Some(x)) => mx.compareTo(x) > 0
-        case _ => true
-      }
-      case GreaterThanOrEqual(a, v) => (range(a), bd(v)) match {
-        case (Some((_, mx)), Some(x)) => mx.compareTo(x) >= 0
-        case _ => true
-      }
-      case LessThan(a, v) => (range(a), bd(v)) match {
-        case (Some((mn, _)), Some(x)) => mn.compareTo(x) < 0
-        case _ => true
-      }
-      case LessThanOrEqual(a, v) => (range(a), bd(v)) match {
-        case (Some((mn, _)), Some(x)) => mn.compareTo(x) <= 0
-        case _ => true
-      }
-      case IsNull(a) => byName.get(a).forall(_.nNulls > 0)
-      case In(a, vs) =>
-        // a null in the IN-list matches nothing; the file survives
-        // if ANY value could sit inside its range (or a value is of
-        // a shape the stats can't judge)
-        (range(a), sRange(a)) match {
-          case (Some((mn, mx)), _) =>
-            vs.exists(v => bd(v) match {
-              case Some(x) => x.compareTo(mn) >= 0 && x.compareTo(mx) <= 0
-              case None => v != null
-            })
-          case (None, Some((mn, mx))) =>
-            vs.exists {
-              case v: String =>
-                v.compareTo(mn) >= 0 && v.compareTo(mx) <= 0
-              case v => v != null
-            }
-          case _ => true
-        }
-      case And(l, r) => mayMatch(h, l) && mayMatch(h, r)
-      case Or(l, r) => mayMatch(h, l) || mayMatch(h, r)
-      case _ => true
-    }
   }
 
   /** Row-grain evaluation of the pushed subset inside the reader. */
@@ -1583,62 +1516,6 @@ object SegSource {
       case Not(inner) => !evalFilter(inner, get)
       case _ => true
     }
-  }
-
-  /** LAZY bloom check at file grain: can any of the point predicates'
-    * values live in this file? Only reads filter bytes when the
-    * column carries a v5 bloom AND the predicate is =/IN — and then
-    * one seek + one bit-array read per (file, column). Conservative
-    * everywhere else; an =/IN whose non-null value set is EMPTY
-    * matches no row and kills the file outright (same verdict the
-    * zone maps give). */
-  private[sources] def bloomKeep(file: String, h: SegHeader,
-      filters: Seq[Filter]): Boolean =
-    filters.forall(bloomMayMatch(file, h, _))
-
-  private def bloomMayMatch(file: String, h: SegHeader,
-      f: Filter): Boolean = f match {
-    case EqualTo(a, v) => bloomContains(file, h, a, Seq(v))
-    case In(a, vs) => bloomContains(file, h, a, vs.toSeq)
-    case And(l, r) =>
-      bloomMayMatch(file, h, l) && bloomMayMatch(file, h, r)
-    case Or(l, r) =>
-      bloomMayMatch(file, h, l) || bloomMayMatch(file, h, r)
-    case _ => true
-  }
-
-  private def bloomContains(file: String, h: SegHeader,
-      attr: String, values: Seq[Any]): Boolean = {
-    val ci = h.cols.indexWhere(_.name == attr)
-    if (ci < 0) return true
-    val bl = h.cols(ci).bloom.getOrElse(return true)
-    if (bl._2 != BloomK) return true // foreign hash count: keep
-    val nonNull = values.filter(_ != null)
-    if (nonNull.isEmpty) return false // = NULL / IN () matches nothing
-    val hashes = nonNull.map(bloomHashOf)
-    if (hashes.exists(_.isEmpty)) return true // unjudgeable value
-    val words = readBloomWords(file, h, ci)
-    hashes.flatten.exists(bloomTest(words, _))
-  }
-
-  private def readBloomWords(file: String, h: SegHeader,
-      ci: Int): Array[Long] = {
-    val in = new DataInputStream(new java.io.BufferedInputStream(
-      new java.io.FileInputStream(file)))
-    try {
-      readHeader(in) // position after header
-      var toSkip = h.cols.map(_.bytes).sum +
-        h.cols.take(ci).flatMap(_.bloom.map(_._1.toLong)).sum
-      while (toSkip > 0) {
-        val sk = in.skip(toSkip)
-        if (sk <= 0) throw new EOFException(s"gseg: bad bloom seek in $file")
-        toSkip -= sk
-      }
-      val words = new Array[Long](h.cols(ci).bloom.get._1 / 8)
-      var i = 0
-      while (i < words.length) { words(i) = in.readLong(); i += 1 }
-      words
-    } finally in.close()
   }
 
   private[sources] def supportedFilter(f: Filter): Boolean = f match {
@@ -2025,19 +1902,13 @@ class SegScanBuilder(full: StructType, path: String,
   override def isPartiallyPushed(): Boolean = true
 
   /** LIMIT k: always accepted — the reader stops emitting after k
-    * surviving rows per partition, and (filter-free scans only)
-    * planning takes segments from the front until their header row
-    * counts cover k, skipping the rest. `isPartiallyPushed` stays at
-    * its default TRUE, so Spark keeps the global limit — pushdown is a
-    * performance statement here exactly as with filters. */
+    * surviving rows per partition, and planning front-takes segments
+    * ([[SegPrune.Limit]]). */
   override def pushLimit(l: Int): Boolean = { limit = Some(l); true }
 
   /** ORDER BY <numeric col> [ASC|DESC] LIMIT k: accepted when headers
     * can bound it — single sort key with stats and no pushed filters
-    * (filtered row counts would make the header-count pigeonhole
-    * unsound). Planning keeps only segments that can hold a top-k row;
-    * Spark still runs the real TopN over what survives
-    * (isPartiallyPushed = true). */
+    * ([[SegPrune.TopN]]); Spark still runs the real TopN. */
   override def pushTopN(orders: Array[
       org.apache.spark.sql.connector.expressions.SortOrder], l: Int): Boolean = {
     import org.apache.spark.sql.connector.expressions.{NullOrdering, SortDirection}
@@ -2188,10 +2059,13 @@ case class SegScan(path: String, required: StructType,
     * file sets. */
   @transient private lazy val resolvedFiles: Seq[String] =
     pinned.getOrElse(SegSource.resolveSegments(path))
-  /** Header row count net of the file's deletion vector — the number
-    * a masked scan will actually emit (pre-filter). */
-  private def effRows(f: String, h: SegSource.SegHeader): Long =
-    h.nRows.toLong - dvOf(f).map(SegDv.countOf(_).toLong).getOrElse(0L)
+  /** Each file's header, read at most once per scan: key grouping,
+    * statistics and every pruning pass look headers up here. */
+  @transient private lazy val header: String => SegSource.SegHeader =
+    SegPrune.memo(SegSource.resolvedHeaderOf(_, aliasOverride))
+  /** Rows the file's deletion vector masks. */
+  private def masked(f: String): Long =
+    dvOf(f).map(SegDv.countOf(_).toLong).getOrElse(0L)
 
   /** Storage-partitioned layout, recovered from HEADERS: with
     * `partition_col` declared and every segment holding exactly one
@@ -2217,98 +2091,22 @@ case class SegScan(path: String, required: StructType,
     partitionCols.map(SegSource.ClusterKey.parse)
 
   @transient private lazy val keyGroups
-      : Option[Seq[(Seq[Any], Seq[String])]] =
+      : Option[Seq[(Seq[Any], Seq[String])]] = {
     // emitFile/emitPos also decline key-grouping: the _file
     // synthesizer is a per-segment wrapper, and a metadata read has
     // no join-layout use
-    (if (aggs.isDefined || emitFile || emitPos || partitionCols.isEmpty) None
-     else Some(clusterKeys)).flatMap { pcs =>
-    val files = resolvedFiles
-    val kv = files.map { f =>
-      val h = SegSource.resolvedHeaderOf(f, aliasOverride)
-      // EVERY declared key must be recoverable from the file:
-      //  - identity: single-valued, proven by stats (numeric
-      //    min==max, or ASCII string-stat min==max — a non-ASCII or
-      //    >48-byte key value carries no stats and degrades the
-      //    layout whole, never wrongly)
-      //  - bucket(n): the writer's v4 `bucket.<col> = n:<id>` stamp
-      //    (stats CANNOT prove single-bucketness — a bucket's members
-      //    scatter across the value domain; only the writer knows)
-      // The composite key is the tuple, in internal representations.
-      val keys: Seq[Option[Any]] = pcs.map { k =>
-        val cm = h.cols.find(_.name == k.col)
-        k match {
-          case SegSource.ClusterKey(_, Some(n), _, _) =>
-            h.props.get(s"bucket.${k.col}").flatMap { v =>
-              v.split(':') match {
-                case Array(bn, bid) if bn.toInt == n =>
-                  Some(java.lang.Integer.valueOf(bid.toInt))
-                case _ => None // foreign bucket count: layout degrades
-              }
-            }
-          case SegSource.ClusterKey(_, None, Some(u), _) =>
-            // temporal: the transform is MONOTONE, so equal unit
-            // ordinals at [min, max] prove the whole file lands in
-            // one unit — stats alone recover the key, no stamp needed
-            cm.flatMap { c =>
-              if (c.nNulls != 0 || !c.hasStats) None
-              else (c.minVal, c.maxVal) match {
-                case (Some(mn), Some(mx)) =>
-                  val a = SegSource.temporalOf(u, mn)
-                  val b = SegSource.temporalOf(u, mx)
-                  if (a == b) Some(java.lang.Integer.valueOf(a)) else None
-                case _ => None
-              }
-            }
-          case SegSource.ClusterKey(_, None, None, Some(w)) =>
-            // truncate: monotone like temporal — numeric stats for
-            // int keys, ASCII string stats (exact-only) for strings
-            cm.flatMap { c =>
-              if (c.nNulls != 0) None
-              else if (c.hasStats) (c.minVal, c.maxVal) match {
-                case (Some(mn), Some(mx)) =>
-                  val a = SegSource.truncateOf(w, mn)
-                  val b = SegSource.truncateOf(w, mx)
-                  if (a == b) Some(a) else None
-                case _ => None
-              } else (c.minStr, c.maxStr) match {
-                // tag 3 only: tag 11 stores unscaled-decimal strings
-                // in these slots — never a STRING truncate key
-                case (Some(mn), Some(mx)) if c.tag == 3 =>
-                  val a = UTF8String.fromString(mn)
-                  val b = UTF8String.fromString(mx)
-                  val ta = SegSource.truncateOf(w, a)
-                  val tb = SegSource.truncateOf(w, b)
-                  if (ta == tb) Some(ta) else None
-                case _ => None
-              }
-            }
-          case _ => cm.flatMap { c =>
-            if (c.nNulls != 0) None
-            else if (c.hasStats && c.minBits == c.maxBits) c.minVal
-            // identity key via tag-11 decimal stats: exact strings,
-            // single-valued file → the Decimal key
-            else if (c.tag == 11) (c.minStr, c.maxStr) match {
-              case (Some(mn), Some(mx)) if mn == mx => c.minVal
-              case _ => None
-            }
-            else (c.minStr, c.maxStr) match {
-              case (Some(mn), Some(mx)) if mn == mx && c.tag == 3 =>
-                Some(UTF8String.fromString(mn))
-              case _ => None
-            }
-          }
-        }
-      }
-      (f, if (keys.forall(_.isDefined)) Some(keys.map(_.get)) else None)
-    }
-    if (files.isEmpty || kv.exists(_._2.isEmpty)) None
+    if (aggs.isDefined || emitFile || emitPos || partitionCols.isEmpty) None
     else {
+      // EVERY declared key must be recoverable from every file; the
+      // composite key is the tuple
+      val kv = resolvedFiles.map(f =>
+        f -> clusterKeys.map(SegSource.keyOf(_, header(f))))
+      if (kv.isEmpty || kv.exists(_._2.exists(_.isEmpty))) None
       // deterministic group order via a stable rendering (key
       // components are single-typed per position; SPJ matches groups
       // by key equality, not order)
-      Some(kv.groupBy(_._2.get).toSeq
-        .sortBy(_._1.map(String.valueOf).mkString(""))
+      else Some(kv.groupBy(_._2.map(_.get)).toSeq
+        .sortBy(_._1.map(String.valueOf).mkString(""))
         .map { case (k, fs) => (k, fs.map(_._1)) })
     }
   }
@@ -2325,19 +2123,27 @@ case class SegScan(path: String, required: StructType,
         new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(0)
     }
 
+  /** The pruning pass over these files under `filters`. Header
+    * aggregates answer from every file, so nothing is front-taken. */
+  private def prune(filters: Seq[Filter]): SegPrune.Result =
+    SegPrune(header, filters, masked,
+      keyGroups.map(SegPrune.Groups(clusterKeys, _)),
+      limit.filter(_ => aggs.isEmpty), topN.filter(_ => aggs.isEmpty))
+      .run(resolvedFiles)
+  /** The pass over compile-time filters: statistics' survivors, and the
+    * plan itself when no runtime filter arrives. */
+  @transient private[sources] lazy val compiled: SegPrune.Result =
+    prune(pushed.toSeq)
+
   /** Header-derived table statistics [STATS]: exact row count and the
     * PRUNED byte size (only the required columns' block bytes, summed
-    * over segments that survive the compile-time zone maps) — so a
+    * over segments that every filter stage of the compile-time pass
+    * keeps — runtime filters arrive after join planning) — so a
     * narrow projection of a wide table reports its true scan cost and
     * Spark's join planning (broadcast threshold, AQE) sees a real
-    * number instead of defaultSizeInBytes=MaxValue. Costs one header
-    * read per file at plan time, which planInputPartitions pays
-    * anyway. */
+    * number instead of defaultSizeInBytes=MaxValue. */
   override def estimateStatistics()
       : org.apache.spark.sql.connector.read.Statistics = {
-    val files = resolvedFiles
-    val surviving = files.map(f => (f, SegSource.resolvedHeaderOf(f, aliasOverride)))
-      .filter { case (_, h) => pushed.forall(SegSource.mayMatch(h, _)) }
     val wanted = required.fieldNames.toSet
     var rows = 0L
     var bytes = 0L
@@ -2350,11 +2156,12 @@ case class SegScan(path: String, required: StructType,
     val merged = scala.collection.mutable.Map.empty[String, Array[Byte]]
     val nulls = scala.collection.mutable.Map.empty[String, Long]
     val sketchless = scala.collection.mutable.Set.empty[String]
-    surviving.foreach { case (f, h) =>
+    compiled.matching.foreach { f =>
+      val h = header(f)
       // net of deletion vectors: the row count a masked scan emits
       // (NDV/null counts stay header-grain — deleted rows can only
       // make them overestimates, stated in the DV scaladoc)
-      rows += effRows(f, h)
+      rows += h.nRows.toLong - masked(f)
       h.cols.foreach { c =>
         if (wanted.contains(c.name)) {
           bytes += c.bytes
@@ -2373,6 +2180,8 @@ case class SegScan(path: String, required: StructType,
         }
       }
     }
+    def opt(v: Option[Long]) =
+      v.fold(java.util.OptionalLong.empty())(java.util.OptionalLong.of)
     val colStats: java.util.Map[
         org.apache.spark.sql.connector.expressions.NamedReference,
         org.apache.spark.sql.connector.read.colstats.ColumnStatistics] =
@@ -2385,20 +2194,14 @@ case class SegScan(path: String, required: StructType,
         colStats.put(
           org.apache.spark.sql.connector.expressions.Expressions.column(n),
           new org.apache.spark.sql.connector.read.colstats.ColumnStatistics {
-            override def distinctCount(): java.util.OptionalLong =
-              ndv.map(java.util.OptionalLong.of)
-                .getOrElse(java.util.OptionalLong.empty())
-            override def nullCount(): java.util.OptionalLong =
-              nc.map(java.util.OptionalLong.of)
-                .getOrElse(java.util.OptionalLong.empty())
+            override def distinctCount(): java.util.OptionalLong = opt(ndv)
+            override def nullCount(): java.util.OptionalLong = opt(nc)
           })
     }
     val rowsF = rows; val bytesF = math.max(bytes, 1L)
     new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(bytesF)
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rowsF)
+      override def sizeInBytes(): java.util.OptionalLong = opt(Some(bytesF))
+      override def numRows(): java.util.OptionalLong = opt(Some(rowsF))
       override def columnStats(): java.util.Map[
           org.apache.spark.sql.connector.expressions.NamedReference,
           org.apache.spark.sql.connector.read.colstats.ColumnStatistics] =
@@ -2408,8 +2211,8 @@ case class SegScan(path: String, required: StructType,
 
   /** Runtime (DPP-style) filters, delivered by Spark after the
     * filtering side of a join has executed — arrives before
-    * planInputPartitions, where they feed the same zone-map check as
-    * compile-time filters AND the row-grain reader. Purely additive:
+    * planInputPartitions, where they join the compile-time filters in
+    * the pruning pass AND the row-grain reader. Purely additive:
     * Spark re-evaluates the join, so an untranslatable predicate is
     * dropped, never wrong. */
   @transient private var runtime: Array[Filter] = Array.empty
@@ -2461,142 +2264,20 @@ case class SegScan(path: String, required: StructType,
     }
   }
 
-  /** One partition per surviving segment. This is the split-planning
-    * hook, in three layers:
-    *  1. zone maps vs (compile-time ∪ runtime) filters — non-matching
-    *     FILES never become tasks;
-    *  2. a pushed LIMIT takes files from the front until header row
-    *     counts cover k (only legal with zero filters: filtered
-    *     survivor counts are unknowable from headers);
-    *  3. a pushed TopN keeps only files that can hold a top-k row:
-    *     order files by min (DESC sort; by max for ASC), accumulate
-    *     non-null counts to k — every one of those rows is ≥ its
-    *     file's min, so the kth-best value is ≥ the boundary τ — then
-    *     drop files whose max < τ (min > τ for ASC). Sound because
-    *     header stats are exact; declined when nulls could lead the
-    *     ordering (NULLS FIRST with nulls present) or when non-null
-    *     counts never reach k.
-    * (A production source would additionally coalesce small segments
-    * into shared splits; segment=split keeps the demo honest.) */
+  /** One partition per segment the pruning pass keeps; a key-grouped
+    * layout plans one per key value, and a group the pass empties
+    * stays (the partition COUNT the reported partitioning promised).
+    * A production source would also coalesce small segments. */
   override def planInputPartitions(): Array[InputPartition] = {
-    // key-grouped layout: one partition per key value (files within a
-    // group may still be zone-map-pruned by pushed filters — that
-    // empties a group without changing the partition COUNT the
-    // reported partitioning promised)
+    val r = if (runtime.isEmpty) compiled else prune((pushed ++ runtime).toSeq)
+    r.publish(SegPrune.BatchScan)
     keyGroups match {
-      case Some(gs) => // keyGroups already implies aggs.isEmpty
-        val kept = gs.map { case (k, fs) =>
-          // bucket-grain pruning: a point predicate on a bucket key
-          // empties every group but the value's own bucket (the
-          // partition COUNT the reported partitioning promised is
-          // preserved — groups empty, never vanish)
-          val bucketOk = clusterKeys.zipWithIndex.forall {
-            case (ck, si) => ck.buckets match {
-              case Some(n) => pushed.forall(
-                SegSource.bucketGroupMayMatch(_, ck.col, n,
-                  k(si).asInstanceOf[java.lang.Integer].intValue))
-              case None => true // identity keys: zone maps prune per file
-            }
-          }
-          if (!bucketOk) {
-            graft.Counters.add("gseg_bucket_groups_pruned", 1L)
-            SegKeyedPartition(Nil, k)
-          } else {
-            val kf = fs.filter(f =>
-              pushed.forall(SegSource.mayMatch(
-                SegSource.resolvedHeaderOf(f, aliasOverride), _)))
-            SegKeyedPartition(kf, k, kf.map(dvOf))
-          }
-        }
-        graft.Counters.add("gseg_key_groups", gs.size.toLong)
-        // files-skipped accounting, SAME semantics as the plain path
-        // below ("files that never became read tasks"): zone-map
-        // losers inside kept groups plus every file of a bucket-pruned
-        // group. Groups themselves never vanish (the partition-count
-        // contract above); only their file lists shrink.
-        val totalFiles = gs.iterator.map(_._2.size.toLong).sum
-        val keptFiles = kept.iterator.map(_.files.size.toLong).sum
-        graft.Counters.add("gseg_files_total", totalFiles)
-        graft.Counters.add("gseg_files_skipped", totalFiles - keptFiles)
-        return kept.toArray[InputPartition]
-      case _ => ()
+      case Some(gs) => gs.map { case (k, fs) =>
+        val kf = fs.filter(r.keptSet)
+        SegKeyedPartition(kf, k, kf.map(dvOf))
+      }.toArray[InputPartition]
+      case None => r.kept.map(f => SegInputPartition(f, dvOf(f))).toArray
     }
-    val files = resolvedFiles
-    val allFilters = pushed ++ runtime
-    val kept =
-      if (aggs.isDefined) files // aggregates only push with no filters
-      else files.filter(f => {
-        val h = SegSource.resolvedHeaderOf(f, aliasOverride)
-        allFilters.forall(SegSource.mayMatch(h, _)) && {
-          // v5 blooms: point lookups prune files zone maps cannot
-          // (unsorted keys have overlapping ranges everywhere)
-          val keep = SegSource.bloomKeep(f, h, allFilters.toSeq)
-          if (!keep) graft.Counters.add("gseg_bloom_files_skipped", 1L)
-          keep
-        }
-      })
-    val afterLimit = (limit, topN) match {
-      case (Some(k), None) if allFilters.isEmpty && aggs.isEmpty =>
-        var need = k.toLong
-        val taken = kept.takeWhile { f =>
-          val take = need > 0
-          // net of deletion vectors: a header count that included
-          // masked rows would cover k with files that cannot deliver
-          if (take) need -= effRows(f,
-            SegSource.resolvedHeaderOf(f, aliasOverride))
-          take
-        }
-        graft.Counters.add("gseg_limit_files_skipped",
-          (kept.size - taken.size).toLong)
-        taken
-      case (_, Some(t)) if allFilters.isEmpty && aggs.isEmpty =>
-        val stats = kept.map { f =>
-          val h = SegSource.resolvedHeaderOf(f, aliasOverride)
-          val cm = h.cols.find(_.name == t.col)
-          // deletion vectors: UNDERSTATE the non-null count (assume
-          // every masked row was non-null) — the pigeonhole then
-          // counts more files toward k, τ only loosens, and the
-          // stale-wide min/max stats are conservative by the same
-          // argument as zone maps. Sound, never tight.
-          val dvc = dvOf(f).map(SegDv.countOf(_).toLong).getOrElse(0L)
-          val nonNull = math.max(0L,
-            h.nRows.toLong - cm.map(_.nNulls).getOrElse(0L) - dvc)
-          (f, cm.flatMap(_.minVal).flatMap(SegSource.bd),
-            cm.flatMap(_.maxVal).flatMap(SegSource.bd),
-            nonNull, cm.map(_.nNulls).getOrElse(0L))
-        }
-        val anyNulls = stats.exists(_._5 > 0)
-        val haveStats = stats.forall(s => s._2.isDefined && s._3.isDefined)
-        val survivors =
-          if ((t.nullsFirst && anyNulls) || !haveStats) kept
-          else {
-            // boundary τ from the pigeonhole over exact header counts
-            val ordered =
-              if (t.desc) stats.sortBy(_._2.get).reverse // by min desc
-              else stats.sortBy(_._3.get)                // by max asc
-            var acc = 0L
-            var tau: Option[java.math.BigDecimal] = None
-            val it = ordered.iterator
-            while (it.hasNext && acc < t.k) {
-              val s = it.next()
-              acc += s._4
-              tau = if (t.desc) s._2 else s._3
-            }
-            if (acc < t.k) kept // fewer than k sortable rows: keep all
-            else kept.zip(stats.map(x => (x._2, x._3))).collect {
-              case (f, (mn, mx))
-                if !(t.desc && mx.get.compareTo(tau.get) < 0) &&
-                   !(!t.desc && mn.get.compareTo(tau.get) > 0) => f
-            }
-          }
-        graft.Counters.add("gseg_topn_files_skipped",
-          (kept.size - survivors.size).toLong)
-        survivors
-      case _ => kept
-    }
-    graft.Counters.add("gseg_files_total", files.size.toLong)
-    graft.Counters.add("gseg_files_skipped", (files.size - afterLimit.size).toLong)
-    afterLimit.map(f => SegInputPartition(f, dvOf(f))).toArray
   }
   override def createReaderFactory(): PartitionReaderFactory = {
     val inner = SegReaderFactory(required, pushed ++ runtime, aggs,
@@ -2748,16 +2429,12 @@ class SegGenMicroBatchStream(path: String, required: StructType,
           Nil // the whole commit is skipped, its added files included
         } else (cur -- prev).toSeq.sorted.map(n => (n, curM.dvs.get(n)))
       }
-    val kept = batch.map { case (n, dvN) =>
-      (s"$path/$n", dvN.map(d => s"$path/$d"))
-    }.filter { case (f, _) =>
-      pushed.forall(SegSource.mayMatch(SegSource.resolvedHeaderOf(f), _))
-    }
-    graft.Counters.add("gseg_stream_gen_files", batch.size.toLong)
-    graft.Counters.add("gseg_stream_gen_skipped",
-      (batch.size - kept.size).toLong)
-    kept.map { case (f, dvP) => SegInputPartition(f, dvP) }
-      .toArray[InputPartition]
+    val parts = batch.map { case (n, dvN) =>
+      SegInputPartition(s"$path/$n", dvN.map(d => s"$path/$d")) }
+    val r = SegPrune(SegSource.resolvedHeaderOf(_), pushed.toSeq)
+      .run(parts.map(_.file))
+    r.publish(SegPrune.StreamBatch)
+    parts.filter(p => r.keptSet(p.file)).toArray[InputPartition]
   }
   override def createReaderFactory(): PartitionReaderFactory =
     SegReaderFactory(required, pushed, None)

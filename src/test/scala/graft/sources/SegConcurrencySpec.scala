@@ -399,8 +399,9 @@ class SegConcurrencySpec extends SparkSpec {
       fourWrites(iso, "tc.ns.t").foreach { case (what, write) =>
         refused(what)(write())
       }
-      // path writes go through the listing protocol; the catalog's DML
-      // first migrates the dir to a manifest, a main commit
+      // path writes commit through `commitStaged` and have no WAP
+      // branch; the catalog's DML first migrates the dir to a
+      // manifest, a main commit
       refused("path INSERT")(
         rows.write.format("gseg").mode("append").save(pdir))
       refused("path INSERT OVERWRITE")(

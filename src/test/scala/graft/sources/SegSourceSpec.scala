@@ -373,9 +373,8 @@ class SegSourceSpec extends SparkSpec {
     val sw = SegStreamingWrite(dir, schema, truncateEachEpoch = false)
     sw.commit(3L, Array(staged("a", Seq(1L, 2L))))
     assert(spark.read.format("gseg").load(dir).count() === 2)
-    // a LISTING prefix cannot prove the first commit completed (a
-    // crash mid-rename leaves a partial epoch), so the replay must
-    // REPLACE the epoch's files — same row count, never doubled
+    // the epoch's prefix is already in the manifest, so the replay is
+    // discarded whole — same row count, never doubled
     sw.commit(3L, Array(staged("b", Seq(1L, 2L))))
     assert(spark.read.format("gseg").load(dir).count() === 2)
     // other epochs append normally
