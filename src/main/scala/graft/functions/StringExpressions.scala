@@ -10,6 +10,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, StringType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native string-canonicalization expression (SURVEY.md §2.8 extension
@@ -207,6 +208,115 @@ object StringExpressions {
       copy(left = newLeft, right = newRight)
   }
 
+  private final val Comma: Byte = ','
+
+  /** Number of comma-separated fields in `s`: its ',' bytes plus one,
+    * as `len(line.split(','))` in Python. Called per row from generated
+    * code. A byte scan is exact on any UTF-8 input, because 0x2C never
+    * occurs inside a multi-byte sequence. */
+  def fieldCountJava(s: UTF8String): Int = {
+    val base = s.getBaseObject
+    var p = s.getBaseOffset
+    val end = p + s.numBytes
+    var n = 1
+    while (p < end) {
+      if (Platform.getByte(base, p) == Comma) n += 1
+      p += 1
+    }
+    n
+  }
+
+  /** Field `i` (0-based) of `s` split at ',' with Python `str.split(',')`
+    * semantics: no quoting, empty and trailing fields count. Scans the
+    * bytes up to the field's end and copies only the field, so no array
+    * and no Java String is built. Null when `i` is negative or past the
+    * last field.
+    *
+    * The field is a copy of the line's bytes, taken as they are: on
+    * invalid UTF-8 it keeps the invalid bytes, where `split(line, ",")`
+    * (which decodes to a Java String and re-encodes) turns each
+    * malformed sequence into U+FFFD. The field count and the valid
+    * bytes of every field agree with `split`. */
+  def fieldAtJava(s: UTF8String, i: Int): UTF8String = {
+    if (i < 0) return null
+    val base = s.getBaseObject
+    var start = s.getBaseOffset
+    val end = start + s.numBytes
+    var k = 0
+    while (k < i) {
+      while (start < end && Platform.getByte(base, start) != Comma) start += 1
+      if (start == end) return null
+      start += 1
+      k += 1
+    }
+    var stop = start
+    while (stop < end && Platform.getByte(base, stop) != Comma) stop += 1
+    val bytes = new Array[Byte]((stop - start).toInt)
+    Platform.copyMemory(base, start, bytes, Platform.BYTE_ARRAY_OFFSET, bytes.length)
+    UTF8String.fromBytes(bytes)
+  }
+
+  /** field_count(line): see [[fieldCountJava]]. With [[FieldAt]] it
+    * replaces `size(split(line, ",", -1))` plus `[i]` on text lines. */
+  case class FieldCount(child: Expression) extends UnaryExpression {
+    override def dataType: DataType = IntegerType
+    override def prettyName: String = "field_count"
+    override def checkInputDataTypes(): TypeCheckResult =
+      child.dataType match {
+        case _: StringType => TypeCheckResult.TypeCheckSuccess
+        case t => TypeCheckResult.TypeCheckFailure(
+          s"$prettyName requires a string argument, got ${t.sql}")
+      }
+
+    override def nullSafeEval(v: Any): Any =
+      fieldCountJava(v.asInstanceOf[UTF8String])
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, c =>
+        s"${ev.value} = graft.functions.StringExpressions.fieldCountJava($c);")
+
+    override protected def withNewChildInternal(newChild: Expression): FieldCount =
+      copy(child = newChild)
+  }
+
+  /** field_at(line, i): see [[fieldAtJava]]. */
+  case class FieldAt(left: Expression, right: Expression)
+      extends BinaryExpression {
+    override def dataType: DataType = StringType
+    override def nullable: Boolean = true
+    override def prettyName: String = "field_at"
+    override def checkInputDataTypes(): TypeCheckResult =
+      (left.dataType, right.dataType) match {
+        case (_: StringType, IntegerType) => TypeCheckResult.TypeCheckSuccess
+        case (l, r) => TypeCheckResult.TypeCheckFailure(
+          s"$prettyName requires (string, int) arguments, got (${l.sql}, ${r.sql})")
+      }
+
+    override def nullSafeEval(s: Any, i: Any): Any =
+      fieldAtJava(s.asInstanceOf[UTF8String], i.asInstanceOf[Int])
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, (s, i) =>
+        s"""${ev.value} = graft.functions.StringExpressions.fieldAtJava($s, $i);
+           |${ev.isNull} = ${ev.value} == null;""".stripMargin)
+
+    override protected def withNewChildrenInternal(
+        newLeft: Expression, newRight: Expression): FieldAt =
+      copy(left = newLeft, right = newRight)
+  }
+
+  /** Column-API entry point for [[FieldCount]]. */
+  def fieldCount(line: Column): Column = {
+    register(SparkSession.active)
+    call_function("field_count", line)
+  }
+
+  /** Column-API entry point for [[FieldAt]]. */
+  def fieldAt(line: Column, i: Int): Column = {
+    register(SparkSession.active)
+    call_function("field_at", line, org.apache.spark.sql.functions.lit(i))
+  }
+
   /** Column-API entry point for [[WordNgrams]]. */
   def wordNgrams(tokens: Column, n: Int): Column = {
     register(SparkSession.active)
@@ -232,7 +342,9 @@ object StringExpressions {
   val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = Seq(
     ("unaccent", exprs => Unaccent(exprs.head)),
     ("jaro_winkler", exprs => JaroWinkler(exprs(0), exprs(1))),
-    ("word_ngrams", exprs => WordNgrams(exprs(0), exprs(1))))
+    ("word_ngrams", exprs => WordNgrams(exprs(0), exprs(1))),
+    ("field_count", exprs => FieldCount(exprs.head)),
+    ("field_at", exprs => FieldAt(exprs(0), exprs(1))))
 
   /** SQL registration on a session built without [[graft.GraftExtensions]]:
     * makes [[sqlFunctions]] usable from spark.sql too. */

@@ -4,14 +4,27 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.StringExpressions.{fieldAt, fieldCount}
+
 /** Validated readers for the reference's ethereum-etl-shaped inputs
   * (SURVEY.md §1.2). The reference reads raw text lines and filters with
   * per-job `good_line` predicates (arity + per-column parseability, e.g.
   * etherTransactionsAnalysis.py:19-28); schema-typed CSV reads with
   * DROPMALFORMED would under-approximate those row drops (SURVEY §7.4.3),
-  * so parity readers split lines declaratively and apply the exact
-  * predicate set — all Catalyst expressions, fully codegen'd, and the
-  * text scan parallelizes per input split exactly like a CSV scan.
+  * so these readers scan text lines and apply the exact predicate set.
+  *
+  * A line is parsed by two native expressions from
+  * [[graft.functions.StringExpressions]], both codegen'd to one static
+  * call per row: `field_count` (the line's ',' bytes plus one) gives
+  * the arity filter, and `field_at(line, i)` gives field i by scanning
+  * the line's bytes and copying only that field, with the semantics of
+  * Python's `str.split` at ','. Catalyst pushes each job's filters
+  * below the projection and copies the field expression into every
+  * predicate. A copied `split` would decode and split the whole line
+  * once per copy (4 times per transactions line, 5 per blocks line); a
+  * copied `field_at` costs one partial byte scan and one field copy,
+  * and builds no array and no Java String. The text scan parallelizes
+  * per input split exactly like a CSV scan.
   *
   * Each reader takes the predicate requirements of the calling job and
   * returns named, typed columns so downstream query code never touches
@@ -32,15 +45,12 @@ object EthSources {
     hc.set("fs.s3a.connection.ssl.enabled", sslEnabled.toString)
   }
 
-  /** Raw line → fields array with exact-arity filter (good_line's
-    * `len(fields) != n` check). split limit -1 keeps trailing empty
-    * fields, matching Python str.split(','). */
-  private def fieldsOf(s: SparkSession, path: String, arity: Int): DataFrame =
-    s.read.text(path)
-      .select(split(col("value"), ",", -1).as("f"))
-      .filter(size(col("f")) === arity)
+  /** Lines with exactly `arity` fields (good_line's `len(fields) != n`
+    * check). */
+  private def linesOf(s: SparkSession, path: String, arity: Int): DataFrame =
+    s.read.text(path).filter(fieldCount(col("value")) === arity)
 
-  private def fd(i: Int): Column = col("f").getItem(i)
+  private def fd(i: Int): Column = fieldAt(col("value"), i)
 
   /** transactions.csv — 15 positional fields; the five the reference
     * dereferences become named columns. Per-job requirements:
@@ -53,7 +63,7 @@ object EthSources {
   def transactions(s: SparkSession, path: String,
       needValue: Boolean = false, needTimestamp: Boolean = false,
       needGasPrice: Boolean = false, needToPrefix: Boolean = false): DataFrame = {
-    var df = fieldsOf(s, path, 15).select(
+    var df = linesOf(s, path, 15).select(
       fd(6).as("to_address"),
       fd(7).try_cast(DoubleType).as("value"),
       fd(8).try_cast(DoubleType).as("gas"),
@@ -70,7 +80,7 @@ object EthSources {
     * (etherTop10Contracts.py:34-37, ethergasguzzlers.py:31-36). */
   def contracts(s: SparkSession, path: String,
       needAddrPrefix: Boolean = false): DataFrame = {
-    var df = fieldsOf(s, path, 6).select(fd(0).as("address"))
+    var df = linesOf(s, path, 6).select(fd(0).as("address"))
     if (needAddrPrefix) df = df.filter(col("address").startsWith("0x"))
     df
   }
@@ -80,7 +90,7 @@ object EthSources {
     * etherTopMiners.py:18-25). */
   def blocks(s: SparkSession, path: String,
       needNumber: Boolean = false, needMiner: Boolean = false): DataFrame = {
-    var df = fieldsOf(s, path, 19).select(
+    var df = linesOf(s, path, 19).select(
       fd(0).try_cast(LongType).as("number"),
       fd(4).as("sha3_uncles"), fd(5).as("logs_bloom"),
       fd(6).as("transactions_root"), fd(7).as("state_root"),
@@ -120,7 +130,6 @@ object EthSources {
     * simply never joins, exactly as in the reference. */
   def contractsTop10(s: SparkSession, path: String): DataFrame =
     s.read.text(path)
-      .select(split(col("value"), ",", -1).as("f"))
-      .filter(size(col("f")) >= 2)
+      .filter(fieldCount(col("value")) >= 2)
       .select(fd(1).as("address"))
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{DataInputStream, EOFException}
+import java.io.EOFException
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.sources._
@@ -192,22 +192,22 @@ private[sources] object SegPrune {
       hashes.flatten.exists(SegSource.bloomTest(words, _))
     }
 
+    /** The blooms close the file, in column order, so column `ci`'s
+      * starts at fileLen − Σbloom + Σbloom(cols before ci), the
+      * arithmetic SegPartitionReader also relies on: one seek, and the
+      * header is not decoded again. */
     private def readBloomWords(file: String, h: SegHeader,
         ci: Int): Array[Long] = {
-      val in = new DataInputStream(new java.io.BufferedInputStream(
-        new java.io.FileInputStream(file)))
+      val sizes = h.cols.map(_.bloom.map(_._1.toLong).getOrElse(0L))
+      val in = new java.io.RandomAccessFile(file, "r")
       try {
-        SegSource.readHeader(in) // position after header
-        var toSkip = h.cols.map(_.bytes).sum +
-          h.cols.take(ci).flatMap(_.bloom.map(_._1.toLong)).sum
-        while (toSkip > 0) {
-          val sk = in.skip(toSkip)
-          if (sk <= 0) throw new EOFException(s"gseg: bad bloom seek in $file")
-          toSkip -= sk
-        }
-        val words = new Array[Long](h.cols(ci).bloom.get._1 / 8)
-        var i = 0
-        while (i < words.length) { words(i) = in.readLong(); i += 1 }
+        val at = in.length() - sizes.sum + sizes.take(ci).sum
+        if (at < 0) throw new EOFException(s"gseg: bad bloom seek in $file")
+        val bytes = new Array[Byte](sizes(ci).toInt)
+        in.seek(at)
+        in.readFully(bytes)
+        val words = new Array[Long](bytes.length / 8)
+        java.nio.ByteBuffer.wrap(bytes).asLongBuffer().get(words)
         words
       } finally in.close()
     }

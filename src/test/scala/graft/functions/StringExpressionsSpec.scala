@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
@@ -108,5 +109,51 @@ class StringExpressionsSpec extends AnyFunSuite {
       .head().getLong(0)
     // "cafe", "eclair", "nono", "ascii only"
     assert(got == 4)
+  }
+
+  private def fc(s: String): Int =
+    StringExpressions.fieldCountJava(UTF8String.fromString(s))
+  private def fa(s: String, i: Int): String =
+    Option(StringExpressions.fieldAtJava(UTF8String.fromString(s), i))
+      .map(_.toString).orNull
+
+  test("field_count and field_at follow Python str.split(',')") {
+    assert(fc("") == 1 && fa("", 0) == "")
+    assert(fc("abc") == 1 && fa("abc", 0) == "abc")
+    assert(fc(",") == 2 && fa(",", 0) == "" && fa(",", 1) == "")
+    assert(fc(",a,,b,") == 5)
+    assert((0 until 5).map(fa(",a,,b,", _)) == Seq("", "a", "", "b", ""))
+    assert(fa("ü,中文,𝄞", 1) == "中文" && fa("ü,中文,𝄞", 2) == "𝄞")
+    // out of range and negative: null, like an array index past the end
+    assert(fa("a,b", 2) == null && fa("a,b", -1) == null && fa("", 1) == null)
+  }
+
+  test("field_at returns a copy that outlives the line's buffer") {
+    val bytes = "ab,cd".getBytes("UTF-8")
+    val f = StringExpressions.fieldAtJava(UTF8String.fromBytes(bytes), 1)
+    bytes(3) = 'x'.toByte
+    assert(f.toString == "cd")
+  }
+
+  test("invalid UTF-8: same field count as split, raw bytes where split has U+FFFD") {
+    // a lone lead byte, a stray continuation byte and 0xFF, around commas
+    val line = Array[Byte]('0', 'x', 'a', 0xC3.toByte, ',', 0x80.toByte, 'b',
+      ',', 0xFF.toByte, ',', '7')
+    val d = java.nio.file.Files.createTempDirectory("fieldscan")
+    val f = d.resolve("bad.txt")
+    java.nio.file.Files.write(f, line)
+    def hexes(fields: Int => Column): Column =
+      array((0 until 4).map(i => hex(fields(i).cast("binary"))): _*)
+    val r = spark.read.text(f.toString).select(
+      StringExpressions.fieldCount(col("value")),
+      size(split(col("value"), ",", -1)),
+      hexes(StringExpressions.fieldAt(col("value"), _)),
+      hexes(split(col("value"), ",", -1).getItem(_))).head()
+    assert(r.getInt(0) == 4 && r.getInt(1) == 4)
+    // field_at: the line's bytes as they are
+    assert(r.getSeq[String](2) == Seq("307861C3", "8062", "FF", "37"))
+    // split: each malformed sequence decoded to U+FFFD (EF BF BD)
+    assert(r.getSeq[String](3) == Seq("307861EFBFBD", "EFBFBD62", "EFBFBD", "37"))
+    java.nio.file.Files.delete(f); java.nio.file.Files.delete(d)
   }
 }

@@ -1,7 +1,14 @@
 package graft.queries
 
+import java.lang.management.ManagementFactory
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.TimeUnit
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.StringSplit
 
 import graft.SparkSpec
 import graft.sources.{EthSources, Sinks}
@@ -147,5 +154,66 @@ class EthParitySpec extends SparkSpec {
       needValue = true, needTimestamp = true)
     val js = Sinks.goldenJson(EthParity.monthlyTxCount(t).orderBy("month"))
     assert(js === """[["01-2016", 2], ["08-2015", 2]]""")
+  }
+
+  test("no EthSources reader's optimized plan splits the line") {
+    val readers: Seq[(String, DataFrame)] = Seq(
+      "transactions" -> EthSources.transactions(spark, s"$in/transactions.csv",
+        needValue = true, needTimestamp = true, needGasPrice = true,
+        needToPrefix = true),
+      "contracts" -> EthSources.contracts(spark, s"$in/contracts.csv",
+        needAddrPrefix = true),
+      "blocks" -> EthSources.blocks(spark, s"$in/blocks.csv",
+        needNumber = true, needMiner = true),
+      "contractsTop10" -> EthSources.contractsTop10(spark,
+        s"$in/contractsTop10.csv"))
+    for ((name, df) <- readers) {
+      val plan = df.queryExecution.optimizedPlan
+      assert(!plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[StringSplit]))),
+        s"$name splits:\n$plan")
+    }
+  }
+
+  test("transactions reads the same rows on a plain SparkSession.builder session") {
+    // GraftExtensions is a static conf of the shared context, so a session
+    // without it needs its own JVM
+    val out = Files.createTempFile("plain_tx", ".txt")
+    val log = Files.createTempFile("plain_tx", ".log")
+    val opens = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
+      .filter(_.startsWith("--add-opens="))
+    val cmd = Seq(Paths.get(System.getProperty("java.home"), "bin", "java").toString,
+      "-Xmx512m") ++ opens ++ Seq("-cp", System.getProperty("java.class.path"),
+      PlainSessionTransactions.getClass.getName.stripSuffix("$"),
+      s"$in/transactions.csv", out.toString)
+    val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
+      .redirectOutput(log.toFile).start()
+    val done = p.waitFor(180, TimeUnit.SECONDS)
+    if (!done) p.destroyForcibly()
+    def tail = Files.readAllLines(log).asScala.takeRight(30).mkString("\n")
+    assert(done && p.exitValue == 0, tail)
+    val plain = Files.readAllLines(out).asScala.toSeq
+    val graft = EthSources.transactions(spark, s"$in/transactions.csv",
+      needValue = true, needTimestamp = true).collect().map(_.toString).sorted.toSeq
+    assert(plain.head == "field_at registered before the read: false")
+    assert(plain.tail == graft && graft.size == 4)
+    Files.delete(out); Files.delete(log)
+  }
+}
+
+/** Runs [[EthSources.transactions]] on a session from a plain
+  * `SparkSession.builder` (no GraftExtensions) and writes its rows,
+  * sorted, to a file. Arguments: the transactions path, the output file.
+  * EthParitySpec starts it in a child JVM. */
+object PlainSessionTransactions {
+  def main(args: Array[String]): Unit = {
+    val spark = SparkSession.builder().master("local[1]")
+      .config("spark.ui.enabled", "false").getOrCreate()
+    try {
+      val before = spark.catalog.functionExists("field_at")
+      val rows = EthSources.transactions(spark, args(0),
+        needValue = true, needTimestamp = true).collect().map(_.toString).sorted
+      Files.write(Paths.get(args(1)),
+        (s"field_at registered before the read: $before" +: rows.toSeq).asJava)
+    } finally spark.stop()
   }
 }
