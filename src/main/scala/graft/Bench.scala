@@ -4,6 +4,8 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Benchmark main. Stdout carries exactly ONE program line — the
   * compact {"metric","value","queries",...} summary, printed last.
@@ -279,6 +281,21 @@ object Bench {
       }
     }
     spark.sparkContext.addSparkListener(listener)
+    // observed metrics (capBaskets' `*_capped_baskets`) stay on the
+    // plan that computed them: each successful action's are added to
+    // the registry, and so to the query that is running
+    spark.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit =
+        qe.observedMetrics.foreach { case (n, row) =>
+          if (row.length > 0) row.get(0) match {
+            case v: Long => Counters.add(n, v)
+            case _ =>
+          }
+        }
+      override def onFailure(funcName: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    })
 
     // listener events are delivered async; wait until the counters
     // stop moving before reading — a fixed sleep undercounts exactly
@@ -363,16 +380,15 @@ object Bench {
         val elapsed = (System.nanoTime() - t0) / 1e9
         spark.sparkContext.setLocalProperty(QueryProperty, null)
         drainShort()
-        // operator-emitted loop/path counters (cc_rounds, fuzzy path…):
-        // most record synchronously on this driver thread during fn;
-        // observed-metric counters (capBaskets) arrive on the listener
-        // bus, which drainShort's stability wait has just let settle —
-        // hence drain AFTER it. That wait polls the SPARK listener's
-        // counters as a PROXY for the ExecutionListenerBus having
-        // drained, so an observed metric delivered later is lost (or,
-        // pre-clear, misattributed): counters are best-effort
-        // DIAGNOSTICS, never gate inputs — gates that assert on a
-        // counter poll Counters.snapshot().contains inside the query
+        // operator-emitted loop/path counters (cc_rounds, fuzzy path,
+        // gseg pruning and commits) record during fn, on its threads;
+        // observed metrics arrive on the listener bus, which
+        // drainShort's stability wait has just let settle — hence
+        // drain AFTER it. That wait polls the SPARK listener's counters
+        // as a PROXY for the ExecutionListenerBus having drained, so an
+        // observed metric delivered later lands in the next query's
+        // counters: they are diagnostics. No gate reads this registry;
+        // gates read their evidence from their own action's plan
         val snap = Counters.drain()
         if (snap.nonEmpty) counters(name) = snap
         name -> (if (ok) elapsed else -1.0)

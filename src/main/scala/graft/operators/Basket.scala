@@ -22,10 +22,10 @@ import graft.Tables
   *     [[capBaskets]] enforces the bound: baskets over the cap are
   *     deterministically down-sampled to it (hash-ranked, so the kept
   *     subset is an unbiased pseudo-random sample, stable across
-  *     partitionings and reruns), and every engagement is
-  *     counter-recorded. TPC-H baskets are ≤7 lines so the cap never
-  *     engages on the oracle-gated rows — capped ≡ uncapped below the
-  *     cap is the property BasketSpec pins.
+  *     partitionings and reruns), and every engagement is counted
+  *     in an observed metric. TPC-H baskets are ≤7 lines so the cap
+  *     never engages on the oracle-gated rows — capped ≡ uncapped
+  *     below the cap is the property BasketSpec pins.
   *  3. Support counting is ONE partial-agg'd hash aggregate on the
   *     (a, b) pair key; no row ever carries basket contents.
   */
@@ -46,10 +46,10 @@ object Basket {
     * shuffle once (the deterministic xxhash64 rank makes per-branch
     * recomputation of the window above it safe). Cap engagements are
     * counted IN the caller's own job — exactly one row per
-    * over-cap basket carries rank cap+1 — via an observed metric
-    * routed to [[graft.Counters]]; delivery is async (see
-    * [[graft.Counters.observeInto]]), so the counter lands shortly
-    * after the consuming action, not during DataFrame construction. */
+    * over-cap basket carries rank cap+1 — as the observed metric
+    * `<counterPrefix>_capped_baskets`, which stays on the plan: after
+    * an action, the consuming frame's `queryExecution.observedMetrics`
+    * holds it, and [[graft.Bench]] adds it to the query's counters. */
   def capBaskets(items: DataFrame, keyCol: String, itemCol: String,
       cap: Int, counterPrefix: String): DataFrame = {
     val w = Window.partitionBy(col(keyCol))
@@ -64,7 +64,7 @@ object Basket {
     val nParts = items.sparkSession.sparkContext.defaultParallelism
     val ranked = items.repartition(nParts, col(keyCol))
       .withColumn("_rnk", row_number().over(w))
-    graft.Counters.observeInto(ranked, s"${counterPrefix}_capped_baskets",
+    ranked.observe(s"${counterPrefix}_capped_baskets",
         coalesce(sum(when(col("_rnk") === cap + 1, 1L)), lit(0L)))
       .filter(col("_rnk") <= cap).drop("_rnk")
   }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 
 import graft.Tables
+import graft.sources.SegScanMetrics
 
 /** Core relational operator surface (SURVEY.md §2.2–§2.6) re-expressed
   * Spark-first over the TPC-H-ish testdata tables.
@@ -1980,7 +1981,7 @@ object CoreOps {
     * the early-termination contracts a `SELECT ... LIMIT` dashboard
     * query relies on against a lakehouse table. Relational columns
     * (row count, top-k value sum) are oracle-recomputed from parquet;
-    * the pushdown-evidence booleans (plan string + counter deltas)
+    * the pushdown-evidence booleans (plan string + scan metrics)
     * are in-engine, constant-oracle. Top-k compares the VALUE
     * multiset (a tie at the kth value may swap rows, never values). */
   def s16SegLimitTopn(s: SparkSession, d: String): DataFrame = {
@@ -1993,20 +1994,18 @@ object CoreOps {
     graft.sources.SegSource.write(
       Tables.orders(s, d).select("o_orderkey", "o_custkey", "o_totalprice")
         .repartitionByRange(8, col("o_totalprice")), out)
-    val lim0 = graft.Counters.peek("gseg_limit_files_skipped")
-    val limDf = s.read.format("gseg").load(out).limit(100)
-    val nLimit = limDf.count()
+    val limDf = s.read.format("gseg").load(out).limit(100).groupBy().count()
+    val nLimit = limDf.collect().head.getLong(0)
     val limitPushed = limDf.queryExecution.executedPlan.toString
       .contains("PushedLimit=")
-    val limitSkipped = graft.Counters.peek("gseg_limit_files_skipped") > lim0
-    val top0 = graft.Counters.peek("gseg_topn_files_skipped")
+    val limitSkipped = SegScanMetrics.of(limDf, SegScanMetrics.LimitSkipped) > 0
     val topDf = s.read.format("gseg").load(out)
       .orderBy(col("o_totalprice").desc).limit(50)
       .agg(sum(dec(col("o_totalprice"))).cast(DoubleType).as("topk_sum"))
-    val topkSum = topDf.head().getDouble(0)
+    val topkSum = topDf.collect().head.getDouble(0)
     val topnPushed = topDf.queryExecution.executedPlan.toString
       .contains("PushedTopN=")
-    val topnSkipped = graft.Counters.peek("gseg_topn_files_skipped") > top0
+    val topnSkipped = SegScanMetrics.of(topDf, SegScanMetrics.TopnSkipped) > 0
     Seq((limitPushed, limitSkipped, nLimit, topnPushed, topnSkipped, topkSum))
       .toDF("limit_pushed", "limit_skipped", "n_limit",
         "topn_pushed", "topn_skipped", "topk_sum")
@@ -2022,7 +2021,7 @@ object CoreOps {
     * frame — an in-memory dim folds its filter into a LocalRelation
     * and DPP declines) selects users 0..15, so ~7 of 8 segments skip.
     * Join result columns are oracle-recomputed relationally; the
-    * runtime-evidence booleans are counter deltas. DPP confs are
+    * runtime-evidence booleans are the join's scan metrics. DPP confs are
     * pinned on a gate-private child session, never the caller's. */
   def s17SegRuntimeFilter(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -2038,15 +2037,14 @@ object CoreOps {
     Tables.events(iso, d).select(col("user_id")).distinct()
       .withColumn("grp", expr("user_id div 16"))
       .write.mode("overwrite").parquet(dimDir)
-    val p0 = graft.Counters.peek("gseg_runtime_predicates")
-    val f0 = graft.Counters.peek("gseg_files_skipped")
     val joined = iso.read.format("gseg").load(out)
       .join(iso.read.parquet(dimDir).filter(col("grp") === 0), Seq("user_id"))
       .agg(count(lit(1)).as("n_rows"),
         sum(dec(col("value"))).cast(DoubleType).as("sum_value"))
-    val row = joined.head()
-    val runtimePushed = graft.Counters.peek("gseg_runtime_predicates") > p0
-    val filesSkipped = graft.Counters.peek("gseg_files_skipped") > f0
+    val row = joined.collect().head
+    val runtimePushed =
+      SegScanMetrics.of(joined, SegScanMetrics.RuntimePredicates) > 0
+    val filesSkipped = SegScanMetrics.of(joined, SegScanMetrics.FilesSkipped) > 0
     Seq((runtimePushed, filesSkipped, row.getLong(0), row.getDouble(1)))
       .toDF("runtime_pushed", "files_skipped", "n_rows", "sum_value")
   }
@@ -2074,7 +2072,7 @@ object CoreOps {
     * bit-matching the non-AQE row. Relational columns are
     * oracle-recomputed from parquet (the k terms are derived from the
     * join key, so the plain orderkey join states the same result);
-    * spj booleans + the gseg_key_groups counter delta are in-engine
+    * spj booleans + the scans' key-group metric are in-engine
     * evidence. */
   def s18SegSpjJoin(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -2102,18 +2100,17 @@ object CoreOps {
     val b = iso.read.format("gseg").option(kCol, "k").load(dirB)
     val joined = a.join(b,
       a("k") === b("k") && a("o_orderkey") === b("l_orderkey"))
-    val kg0 = graft.Counters.peek("gseg_key_groups")
     val smj = joined.queryExecution.executedPlan.collectFirst {
       case m: org.apache.spark.sql.execution.joins.SortMergeJoinExec => m
     }
     val shuffleFree = smj.exists(_.collect {
       case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
     }.isEmpty)
-    val row = joined
+    val agg = joined
       .agg(count(lit(1)).as("n_rows"),
         sum(dec(col("l_extendedprice"))).cast(DoubleType).as("sum_price"))
-      .head()
-    val keyGrouped = graft.Counters.peek("gseg_key_groups") > kg0
+    val row = agg.collect().head
+    val keyGrouped = SegScanMetrics.of(agg, SegScanMetrics.KeyGroups) > 0
 
     // pass 2: same join under the production-default ADAPTIVE planner.
     // The final plan only exists after execution, so execute first,
@@ -3447,16 +3444,20 @@ object CoreOps {
       .select(col("o_orderkey").as("k"), col("o_totalprice").as("qty"))
       .createOrReplaceTempView("graft_cf_src")
     iso.sql("INSERT INTO gseg_dml.dml.t SELECT k, qty FROM graft_cf_src")
-    val f0 = graft.Counters.peek("gseg_changefeed_files")
-    val t0 = graft.Counters.peek("gseg_changefeed_files_total")
-    val feed = graft.sources.SegChangeFeed.changes(iso, s"$wh/dml/t",
+    val dir = s"$wh/dml/t"
+    val feed = graft.sources.SegChangeFeed.changes(iso, dir,
       iso.table("gseg_dml.dml.t").schema, fromGen = 0L, toGen = 3L,
       keyCols = Seq("k"))
-    // the file diff must be a strict subset of the two generations'
-    // union — the untouched lower-half files never enter the feed
-    val bounded =
-      (graft.Counters.peek("gseg_changefeed_files") - f0) <
-        (graft.Counters.peek("gseg_changefeed_files_total") - t0)
+    // the feed's two pinned scans cover fewer files than the two
+    // generations hold — the untouched lower-half files never enter
+    // it. Read off the planned scans: running the feed here to read
+    // its scan metrics would add its jobs to the build
+    val pinned = feed.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+        r.scan
+    }.collect { case seg: graft.sources.SegScan => seg.pinned.fold(0)(_.size) }.sum
+    val bounded = pinned <
+      Seq(0L, 3L).map(graft.sources.SegManifest.readSnapshot(dir, _).get.size).sum
     feed.groupBy(col("_change_type"))
       .agg(count(lit(1)).as("n_rows"),
         sum(dec(col("qty"))).cast(DoubleType).as("sum_qty"),
@@ -3681,7 +3682,7 @@ object CoreOps {
     * a match and they are never opened — the pruning that makes a
     * point/prefix lookup on a 100 TB name-sorted dimension a
     * few-file read instead of a table scan. `string_zone_pruned` is
-    * the counter evidence; the relational columns are the plain
+    * the scan-metric evidence; the relational columns are the plain
     * LIKE aggregate DuckDB recomputes. */
   def s38DsvStringPrune(s: SparkSession, d: String): DataFrame = {
     val (iso, wh) = dmlSession(s, d, "dml38")
@@ -3693,14 +3694,12 @@ object CoreOps {
       .repartitionByRange(8, col("name")).sortWithinPartitions(col("name"))
       .write.format("gseg").mode("overwrite").save(dir)
     val t = iso.read.format("gseg").load(dir)
-    graft.Counters.drain()
-    val r = t.filter(col("name").startsWith("Customer#0000001"))
+    val agg = t.filter(col("name").startsWith("Customer#0000001"))
       .agg(count(lit(1)).as("n_rows"),
         sum(dec(col("bal"))).cast(DoubleType).as("sum_bal"),
         min(col("name")).as("min_name"), max(col("name")).as("max_name"))
-      .head()
-    val c = graft.Counters.drain()
-    val prunedFiles = c.getOrElse("gseg_files_skipped", 0L) > 0
+    val r = agg.collect().head
+    val prunedFiles = SegScanMetrics.of(agg, SegScanMetrics.FilesSkipped) > 0
     Seq((r.getLong(0), r.getDouble(1), r.getString(2), r.getString(3),
       prunedFiles))
       .toDF("n_rows", "sum_bal", "min_name", "max_name",
@@ -3818,8 +3817,8 @@ object CoreOps {
     * domain, so zone maps cannot prune a point lookup — the layout a
     * real unsorted 100 TB fact table has), with `bloom_columns=k` at
     * write. The point lookup then opens only the file(s) whose bloom
-    * admits the key (~1 of 8, plus false positives) — counter-pinned
-    * `bloom_pruned`; DuckDB recomputes the relational columns. The
+    * admits the key (~1 of 8, plus false positives) — `bloom_pruned`,
+    * read from the lookup's scan metrics; DuckDB recomputes the relational columns. The
     * probe key is the smallest key at-or-above half the max — a
     * deterministic, relationally-recomputable existing key. */
   def s41DsvBloomPrune(s: SparkSession, d: String): DataFrame = {
@@ -3836,13 +3835,11 @@ object CoreOps {
     val half = t.agg(max(col("k"))).head().getLong(0) / 2
     val key = t.filter(col("k") >= half).agg(min(col("k")))
       .head().getLong(0)
-    graft.Counters.drain()
-    val r = t.filter(col("k") === key)
+    val agg = t.filter(col("k") === key)
       .agg(count(lit(1)).as("n_rows"),
         sum(dec(col("price"))).cast(DoubleType).as("sum_price"))
-      .head()
-    val c = graft.Counters.drain()
-    val pruned = c.getOrElse("gseg_bloom_files_skipped", 0L) > 0
+    val r = agg.collect().head
+    val pruned = SegScanMetrics.of(agg, SegScanMetrics.BloomSkipped) > 0
     Seq((r.getLong(0), r.getDouble(1), pruned))
       .toDF("n_rows", "sum_price", "bloom_pruned")
   }
@@ -3902,7 +3899,7 @@ object CoreOps {
     * self-join runs with ZERO exchanges after a copy-on-write DELETE
     * re-laid its groups (`spj_after_dml`), and a month-range filter
     * on a path read FILE-PRUNES via the raw column's zone maps
-    * (`month_pruned` — counter). The oracle recomputes the month-
+    * (`month_pruned` — scan metric). The oracle recomputes the month-
     * grain aggregate relationally. */
   def s43DsvMonthsPartitioned(s: SparkSession, d: String): DataFrame = {
     val (iso, wh) = dmlSession(s, d, "dml43")
@@ -3925,14 +3922,13 @@ object CoreOps {
       case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
     }.isEmpty && j.count() >= 0
     // month-range pruning on the raw column's zone maps (ungrouped
-    // path read so the file counters fire)
-    graft.Counters.drain()
-    val pruneProbe = iso.read.format("gseg").load(dir)
+    // path read)
+    val probe = iso.read.format("gseg").load(dir)
       .filter(col("d") >= lit(java.sql.Timestamp.valueOf(
         "1998-01-01 00:00:00")))
-      .count()
-    val c = graft.Counters.drain()
-    val pruned = c.getOrElse("gseg_files_skipped", 0L) > 0 && pruneProbe > 0
+      .groupBy().count()
+    val pruned = probe.collect().head.getLong(0) > 0 &&
+      SegScanMetrics.of(probe, SegScanMetrics.FilesSkipped) > 0
     t.groupBy(year(col("d")).cast("int").as("y"),
         month(col("d")).cast("int").as("m"))
       .agg(count(lit(1)).as("n_rows"),
@@ -4002,7 +3998,8 @@ object CoreOps {
     * gigabytes — the copy-on-write alternative is s22's. Pinned
     * evidence: every pre-UPDATE segment name survives into the new
     * generation (`segments_preserved`) and the new versions live in
-    * appended files (`updates_appended`, counter). The oracle
+    * appended files (`updates_appended`: the UPDATE's new names are
+    * all `dlt-` segments). The oracle
     * recomputes the post-UPDATE aggregate relationally. */
   def s45DsvMorUpdate(s: SparkSession, d: String): DataFrame = {
     val (iso, wh) = dmlSession(s, d, "dml45")
@@ -4014,13 +4011,11 @@ object CoreOps {
       .repartition(8).writeTo("gseg_dml.dml.t").append()
     val dir = s"$wh/dml/t"
     val before = graft.sources.SegManifest.read(dir).get._2.toSet
-    graft.Counters.drain()
     iso.sql("UPDATE gseg_dml.dml.t SET price = price + 1.0 " +
       "WHERE k % 10 = 3")
-    val c = graft.Counters.drain()
     val after = graft.sources.SegManifest.read(dir).get._2.toSet
     val preserved = before.subsetOf(after)
-    val appended = c.getOrElse("gseg_dv_appended_files", 0L) > 0 &&
+    val appended = (after -- before).nonEmpty &&
       (after -- before).forall(_.startsWith("dlt-"))
     val r = iso.table("gseg_dml.dml.t")
       .agg(count(lit(1)).as("n_rows"),
@@ -4162,8 +4157,8 @@ object CoreOps {
     * come out tight and a predicate on EITHER dimension file-prunes —
     * at 100 TB the layout lever for two-dimensional scans, where a
     * single-column sort leaves the second dimension spread across
-    * every file. `dim1_pruned`/`dim2_pruned` counter-pin that each
-    * single-dimension aggregate actually skipped files; the oracle
+    * every file. `dim1_pruned`/`dim2_pruned` pin, from each
+    * single-dimension aggregate's scan metrics, that it skipped files; the oracle
     * recomputes both aggregates relationally. */
   def s49DsvZorder(s: SparkSession, d: String): DataFrame = {
     val (iso, wh) = dmlSession(s, d, "dml49")
@@ -4178,12 +4173,11 @@ object CoreOps {
     iso.sql(
       "CALL gseg_dml.compact('dml.t', 16, cluster_by => 'zorder(k1,k2)')")
     def agg1(f: Column): (Long, Double, Long) = {
-      graft.Counters.drain()
-      val r = iso.table("gseg_dml.dml.t").filter(f)
+      val agg = iso.table("gseg_dml.dml.t").filter(f)
         .agg(count(lit(1)), sum(dec(col("price"))).cast(DoubleType))
-        .head()
+      val r = agg.collect().head
       (r.getLong(0), r.getDouble(1),
-        graft.Counters.drain().getOrElse("gseg_files_skipped", 0L))
+        SegScanMetrics.of(agg, SegScanMetrics.FilesSkipped))
     }
     val (n1, sum1, skip1) = agg1(col("k1") === 7)
     val (n2, sum2, skip2) = agg1(col("k2") >= 10 && col("k2") <= 12)
@@ -4321,12 +4315,11 @@ object CoreOps {
     // copy-on-write DML across the tag boundary
     iso.sql("DELETE FROM gseg_dml.dml.t WHERE k % 10 = 3")
     // int128 zone maps file-prune: only gen-2 files can hold 10^18+
-    graft.Counters.drain()
-    val nWide = iso.table("gseg_dml.dml.t")
+    val wide = iso.table("gseg_dml.dml.t")
       .filter(col("wei") >= lit("1000000000000000000").cast("decimal(38,0)"))
-      .count()
-    val widePruned =
-      graft.Counters.drain().getOrElse("gseg_files_skipped", 0L) > 0
+      .groupBy().count()
+    val nWide = wide.collect().head.getLong(0)
+    val widePruned = SegScanMetrics.of(wide, SegScanMetrics.FilesSkipped) > 0
     val r = iso.table("gseg_dml.dml.t")
       .agg(count(lit(1)).as("n_rows"),
         sum(col("wei")).cast(StringType).as("sum_wei"),
@@ -4430,8 +4423,9 @@ object CoreOps {
     * out under the new spec, old segments are untouched and each file
     * PRUNES UNDER THE LAYOUT IT WAS WRITTEN WITH (per-file zone
     * evidence, never a table-level assumption): `old_layout_pruned` /
-    * `new_layout_pruned` counter-pin that a predicate on the OLD key
-    * and one on the NEW key both file-prune the mixed table. `CALL
+    * `new_layout_pruned` pin, from scan metrics, that a predicate on
+    * the OLD key and one on the NEW key both file-prune the mixed
+    * table. `CALL
     * compact` then migrates every file to the current spec —
     * `compact_migrates` pins that the post-compact scan recovers the
     * new identity layout WHOLE (KeyGroupedPartitioning — the
@@ -4455,15 +4449,14 @@ object CoreOps {
     val metadataOnly =
       graft.sources.SegManifest.read(dir).get._2.toSet == before
     half(even = false).writeTo("gseg_dml.dml.t").append()
-    def agg1(f: Column): (Long, Double, Map[String, Long]) = {
-      graft.Counters.drain()
-      val r = iso.table("gseg_dml.dml.t").filter(f)
+    def agg1(f: Column): (Long, Double, DataFrame) = {
+      val agg = iso.table("gseg_dml.dml.t").filter(f)
         .agg(count(lit(1)), sum(dec(col("price"))).cast(DoubleType))
-        .head()
-      (r.getLong(0), r.getDouble(1), graft.Counters.drain())
+      val r = agg.collect().head
+      (r.getLong(0), r.getDouble(1), agg)
     }
-    val (n1, sum1, c1) = agg1(col("k1") === 5)
-    val (n2, sum2, c2) = agg1(col("k2") === 7)
+    val (n1, sum1, a1) = agg1(col("k1") === 5)
+    val (n2, sum2, a2) = agg1(col("k2") === 7)
     // INCREMENTAL migration: only the old-layout files rewrite;
     // conforming files stay byte-shared by name — at 100 TB the
     // difference between a maintenance pass over the stragglers and
@@ -4476,12 +4469,12 @@ object CoreOps {
     val incremental = conforming.nonEmpty &&
       conforming.subsetOf(post) &&
       (pre -- conforming).forall(n => !post.contains(n))
-    val (n3, _, c3) = agg1(col("k2") === 7)
+    val (n3, _, a3) = agg1(col("k2") === 7)
     Seq((n1, sum1, n2, sum2, metadataOnly,
-      c1.getOrElse("gseg_files_skipped", 0L) > 0,
-      c2.getOrElse("gseg_files_skipped", 0L) > 0,
+      SegScanMetrics.of(a1, SegScanMetrics.FilesSkipped) > 0,
+      SegScanMetrics.of(a2, SegScanMetrics.FilesSkipped) > 0,
       incremental,
-      n3 == n2 && c3.getOrElse("gseg_key_groups", 0L) > 0))
+      n3 == n2 && SegScanMetrics.of(a3, SegScanMetrics.KeyGroups) > 0))
       .toDF("n1", "sum1", "n2", "sum2", "spec_change_metadata_only",
         "old_layout_pruned", "new_layout_pruned",
         "migration_incremental", "compact_migrates")
@@ -4490,7 +4483,7 @@ object CoreOps {
   /** TIMESTAMP_NTZ in the table format [S56]: a tag-12 wall-clock
     * column lives the full lifecycle — CREATE, two range-laid
     * appends, copy-on-write DELETE across it, zone-map file pruning
-    * on an NTZ window (`ntz_pruned` counter evidence), and the type's
+    * on an NTZ window (`ntz_pruned` scan-metric evidence), and the type's
     * defining claim pinned in-engine: the SAME aggregate under UTC
     * and a +14 h session zone returns byte-identical wall-clock
     * strings (`tz_invariant`) — NTZ distinguishes itself by VALUE
@@ -4518,15 +4511,14 @@ object CoreOps {
     // copy-on-write DML across the NTZ column
     iso.sql("DELETE FROM gseg_dml.dml.t WHERE k % 10 = 3")
     // zone maps prune files for a one-month wall-clock window
-    graft.Counters.drain()
-    val nWin = iso.table("gseg_dml.dml.t")
+    val win = iso.table("gseg_dml.dml.t")
       .filter(col("ts") >=
           lit(java.time.LocalDateTime.parse("1995-06-01T00:00:00")) &&
         col("ts") <
           lit(java.time.LocalDateTime.parse("1995-07-01T00:00:00")))
-      .count()
-    val pruned = graft.Counters.drain()
-      .getOrElse("gseg_files_skipped", 0L) > 0
+      .groupBy().count()
+    val nWin = win.collect().head.getLong(0)
+    val pruned = SegScanMetrics.of(win, SegScanMetrics.FilesSkipped) > 0
     def summary(): Seq[Any] = {
       val r = iso.table("gseg_dml.dml.t")
         .agg(count(lit(1)).as("n_rows"),

@@ -12,6 +12,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, Count, CountStar, Max, Min}
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownLimit, SupportsPushDownRequiredColumns, SupportsPushDownTopN}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.sources._
@@ -2216,6 +2217,10 @@ case class SegScan(path: String, required: StructType,
     * Spark re-evaluates the join, so an untranslatable predicate is
     * dropped, never wrong. */
   @transient private var runtime: Array[Filter] = Array.empty
+  @transient private var runtimePredicates = 0L
+  /** The pass the last [[planInputPartitions]] planned from, which
+    * [[reportDriverMetrics]] reports. */
+  @transient @volatile private var planned: Option[SegPrune.Result] = None
 
   override def filterAttributes(): Array[
       org.apache.spark.sql.connector.expressions.NamedReference] =
@@ -2229,8 +2234,14 @@ case class SegScan(path: String, required: StructType,
   override def filter(predicates: Array[
       org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit = {
     runtime = predicates.flatMap(SegSource.predicateToFilter(_).toSeq)
-    graft.Counters.add("gseg_runtime_predicates", predicates.length.toLong)
+    runtimePredicates = predicates.length.toLong
+    graft.Counters.add("gseg_runtime_predicates", runtimePredicates)
   }
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    SegScanMetrics.supported
+  override def reportDriverMetrics(): Array[CustomTaskMetric] =
+    planned.fold(Array.empty[CustomTaskMetric])(
+      SegScanMetrics.report(_, runtimePredicates))
   override def readSchema(): StructType = aggs match {
     case Some(as) => StructType(as.zipWithIndex.map { case (a, i) =>
       StructField(s"agg_$i", a.outType)
@@ -2271,6 +2282,7 @@ case class SegScan(path: String, required: StructType,
   override def planInputPartitions(): Array[InputPartition] = {
     val r = if (runtime.isEmpty) compiled else prune((pushed ++ runtime).toSeq)
     r.publish(SegPrune.BatchScan)
+    planned = Some(r)
     keyGroups match {
       case Some(gs) => gs.map { case (k, fs) =>
         val kf = fs.filter(r.keptSet)

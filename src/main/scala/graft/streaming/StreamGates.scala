@@ -14,6 +14,7 @@ import org.apache.spark.storage.StorageLevel
 import graft.Tables
 import graft.functions.Gates.{sealGate, symDiffEmpty}
 import graft.operators.{Changelog, EventOps}
+import graft.sources.SegScanMetrics
 
 /** Driver-visible correctness gate for the streaming surface (§2.7) —
   * same pattern as [[graft.functions.Gates]]: the streaming engine's
@@ -2039,8 +2040,9 @@ object StreamGates {
     *    inserts, update pre/post pairs and deletes all landed exactly
     *    once, across the restart;
     *  - incremental_applied: the index was built by >= 2 separate
-    *    batch applications (counter evidence — the parity really came
-    *    from incremental maintenance, not one bootstrap);
+    *    batch applications (counted by the gate's foreachBatch — the
+    *    parity really came from incremental maintenance, not one
+    *    bootstrap);
     *  - n_docs / n_index_rows anchor the final state relationally:
     *    the index carries exactly 32 bands per >= 3-token live doc,
     *    which DuckDB recomputes from the documents table.
@@ -2061,12 +2063,15 @@ object StreamGates {
     iso.sql("CREATE TABLE gseg_idx.ns.idx " +
       "(doc_id BIGINT, band INT, bh BIGINT) USING gseg")
     val ckpt = s"${g.root}/ckpt"
+    // foreachBatch runs on the stream's thread in this JVM, and stop()
+    // joins it: read after the last stop, the count is every batch's
+    val applied = new java.util.concurrent.atomic.AtomicLong()
     def applyBatch(batch: DataFrame, id: Long): Unit = {
       if (batch.isEmpty) return
       val ss = batch.sparkSession // foreachBatch runs in a clone:
       val b = batch.persist()     // views and SQL must use ITS session
       try {
-        graft.Counters.add("gseg_idx_batches_applied", 1L)
+        applied.incrementAndGet()
         // 1. clear every touched doc's band rows (idempotent under
         //    replay; covers delete, update and re-insert alike)
         b.select(col("doc_id")).distinct()
@@ -2090,7 +2095,6 @@ object StreamGates {
         .load(dir)
         .writeStream.option("checkpointLocation", ckpt)
         .foreachBatch(applyBatch _))
-    graft.Counters.drain()
     val q1 = start()
     q1.processAllAvailable() // initial snapshot bootstraps the index
     docs.filter(col("doc_id") % 4 === 1)
@@ -2107,8 +2111,6 @@ object StreamGates {
     val q2 = start()
     q2.processAllAvailable()
     q2.stop()
-    val applied =
-      graft.Counters.drain().getOrElse("gseg_idx_batches_applied", 0L)
     val idx = g.cache(iso.table("gseg_idx.ns.idx"))
     val rebuild = graft.functions.Dedup.minhashBandsOf(
       graft.functions.Dedup.shingleHashesOf(iso.table("gseg_idx.ns.docs")
@@ -2118,7 +2120,7 @@ object StreamGates {
     val matches = sym.getLong(0) == 0 && sym.getLong(1) == 0
     val nDocs = iso.table("gseg_idx.ns.docs").count()
     val nIdx = idx.count()
-    Seq((nDocs, nIdx, matches, applied >= 3L))
+    Seq((nDocs, nIdx, matches, applied.get >= 3L))
       .toDF("n_docs", "n_index_rows", "index_matches_rebuild",
         "incremental_applied")
   }
@@ -2443,7 +2445,7 @@ object StreamGates {
     *    pre/post pairs and deletes landed exactly once across the
     *    restart;
     *  - incremental_applied: >= 2 separate batch applications
-    *    (counter evidence the parity came from maintenance);
+    *    (the gate's batch count: the parity came from maintenance);
     *  - full_probe_exact / recall_ok: searching THROUGH the index
     *    (stored cids prune candidates — [[graft.functions.Ivf
     *    .ivfTopKIndexed]] recomputes nothing) is exact at
@@ -2453,8 +2455,8 @@ object StreamGates {
     *    identity-CLUSTERED by cid, and the search is
     *    assignment-FIRST — the probe set pushes as `cid IN (...)`,
     *    so at nprobe < nlist whole files of unprobed cells are
-    *    dropped at planning time (`gseg_files_skipped` delta > 0:
-    *    the index prunes I/O, not just compute);
+    *    dropped at planning time (the search's files-skipped scan
+    *    metric > 0: the index prunes I/O, not just compute);
     *  - n_vectors / n_cells anchor the final state relationally.
     * At 100 TB: the search reads nprobe/nlist of the INDEX FILES
     * (not a full scan filtered after the fact), and the index
@@ -2479,12 +2481,13 @@ object StreamGates {
       .map(_.getSeq[Float](1).map(_.toDouble).toArray)
     val dir = s"$wh/ns/vec"
     val ckpt = s"${g.root}/ckpt"
+    val applied = new java.util.concurrent.atomic.AtomicLong()
     def applyBatch(batch: DataFrame, id: Long): Unit = {
       if (batch.isEmpty) return
       val ss = batch.sparkSession // foreachBatch runs in a clone
       val b = batch.persist()
       try {
-        graft.Counters.add("gseg_ann_batches_applied", 1L)
+        applied.incrementAndGet()
         // 1. clear every touched key's assignment (idempotent under
         //    replay; covers delete, update and re-insert alike)
         b.select(col("vec_id").as("key")).distinct()
@@ -2507,7 +2510,6 @@ object StreamGates {
         .load(dir)
         .writeStream.option("checkpointLocation", ckpt)
         .foreachBatch(applyBatch _))
-    graft.Counters.drain()
     val q1 = start()
     q1.processAllAvailable() // snapshot bootstrap (MERGE converges)
     emb.filter(col("vec_id") % 10 === 9)
@@ -2523,26 +2525,22 @@ object StreamGates {
     val q2 = start()
     q2.processAllAvailable()
     q2.stop()
-    val applied =
-      graft.Counters.drain().getOrElse("gseg_ann_batches_applied", 0L)
     val live = g.cache(vectorsOf(iso.table("gseg_ann.ns.vec")))
     val nVectors = live.count() // materialize ONCE before all consumers
     // the assignment table stays UNCACHED through the whole tail:
-    // every consumer (the parity anti-joins, all three searches)
-    // replans a fresh scan, so the prune counters always measure the
+    // every consumer (the parity anti-joins, all four searches)
+    // replans a fresh scan, so the scan metrics always measure the
     // PLANNER, never block storage — and with no shared cache to
     // protect, the independent checks overlap: the brute referee,
-    // the full-probe exactness search and the nprobe=4 recall search
-    // each run on their own thread while this thread drives the
-    // rebuild parity. Searches go
+    // the full-probe exactness search, the nprobe=4 recall search and
+    // the pruning-evidence search each run on their own thread while
+    // this thread drives the rebuild parity. Searches go
     // assignment-FIRST: the probe set is a pushed `cid IN (...)` on
     // the cid-clustered assignment table, so unprobed cells' files
     // never become read tasks — the index prunes I/O, not just
-    // compute. Only the pruning-EVIDENCE search stays serial, after
-    // every other search has finished, so its counter delta is
-    // attributable to it alone.
+    // compute.
     val assignT = iso.table("gseg_ann.ns.vec__idx_embedding_assign")
-    val ((brute, total), (full, (part, parity))) = graft.Overlap.run(iso) {
+    val ((brute, total), (full, (part, (searchPruned, parity)))) = graft.Overlap.run(iso) {
       val b = g.cache(graft.functions.Similarity
         .cosineTopKOf(iso, live.toDF("vec_id", "v"), 20, 5)
         .select(col("query_id"), col("vec_id")))
@@ -2560,10 +2558,23 @@ object StreamGates {
             .select(col("query_id"), col("vec_id")))
           p.count(); p
         } {
-          val rebuilt = graft.functions.Ivf.assignOn(live, cents)
-          val sym = symDiffEmpty(assignT, rebuilt,
-            Seq("key", "cid")).head()
-          sym.getLong(0) == 0 && sym.getLong(1) == 0
+          graft.Overlap.run(iso) {
+            // STORAGE-LEVEL PRUNING EVIDENCE at nprobe < nlist: a
+            // 2-query, 2-probe search touches <= 4 of the nCells
+            // cells, so the cid-clustered layout must drop the other
+            // cells' files at planning time (its scan metrics, same
+            // pin as s38/s49)
+            val e = graft.functions.Ivf
+              .ivfTopKIndexed(assignT, live, cents, 2, 5, nprobe = 2)
+              .groupBy().count()
+            e.collect()
+            SegScanMetrics.of(e, SegScanMetrics.FilesSkipped) > 0
+          } {
+            val rebuilt = graft.functions.Ivf.assignOn(live, cents)
+            val sym = symDiffEmpty(assignT, rebuilt,
+              Seq("key", "cid")).head()
+            sym.getLong(0) == 0 && sym.getLong(1) == 0
+          }
         }
       }
     }
@@ -2572,16 +2583,7 @@ object StreamGates {
     val fullExact = fullSym.getLong(0) == 0 && fullSym.getLong(1) == 0
     val hits = part.join(brute, Seq("query_id", "vec_id"), "left_semi")
       .count()
-    // STORAGE-LEVEL PRUNING EVIDENCE at nprobe < nlist: a 2-query,
-    // 2-probe search touches <= 4 of the nCells cells, so the
-    // cid-clustered layout must drop the other cells' files at
-    // planning time (counter delta, same pin as s38/s49; every
-    // other search completed above, so the window is clean)
-    val f0 = graft.Counters.peek("gseg_files_skipped")
-    graft.functions.Ivf
-      .ivfTopKIndexed(assignT, live, cents, 2, 5, nprobe = 2).count()
-    val searchPruned = graft.Counters.peek("gseg_files_skipped") > f0
-    Seq((nVectors, nCells, parity, applied >= 2L, fullExact,
+    Seq((nVectors, nCells, parity, applied.get >= 2L, fullExact,
       hits >= total * 0.6, searchPruned))
       .toDF("n_vectors", "n_cells", "index_matches_rebuild",
         "incremental_applied", "full_probe_exact", "recall_ok",
@@ -2622,12 +2624,13 @@ object StreamGates {
     iso.sql("CALL gseg_wcdf.branch('ns.t', 'wap')")
     val dir = s"$wh/ns/t"
     val ckpt = s"${g.root}/ckpt"
+    val applied = new java.util.concurrent.atomic.AtomicLong()
     def applyBatch(batch: DataFrame, id: Long): Unit = {
       if (batch.isEmpty) return
       val ss = batch.sparkSession
       val b = batch.persist()
       try {
-        graft.Counters.add("gseg_wap_batches_applied", 1L)
+        applied.incrementAndGet()
         b.select(col("k")).distinct()
           .createOrReplaceTempView("graft_wap_touched")
         ss.sql("MERGE INTO gseg_wcdf.ns.m t USING graft_wap_touched s " +
@@ -2647,7 +2650,6 @@ object StreamGates {
         .load(dir)
         .writeStream.option("checkpointLocation", ckpt)
         .foreachBatch(applyBatch _))
-    graft.Counters.drain()
     val wapConf = graft.sources.SegManifest.WapBranchConf
     val q1 = start()
     q1.processAllAvailable() // initial snapshot = the fork state
@@ -2676,8 +2678,6 @@ object StreamGates {
     val q2 = start()
     q2.processAllAvailable() // catch up the branch lineage only
     q2.stop()
-    val applied =
-      graft.Counters.drain().getOrElse("gseg_wap_batches_applied", 0L)
     val mirror = g.cache(iso.table("gseg_wcdf.ns.m"))
     // materialize the cache with the poison check FIRST so the two
     // consumers below don't race a cold cache; then the branch-audit
@@ -2697,7 +2697,7 @@ object StreamGates {
     }
     val parity = sym.getLong(0) == 0 && sym.getLong(1) == 0
     Seq((r.getLong(0), r.getDouble(1), parity, poisonSeen == 0L,
-      applied >= 3L))
+      applied.get >= 3L))
       .toDF("n_rows", "sum_qty", "mirror_matches_branch",
         "main_commit_invisible", "incremental_applied")
   }
@@ -2715,12 +2715,12 @@ object StreamGates {
     *  - index_matches_rebuild: maintained (key, bucket) table is
     *    set-identical to a from-scratch hash of the live table
     *    (deterministic splitmix64 planes — no plane table to drift);
-    *  - incremental_applied: >= 2 batch applications (counter);
+    *  - incremental_applied: >= 2 batch applications;
     *  - recall_ok: >= 70% of the brute-force cosine top-5 recovered
     *    through the single stored signature at radius 3;
     *  - search_file_pruned: a radius-1 single-query search probes
-    *    nbits+1 of the populated buckets — `gseg_files_skipped`
-    *    delta > 0 on the bucket-clustered layout.
+    *    nbits+1 of the populated buckets — its scan's files-skipped
+    *    metric is > 0 on the bucket-clustered layout.
     * At 100 TB: one stored signature per key, maintenance = commit
     * churn, search I/O = the probed buckets' files only. */
   def simLshIndexed(s: SparkSession, d: String): DataFrame = gate(s) { g =>
@@ -2739,12 +2739,13 @@ object StreamGates {
       s"'vec_id', method => 'lsh', cells => $nbits)")
     val dir = s"$wh/ns/vec"
     val ckpt = s"${g.root}/ckpt"
+    val applied = new java.util.concurrent.atomic.AtomicLong()
     def applyBatch(batch: DataFrame, id: Long): Unit = {
       if (batch.isEmpty) return
       val ss = batch.sparkSession
       val b = batch.persist()
       try {
-        graft.Counters.add("gseg_lsh_batches_applied", 1L)
+        applied.incrementAndGet()
         b.select(col("vec_id").as("key")).distinct()
           .createOrReplaceTempView("graft_lsh_touched")
         ss.sql("MERGE INTO gseg_lsh.ns.vec__idx_embedding_assign t " +
@@ -2764,7 +2765,6 @@ object StreamGates {
         .load(dir)
         .writeStream.option("checkpointLocation", ckpt)
         .foreachBatch(applyBatch _))
-    graft.Counters.drain()
     val q1 = start()
     q1.processAllAvailable()
     emb.filter(col("vec_id") % 10 === 9)
@@ -2778,20 +2778,16 @@ object StreamGates {
     val q2 = start()
     q2.processAllAvailable()
     q2.stop()
-    val applied =
-      graft.Counters.drain().getOrElse("gseg_lsh_batches_applied", 0L)
     val live = g.cache(vectorsOf(iso.table("gseg_lsh.ns.vec")))
     val nVectors = live.count() // materialize ONCE before all consumers
     // same overlap shape as simIvfIndexed: the assignment table
-    // stays UNCACHED (every consumer replans, so the prune counters
-    // always measure the planner), and the two independent reads of
-    // the final state — the brute referee and the radius-3
-    // multiprobe search — run on their own threads while this thread
-    // drives the rebuild parity. The pruning-evidence search stays
-    // serial, after every other search, so its counter delta is
-    // attributable to it alone.
+    // stays UNCACHED (every consumer replans, so the scan metrics
+    // always measure the planner), and the independent reads of the
+    // final state — the brute referee, the radius-3 multiprobe
+    // search and the pruning-evidence search — run on their own
+    // threads while this thread drives the rebuild parity.
     val assignT = iso.table("gseg_lsh.ns.vec__idx_embedding_assign")
-    val ((brute, total), (idx, parity)) = graft.Overlap.run(iso) {
+    val ((brute, total), (idx, (searchPruned, parity))) = graft.Overlap.run(iso) {
       val b = g.cache(graft.functions.Similarity
         .cosineTopKOf(iso, live.toDF("vec_id", "v"), 20, 5)
         .select(col("query_id"), col("vec_id")))
@@ -2803,19 +2799,23 @@ object StreamGates {
           .select(col("query_id"), col("vec_id")))
         i.count(); i
       } {
-        val rebuilt = graft.functions.Ivf.lshAssignOn(live, nbits)
-        val sym = symDiffEmpty(assignT, rebuilt,
-          Seq("key", "bucket")).head()
-        sym.getLong(0) == 0 && sym.getLong(1) == 0
+        graft.Overlap.run(iso) {
+          val e = graft.functions.Ivf
+            .lshTopKIndexed(assignT, live, nbits, 1, 5, radius = 1)
+            .groupBy().count()
+          e.collect()
+          SegScanMetrics.of(e, SegScanMetrics.FilesSkipped) > 0
+        } {
+          val rebuilt = graft.functions.Ivf.lshAssignOn(live, nbits)
+          val sym = symDiffEmpty(assignT, rebuilt,
+            Seq("key", "bucket")).head()
+          sym.getLong(0) == 0 && sym.getLong(1) == 0
+        }
       }
     }
     val hits = idx.join(brute, Seq("query_id", "vec_id"), "left_semi")
       .count()
-    val f0 = graft.Counters.peek("gseg_files_skipped")
-    graft.functions.Ivf
-      .lshTopKIndexed(assignT, live, nbits, 1, 5, radius = 1).count()
-    val searchPruned = graft.Counters.peek("gseg_files_skipped") > f0
-    Seq((nVectors, nbits, parity, applied >= 2L,
+    Seq((nVectors, nbits, parity, applied.get >= 2L,
       hits >= total * 0.7, searchPruned))
       .toDF("n_vectors", "n_bits", "index_matches_rebuild",
         "incremental_applied", "recall_ok", "search_file_pruned")

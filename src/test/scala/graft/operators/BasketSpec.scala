@@ -1,22 +1,16 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
 
 class BasketSpec extends SparkSpec {
-  /** capBaskets counts engagements via an observed metric delivered on
-    * the async listener bus — poll for arrival instead of assuming the
-    * counter landed when collect() returned. */
-  private def awaitCounter(name: String, timeoutMs: Long = 10000): Option[Long] = {
-    val deadline = System.nanoTime() + timeoutMs * 1000000L
-    var got = graft.Counters.snapshot().get(name)
-    while (got.isEmpty && System.nanoTime() < deadline) {
-      Thread.sleep(50)
-      got = graft.Counters.snapshot().get(name)
-    }
-    got
-  }
+  /** capBaskets' engagement count, read from the plan of the action
+    * that ran `df`: the observed metric stays on it. */
+  private def capped(df: DataFrame, prefix: String): Option[Long] =
+    df.queryExecution.observedMetrics.get(s"${prefix}_capped_baskets")
+      .map(_.getLong(0))
 
   test("frequent pairs: apriori pruning never changes the answer") {
     // brute-force reference on the real data: pair support via a plain
@@ -36,32 +30,29 @@ class BasketSpec extends SparkSpec {
 
   test("capBaskets: identity when every basket is at or under the cap") {
     import spark.implicits._
-    graft.Counters.clear()
     val items = Seq((1L, 10L), (1L, 11L), (1L, 12L), (2L, 10L), (3L, 99L))
       .toDF("bk", "item")
-    val got = Basket.capBaskets(items, "bk", "item", 3, "spec")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val df = Basket.capBaskets(items, "bk", "item", 3, "spec")
+    val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === Set((1L, 10L), (1L, 11L), (1L, 12L), (2L, 10L), (3L, 99L)))
-    assert(awaitCounter("spec_capped_baskets").contains(0L))
-    graft.Counters.clear()
+    assert(capped(df, "spec").contains(0L))
   }
 
   test("capBaskets: oversized baskets cut to the cap, deterministically, counted") {
     import spark.implicits._
-    graft.Counters.clear()
     val items = ((0 until 20).map(i => (1L, i.toLong)) ++
       Seq((2L, 5L), (2L, 6L))).toDF("bk", "item")
-    def run(parts: Int) = Basket.capBaskets(items.repartition(parts),
-        "bk", "item", 4, "spec")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def run(parts: Int) = {
+      val df = Basket.capBaskets(items.repartition(parts), "bk", "item", 4, "spec")
+      val rows = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(capped(df, "spec").contains(1L), "cap engagement not counted")
+      rows
+    }
     val a = run(1)
     assert(a.count(_._1 == 1L) === 4, s"basket 1 not capped: $a")
     assert(a.count(_._1 == 2L) === 2, "under-cap basket disturbed")
     // hash-ranked keep-set is partition-invariant
     assert(run(7) === a)
-    val ctr = awaitCounter("spec_capped_baskets").getOrElse(0L)
-    assert(ctr >= 1L, s"cap engagement not counted: $ctr") // ≥: two runs
-    graft.Counters.clear()
   }
 
   test("pairIterator: sorted-by-basket input emits exactly the a<b pairs") {
@@ -86,26 +77,14 @@ class BasketSpec extends SparkSpec {
     assert(Basket.pairIterator(Iterator.empty).isEmpty)
   }
 
-  test("observeInto: re-executing the same frame records its counter once") {
+  test("capBaskets: two collects of one frame read the same count") {
     import spark.implicits._
-    graft.Counters.clear()
     val items = ((0 until 9).map(i => (1L, i.toLong))).toDF("bk", "item")
-    val capped = Basket.capBaskets(items, "bk", "item", 4, "dup")
-    capped.collect() // execution 1, action 1
-    capped.collect() // SAME QueryExecution, action 2 — must not re-add
-    // both actions fire onSuccess; poll until at least one delivery
-    // landed, then give the second event time to (wrongly) double
-    assert(awaitCounter("dup_capped_baskets").contains(1L))
-    Thread.sleep(300)
-    assert(graft.Counters.snapshot().get("dup_capped_baskets").contains(1L),
-      "second action over the same execution double-counted")
-    // a NEW frame over the same input is a new execution: accumulates
-    Basket.capBaskets(items, "bk", "item", 4, "dup").collect()
-    val deadline = System.nanoTime() + 10000L * 1000000L
-    while (!graft.Counters.snapshot().get("dup_capped_baskets").contains(2L)
-        && System.nanoTime() < deadline) Thread.sleep(50)
-    assert(graft.Counters.snapshot().get("dup_capped_baskets").contains(2L))
-    graft.Counters.clear()
+    val df = Basket.capBaskets(items, "bk", "item", 4, "dup")
+    df.collect()
+    assert(capped(df, "dup").contains(1L))
+    df.collect() // the same plan again: its metric is reset, not added to
+    assert(capped(df, "dup").contains(1L))
   }
 
   test("frequentPairs: a cap below basket size bounds the pair fan-out") {

@@ -13,10 +13,11 @@ import org.apache.spark.sql.types._
 import graft.SparkSpec
 
 /** The planning-time pruning pass ([[SegPrune]]): every stage's skips
-  * are sound, and the key-grouped layout runs the same filter stages
-  * as a plain one. Both tests read segments on the driver and plan
-  * without running a scan job; together they take a few seconds on 4
-  * cores (bound: 30 s). */
+  * are sound, the key-grouped layout runs the same filter stages as a
+  * plain one, and each scan's plan metrics ([[SegScanMetrics]]) equal
+  * the counters its pass published. Both tests read segments on the
+  * driver and run each probe once; together they take a few seconds
+  * on 4 cores (bound: 30 s). */
 class SegPruneSpec extends SparkSpec {
 
   private def cat(tag: String): (SparkSession, String) = {
@@ -36,6 +37,26 @@ class SegPruneSpec extends SparkSpec {
   }
 
   private def name(f: String): String = Paths.get(f).getFileName.toString
+
+  /** Collects `df`: its gseg scans' plan metrics must equal the
+    * `gseg_*` counters the action published. Spark plans a scan's
+    * partitions more than once per action (the planner's columnar
+    * check, then the executed copy), and each planning publishes the
+    * same pass again, so every counter moves by the same whole
+    * multiple of its metric. */
+  private def collectMatchingCounters(df: DataFrame, what: String): Array[Row] = {
+    val before = graft.Counters.snapshot()
+    val rows = df.collect()
+    val after = graft.Counters.snapshot()
+    def delta(n: String) = after.getOrElse(n, 0L) - before.getOrElse(n, 0L)
+    val total = SegScanMetrics.of(df, SegScanMetrics.FilesTotal)
+    val publishes = delta(SegScanMetrics.FilesTotal) / math.max(total, 1L)
+    assert(total > 0 && publishes >= 1, s"$what: ${delta(SegScanMetrics.FilesTotal)}")
+    SegScanMetrics.supported.map(_.name).foreach { n =>
+      assert(SegScanMetrics.of(df, n) * publishes == delta(n), s"$what: plan metric $n")
+    }
+    rows
+  }
 
   /** Each live segment's rows, read whole on the driver with no filter:
     * every stored row, or with `masked` only those its vector keeps. */
@@ -74,7 +95,8 @@ class SegPruneSpec extends SparkSpec {
     assert(scan.planInputPartitions().length == 4)
     assert(graft.Counters.peek("gseg_bloom_files_skipped") > 0L,
       s"counters: ${graft.Counters.snapshot()}")
-    val got = t.filter(col("s") === probe).collect().map(_.toSeq).toSet
+    val got = collectMatchingCounters(t.filter(col("s") === probe), "probe")
+      .map(_.toSeq).toSet
     val want = t.collect().filter(_.getString(1) == probe).map(_.toSeq).toSet
     assert(got == want && want.size == 1)
   }
@@ -149,6 +171,7 @@ class SegPruneSpec extends SparkSpec {
       // bucket, zone map, bloom: no row of a skipped file matches
       preds.foreach { case (label, p) =>
         val (_, r) = passOf(t.filter(p))
+        collectMatchingCounters(t.filter(p), s"$tn: $label")
         assert(r.pass.groups.isDefined == (tn == "g"), s"$tn layout")
         val hits = local.filter(p).select("_f").collect().map(_.getString(0)).toSet
         r.skippedBy.foreach { case (f, stage) =>
@@ -163,6 +186,7 @@ class SegPruneSpec extends SparkSpec {
         // LIMIT: the kept files' live rows cover k
         Seq(1, 50, 130).foreach { k =>
           val (scan, r) = passOf(t.limit(k))
+          collectMatchingCounters(t.limit(k), s"$tn: LIMIT $k")
           assert(scan.limit.contains(k), s"LIMIT $k not pushed")
           assert(r.skippedBy.values.forall(_ == SegPrune.Limit))
           assert(r.kept.map(f => live(name(f)).size).sum >= math.min(k, total),
@@ -180,6 +204,7 @@ class SegPruneSpec extends SparkSpec {
             ("id", false, 100)).foreach { case (c, desc, k) =>
           val ord = if (desc) col(c).desc else col(c).asc_nulls_last
           val (scan, r) = passOf(t.orderBy(ord).limit(k))
+          collectMatchingCounters(t.orderBy(ord).limit(k), s"$tn: TopN $c")
           assert(scan.topN.isDefined, s"TopN on $c not pushed")
           assert(r.skippedBy.values.forall(_ == SegPrune.TopN))
           val ci = t.schema.fieldIndex(c)
