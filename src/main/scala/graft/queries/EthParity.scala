@@ -1,23 +1,30 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.storage.StorageLevel
 
 import graft.sources.{EthSources, Sinks}
 
 /** The reference's six analysis jobs re-expressed as declarative
   * DataFrame plans (SURVEY.md §3, §7.1). Each function takes validated
-  * frames from [[EthSources]] and returns the result frame in the
-  * golden-output column order; the run* entry points wire
-  * source-path → query → golden-JSON sink like the original drivers.
+  * frames from [[EthSources]] and returns the result frame, a
+  * single-output job's in the golden-output column order, a
+  * multi-output job's with the columns of all its outputs; the run*
+  * entry points wire source-path → query → golden-JSON sinks like the
+  * original drivers.
   *
   * Plans vs the reference (SURVEY §4.2): column pruning and predicate
-  * placement are Catalyst's; multi-output jobs persist the shared
-  * subplan once (the reference recomputed it per action); aggregated
-  * averages are one groupBy (sum,count live in avg's buffer) instead of
-  * reduceByKey-join-divide; top-k plans TakeOrderedAndProject.
+  * placement are Catalyst's; every job runs one Spark action — a job
+  * with several outputs computes them all in one aggregation and the
+  * driver splits the collected rows (a few hundred at most) into its
+  * golden files, where the reference ran one action per output over a
+  * recomputed lineage; the scam job sums per (address, month) before
+  * the join fans each transaction out to every scam row listing its
+  * address (eager aggregation, Yan & Larson, VLDB 1995); aggregated
+  * averages are one groupBy (sum,count live in avg's buffer) instead
+  * of reduceByKey-join-divide; top-k plans TakeOrderedAndProject.
   */
 object EthParity {
   /** Epoch-seconds double → UTC month bucket; gmtime truncates whole
@@ -33,12 +40,6 @@ object EthParity {
     tx.groupBy(monthOf(col("block_timestamp"), "MM-yyyy").as("month"))
       .agg(count(lit(1)).as("n_tx"),
         (sum(col("value")) / count(lit(1))).as("avg_value"))
-
-  def monthlyTxCount(tx: DataFrame): DataFrame =
-    monthlyTxStats(tx).select("month", "n_tx")
-
-  def monthlyAvgValue(tx: DataFrame): DataFrame =
-    monthlyTxStats(tx).select("month", "avg_value")
 
   // ---------------------------------------------------------- job B
   /** Top-10 contracts by ether received — etherTop10Contracts.py:62-68.
@@ -61,56 +62,73 @@ object EthParity {
       .limit(10)
 
   // ---------------------------------------------------------- job D
-  /** Scam-address ⋈ transactions, shared by three outputs
-    * (etherscams.py:55-59). The scam side is tiny → broadcast; the
-    * joined frame is persisted because three actions consume it (the
-    * reference recomputed the join per action, SURVEY §3.2). */
-  def scamJoined(tx: DataFrame, scamAddrs: DataFrame): DataFrame =
-    tx.join(broadcast(scamAddrs), tx("to_address") === scamAddrs("address"))
-      .select(col("id"), col("category"), col("value"), col("block_timestamp"))
+  /** `grouping_id` of [[scamTotals]]' three grouping sets over (id,
+    * category, month): a 1 bit marks a column the set leaves out, id
+    * highest. */
+  val ById = 3L
+  val ByCategory = 5L
+  val ByMonthCategory = 4L
 
-  def lucrativeScamId(joined: DataFrame): DataFrame =
-    joined.groupBy(col("id")).agg(sum(col("value")).as("total_value"))
-      .orderBy(col("total_value").desc, col("id").asc).limit(1)
-
-  def lucrativeScamCategory(joined: DataFrame): DataFrame =
-    joined.groupBy(col("category")).agg(sum(col("value")).as("total_value"))
-      .orderBy(col("total_value").desc, col("category").asc).limit(1)
-
-  def scamValueByMonth(joined: DataFrame): DataFrame =
-    joined.groupBy(monthOf(col("block_timestamp"), "MM-yyyy").as("month"),
-      col("category"))
-      .agg(sum(col("value")).as("total_value"))
+  /** The three scam outputs (etherscams.py:55-59) in one aggregation,
+    * tagged by `set`: the most lucrative id ([[ById]], one row), the
+    * most lucrative category ([[ByCategory]], one row) and the value
+    * per (month, category) ([[ByMonthCategory]]). A transaction counts
+    * once per scam row listing its address, like the reference's join:
+    * k scams listing an address, or one scam listing it k times, count
+    * it k times. The scam rows fan a transaction out by up to their
+    * largest multiplicity, so the transactions that hit a scam address
+    * are summed per (address, month) first and the join fans out the
+    * sums; the scam side is tiny → broadcast. Top-1 ties break by id,
+    * then category, ascending; the month rows come by total
+    * descending. */
+  def scamTotals(tx: DataFrame, scamAddrs: DataFrame): DataFrame = {
+    val hit = tx
+      .join(broadcast(scamAddrs), tx("to_address") === scamAddrs("address"), "left_semi")
+      .groupBy(col("to_address"), monthOf(col("block_timestamp"), "MM-yyyy").as("month"))
+      .agg(sum(col("value")).as("value"))
+    val rank = Window.partitionBy(col("set")).orderBy(col("total_value").desc,
+      col("id").asc, col("category").asc, col("month").asc)
+    hit.join(broadcast(scamAddrs), hit("to_address") === scamAddrs("address"))
+      .groupingSets(Seq(Seq(col("id")), Seq(col("category")),
+        Seq(col("month"), col("category"))), col("id"), col("category"), col("month"))
+      .agg(sum(col("value")).as("total_value"), grouping_id().as("set"))
+      .withColumn("rank", row_number().over(rank))
+      .filter(col("set") === ByMonthCategory || col("rank") === 1)
+  }
 
   // ---------------------------------------------------------- job E
-  /** Average gas price per month, value stringified like the
-    * reference's str(sum/count) (ethergasguzzlers.py:61-63). */
-  def avgGasPrice(tx: DataFrame): DataFrame =
-    tx.groupBy(monthOf(col("block_timestamp"), "MM/yyyy").as("month"))
-      .agg(avg(col("gas_price")).cast(StringType).as("avg_gas_price"))
-
-  /** Contract transactions only (tx ⋈ contracts) — the joinRDD shared
-    * by the avg-gas-used and top-contract pipelines
-    * (ethergasguzzlers.py:66-69). */
-  def contractTx(tx: DataFrame, contracts: DataFrame): DataFrame =
-    tx.join(contracts, tx("to_address") === contracts("address"))
-
-  /** Avg gas used per month over contract txs, month-sorted
-    * (ethergasguzzlers.py:70-72). */
-  def avgGasUsed(contractTx: DataFrame): DataFrame =
-    contractTx
+  /** The three gas outputs (ethergasguzzlers.py:61-79) per month, in
+    * one aggregation over every transaction left-joined to its
+    * contract multiplicity (duplicate contract rows multiply, like the
+    * reference's join) and to the distinct re-ingested top-10 list
+    * (a semi-join: duplicates there do not multiply; its header token
+    * is an address like any other). Columns:
+    *  - `avg_gas_price`: avg gas price over all transactions;
+    *  - `contract_tx`, `avg_gas_used`: contract transactions, null in a
+    *    month without one, and their gas average;
+    *  - `top10_tx`, `top10_gas_used`: the same over the top-10
+    *    contracts.
+    * The averages leave null `gas` out and are null when every `gas`
+    * is; the two `avg_*` strings are Spark's cast of the double, as
+    * the reference's str(sum/count). */
+  def gasByMonth(tx: DataFrame, contracts: DataFrame, top10: DataFrame): DataFrame = {
+    val mult = contracts.groupBy(col("address").as("c_address"))
+      .agg(count(lit(1)).as("mult"))
+    val top = top10.select(col("address").as("t_address")).distinct()
+    val gas = col("gas") * col("mult")
+    val inTop = col("t_address").isNotNull
+    tx.join(broadcast(mult), col("to_address") === col("c_address"), "left")
+      .join(broadcast(top), col("to_address") === col("t_address"), "left")
       .groupBy(monthOf(col("block_timestamp"), "MM/yyyy").as("month"))
-      .agg(avg(col("gas")).cast(StringType).as("avg_gas_used"))
-      .orderBy(col("month").asc)
-
-  /** Avg gas used per month restricted to the re-ingested top-10
-    * contract list (ethergasguzzlers.py:75-79); the list is tiny →
-    * broadcast semi-join (payload-free dim). */
-  def top10ContractGas(contractTx: DataFrame, top10: DataFrame): DataFrame =
-    contractTx
-      .join(broadcast(top10), contractTx("to_address") === top10("address"), "left_semi")
-      .groupBy(monthOf(col("block_timestamp"), "MM/yyyy").as("month"))
-      .agg(avg(col("gas")).as("avg_gas_used"))
+      .agg(
+        avg(col("gas_price")).cast(StringType).as("avg_gas_price"),
+        sum(col("mult")).as("contract_tx"),
+        try_divide(sum(gas), sum(when(col("gas").isNotNull, col("mult"))))
+          .cast(StringType).as("avg_gas_used"),
+        sum(when(inTop, col("mult"))).as("top10_tx"),
+        try_divide(sum(when(inTop, gas)),
+          sum(when(inTop && col("gas").isNotNull, col("mult")))).as("top10_gas_used"))
+  }
 
   // ---------------------------------------------------------- job F
   /** Redundant-hex-column overhead in bits — etheroverhead.py:48-49:
@@ -155,17 +173,21 @@ object EthParity {
         sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_value"))
   }
 
+  /** The named columns of each row, in order. */
+  private def cells(rows: Seq[Row], names: String*): Seq[Seq[Any]] =
+    rows.map(r => names.map(n => r.getAs[Any](n)))
+
   /** CLI drivers mirroring the six spark-submit jobs: read from inDir
     * (transactions.csv / contracts.csv / blocks.csv / scams.json /
-    * contractsTop10.csv), write golden-shape JSON into outDir. */
+    * contractsTop10.csv), write golden-shape JSON into outDir. Each
+    * runs one Spark action; a multi-output job writes every file from
+    * the one collected result. */
   def runTransactionsAnalysis(s: SparkSession, inDir: String, outDir: String): Unit = {
     val tx = EthSources.transactions(s, s"$inDir/transactions.csv",
       needValue = true, needTimestamp = true)
-    val stats = monthlyTxStats(tx)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    Sinks.writeGoldenJson(stats.select("month", "n_tx"), s"$outDir/count_.txt")
-    Sinks.writeGoldenJson(stats.select("month", "avg_value"), s"$outDir/avg_.txt")
-    stats.unpersist()
+    val rows = monthlyTxStats(tx).collect().toSeq
+    Sinks.writeGolden(cells(rows, "month", "n_tx"), s"$outDir/count_.txt")
+    Sinks.writeGolden(cells(rows, "month", "avg_value"), s"$outDir/avg_.txt")
   }
 
   def runTop10Contracts(s: SparkSession, inDir: String, outDir: String): Unit = {
@@ -184,27 +206,31 @@ object EthParity {
     val tx = EthSources.transactions(s, s"$inDir/transactions.csv",
       needValue = true, needTimestamp = true)
     val scams = EthSources.scamAddresses(s, s"$inDir/scams.json")
-    val joined = scamJoined(tx, scams).persist(StorageLevel.MEMORY_AND_DISK)
-    Sinks.writeGoldenJson(lucrativeScamId(joined), s"$outDir/lucrativeID.txt")
-    Sinks.writeGoldenJson(lucrativeScamCategory(joined), s"$outDir/lucrativeCategory.txt")
-    Sinks.writeGoldenJson(scamValueByMonth(joined), s"$outDir/changeWithTime.txt")
-    joined.unpersist()
+    val rows = scamTotals(tx, scams).collect().toSeq
+    def of(set: Long) = rows.filter(_.getAs[Long]("set") == set)
+    Sinks.writeGolden(cells(of(ById), "id", "total_value"), s"$outDir/lucrativeID.txt")
+    Sinks.writeGolden(cells(of(ByCategory), "category", "total_value"),
+      s"$outDir/lucrativeCategory.txt")
+    Sinks.writeGolden(cells(of(ByMonthCategory), "month", "category", "total_value"),
+      s"$outDir/changeWithTime.txt")
   }
 
+  /** avg_gasprice keeps the first 100 months of the aggregate's own
+    * order (the reference's take(100) of an unordered result);
+    * avg_gasused keeps the first 100 contract months, month-sorted. */
   def runGasGuzzlers(s: SparkSession, inDir: String, outDir: String): Unit = {
-    // tx feeds both the gas-price agg and the contract join → persist
-    // (the reference re-scanned the CSV per lineage, SURVEY §4.2)
     val tx = EthSources.transactions(s, s"$inDir/transactions.csv",
       needGasPrice = true, needTimestamp = true)
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val c = EthSources.contracts(s, s"$inDir/contracts.csv")
     val top10 = EthSources.contractsTop10(s, s"$inDir/contractsTop10.csv")
-    val joined = contractTx(tx, c).persist(StorageLevel.MEMORY_AND_DISK)
-    Sinks.writeGoldenJson(avgGasPrice(tx).limit(100), s"$outDir/avg_gasprice.txt")
-    Sinks.writeGoldenJson(avgGasUsed(joined).limit(100), s"$outDir/avg_gasused.txt")
-    Sinks.writeGoldenJson(top10ContractGas(joined, top10), s"$outDir/contractWithGas.txt")
-    joined.unpersist()
-    tx.unpersist()
+    val rows = gasByMonth(tx, c, top10).collect().toSeq
+    Sinks.writeGolden(cells(rows.take(100), "month", "avg_gas_price"),
+      s"$outDir/avg_gasprice.txt")
+    def has(c: String)(r: Row) = r.getAs[Any](c) != null
+    Sinks.writeGolden(cells(rows.filter(has("contract_tx")).sortBy(_.getString(0)).take(100),
+      "month", "avg_gas_used"), s"$outDir/avg_gasused.txt")
+    Sinks.writeGolden(cells(rows.filter(has("top10_tx")), "month", "top10_gas_used"),
+      s"$outDir/contractWithGas.txt")
   }
 
   def runDataOverhead(s: SparkSession, inDir: String, outDir: String): Unit =

@@ -751,6 +751,9 @@ case class SegCdfScan(path: String, table: StructType,
       s"PushedFilters=[${pushed.mkString(", ")}]"
 
   override def toBatch: Batch = this
+  /** Row-only, so Spark plans the partitions once (see [[SegScan]]). */
+  override def columnarSupportMode(): Scan.ColumnarSupportMode =
+    Scan.ColumnarSupportMode.UNSUPPORTED
   override def planInputPartitions(): Array[InputPartition] = {
     val from = fromGen.getOrElse(throw new IllegalArgumentException(
       s"gseg changefeed: batch read needs ${SegCdf.FromOption}=<gen> " +

@@ -73,10 +73,6 @@ object SegChangeFeed {
       (fromSet & toSet).filter(dvChanged)).toSeq.sorted
     val added = ((toSet -- fromSet) ++
       (fromSet & toSet).filter(dvChanged)).toSeq.sorted
-    graft.Counters.add("gseg_changefeed_files",
-      (removed.size + added.size).toLong)
-    graft.Counters.add("gseg_changefeed_files_total",
-      (fromSet.size + toSet.size).toLong)
 
     def pinnedRead(names: Seq[String],
         dvs: Map[String, String]): DataFrame =

@@ -817,6 +817,9 @@ class SegGroupScan(allFiles: Seq[String], required: StructType,
   }
 
   override def toBatch: Batch = this
+  /** Row-only, so Spark plans the partitions once (see [[SegScan]]). */
+  override def columnarSupportMode(): Scan.ColumnarSupportMode =
+    Scan.ColumnarSupportMode.UNSUPPORTED
   override def planInputPartitions(): Array[InputPartition] = {
     // the rewrite read MUST mask deletion vectors: a kept row rides
     // through the rewrite into the replacement segment, so an

@@ -2258,6 +2258,11 @@ case class SegScan(path: String, required: StructType,
       StructType(out)
   }
   override def toBatch: Batch = this
+  /** Row-only reads. The default, PARTITION_DEFINED, makes Spark plan
+    * the partitions once to ask the reader factory and again on the
+    * executed plan, publishing the pruning pass twice. */
+  override def columnarSupportMode(): Scan.ColumnarSupportMode =
+    Scan.ColumnarSupportMode.UNSUPPORTED
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new SegGenMicroBatchStream(path, required, pushed, skipChangeCommits,

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 /** Result sinks. The reference dumps every result as a JSON array of
   * [key, value] pairs via driver-side json.dumps + boto3 put
   * (e.g. etherTransactionsAnalysis.py:56-66); [[goldenJson]] reproduces
-  * that exact byte shape from a DataFrame. All reference outputs are
+  * that exact byte shape from collected rows. All reference outputs are
   * post-aggregation small (top-k or per-month), so the collect is a
   * bounded driver merge, not a scalability hazard — anything large goes
   * through [[csv]]/parquet writers instead.
@@ -66,19 +66,22 @@ object Sinks {
     }
   }
 
-  /** Rows → `[[k, v], ...]` (or n-element inner arrays for wider rows),
-    * the reference's golden output shape. */
-  def goldenJson(df: DataFrame): String =
-    df.collect()
-      .map(r => (0 until r.length).map(i => jsonScalar(r.get(i)))
-        .mkString("[", ", ", "]"))
-      .mkString("[", ", ", "]")
+  /** Rows of cells → `[[k, v], ...]` (or n-element inner arrays for
+    * wider rows), the reference's golden output shape. */
+  def goldenJson(rows: Seq[Seq[Any]]): String =
+    rows.map(_.map(jsonScalar).mkString("[", ", ", "]")).mkString("[", ", ", "]")
 
-  def writeGoldenJson(df: DataFrame, path: String): Unit = {
+  /** Writes rows already on the driver: a job that splits one query's
+    * collected result into several golden files calls this once per
+    * file. */
+  def writeGolden(rows: Seq[Seq[Any]], path: String): Unit = {
     val p = Paths.get(path)
     if (p.getParent != null) Files.createDirectories(p.getParent)
-    Files.write(p, goldenJson(df).getBytes(StandardCharsets.UTF_8))
+    Files.write(p, goldenJson(rows).getBytes(StandardCharsets.UTF_8))
   }
+
+  def writeGoldenJson(df: DataFrame, path: String): Unit =
+    writeGolden(df.collect().toSeq.map(_.toSeq), path)
 
   /** Header CSV sink (graphs.ipynb cell 16 / S5). */
   def csv(df: DataFrame, path: String): Unit =

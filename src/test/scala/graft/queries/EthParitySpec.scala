@@ -3,12 +3,15 @@ package graft.queries
 import java.lang.management.ManagementFactory
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.TimeUnit
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.StringSplit
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 import graft.sources.{EthSources, Sinks}
@@ -82,14 +85,14 @@ class EthParitySpec extends SparkSpec {
   test("job A: monthly tx count drops malformed rows") {
     val t = EthSources.transactions(spark, s"$in/transactions.csv",
       needValue = true, needTimestamp = true)
-    assert(rows2[Long](EthParity.monthlyTxCount(t)) ===
+    assert(rows2[Long](EthParity.monthlyTxStats(t).select("month", "n_tx")) ===
       Map("08-2015" -> 2L, "01-2016" -> 2L))
   }
 
   test("job A: monthly avg value") {
     val t = EthSources.transactions(spark, s"$in/transactions.csv",
       needValue = true, needTimestamp = true)
-    val avg = rows2[Double](EthParity.monthlyAvgValue(t))
+    val avg = rows2[Double](EthParity.monthlyTxStats(t).select("month", "avg_value"))
     assert(avg("08-2015") === 75.0 && avg("01-2016") === 300.0)
   }
 
@@ -113,13 +116,16 @@ class EthParitySpec extends SparkSpec {
     val t = EthSources.transactions(spark, s"$in/transactions.csv",
       needValue = true, needTimestamp = true)
     val sc = EthSources.scamAddresses(spark, s"$in/scams.json")
-    val joined = EthParity.scamJoined(t, sc)
-    val id = EthParity.lucrativeScamId(joined).collect().head
-    assert((id.getLong(0), id.getDouble(1)) === ((456L, 400.0)))
-    val cat = EthParity.lucrativeScamCategory(joined).collect().head
-    assert((cat.getString(0), cat.getDouble(1)) === (("Scamming", 400.0)))
-    val byMonth = EthParity.scamValueByMonth(joined).collect()
-      .map(r => ((r.getString(0), r.getString(1)), r.getDouble(2))).toMap
+    val rows = EthParity.scamTotals(t, sc).collect()
+    def of(set: Long) = rows.filter(_.getAs[Long]("set") == set)
+    val Array(id) = of(EthParity.ById)
+    assert((id.getAs[Long]("id"), id.getAs[Double]("total_value")) === ((456L, 400.0)))
+    val Array(cat) = of(EthParity.ByCategory)
+    assert((cat.getAs[String]("category"), cat.getAs[Double]("total_value")) ===
+      (("Scamming", 400.0)))
+    val byMonth = of(EthParity.ByMonthCategory).map(r =>
+      ((r.getAs[String]("month"), r.getAs[String]("category")),
+        r.getAs[Double]("total_value"))).toMap
     assert(byMonth === Map(
       ("08-2015", "Phishing") -> 150.0,
       ("01-2016", "Phishing") -> 200.0,
@@ -130,14 +136,17 @@ class EthParitySpec extends SparkSpec {
     val t = EthSources.transactions(spark, s"$in/transactions.csv",
       needGasPrice = true, needTimestamp = true)
     val c = EthSources.contracts(spark, s"$in/contracts.csv")
-    val joined = EthParity.contractTx(t, c)
-    assert(rows2[String](EthParity.avgGasPrice(t)).map { case (k, v) => k -> v.toDouble } ===
+    val top = EthSources.contractsTop10(spark, s"$in/contractsTop10.csv")
+    val g = EthParity.gasByMonth(t, c, top)
+    assert(rows2[String](g.select("month", "avg_gas_price"))
+      .map { case (k, v) => k -> v.toDouble } ===
       Map("08/2015" -> 10.0, "01/2016" -> 35.0))
-    val used = EthParity.avgGasUsed(joined).collect()
+    val used = g.filter(col("contract_tx").isNotNull).orderBy("month")
+      .select("month", "avg_gas_used").collect()
       .map(r => (r.getString(0), r.getString(1).toDouble)).toSeq
     assert(used === Seq(("01/2016", 40.0), ("08/2015", 15.0))) // month-sorted
-    val top = EthSources.contractsTop10(spark, s"$in/contractsTop10.csv")
-    assert(rows2[Double](EthParity.top10ContractGas(joined, top)) ===
+    assert(rows2[Double](g.filter(col("top10_tx").isNotNull)
+      .select("month", "top10_gas_used")) ===
       Map("08/2015" -> 15.0, "01/2016" -> 50.0))
   }
 
@@ -152,8 +161,65 @@ class EthParitySpec extends SparkSpec {
   test("golden JSON sink reproduces the [[k, v], ...] shape") {
     val t = EthSources.transactions(spark, s"$in/transactions.csv",
       needValue = true, needTimestamp = true)
-    val js = Sinks.goldenJson(EthParity.monthlyTxCount(t).orderBy("month"))
+    val js = Sinks.goldenJson(EthParity.monthlyTxStats(t).select("month", "n_tx")
+      .orderBy("month").collect().toSeq.map(_.toSeq))
     assert(js === """[["01-2016", 2], ["08-2015", 2]]""")
+  }
+
+  /** The golden files of the six jobs on this fixture, as the runners
+    * wrote them when every output was its own action. */
+  private val goldenFiles = Map(
+    "count_.txt" -> """[["08-2015", 2], ["01-2016", 2]]""",
+    "avg_.txt" -> """[["08-2015", 75.0], ["01-2016", 300.0]]""",
+    "contractTop10.txt" -> """[["0xbbb", 225.0], ["0xaaa", 150.0]]""",
+    "minerTop.txt" -> """[["m1", 150.0], ["m2", 120.0], ["", 10.0]]""",
+    "lucrativeID.txt" -> """[[456, 400.0]]""",
+    "lucrativeCategory.txt" -> """[["Scamming", 400.0]]""",
+    "changeWithTime.txt" ->
+      """[["08-2015", "Phishing", 150.0], ["01-2016", "Phishing", 200.0], ["01-2016", "Scamming", 400.0]]""",
+    "avg_gasprice.txt" -> """[["08/2015", "10.0"], ["01/2016", "35.0"]]""",
+    "avg_gasused.txt" -> """[["01/2016", "40.0"], ["08/2015", "15.0"]]""",
+    "contractWithGas.txt" -> """[["08/2015", 15.0], ["01/2016", 50.0]]""",
+    "dataoverhead.txt" -> """[[1, 320]]""")
+
+  test("every job runs one Spark action and writes the same golden bytes") {
+    val out = Files.createTempDirectory("ethparity_out")
+    val seen = new LinkedBlockingQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.put(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen.put(qe)
+    }
+    /** The executions reported before a marker action's own: the
+      * listener bus delivers in order, so once the marker arrives,
+      * everything before it has. */
+    def reportedBeforeMarker(): Int = {
+      val marker = spark.range(1).toDF()
+      marker.collect()
+      Iterator.continually(seen.poll(60, TimeUnit.SECONDS))
+        .takeWhile { qe => assert(qe != null, "marker never reported"); qe ne marker.queryExecution }
+        .size
+    }
+    spark.listenerManager.register(listener)
+    val perJob = try {
+      reportedBeforeMarker()
+      EthParity.jobs.map { case (name, run) =>
+        run(spark, in, out.toString)
+        name -> reportedBeforeMarker()
+      }
+    } finally spark.listenerManager.unregister(listener)
+    assert(perJob === EthParity.jobs.map(_._1 -> 1))
+    val written = Files.list(out).iterator().asScala.map(f =>
+      f.getFileName.toString -> new String(Files.readAllBytes(f), StandardCharsets.UTF_8)).toMap
+    // changeWithTime's rows come by total descending, and the captured
+    // file lists them in aggregate order; the reference collected an
+    // unordered RDD, so it compares as a set of rows, each byte for byte
+    def rows(json: String) = json.stripPrefix("[[").stripSuffix("]]").split("\\], \\[").sorted.toSeq
+    val unordered = Set("changeWithTime.txt")
+    assert(written.keySet === goldenFiles.keySet)
+    goldenFiles.foreach { case (f, want) =>
+      if (unordered(f)) assert(rows(written(f)) === rows(want), f)
+      else assert(written(f) === want, f)
+    }
   }
 
   test("no EthSources reader's optimized plan splits the line") {

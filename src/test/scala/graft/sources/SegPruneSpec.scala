@@ -39,11 +39,9 @@ class SegPruneSpec extends SparkSpec {
   private def name(f: String): String = Paths.get(f).getFileName.toString
 
   /** Collects `df`: its gseg scans' plan metrics must equal the
-    * `gseg_*` counters the action published. Spark plans a scan's
-    * partitions more than once per action (the planner's columnar
-    * check, then the executed copy), and each planning publishes the
-    * same pass again, so every counter moves by the same whole
-    * multiple of its metric. */
+    * `gseg_*` counters the action published. A gseg scan is row-only,
+    * so Spark plans its partitions once per action and the pass is
+    * published once. */
   private def collectMatchingCounters(df: DataFrame, what: String): Array[Row] = {
     val before = graft.Counters.snapshot()
     val rows = df.collect()
@@ -51,9 +49,9 @@ class SegPruneSpec extends SparkSpec {
     def delta(n: String) = after.getOrElse(n, 0L) - before.getOrElse(n, 0L)
     val total = SegScanMetrics.of(df, SegScanMetrics.FilesTotal)
     val publishes = delta(SegScanMetrics.FilesTotal) / math.max(total, 1L)
-    assert(total > 0 && publishes >= 1, s"$what: ${delta(SegScanMetrics.FilesTotal)}")
+    assert(total > 0 && publishes == 1, s"$what: ${delta(SegScanMetrics.FilesTotal)}")
     SegScanMetrics.supported.map(_.name).foreach { n =>
-      assert(SegScanMetrics.of(df, n) * publishes == delta(n), s"$what: plan metric $n")
+      assert(SegScanMetrics.of(df, n) == delta(n), s"$what: plan metric $n")
     }
     rows
   }
